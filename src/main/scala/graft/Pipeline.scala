@@ -123,14 +123,14 @@ object Pipeline {
     // scales 10 → 2000 across sf — a fixed radius either matches
     // nothing at low density or everything at high density.
     // no checkpoint: the calibrator side is dimension-sized (one
-    // small parquet), so the count and the NN join each re-scan it
-    // for less than one materialization job costs
+    // small parquet) and only the NN join scans it; its row count is
+    // the projection's, read from the footers (no job)
     val calib = Tables.load(spark, dir, "supplier").select(
       col("s_suppkey"),
       pmod(hash(col("s_suppkey"), lit(3)), lit(2000000)).cast("double")./(1000.0).as("sx"),
       pmod(hash(col("s_suppkey"), lit(5)), lit(2000000)).cast("double")./(1000.0).as("sy"),
       (col("s_acctbal") / 1000).as("zp_ref"))
-    val nCalib = timed("nCalib.count")(calib.count())
+    val nCalib = Tables.parquetRowCount(spark, dir, "supplier")
     val rMatch = math.sqrt(1.5 * skyArea / (math.Pi * math.max(nCalib, 1L).toDouble))
     val withCluster = centroids.join(clustered, Seq("l_partkey"))
     val matched = cp("matched", Spatial.nnJoinWithin(

@@ -440,7 +440,7 @@ object QueriesSources {
         sys.props("java.io.tmpdir"), "graft_events_dpp").getAbsolutePath
       Tables.load(s, dir, "events").write.mode("overwrite")
         .partitionBy("event_type").parquet(out)
-      val fact = s.read.parquet(out)
+      val fact = Tables.readParquet(s, out)
       val dim = Tables.load(s, dir, "events")
         .where(col("event_type").like("%r%"))
         .select("event_type").distinct()
@@ -555,7 +555,7 @@ object QueriesSources {
         sys.props("java.io.tmpdir"), "graft_events_part").getAbsolutePath
       Tables.load(s, dir, "events").write.mode("overwrite")
         .partitionBy("event_type").parquet(out)
-      s.read.parquet(out).where(col("event_type") === "click")
+      Tables.readParquet(s, out).where(col("event_type") === "click")
         .groupBy("user_id")
         .agg(count(lit(1)).as("n"), Det.dsum(col("value"), 6).as("v_sum"))
         .orderBy("user_id")
@@ -1000,7 +1000,7 @@ object QueriesSources {
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val dataDir = ordersAsShardedFiles(s, dir)
-      val perFile = s.read.parquet(dataDir)
+      val perFile = Tables.readParquet(s, dataDir)
         .groupBy(input_file_name().as("path"))
         .agg(count(lit(1)).as("n_rows"))
         .select(
@@ -1252,7 +1252,7 @@ object QueriesSources {
       val incrementalOk =
         touchedFiles.nonEmpty && touchedFiles.size < m2.allFiles.size
       val p2 = p1.where(!col("bucket").isInCollection(snapTouched))
-        .unionByName(partials(s.read.parquet(touchedFiles: _*)))
+        .unionByName(partials(Tables.readParquet(s, touchedFiles: _*)))
       def fin(p: DataFrame, v: Int): DataFrame =
         p.agg(sum(col("n")).as("n_rows"),
             sum(col("s")).cast(DoubleType).as("bal_sum"))
@@ -1293,7 +1293,7 @@ object QueriesSources {
           .write.mode("overwrite").parquet(s"$out/data")
         Files.write(Paths.get(s"$out/_DONE"), Array.emptyByteArray)
       }
-      val data = s.read.parquet(s"$out/data")
+      val data = Tables.readParquet(s, s"$out/data")
       // bound literals cast to the column's own temporal type (the
       // testdata parquet reads as TIMESTAMP_NTZ under Spark 4)
       val dt = data.schema("l_shipdate").dataType
@@ -1307,7 +1307,7 @@ object QueriesSources {
         .collect() // one row per data file — metadata-sized (the manifest read)
       val keep = stats.filter(_.getBoolean(1)).map(_.getString(0))
       val prunedOk = keep.nonEmpty && keep.length < stats.length
-      s.read.parquet(keep: _*)
+      Tables.readParquet(s, keep.toIndexedSeq: _*)
         .where(col("l_shipdate") >= loC && col("l_shipdate") < hiC)
         .agg(count(lit(1)).as("n_rows"), Det.dsum(col("l_quantity"), 6).as("qty_sum"))
         .withColumn("pruned_ok", lit(prunedOk))
@@ -1466,7 +1466,7 @@ object QueriesSources {
         .filter(b => m1.files.get(b) != m2.files.get(b))
       val incrementalOk = changed == Set(0, 1)
       def side(m: Snapshots.Manifest, as: String): DataFrame =
-        s.read.parquet(changed.toSeq.sorted.flatMap(m.files(_)): _*)
+        Tables.readParquet(s, changed.toSeq.sorted.flatMap(m.files(_)): _*)
           .select(col("o_orderkey"), col("o_totalprice").as(as))
       side(m1, "old_price")
         .join(side(m2, "new_price"), Seq("o_orderkey"), "full_outer")
@@ -1546,7 +1546,7 @@ object QueriesSources {
       val changed = (m1.files.keySet ++ m2.files.keySet)
         .filter(b => m1.files.get(b) != m2.files.get(b)).toSeq.sorted
       def bucketRead(m: Snapshots.Manifest): DataFrame =
-        s.read.parquet(changed.flatMap(m.files(_)): _*)
+        Tables.readParquet(s, changed.flatMap(m.files(_)): _*)
       val cdf12 = diffFull(bucketRead(m1), bucketRead(m2))
       val r2 = Snapshots.read(s, m2); val r3 = Snapshots.read(s, m3)
       val cdf23 = r2.count() - r3.count() // delete-only transition

@@ -1,6 +1,14 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,12 +29,66 @@ object Tables {
     * (dataset_base.py:19-53); here: one parquet table per name under a
     * scale-factor directory. Spark's reader handles multi-file dirs
     * natively, so `dir/name.parquet` may be a file or a directory.
+    *
+    * Zero-job contract: building the frame starts no Spark job. The
+    * schema comes from one footer read on the driver
+    * ([[readParquet]]), not from Spark's schema inference, which
+    * runs a one-task job per load just to read that same footer.
     */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+      normalizeTs(readParquet(spark, path))
+    } else readParquet(spark, path)
+  }
+
+  /** Reads homogeneous parquet `paths` (files or directories) under
+    * the schema of the first data file ([[parquetSchema]]) — the
+    * schema Spark's non-merging inference also takes from one file,
+    * without the one-task job inference spends reading it. Partition
+    * directories (`k=v`) still surface as columns: the reader appends
+    * discovered partition columns to a user schema that lacks them.
+    * Tables whose files differ in schema need
+    * `option("mergeSchema", "true")` instead, which reads every footer. */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(parquetSchema(spark, paths: _*)).parquet(paths: _*)
+
+  /** Spark schema of the first parquet data file under `paths`, read
+    * from its footer on the driver (no Spark job). The footer is
+    * converted by Spark's own `readSchemaFromFooter` under the
+    * session's conf, so the binaryAsString, int96, NTZ and
+    * nanosAsLong flags resolve exactly as inference resolves them.
+    * Fails with the paths in the message when they hold no data file. */
+  def parquetSchema(spark: SparkSession, paths: String*): StructType = {
+    val hconf = spark.sessionState.newHadoopConf()
+    val first = paths.iterator.flatMap(dataFiles(hconf, _)).nextOption()
+    require(first.nonEmpty, s"no parquet data files under ${paths.mkString(", ")}")
+    val f = first.get
+    ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer(f, hconf)),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** Data files under `path` in name order: a file is itself, a
+    * directory is walked recursively skipping the names Spark's file
+    * index skips (`_`/`.` prefixes, except `k=v` partition directories
+    * such as `_bucket=3`). Lazy, so [[parquetSchema]] lists no further
+    * than its first file. */
+  private def dataFiles(hconf: Configuration, path: String): Iterator[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(hconf)
+    def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+    def walk(st: FileStatus): Iterator[FileStatus] =
+      if (st.isFile) Iterator.single(st)
+      else fs.listStatus(st.getPath).sortBy(_.getPath.getName).iterator
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+    walk(fs.getFileStatus(root))
+  }
+
+  private def footer(f: FileStatus, hconf: Configuration): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hconf))
+    try r.getFooter finally r.close()
+  }
 
   /** The events `ts` column has shipped as three physical types across
     * testdata generations: TIMESTAMP(NANOS) (read as long via
@@ -50,21 +112,8 @@ object Tables {
     * (e.g. LSH plane auto-scaling) where a count() job before the
     * main plan would double-execute upstream pipelines; at cluster
     * scale footers are orders of magnitude cheaper than a scan. */
-  def parquetRowCount(spark: SparkSession, dir: String, name: String): Long = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = path.getFileSystem(hconf)
-    val files =
-      if (fs.getFileStatus(path).isDirectory)
-        fs.listStatus(path).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      else Seq(fs.getFileStatus(path))
-    files.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, hconf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
+  def parquetRowCount(spark: SparkSession, dir: String, name: String): Long =
+    footers(spark, dir, name).map(_.getBlocks.asScala.map(_.getRowCount).sum).sum
 
   /** Total UNCOMPRESSED byte size of one column, summed over parquet
     * row-group footers — same driver-side metadata read as
@@ -75,25 +124,15 @@ object Tables {
     * encoding can understate raw size somewhat; log2-scaled consumers
     * (planesFor) tolerate order-of-magnitude inputs. */
   def parquetColumnBytes(spark: SparkSession, dir: String, name: String,
-                         column: String): Long = {
-    import scala.jdk.CollectionConverters._
+                         column: String): Long =
+    footers(spark, dir, name).map(_.getBlocks.asScala.map(b =>
+      b.getColumns.asScala
+        .filter(_.getPath.toDotString == column)
+        .map(_.getTotalUncompressedSize).sum).sum).sum
+
+  private def footers(spark: SparkSession, dir: String, name: String): Iterator[ParquetMetadata] = {
     val hconf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = path.getFileSystem(hconf)
-    val files =
-      if (fs.getFileStatus(path).isDirectory)
-        fs.listStatus(path).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      else Seq(fs.getFileStatus(path))
-    files.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, hconf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getFooter.getBlocks.asScala.map(b =>
-        b.getColumns.asScala
-          .filter(_.getPath.toDotString == column)
-          .map(_.getTotalUncompressedSize).sum).sum
-      finally r.close()
-    }.sum
+    dataFiles(hconf, s"$dir/$name.parquet").map(footer(_, hconf))
   }
 
   /** check_col equivalent (df_utils.py:77-105): fail fast with the list

@@ -315,7 +315,15 @@ object Dedup {
     * itself; everything downstream is component-graph-sized. The two
     * 1-row counts cross 1 × 1 (PlanAuditSpec-allowlisted). Result
     * byte-identity with the unfused composition is an executable gate
-    * (DedupVectorsSpec) and oracle-checked end-to-end. */
+    * (DedupVectorsSpec) and oracle-checked end-to-end.
+    *
+    * Precondition: `idCol` is UNIQUE and NON-NULL across `df`. The
+    * group_size = 1 bucket is derived as count(df) − Σ group_size,
+    * i.e. it counts ROWS while the pair graph counts IDS: a repeated
+    * id makes two rows one node, and a null id matches no node, so
+    * either silently skews the singleton count. Not checked at run
+    * time — a check would cost a job over the corpus; key this on a
+    * primary-key column. */
   def dupGroupSizeStats(df: DataFrame, idCol: String, textCol: String,
                         threshold: Double, shingleSize: Int = 5,
                         numHashes: Int = 8, bandSize: Int = 2,

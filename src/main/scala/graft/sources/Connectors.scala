@@ -44,7 +44,7 @@ final class ParquetSnapshotConnector(path: String) extends CatalogConnector {
 
   override def fetchByKeys(spark: SparkSession, keys: DataFrame,
                            keyCol: String): DataFrame = {
-    val snap = spark.read.parquet(path)
+    val snap = graft.core.Tables.readParquet(spark, path)
     require(snap.columns.contains(keyCol),
       s"connector $name has no key column '$keyCol' (has: ${snap.columns.mkString(", ")})")
     snap.join(broadcast(keys.select(col(keyCol)).distinct()), Seq(keyCol), "left_semi")

@@ -34,7 +34,7 @@ class DatasetSession(val spark: SparkSession, val name: String,
 
   /** One row per file: PATH + the requested per-file aggregates. */
   def buildMetadata(aggs: Seq[Column]): DataFrame = {
-    val raw = spark.read.parquet(dataDir)
+    val raw = Tables.readParquet(spark, dataDir)
     raw.groupBy(input_file_name().as("PATH"))
       .agg(aggs.head, aggs.tail: _*)
   }
@@ -47,13 +47,13 @@ class DatasetSession(val spark: SparkSession, val name: String,
     val path = cachePath("metadata")
     val cached =
       if (!forceReload && Files.exists(Paths.get(path))) {
-        val c = spark.read.parquet(path)
+        val c = Tables.readParquet(spark, path)
         if (Tables.patternsCovered(requestedCols, c.columns.toIndexedSeq)) Some(c) else None
       } else None
     metadata = cached.getOrElse {
       val fresh = buildMetadata(aggs)
       fresh.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Tables.readParquet(spark, path)
     }
     metadata
   }
@@ -73,7 +73,8 @@ class DatasetSession(val spark: SparkSession, val name: String,
     require(paths.nonEmpty, s"no files survive the metadata query for dataset $name")
     // basePath keeps partition-directory columns visible when reading
     // an explicit pruned file list
-    var df = spark.read.option("basePath", dataDir).parquet(paths.toIndexedSeq: _*)
+    var df = spark.read.schema(Tables.parquetSchema(spark, paths.toIndexedSeq: _*))
+      .option("basePath", dataDir).parquet(paths.toIndexedSeq: _*)
     if (selectCols != Seq("*")) df = Tables.wildcardSelect(df, selectCols)
     rowFilter.foreach(e => df = QueryDialect.query(df, e))
     objtable = df

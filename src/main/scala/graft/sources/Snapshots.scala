@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Manifest-versioned table snapshots with copy-on-write at file
   * granularity — the minimal Iceberg/Delta commit protocol, built on
   * plain parquet plus tiny JSON manifests:
@@ -130,8 +132,11 @@ object Snapshots {
       s"version $version must be greater than parent v${parent.version}")
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val delDir = s"$tableDir/deletes/v$version-$attempt"
-    deletedKeys.select(col(keyCol)).distinct()
-      .repartition(1).write.mode("overwrite").parquet(delDir)
+    // one partition first: it already satisfies distinct's
+    // distribution, so the dedup and the single-file write share one
+    // exchange
+    deletedKeys.select(col(keyCol)).repartition(1).distinct()
+      .write.mode("overwrite").parquet(delDir)
     val fs = Files.list(Paths.get(delDir)).iterator().asScala
       .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
     require(fs.nonEmpty, s"delete commit v$version wrote no files")
@@ -162,17 +167,16 @@ object Snapshots {
     * equality-delete files (applied as a broadcast LEFT ANTI join —
     * delete files are metadata-sized by the protocol's contract). The
     * bucket partition column is not re-derived (it is a function of
-    * the key); the frame has the table's own schema. */
+    * the key); the frame has the table's own schema.
+    *
+    * Schema: that of the FIRST file the manifest lists (lowest bucket
+    * first), read from its footer on the driver — building the frame
+    * starts no Spark job ([[graft.core.Tables.readParquet]]). Files
+    * lacking one of its columns read it as NULL; tables whose history
+    * spans schema versions read through [[readMerged]]. */
   def read(spark: SparkSession, m: Manifest): DataFrame = {
     require(m.allFiles.nonEmpty, s"manifest v${m.version} lists no files")
-    val data = spark.read.parquet(m.allFiles: _*)
-    if (m.deletes.isEmpty) data
-    else {
-      val k = m.deleteKey.getOrElse(
-        sys.error(s"manifest v${m.version} has delete files but no delete key"))
-      data.join(broadcast(spark.read.parquet(m.deletes: _*).select(col(k))),
-        Seq(k), "left_anti")
-    }
+    withoutDeleted(spark, m, Tables.readParquet(spark, m.allFiles: _*))
   }
 
   def readVersion(spark: SparkSession, tableDir: String, version: Int): DataFrame =
@@ -190,15 +194,20 @@ object Snapshots {
     * minimal protocol deliberately omits. */
   def readMerged(spark: SparkSession, m: Manifest): DataFrame = {
     require(m.allFiles.nonEmpty, s"manifest v${m.version} lists no files")
-    val data = spark.read.option("mergeSchema", "true").parquet(m.allFiles: _*)
+    withoutDeleted(spark, m,
+      spark.read.option("mergeSchema", "true").parquet(m.allFiles: _*))
+  }
+
+  /** `data` minus the rows whose key the version's equality-delete
+    * files list. */
+  private def withoutDeleted(spark: SparkSession, m: Manifest, data: DataFrame): DataFrame =
     if (m.deletes.isEmpty) data
     else {
       val k = m.deleteKey.getOrElse(
         sys.error(s"manifest v${m.version} has delete files but no delete key"))
-      data.join(broadcast(spark.read.parquet(m.deletes: _*).select(col(k))),
+      data.join(broadcast(Tables.readParquet(spark, m.deletes: _*).select(col(k))),
         Seq(k), "left_anti")
     }
-  }
 
   /** True copy-on-write sharing check: every untouched bucket's file
     * list is IDENTICAL (same paths — shared bytes) between the two

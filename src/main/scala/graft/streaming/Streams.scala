@@ -445,13 +445,13 @@ object Streams {
   }
 
   /** Read the events table as a (bounded) stream: same parquet file,
-    * streaming source semantics. The file-source schema is taken from
-    * a batch read of the same directory (streaming requires an explicit
-    * schema; inferring it from the data keeps this robust to the ts
-    * column's physical type — see Tables.normalizeTs). */
+    * streaming source semantics. The file-source schema is read from a
+    * data file's footer (streaming requires an explicit schema; taking
+    * it from the data keeps this robust to the ts column's physical
+    * type — see Tables.normalizeTs). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(dir).schema
+    val schema = graft.core.Tables.parquetSchema(spark, dir)
     graft.core.Tables.normalizeTs(spark.readStream.schema(schema).parquet(dir))
   }
 
@@ -506,7 +506,7 @@ object Streams {
                      stateDir: String, tombstone: String = "error",
                      maxFilesPerTrigger: Int = 1): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = graft.core.Tables.parquetSchema(spark, eventsDir)
     val stream = graft.core.Tables.normalizeTs(
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -524,7 +524,7 @@ object Streams {
             col("_b_event_id").as("event_id"), col("_b_type").as("event_type"),
             col("_b_value").as("value"), col("_b_n").as("n_changes"))
           case Some(p) =>
-            val s = spark.read.parquet(p)
+            val s = graft.core.Tables.readParquet(spark, p)
             val newer = col("_b_ts") > col("ts") ||
               (col("_b_ts") === col("ts") && col("_b_event_id") > col("event_id"))
             val takeBatch = col("ts").isNull || (col("_b_ts").isNotNull && newer)
@@ -549,7 +549,7 @@ object Streams {
     statePath match {
       case None => spark.emptyDataFrame
       case Some(p) =>
-        spark.read.parquet(p)
+        graft.core.Tables.readParquet(spark, p)
           .where(col("event_type") =!= tombstone)
           .select(col("user_id"), col("ts").as("last_ts"),
             col("event_type").as("last_type"), col("value").as("last_value"),

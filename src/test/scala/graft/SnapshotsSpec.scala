@@ -313,4 +313,32 @@ class SnapshotsSpec extends SparkSpec {
       Snapshots.compact(spark, tdir, 4, bucket, nBuckets = 4, m3)
     }
   }
+
+  test("delete commit runs 2 jobs and writes one file holding the distinct keys") {
+    val tdir = freshDir
+    val base = (0L until 64L).map(k => (k, k * 1.5)).toDF("k", "v")
+    val m1 = Snapshots.commit(base, tdir, 1, pmod(col("k"), lit(4)), nBuckets = 4)
+    // every key to delete appears twice: the commit must dedup
+    val keys = base.where(col("k") % 5 === 0).unionByName(base.where(col("k") % 5 === 0))
+    val (m2, jobs) = jobsStarted(Snapshots.deleteCommit(keys, tdir, 2, "k", m1))
+    assert(jobs == 2, s"delete commit ran $jobs jobs")
+    assert(m2.deletes.size == 1)
+    val written = spark.read.parquet(m2.deletes: _*).as[Long].collect().toSeq
+    assert(written.sorted == (0L until 64L).filter(_ % 5 == 0))
+  }
+
+  test("snapshot reads keep the inferred schema and build without a Spark job") {
+    val tdir = freshDir
+    val base = (0L until 64L).map(k => (k, k * 1.5, s"s$k")).toDF("k", "v", "s")
+    val bucket = pmod(col("k"), lit(4))
+    val m1 = Snapshots.commit(base, tdir, 1, bucket, nBuckets = 4)
+    val m2 = Snapshots.deleteCommit(base.where(col("k") < 8), tdir, 2, "k", m1)
+    val inferred = spark.read.parquet(m2.allFiles: _*)
+      .join(broadcast(spark.read.parquet(m2.deletes: _*).select(col("k"))), Seq("k"), "left_anti")
+    val (frames, jobs) = jobsStarted(Seq(Snapshots.read(spark, m1), Snapshots.read(spark, m2)))
+    assert(jobs == 0, s"$jobs job(s) started while only building snapshot frames")
+    assert(frames(1).schema == inferred.schema)
+    assert(frames(1).schema == Snapshots.readMerged(spark, m2).schema)
+    assert(frames(1).count() == 56 && frames(0).count() == 64)
+  }
 }

@@ -129,4 +129,46 @@ class TablesSpec extends SparkSpec {
     assert(fromNtz.schema("ts").dataType == TimestampType)
     assert(fromNtz.select(unix_micros(col("ts"))).as[Long].head == micros)
   }
+
+  // Tables.load reads the schema from one footer on the driver; it
+  // must be exactly the schema Spark's inference job produces, under
+  // every flag inference honors (events: nanosAsLong)
+  test("footer schema equals Spark's inferred schema for every table") {
+    Tables.all.foreach { t =>
+      val path = s"$sf001/$t.parquet"
+      val loaded = Tables.load(spark, sf001, t) // events: sets nanosAsLong
+      val inferred = spark.read.parquet(path)
+      assert(Tables.parquetSchema(spark, path) == inferred.schema, t)
+      assert(Tables.readParquet(spark, path).schema == inferred.schema, t)
+      val expected = if (t == "events") Tables.normalizeTs(inferred) else inferred
+      assert(loaded.schema == expected.schema, t)
+    }
+  }
+
+  test("footer schema equals inference on a partitioned Spark-written directory") {
+    val out = java.nio.file.Files.createTempDirectory("graft_tables").resolve("ev").toString
+    Tables.load(spark, sf001, "events").write.partitionBy("event_type").parquet(out)
+    val got = Tables.readParquet(spark, out)
+    assert(got.schema == spark.read.parquet(out).schema)
+    assert(got.columns.last == "event_type") // partition column discovered
+    assert(got.count() == Tables.load(spark, sf001, "events").count())
+  }
+
+  test("building Tables.load frames starts no Spark job") {
+    val (frames, jobs) = jobsStarted(Tables.all.map(t => Tables.load(spark, sf001, t)))
+    assert(frames.forall(_.columns.nonEmpty))
+    assert(jobs == 0, s"$jobs job(s) started while only building load frames")
+    // the counter is not vacuous: an action inside it is seen
+    assert(jobsStarted(frames.head.count())._2 >= 1)
+  }
+
+  test("a directory without parquet data files fails naming the path") {
+    val empty = java.nio.file.Files.createTempDirectory("graft_empty")
+    val onlyMarker = java.nio.file.Files.createTempDirectory("graft_marker")
+    java.nio.file.Files.createFile(onlyMarker.resolve("_SUCCESS"))
+    Seq(empty, onlyMarker).map(_.toString).foreach { d =>
+      val e = intercept[IllegalArgumentException](Tables.readParquet(spark, d))
+      assert(e.getMessage.contains(d), e.getMessage)
+    }
+  }
 }
