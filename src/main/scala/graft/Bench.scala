@@ -14,10 +14,10 @@ import org.apache.spark.sql.SparkSession
   * every later query "failed" on the corpse (rc=1, 2122 s, empty
   * correctness). Two structural guards now make one bad query unable
   * to sink the suite:
-  *   1. per-RUN checkpoint reclamation: persistent RDDs created by a
-  *      run (diff of sc.getPersistentRDDs around it) are unpersisted
-  *      immediately after — storage is flat across the suite instead
-  *      of monotonically growing;
+  *   1. per-RUN checkpoint reclamation ([[Harness.timed]]): persistent
+  *      RDDs created by a run are unpersisted immediately after —
+  *      storage is flat across the suite instead of monotonically
+  *      growing;
   *   2. per-run context liveness check: if the SparkContext is
   *      stopped, rebuild a fresh session (count it in the JSON) and
   *      keep going rather than cascading failures.
@@ -71,52 +71,15 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def newSession(cpus: String): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the harness reclaim unpersists checkpointed loop-state RDDs on
-    // purpose; each one logs a "lineage has been truncated" WARN —
-    // hundreds per full run, drowning real warnings (VERDICT r11
-    // cosmetic #3). Expected-by-design here, so silence just that
-    // logger, not the level.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
-    // absorb session/codegen warmup so the first timed query isn't inflated
+  /** A [[Harness.session]] with the bench's own warm-up: session and
+    * codegen startup absorbed before the first timed query, and the
+    * probe path's JIT warmed. */
+  private def newSession(): SparkSession = {
+    val spark = Harness.session()
     spark.range(1000000).selectExpr("sum(id)").collect()
-    (1 to 3).foreach(_ => probe(spark)) // and the probe path's own JIT warmup
+    (1 to 3).foreach(_ => probe(spark))
     spark
   }
-
-  /** Unpersist every persistent RDD not in `before` — reclaims the
-    * localCheckpoint blocks a query leaves behind (they are scoped to
-    * the query's lineage; nothing outside the run can reference them).
-    *
-    * Also clears the session CacheManager (r11): operators that
-    * `persist()` register an InMemoryRelation keyed BY PLAN there.
-    * Unpersisting the raw RDD permanently disables that entry
-    * (storageLevel becomes NONE and never re-arms), so the NEXT run
-    * of the same query gets a silent cache-miss relation — every
-    * downstream scan recomputes the supposedly-materialized frame
-    * (measured: dd_containment run 3 at 2× run 2 before this fix).
-    * clearCache drops the stale entries so each run re-registers and
-    * genuinely caches. */
-  private def reclaim(spark: SparkSession, before: Set[Int]): Unit =
-    if (!spark.sparkContext.isStopped) {
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!before.contains(id))
-          try rdd.unpersist(blocking = false) catch { case _: Throwable => }
-      }
-    }
 
   /** (totalJiffies, stealJiffies) from /proc/stat — bench environment
     * telemetry: driver-vs-local wall-clock deltas on this host have
@@ -133,15 +96,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     if (args.headOption.contains("calibrate")) {
       // dev mode: print raw probe timings to (re)establish ProbeRefSec
-      val s = newSession(cpus)
+      val s = newSession()
       println((1 to 12).map(_ => f"${probe(s)}%.3f").mkString("probes: ", " ", ""))
       s.stop()
       return
     }
-    var spark = newSession(cpus)
+    var spark = newSession()
     var rebuilds = 0
     val stat0 = cpuStat()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -167,22 +129,18 @@ object Bench {
       val times = (1 to Runs).flatMap { _ =>
         if (spark.sparkContext.isStopped) {
           System.err.println(s"[bench] SparkContext dead before $name — rebuilding")
-          spark = newSession(cpus)
+          spark = newSession()
           rebuilds += 1
         }
-        val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).count()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
+        try Some(Harness.timed(spark)(fn(spark, sfDir).count())._2)
+        catch {
           case e: Throwable =>
             val msg = (e.getClass.getSimpleName + ": " +
               Option(e.getMessage).getOrElse("")).replaceAll("\\s+", " ").take(200)
             errors(name) = msg
             System.err.println(s"[bench] $name FAILED: $msg")
             None
-        } finally reclaim(spark, before)
+        }
       }
       // dispersion over WARM runs only: a query's first run carries
       // its own codegen JIT (routinely 1.5-2x), which would swamp the
@@ -210,7 +168,7 @@ object Bench {
       def attempt(): Double = {
         if (spark.sparkContext.isStopped) {
           System.err.println("[bench] SparkContext dead before probe — rebuilding")
-          spark = newSession(cpus)
+          spark = newSession()
           rebuilds += 1
         }
         // measure CAPACITY, not the suite's own allocation debt: right
@@ -255,7 +213,7 @@ object Bench {
       args.headOption.map(_.split(",").toSet)
     val queries = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val ref = probeRef(cpus)
+    val ref = probeRef(Harness.cpus)
     // Self-calibrating reference (r10): the anchor `ref` was measured
     // on one specific machine; a HOST that is uniformly slower than
     // it is not "contended" — its medians-of-3 are internally sound,
@@ -314,11 +272,7 @@ object Bench {
     val contendedQs = hot1.filter(n => ctx2.get(n).forall(_ > DriftLimit * floorAll))
     val stealPct = (for ((t0, s0) <- stat0; (t1, s1) <- cpuStat() if t1 > t0)
       yield (s1 - s0) * 100.0 / (t1 - t0)).getOrElse(-1.0)
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = Harness.jsonString(s)
     def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val probesSorted = allProbes.filter(_ >= 0).sorted // drop failed-probe sentinels
     val probeMedian =

@@ -9,7 +9,7 @@ import graft.functions.Expressions
 /** SparkSessionExtensions entry point: registers the custom Catalyst
   * expressions as SQL functions, so `spark.sql` users get them too:
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   <session builder>.withExtensions(new GraftExtensions) ...
   *   -- or --
   *   spark.sql.extensions=graft.GraftExtensions
   *

@@ -28,22 +28,11 @@ import graft.operators.{Clustering, GroupOps, Joins, Outliers, Spatial}
   * "filter bands" are order statuses.
   */
 object Pipeline {
-  /** Eager-barrier wrapper: localCheckpoint, timed when
-    * GRAFT_EP2_PROF is set (dev profiling only).
+  /** Eager barrier: localCheckpoint.
     * CP-OK: eager-barrier semantics are the point (stage timing +
     * shared-tail materialization); every ep2 call site feeds it a
     * reduced (filtered/aggregated) frame, never the raw fact scan. */
-  private def cp(name: String, df: DataFrame): DataFrame =
-    timed(name)(df.localCheckpoint())
-
-  private def timed[T](name: String)(f: => T): T = {
-    if (sys.env.contains("GRAFT_EP2_PROF")) {
-      val t0 = System.nanoTime()
-      val out = f
-      println(f"[ep2] $name%-14s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      out
-    } else f
-  }
+  private def cp(df: DataFrame): DataFrame = df.localCheckpoint()
 
   /** Named intermediate frames, in pipeline order, so PipelineSpec can
     * assert per-stage row-count waypoints. The last frame is the
@@ -84,7 +73,7 @@ object Pipeline {
         + (col("l_linenumber") % 3) * 10)
       .withColumn("yi", pmod(hash(col("l_partkey"), lit(7)), lit(2000000)).cast("long")
         + (col("l_suppkey") % 3) * 10)
-    val withCoords = cp("withCoords", withCoordsPre)
+    val withCoords = cp(withCoordsPre)
 
     // A2: per-star centroids, then M1: DBSCAN them into sky clusters.
     // eps adapts to star density: the synthetic sky keeps a fixed
@@ -104,17 +93,17 @@ object Pipeline {
     // mirrors the op order exactly). A plain double mean is partial-
     // summation-order dependent; a decimal mean is deterministic but
     // ~50× the per-row cost (measured: +1 s on this stage at sf0.1).
-    val centroids = cp("centroids", withCoords
+    val centroids = cp(withCoords
       .groupBy(col("l_partkey"))
       .agg(
         ((sum("xi").cast("double") / count(lit(1))) / 1000.0).as("x_centroid"),
         ((sum("yi").cast("double") / count(lit(1))) / 1000.0).as("y_centroid")))
-    val nStars = timed("nStars.count")(centroids.count())
+    val nStars = centroids.count()
     val skyArea = 2000.0 * 2000.0
     val eps = math.sqrt(0.2 * skyArea / (math.Pi * math.max(nStars, 1L).toDouble))
-    val clustered = timed("dbscan")(Clustering.dbscan(
+    val clustered = Clustering.dbscan(
       centroids.select(col("l_partkey"), col("x_centroid"), col("y_centroid")),
-      "l_partkey", "x_centroid", "y_centroid", eps = eps, minSamples = 1))
+      "l_partkey", "x_centroid", "y_centroid", eps = eps, minSamples = 1)
 
     // J5: match cluster centroids to the calibrator catalog (J3 NN
     // join). The match radius adapts to calibrator density the same
@@ -133,7 +122,7 @@ object Pipeline {
     val nCalib = Tables.parquetRowCount(spark, dir, "supplier")
     val rMatch = math.sqrt(1.5 * skyArea / (math.Pi * math.max(nCalib, 1L).toDouble))
     val withCluster = centroids.join(clustered, Seq("l_partkey"))
-    val matched = cp("matched", Spatial.nnJoinWithin(
+    val matched = cp(Spatial.nnJoinWithin(
       withCluster, "l_partkey", "x_centroid", "y_centroid",
       calib, "s_suppkey", "sx", "sy", radius = rMatch))
 
@@ -336,7 +325,7 @@ object Pipeline {
     // materialize the final frame once: both consumers (the CSV dump
     // here and whatever action the caller runs next) would otherwise
     // recompute the two group-selection joins of the tail
-    val result = cp("result", stages(spark, dir).last._2)
+    val result = cp(stages(spark, dir).last._2)
     // dump target overridable per caller so concurrent callers
     // (parallel test suites) isolate their sinks; default notebook path
     val out = dumpDir.getOrElse(new java.io.File(
@@ -346,11 +335,11 @@ object Pipeline {
       // whole tail (two group-selection joins + metadata join) into a
       // single task; repartition keeps them parallel and only the
       // final gzip write runs single-task (one output file)
-      timed("csv_dump")(result.repartition(1).write.mode("overwrite")
-        .option("compression", "gzip").option("header", "true").csv(out))
+      result.repartition(1).write.mode("overwrite")
+        .option("compression", "gzip").option("header", "true").csv(out)
     } else {
-      timed("csv_dump")(graft.sources.Reports.dumpSharded(
-        result, out, "result", provenance = "ep2_flagship"))
+      graft.sources.Reports.dumpSharded(
+        result, out, "result", provenance = "ep2_flagship")
     }
     result
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -12,20 +11,6 @@ import java.nio.file.{Files, Paths}
   * next to the dumps, so a downgraded run is visible rather than
   * silently shrinking coverage (ADVICE r05). */
 object Verify {
-  private def newSession(cpus: String): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query names for fast local
@@ -33,8 +18,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def selected(name: String) = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var spark = newSession(cpus)
+    var spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     def fail(name: String, stage: String, e: Throwable): Unit = {
@@ -47,39 +31,17 @@ object Verify {
       if (selected(name)) {
         if (spark.sparkContext.isStopped) {
           System.err.println(s"[verify] SparkContext dead before $name — rebuilding")
-          spark = newSession(cpus)
+          spark = Harness.session()
         }
-        val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        try Harness.timed(spark)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
         catch { case e: Throwable => fail(name, "query", e) }
-        finally if (!spark.sparkContext.isStopped) {
-          // clearCache first (r11): raw unpersist permanently disables
-          // a CacheManager entry; a later query rebuilding the same
-          // persisted plan would silently never cache (see Bench.reclaim)
-          try spark.catalog.clearCache() catch { case _: Throwable => }
-          spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-            if (!before.contains(id))
-              try rdd.unpersist(blocking = false) catch { case _: Throwable => }
-          }
-        }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = Harness.jsonString(s)
     // static oracles + dynamically generated ones (data-derived but
     // deterministic parameters, e.g. IVF centroids for this sfDir)
-    if (spark.sparkContext.isStopped) spark = newSession(cpus)
+    if (spark.sparkContext.isStopped) spark = Harness.session()
     val dynamic = Queries.all.flatMap { qq =>
       qq.sqlGen.flatMap { gen =>
         if (!selected(qq.name)) None

@@ -1,20 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Harness, SparkEntry}
 
 /** Dev tool: dump formatted physical plans for selected queries so
   * pushdown / broadcast / codegen can be audited. */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "s2_scan_pushdown", "j1_meta_join", "a3_group_stats", "j3_nn_join",
       "j9_dust_theta_join", "m3_iqr_outlier_clean", "w1_nearest_rank")

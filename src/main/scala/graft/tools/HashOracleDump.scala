@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.SqlMurmur
@@ -12,12 +11,7 @@ import graft.core.SqlMurmur
 object HashOracleDump {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 100000L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     spark.range(0, n).select(
         col("id"),
         pmod(hash(col("id")), lit(2000000)).as("h0"),

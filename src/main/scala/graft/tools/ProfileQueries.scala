@@ -1,64 +1,33 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 
-/** Dev profiler: median-of-3 wall time for named SparkEntry queries.
+/** Dev profiler: median-of-3 wall time for named SparkEntry queries,
+  * plus each query's stage count, single-task stage count (run 3) and
+  * every stage above [[SlowStageS]] wall — tasks=1 with a big wall is
+  * a serialization point; cpuMs far below wall × cores is an idle one.
   * Usage: runMain graft.tools.ProfileQueries <sfDir> <name1,name2,...>
   */
 object ProfileQueries {
+  private val SlowStageS = 0.3
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(graft.SparkEntry.queries.keys.toSeq)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // GRAFT_STAGES=<wall-secs threshold>: per-stage task counts + run
-    // times — pinpoints serialized stages (numTasks 1-2) vs genuinely
-    // expensive ones ("1" keeps the historical 0.3 s cutoff)
-    if (sys.env.contains("GRAFT_STAGES")) {
-      val thresh = sys.env("GRAFT_STAGES").toDoubleOption
-        .filter(_ != 1.0).getOrElse(0.3)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            val wall = (for {s <- si.submissionTime; c <- si.completionTime}
-              yield (c - s) / 1e3).getOrElse(-1.0)
-            if (wall > thresh) {
-              val rdds = si.rddInfos.map(r =>
-                r.scope.map(_.name).getOrElse(r.name)).distinct.mkString("<-")
-              println(f"[stage ${si.stageId}%4d] tasks=${si.numTasks}%4d " +
-                f"wall=$wall%6.2f s  cpuMs=${si.taskMetrics.executorRunTime}%8d  ${rdds.take(120)}")
-            }
-          }
-        })
-    }
+    val spark = Harness.session()
+    val log = new Harness.StageLog(spark)
     spark.range(1000000).selectExpr("sum(id)").collect()
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      val ts = (1 to 3).map { _ =>
-        // same per-run checkpoint reclamation as Bench — profiling N
-        // queries back-to-back must not degrade like the r05 suite did
-        val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        // clearCache BEFORE the RDD sweep, like Bench.reclaim: raw
-        // unpersist permanently disables a CacheManager entry, and the
-        // next run's persist() of the same plan silently never caches
-        try spark.catalog.clearCache() catch { case _: Throwable => }
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!before.contains(id))
-            try rdd.unpersist(blocking = false) catch { case _: Throwable => }
-        }
-        dt
-      }
-      println(f"$name%-24s median=${ts.sorted.apply(1)}%6.2f s  runs=${ts.map(t => f"$t%.2f").mkString(",")}")
+      val runs = (1 to 3).map(_ => log.run(Harness.timed(spark)(fn(spark, dir).count())._2))
+      val ts = runs.map(_._1)
+      val last = runs.last._2
+      println(f"$name%-24s median=${ts.sorted.apply(1)}%6.2f s  runs=${ts.map(t => f"$t%.2f").mkString(",")}" +
+        s"  stages=${last.size} 1-task=${last.count(_.tasks == 1)}")
+      for (((_, stages), i) <- runs.zipWithIndex; s <- stages if s.wallS > SlowStageS)
+        println(f"  [run ${i + 1} stage ${s.id}%4d] tasks=${s.tasks}%4d " +
+          f"wall=${s.wallS}%6.2f s  cpuMs=${s.cpuMs}%8d  ${s.name.take(120)}")
     }
     spark.stop()
   }

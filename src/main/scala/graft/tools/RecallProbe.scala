@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Vectors
 
@@ -18,12 +18,7 @@ object RecallProbe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     // '+' separator as well: sbt -batch splits its command string on ';'
     val specs = args.lift(1).getOrElse("hnsw:+ivf:").split("[;+]").toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
     val e = graft.core.Tables.load(spark, dir, "embeddings")
     val n = graft.core.Tables.parquetRowCount(spark, dir, "embeddings")
     val q = e.where(col("vec_id") % 20 === 0)
@@ -32,9 +27,9 @@ object RecallProbe {
         e, "vec_id", "embedding", k = 3)
       .select(col("query_id").as("qid"), col("vec_id").as("cid"))
       .localCheckpoint() // CP-OK: dev tool, bounded (3 rows/query)
+    // the brute frame outlives every per-spec reclaim below: it is
+    // checkpointed before the first run starts
     val nBrute = brute.count()
-    // the brute frame must survive the per-spec reclaim below
-    val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
     def recall(approx: DataFrame): Double = {
       val hits = brute.join(
@@ -48,11 +43,10 @@ object RecallProbe {
       val Array(kind, kv) = (s + ":").split(":", 2).map(_.stripSuffix(":"))
       val ps = kv.split(",").filter(_.nonEmpty)
         .map { t => val Array(a, b) = t.split("="); a -> b.toInt }.toMap
-      // t0 BEFORE construction: nswTopK's localCheckpoint rounds run
-      // eagerly at build time — excluding them reports only the final
-      // recall join, not the index cost
-      val t0 = System.nanoTime()
-      val df = kind match {
+      // timed from BEFORE construction: nswTopK's localCheckpoint
+      // rounds run eagerly at build time — excluding them reports only
+      // the final recall join, not the index cost
+      val (r, dt) = graft.Harness.timed(spark)(recall(kind match {
         case "hnsw" => Vectors.nswTopK(e, "vec_id", "embedding", dim = 64, k = 3,
           m = p(ps, "m", Vectors.Nsw.M),
           buildRounds = p(ps, "nr", Vectors.Nsw.BuildRounds),
@@ -75,15 +69,8 @@ object RecallProbe {
             rerank = p(ps, "rr", Vectors.Ivf.Rerank))
         case "lsh" => Vectors.lshTopK(e, "vec_id", "embedding",
           dim = 64, k = 3, tables = 8, nHint = n)
-      }
-      val r = recall(df)
-      val dt = (System.nanoTime() - t0) / 1e9
+      }))
       println(f"[recall] $s%-40s recall=$r%.3f wall=$dt%6.2f s  (n=$n)")
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
-        if (!keep.contains(id))
-          try r.unpersist(false) catch { case _: Throwable => }
-      }
     }
     spark.stop()
   }

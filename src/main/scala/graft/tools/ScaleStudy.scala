@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Harness
+
 /** Scaling-evidence harness: replicates the sf0.1 tables k× into a
   * /tmp scale dir as INDEPENDENT shards (every key offset by a
   * shard-sized stride; document text gets a per-shard suffix so
@@ -41,12 +43,7 @@ object ScaleStudy {
       "a10_drop_duplicates", "j12_range_join"))
     val src = "/root/testdata/sf0.1"
     val dst = s"${sys.props("java.io.tmpdir")}/graft_scale_x$k"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dst/_DONE"))) {
       graft.core.Tables.all.foreach { t =>
@@ -63,54 +60,35 @@ object ScaleStudy {
     // scale is a serialization point the wall-clock ratio alone can
     // hide (a fast query can still harbor a stage that won't
     // parallelize at 1000 executors)
-    val stages = scala.collection.mutable.ArrayBuffer[(Int, Int, String)]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          stages.synchronized {
-            stages += ((e.stageInfo.stageId, e.stageInfo.numTasks, e.stageInfo.name))
-          }
-      })
-    val dumpStages = sys.env.contains("GRAFT_SCALE_STAGES")
+    val log = new Harness.StageLog(spark)
 
-    def time(dir: String, name: String, captureStages: Boolean): (Double, Int, Int) = {
-      val runs = (1 to 3).map { i =>
-        if (captureStages && i == 3) { Thread.sleep(200); stages.synchronized(stages.clear()) }
-        // reclaim like Bench/ProfileQueries between runs (r12): without
-        // it, a query whose loop frames persist() gets cache HITS in
-        // runs 2-3 (CacheManager matches by plan), and the reported
-        // ratio measures cached-read scaling instead of compute
-        // scaling. clearCache BEFORE the raw sweep (the r11 rule).
-        val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, dir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        try spark.catalog.clearCache() catch { case _: Throwable => }
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!before.contains(id))
-            try rdd.unpersist(blocking = false) catch { case _: Throwable => }
-        }
-        dt
-      }
-      Thread.sleep(300) // let async listener events drain
-      val snap = stages.synchronized(stages.toList)
-      if (captureStages && dumpStages)
-        snap.filter(_._2 == 1).foreach { case (id, _, nm) =>
-          System.err.println(s"[1-task] $name stage $id: ${nm.take(120)}")
-        }
-      (runs.sorted.apply(1), snap.size, snap.count(_._2 == 1))
+    /** Median of 3 runs, and run 3's completed stages. */
+    def time(dir: String, name: String): (Double, Seq[Harness.Stage]) = {
+      // reclaim between runs (r12): without it, a query whose loop
+      // frames persist() gets cache HITS in runs 2-3 (CacheManager
+      // matches by plan), and the reported ratio measures cached-read
+      // scaling instead of compute scaling
+      def once() = Harness.timed(spark)(graft.SparkEntry.queries(name)(spark, dir).count())._2
+      val (t1, t2) = (once(), once())
+      val (t3, stages) = log.run(once())
+      (Seq(t1, t2, t3).sorted.apply(1), stages)
     }
     println(f"${"query"}%-24s ${"1x"}%8s ${s"${k}x"}%8s ratio  stages  1-task  (linear = $k%d.0)")
     names.foreach {
       case "m1_extent" => m1Extent(spark, src, dst, k)
       case "j18_extent" => j18Extent(spark, src, dst, k)
       case n =>
-        val (t1, _, _) = time(src, n, captureStages = false)
-        val (tk, nStages, oneTask) = time(dst, n, captureStages = true)
-        println(f"$n%-24s $t1%8.2f $tk%8.2f ${tk / t1}%5.1f  $nStages%6d  $oneTask%6d")
+        val (t1, _) = time(src, n)
+        val (tk, stages) = time(dst, n)
+        val oneTask = stages.filter(_.tasks == 1)
+        oneTask.foreach(s => System.err.println(s"[1-task] $n stage ${s.id}: ${s.name.take(120)}"))
+        println(f"$n%-24s $t1%8.2f $tk%8.2f ${tk / t1}%5.1f  ${stages.size}%6d  ${oneTask.size}%6d")
     }
   }
+
+  /** Median of three reclaimed runs of `body`. */
+  private def median3(spark: SparkSession)(body: => Any): Double =
+    Seq.fill(3)(Harness.timed(spark)(body)._2).sorted.apply(1)
 
   /** j18_knn_join extent mode — same rationale as [[m1Extent]]: the
     * fixture derives BOTH sides' positions from keys mod 1000, so k×
@@ -132,24 +110,10 @@ object ScaleStudy {
         ((col(id) * mx) % 1000 + (tile % side) * pitch).as(xa),
         ((col(id) * my) % 1000 + (tile / side) * pitch).as(ya))
     }
-    def time(dir: String): Double = {
-      val runs = (1 to 3).map { _ =>
-        val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        val t0 = System.nanoTime()
-        Spatial.knnJoinWithin(
-          pts(dir, "part", "p_partkey", 1L, 13L, "px", "py"), "p_partkey", "px", "py",
-          pts(dir, "supplier", "s_suppkey", 37L, 91L, "sx", "sy"), "s_suppkey", "sx", "sy",
-          radius = 150.0, k = 3).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        try spark.catalog.clearCache() catch { case _: Throwable => }
-        spark.sparkContext.getPersistentRDDs.foreach { case (id2, rdd) =>
-          if (!before.contains(id2))
-            try rdd.unpersist(blocking = false) catch { case _: Throwable => }
-        }
-        dt
-      }
-      runs.sorted.apply(1)
-    }
+    def time(dir: String): Double = median3(spark)(Spatial.knnJoinWithin(
+      pts(dir, "part", "p_partkey", 1L, 13L, "px", "py"), "p_partkey", "px", "py",
+      pts(dir, "supplier", "s_suppkey", 37L, 91L, "sx", "sy"), "s_suppkey", "sx", "sy",
+      radius = 150.0, k = 3).count())
     val t1 = time(src)
     val tk = time(dst)
     println(f"${"j18_extent(knn)"}%-24s $t1%8.2f $tk%8.2f ${tk / t1}%5.1f  ${"-"}%6s  ${"-"}%6s")
@@ -178,22 +142,8 @@ object ScaleStudy {
         ((col("p_partkey") * 17) % 500 + (tile % side) * pitch).as("x"),
         ((col("p_partkey") * 29) % 500 + (tile / side) * pitch).as("y"))
     }
-    def time(dir: String): Double = {
-      val runs = (1 to 3).map { _ =>
-        val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        val t0 = System.nanoTime()
-        Clustering.dbscan(pts(dir), "p_partkey", "x", "y",
-          eps = 5.0, minSamples = 2).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        try spark.catalog.clearCache() catch { case _: Throwable => }
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!before.contains(id))
-            try rdd.unpersist(blocking = false) catch { case _: Throwable => }
-        }
-        dt
-      }
-      runs.sorted.apply(1)
-    }
+    def time(dir: String): Double = median3(spark)(Clustering.dbscan(pts(dir), "p_partkey", "x", "y",
+      eps = 5.0, minSamples = 2).count())
     val t1 = time(src)
     val tk = time(dst)
     println(f"${"m1_extent(dbscan)"}%-24s $t1%8.2f $tk%8.2f ${tk / t1}%5.1f  ${"-"}%6s  ${"-"}%6s")

@@ -1,7 +1,8 @@
 package graft
 
 /** Suite-survival soak: the full registry executed TWICE in one JVM,
-  * with the bench's per-run checkpoint-reclamation protocol, asserting
+  * through the bench's per-run reclamation ([[Harness.timed]]: clearCache,
+  * then unpersist what the run created), asserting
   * executor storage returns to baseline between and after passes.
   * Locks in the r5 storage-leak fix (accumulated localCheckpoint
   * blocks filled the heap and killed the SparkContext mid-suite)
@@ -11,18 +12,18 @@ class SoakSpec extends SparkSpec {
 
   test("full registry twice in one JVM: storage returns to baseline") {
     val sc = spark.sparkContext
+    // the harness reclaim clears the session CacheManager, so the
+    // baseline starts from an empty one (earlier suites may have
+    // cached frames on this shared session)
+    spark.catalog.clearCache()
     val baseline = sc.getPersistentRDDs.keySet
 
     def runAll(pass: Int): Unit =
       SparkEntry.queries.foreach { case (name, fn) =>
-        val before = sc.getPersistentRDDs.keySet
-        try fn(spark, sf001).count()
+        try Harness.timed(spark)(fn(spark, sf001).count())
         catch {
           case e: Throwable =>
             fail(s"pass $pass: $name failed at sf0.001: ${e.getMessage}", e)
-        } finally sc.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!before.contains(id))
-            try rdd.unpersist(blocking = false) catch { case _: Throwable => }
         }
       }
 
