@@ -14,6 +14,8 @@ import graft.functions.Expressions
   *   spark.sql.extensions=graft.GraftExtensions
   *
   *   SELECT graft_cosine(a.embedding, b.embedding) ...
+  *     -- NULL when the arrays differ in length or hold a NULL;
+  *     -- a non-numeric-array argument fails analysis
   *   SELECT graft_minhash_bands(text, 5, 8, 4) ...
   *   SELECT graft_shingle_jaccard(t1, t2, 5) ...
   *   SELECT graft_simhash(text) ...

@@ -538,16 +538,7 @@ object Dedup {
                        nBitsOverride: Int = -1, nHint: Long = -1L): DataFrame = {
     val nBits =
       if (nBitsOverride > 0) nBitsOverride
-      else {
-        val n =
-          if (nHint > 0) nHint
-          else {
-            val stats = existing.queryExecution.optimizedPlan.stats
-            if (stats.rowCount.isDefined) stats.rowCount.get.toLong
-            else existing.count()
-          }
-        bloomBitsFor(n)
-      }
+      else bloomBitsFor(graft.core.Tables.rowCount(existing, nHint))
     val words = math.max(1, (nBits + 63) / 64)
     def posCol(c: Column, j: Int): Column =
       (conv(substring(md5(concat(lit(s"$j:"), lower(c))), 1, 6), 16, 10)

@@ -5,6 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.Tables
+import graft.functions.Expressions.{cellDistTo, codesConstLookupSum, codesDot, cosineSim,
+  dotProduct, lshTableKeys, nearestCells, pqAdcTable}
+
 /** Embedding similarity search over `Array[Float]` columns.
   *
   * Baseline: brute-force cosine top-k (query set broadcast against
@@ -29,20 +33,41 @@ object Vectors {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** The exact score every method ranks or thresholds on: the compiled
+    * cosine rounded to 6 — rounding makes the ranking deterministic
+    * across engines/summation orders. */
+  private def exactCosine(a: Column, b: Column): Column = round(cosineSim(a, b), 6)
+
+  /** The `k` first rows per `part` under `order` — the one rank tail
+    * of every top-k method. `order` must be total (score, then id). */
+  private def topKPer(scored: DataFrame, part: String, k: Int, order: Column*): DataFrame =
+    scored.withColumn("_rn", row_number().over(Window.partitionBy(part).orderBy(order: _*)))
+      .where(col("_rn") <= k).drop("_rn")
+
+  /** One (table, bucket) row per LSH table of `vec`: the `_tbl`,
+    * `_key` join key of the bucketed methods. */
+  private def lshKeys(vec: Column, dim: Int, planes: Int, tables: Int): Column =
+    posexplode(lshTableKeys(vec, dim, planes, tables)).as(Seq("_tbl", "_key"))
+
+  /** Planes per table: the override if set, else auto-scaled to the
+    * row count of `df` ([[Tables.rowCount]]: hint, statistics, count). */
+  private def autoPlanes(df: DataFrame, bucketTarget: Int, planesOverride: Int,
+                         nHint: Long): Int =
+    if (planesOverride > 0) planesOverride
+    else planesFor(Tables.rowCount(df, nHint), bucketTarget)
+
   /** Brute-force cosine top-k: for each query row, the k nearest
     * candidates by (cosine rounded to 6, id) — rounding makes the
     * ranking deterministic across engines/summation orders. */
   def bruteForceTopK(queries: DataFrame, qId: String, qVec: String,
                      candidates: DataFrame, cId: String, cVec: String,
                      k: Int): DataFrame = {
-    val cos = round(graft.functions.Expressions.cosineSim(col(qVec), col(cVec)), 6)
     // distribute the corpus before the O(|corpus|·|queries|·dim)
     // math — a single-split scan would score on one core
-    val scored = graft.core.Tables.spread(candidates, col(cId))
+    val scored = Tables.spread(candidates, col(cId))
       .join(broadcast(queries), col(qId) =!= col(cId))
-      .select(col(qId), col(cId), cos.as("cosine"))
-    val w = Window.partitionBy(qId).orderBy(col("cosine").desc, col(cId))
-    scored.withColumn("_rn", row_number().over(w)).where(col("_rn") <= k).drop("_rn")
+      .select(col(qId), col(cId), exactCosine(col(qVec), col(cVec)).as("cosine"))
+    topKPer(scored, qId, k, col("cosine").desc, col(cId))
   }
 
   /** Symmetric int8 scalar quantization of an embedding column with a
@@ -84,7 +109,7 @@ object Vectors {
     val b = df.select(col(blockCol).as("_blk"), col(idCol).as("b"), col(vecCol).as("_vb"))
     a.join(b, Seq("_blk")).where(col("a") < col("b"))
       .select(col("a"), col("b"),
-        round(graft.functions.Expressions.cosineSim(col("_va"), col("_vb")), 6).as("cosine"))
+        exactCosine(col("_va"), col("_vb")).as("cosine"))
       .where(col("cosine") >= threshold)
   }
 
@@ -188,17 +213,17 @@ object Vectors {
     centroids
   }
 
-  /** IVF coarse quantizer: k-means centroids trained driver-side on a
-    * bounded sample (deterministic: seeded sample order, fixed
-    * iterations), returned as plain arrays. At 100 TB the sample is
-    * a tiny `TABLESAMPLE`; assignment below stays fully distributed.
-    */
   /** Driver training-sample budget shared by [[trainIvfCentroids]]
     * and [[cellsFor]]'s cap (ADVICE r13: the two defaults were only
     * coupled by convention — a caller mixing a smaller sample with
     * cellsFor-sized nlist could under-sample Lloyd). */
   val IvfSampleSize = 4096
 
+  /** IVF coarse quantizer: k-means centroids trained driver-side on a
+    * bounded sample (deterministic: seeded sample order, fixed
+    * iterations), returned as plain arrays. At 100 TB the sample is
+    * a tiny `TABLESAMPLE`; assignment below stays fully distributed.
+    */
   def trainIvfCentroids(df: DataFrame, vecCol: String, nCentroids: Int,
                         iterations: Int = 10,
                         sampleSize: Int = IvfSampleSize): Array[Array[Double]] = {
@@ -221,9 +246,7 @@ object Vectors {
     * both engines agree on bit-for-bit. */
   def kmeansReport(df: DataFrame, idCol: String, vecCol: String,
                    centroids: Array[Array[Double]]): DataFrame = {
-    import graft.functions.Expressions.{cellDistTo, nearestCells}
-    val base = graft.core.Tables.spread(
-      df.select(col(idCol), col(vecCol)), col(idCol))
+    val base = Tables.spread(df.select(col(idCol), col(vecCol)), col(idCol))
     val assigned = base.select(
       nearestCells(col(vecCol), centroids, 1).getItem(0).as("_cell"),
       col(vecCol))
@@ -253,10 +276,7 @@ object Vectors {
     * no driver state beyond the trained centroids. */
   def diverseSample(df: DataFrame, idCol: String, vecCol: String,
                     centroids: Array[Array[Double]], perCell: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.Expressions.{cellDistTo, nearestCells}
-    val base = graft.core.Tables.spread(
-      df.select(col(idCol), col(vecCol)), col(idCol))
+    val base = Tables.spread(df.select(col(idCol), col(vecCol)), col(idCol))
     val assigned = base.select(col(idCol),
       nearestCells(col(vecCol), centroids, 1).getItem(0).as("_cell"),
       col(vecCol))
@@ -265,13 +285,9 @@ object Vectors {
     // compiled kernel (r16), one eval per row
     val d2 = cellDistTo(col(vecCol), col("_cell"), centroids)
     val distQ = floor(sqrt(d2) * 1e6 + 0.5) / 1e6
-    assigned
-      .select(col(idCol), col("_cell").cast(LongType).as("cell"),
-        distQ.as("dist_q"))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("cell")).orderBy(col("dist_q"), col(idCol))))
-      .where(col("_rn") <= perCell)
-      .select(col(idCol), col("cell"), col("dist_q"))
+    topKPer(assigned.select(col(idCol), col("_cell").cast(LongType).as("cell"),
+        distQ.as("dist_q")),
+      "cell", perCell, col("dist_q"), col(idCol))
   }
 
   /** Product-quantization codebooks: the `dim`-dimensional space is
@@ -306,8 +322,7 @@ object Vectors {
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
               centroids: Array[Array[Double]], nProbe: Int, k: Int,
               queryPred: Option[Column => Column] = None): DataFrame = {
-    import graft.functions.Expressions.{cosineSim, nearestCells}
-    val base = graft.core.Tables.spread(df.select(col(idCol), col(vecCol)), col(idCol))
+    val base = Tables.spread(df.select(col(idCol), col(vecCol)), col(idCol))
     val candidates = base.select(col(idCol).as("cid"), col(vecCol).as("_cv"),
       nearestCells(col(vecCol), centroids, 1).getItem(0).as("_cell"))
     // queryPred restricts the QUERY side only (eval queries grade a
@@ -320,10 +335,8 @@ object Vectors {
       explode(nearestCells(col(vecCol), centroids, nProbe)).as("_cell"))
     val scored = queries.join(candidates, Seq("_cell"))
       .where(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(cosineSim(col("_qv"), col("_cv")), 6).as("cosine"))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("cid"))
-    scored.withColumn("_rn", row_number().over(w)).where(col("_rn") <= k).drop("_rn")
+      .select(col("qid"), col("cid"), exactCosine(col("_qv"), col("_cv")).as("cosine"))
+    topKPer(scored, "qid", k, col("cosine").desc, col("cid"))
   }
 
   /** PQ encode: the m small-int codes of a vector — per subspace, the
@@ -333,8 +346,7 @@ object Vectors {
   def pqCodes(vec: Column, codebooks: Array[Array[Array[Double]]]): Column = {
     val ds = codebooks(0)(0).length
     array(codebooks.zipWithIndex.map { case (cb, j) =>
-      graft.functions.Expressions
-        .nearestCells(slice(vec, j * ds + 1, ds), cb, 1).getItem(0)
+      nearestCells(slice(vec, j * ds + 1, ds), cb, 1).getItem(0)
     }.toIndexedSeq: _*)
   }
 
@@ -371,7 +383,6 @@ object Vectors {
                 codebooks: Array[Array[Array[Double]]],
                 nProbe: Int, k: Int, rerank: Int = 0,
                 queryPred: Option[Column => Column] = None): DataFrame = {
-    import graft.functions.Expressions.{codesConstLookupSum, codesDot, dotProduct, nearestCells, pqAdcTable}
     // per-(subspace, code) squared norms: the PQ reconstruction of a
     // candidate's ‖c‖² is the sum of its chosen codes' norms
     val norms2: Array[Array[Double]] = codebooks.map(_.map { c =>
@@ -379,7 +390,7 @@ object Vectors {
       while (i < c.length) { s += c(i) * c(i); i += 1 }
       s
     })
-    val base = graft.core.Tables.spread(df.select(col(idCol), col(vecCol)), col(idCol))
+    val base = Tables.spread(df.select(col(idCol), col(vecCol)), col(idCol))
     // compiled kernels throughout the per-row/per-pair path (r16,
     // guide "eliminate non-codegen expressions in the hot path"): the
     // interpreted transform/aggregate/zip_with forms of the ADC table,
@@ -410,12 +421,10 @@ object Vectors {
       .where(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         round(ip / (col("_qnorm") * sqrt(col("_cnorm2"))), 6).as("cosine"))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("cid"))
-    if (rerank <= 0)
-      scored.withColumn("_rn", row_number().over(w)).where(col("_rn") <= k).drop("_rn")
+    val order = Seq(col("cosine").desc, col("cid"))
+    if (rerank <= 0) topKPer(scored, "qid", k, order: _*)
     else {
-      val short = scored.withColumn("_rn", row_number().over(w))
-        .where(col("_rn") <= rerank).select("qid", "cid")
+      val short = topKPer(scored, "qid", rerank, order: _*).select("qid", "cid")
       // cid-side vector first, qid-side LAST (r15): the final exact
       // window partitions by qid, so in the sort-merge regime it rides
       // the qid join's exchange instead of paying its own after a
@@ -425,10 +434,8 @@ object Vectors {
       val exact = short
         .join(base.select(col(idCol).as("cid"), col(vecCol).as("_cv")), Seq("cid"))
         .join(base.select(col(idCol).as("qid"), col(vecCol).as("_qv")), Seq("qid"))
-        .select(col("qid"), col("cid"),
-          round(graft.functions.Expressions.cosineSim(col("_qv"), col("_cv")), 6)
-            .as("cosine"))
-      exact.withColumn("_rn", row_number().over(w)).where(col("_rn") <= k).drop("_rn")
+        .select(col("qid"), col("cid"), exactCosine(col("_qv"), col("_cv")).as("cosine"))
+      topKPer(exact, "qid", k, order: _*)
     }
   }
 
@@ -513,21 +520,7 @@ object Vectors {
               dim: Int, k: Int, tables: Int = 8, bucketTarget: Int = 16,
               planesOverride: Int = -1, nHint: Long = -1L,
               queryPred: Option[Column => Column] = None): DataFrame = {
-    // plane auto-scaling needs the corpus size: caller-supplied nHint
-    // > catalog statistics > one count() job, in that order — the
-    // count is a full extra scan per invocation of a hot operator.
-    val planes =
-      if (planesOverride > 0) planesOverride
-      else {
-        val n =
-          if (nHint > 0) nHint
-          else {
-            val stats = df.queryExecution.optimizedPlan.stats
-            if (stats.rowCount.isDefined) stats.rowCount.get.toLong
-            else df.count()
-          }
-        planesFor(n, bucketTarget)
-      }
+    val planes = autoPlanes(df, bucketTarget, planesOverride, nHint)
     lshTopKKeyed(df, idCol, vecCol, Nil, dim, k, planes, tables, queryPred)
   }
 
@@ -541,11 +534,8 @@ object Vectors {
                            planes: Int, tables: Int,
                            queryPred: Option[Column => Column] = None): DataFrame = {
     val carried = Seq(idCol, vecCol) ++ extraKeys
-    val keyed = graft.core.Tables.spread(
-        df.select(carried.map(col): _*), col(idCol))
-      .select(carried.map(col) :+
-        posexplode(graft.functions.Expressions.lshTableKeys(col(vecCol), dim, planes, tables))
-          .as(Seq("_tbl", "_key")): _*)
+    val keyed = Tables.spread(df.select(carried.map(col): _*), col(idCol))
+      .select(carried.map(col) :+ lshKeys(col(vecCol), dim, planes, tables): _*)
     val joinKeys = Seq("_tbl", "_key") ++ extraKeys
     // query-side-only restriction (the ivfTopK queryPred contract):
     // the predicate references only the id, so Catalyst pushes it
@@ -561,14 +551,12 @@ object Vectors {
     // ClusteredDistribution(qid, cid, cosine) and the window's
     // ClusteredDistribution(qid), where distinct-then-window planned
     // two exchanges (the nswTopK rescore rule).
-    val scored = graft.core.Tables.spread(
+    val scored = Tables.spread(
         a.join(b, joinKeys).where(col("qid") =!= col("cid"))
-          .select(col("qid"), col("cid"),
-            round(graft.functions.Expressions.cosineSim(col("_qv"), col("_cv")), 6).as("cosine")),
+          .select(col("qid"), col("cid"), exactCosine(col("_qv"), col("_cv")).as("cosine")),
         col("qid"))
       .distinct() // a pair may collide in several tables
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("cid"))
-    scored.withColumn("_rn", row_number().over(w)).where(col("_rn") <= k).drop("_rn")
+    topKPer(scored, "qid", k, col("cosine").desc, col("cid"))
   }
 
   /** Cross-frame LSH retrieval (the RAG serving shape): queries and a
@@ -585,45 +573,28 @@ object Vectors {
                       dim: Int, k: Int, tables: Int = 8, bucketTarget: Int = 16,
                       planesOverride: Int = -1, nHint: Long = -1L,
                       selfExcludeCol: Option[String] = None): DataFrame = {
-    import graft.functions.Expressions.{cosineSim, lshTableKeys}
     // planes auto-scale with the CANDIDATE corpus size (the side that
     // grows); override pins them for the static SQL oracle.
-    val planes =
-      if (planesOverride > 0) planesOverride
-      else {
-        val n =
-          if (nHint > 0) nHint
-          else {
-            val stats = cands.queryExecution.optimizedPlan.stats
-            if (stats.rowCount.isDefined) stats.rowCount.get.toLong
-            else cands.count()
-          }
-        planesFor(n, bucketTarget)
-      }
+    val planes = autoPlanes(cands, bucketTarget, planesOverride, nHint)
     // vector columns aliased to internal names BEFORE the join (the
     // mipsTopK _qv/_cv discipline) — callers naturally use the same
     // column name on both sides, which would make the post-join
     // cosineSim reference ambiguous
-    val q = graft.core.Tables.spread(queries, col(qIdCol))
-      .select(col(qIdCol), col(qVecCol).as("_qv"),
-        posexplode(lshTableKeys(col(qVecCol), dim, planes, tables))
-          .as(Seq("_tbl", "_key")))
-    val c = graft.core.Tables.spread(cands, cKeyCols.map(col): _*)
+    val q = Tables.spread(queries, col(qIdCol))
+      .select(col(qIdCol), col(qVecCol).as("_qv"), lshKeys(col(qVecCol), dim, planes, tables))
+    val c = Tables.spread(cands, cKeyCols.map(col): _*)
       .select(cKeyCols.map(col) ++ Seq(col(cVecCol).as("_cv"),
-        posexplode(lshTableKeys(col(cVecCol), dim, planes, tables))
-          .as(Seq("_tbl", "_key"))): _*)
+        lshKeys(col(cVecCol), dim, planes, tables)): _*)
     val joined = q.join(c, Seq("_tbl", "_key"))
     val filtered = selfExcludeCol
       .map(sc => joined.where(col(sc) =!= col(qIdCol))).getOrElse(joined)
     // one post-join exchange — the lshTopKKeyed qid-spread rule (r15)
-    val scored = graft.core.Tables.spread(
+    val scored = Tables.spread(
         filtered.select(col(qIdCol) +: cKeyCols.map(col) :+
-          round(cosineSim(col("_qv"), col("_cv")), 6).as("cosine"): _*),
+          exactCosine(col("_qv"), col("_cv")).as("cosine"): _*),
         col(qIdCol))
       .distinct() // a pair may collide in several tables
-    val w = Window.partitionBy(qIdCol)
-      .orderBy(col("cosine").desc +: cKeyCols.map(col): _*)
-    scored.withColumn("_rn", row_number().over(w)).where(col("_rn") <= k).drop("_rn")
+    topKPer(scored, qIdCol, k, col("cosine").desc +: cKeyCols.map(col): _*)
   }
 
   /** MIPS (maximum inner-product search) top-k via the norm-
@@ -643,28 +614,15 @@ object Vectors {
   def mipsTopK(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                k: Int, tables: Int = 8, bucketTarget: Int = 16,
                planesOverride: Int = -1, nHint: Long = -1L): DataFrame = {
-    import graft.functions.Expressions.{dotProduct, lshTableKeys}
     // planes auto-scale with corpus size (O(1) expected bucket
     // occupancy — the lshTopK scale path); override pins them for the
-    // static SQL oracle. Same hint > stats > count fallback order.
-    val planes =
-      if (planesOverride > 0) planesOverride
-      else {
-        val n =
-          if (nHint > 0) nHint
-          else {
-            val stats = df.queryExecution.optimizedPlan.stats
-            if (stats.rowCount.isDefined) stats.rowCount.get.toLong
-            else df.count()
-          }
-        planesFor(n, bucketTarget)
-      }
+    // static SQL oracle
+    val planes = autoPlanes(df, bucketTarget, planesOverride, nHint)
     // compiled squared norm (r16): dotProduct(v, v) accumulates
     // double(x_i)·double(x_i) left-to-right — the identical IEEE op
     // sequence as the interpreted aggregate(transform(x -> x²)) form
     val n2 = dotProduct(col(vecCol), col(vecCol))
-    val base = graft.core.Tables.spread(
-        df.select(col(idCol), col(vecCol)), col(idCol))
+    val base = Tables.spread(df.select(col(idCol), col(vecCol)), col(idCol))
       .select(col(idCol), col(vecCol), n2.as("_n2"))
     val m2 = base.agg(max(col("_n2")).as("_m2"))
     val caug = concat(transform(col(vecCol), x => x.cast(DoubleType)),
@@ -672,22 +630,18 @@ object Vectors {
     val qaug = concat(transform(col(vecCol), x => x.cast(DoubleType)),
       array(lit(0.0)))
     val cKeyed = base.crossJoin(broadcast(m2))
-      .select(col(idCol).as("cid"), col(vecCol).as("_cv"),
-        posexplode(lshTableKeys(caug, dim + 1, planes, tables))
-          .as(Seq("_tbl", "_key")))
+      .select(col(idCol).as("cid"), col(vecCol).as("_cv"), lshKeys(caug, dim + 1, planes, tables))
     val qKeyed = base.select(col(idCol).as("qid"), col(vecCol).as("_qv"),
-      posexplode(lshTableKeys(qaug, dim + 1, planes, tables))
-        .as(Seq("_tbl", "_key")))
+      lshKeys(qaug, dim + 1, planes, tables))
     // one post-join exchange — the lshTopKKeyed qid-spread rule (r15)
-    val scored = graft.core.Tables.spread(
+    val scored = Tables.spread(
         qKeyed.join(cKeyed, Seq("_tbl", "_key"))
           .where(col("qid") =!= col("cid"))
           .select(col("qid"), col("cid"),
             round(dotProduct(col("_qv"), col("_cv")), 6).as("dot")),
         col("qid"))
       .distinct() // a pair may collide in several tables
-    val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("cid"))
-    scored.withColumn("_rn", row_number().over(w)).where(col("_rn") <= k).drop("_rn")
+    topKPer(scored, "qid", k, col("dot").desc, col("cid"))
   }
 
   /** Attribute-constrained (PRE-filtered) ANN top-k: each query sees
@@ -707,13 +661,6 @@ object Vectors {
                       tables: Int = 8, planes: Int = 6): DataFrame =
     lshTopKKeyed(df, idCol, vecCol, Seq(attrCol), dim, k, planes, tables)
 
-  /** Embedding near-dup pairs blocked by LSH buckets instead of a
-    * label column — removes [[cosineNearDupPairs]]'s dependence on a
-    * meaningful blocking key: candidates are the pairs colliding in
-    * any of the `tables` hyperplane tables (OR-banding), verified by
-    * the codegen'd cosine kernel. Same shuffle shape as [[lshTopK]];
-    * recall follows the OR-banding collision probability
-    * 1 − (1 − (1 − θ/π)^planes)^tables for angle θ. */
   /** SEMANTIC decontamination: flag training documents whose
     * embedding is cosine-close to ANY benchmark/eval embedding — the
     * paraphrase-contamination pass the n-gram rule
@@ -731,14 +678,11 @@ object Vectors {
                             threshold: Double, tables: Int = 8,
                             planes: Int = 6): DataFrame = {
     def keyed(df: DataFrame, as: String, vas: String) =
-      df.select(col(idCol).as(as), col(vecCol).as(vas),
-        posexplode(graft.functions.Expressions.lshTableKeys(col(vecCol), dim, planes, tables))
-          .as(Seq("_tbl", "_key")))
-    val tr = keyed(graft.core.Tables.spread(train, col(idCol)), "_tid", "_tv")
+      df.select(col(idCol).as(as), col(vecCol).as(vas), lshKeys(col(vecCol), dim, planes, tables))
+    val tr = keyed(Tables.spread(train, col(idCol)), "_tid", "_tv")
     val be = keyed(bench, "_bid", "_bv")
     tr.join(broadcast(be), Seq("_tbl", "_key"))
-      .select(col("_tid"), col("_bid"),
-        round(graft.functions.Expressions.cosineSim(col("_tv"), col("_bv")), 6).as("cosine"))
+      .select(col("_tid"), col("_bid"), exactCosine(col("_tv"), col("_bv")).as("cosine"))
       .distinct() // a pair colliding in several tables scores once
       .where(col("cosine") >= threshold)
       .groupBy(col("_tid").as(idCol))
@@ -784,22 +728,11 @@ object Vectors {
               queryPred: Option[Column => Column] = None): DataFrame = {
     require(beam >= k, s"beam=$beam must be >= k=$k")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val planes =
-      if (planesOverride > 0) planesOverride
-      else {
-        val n =
-          if (nHint > 0) nHint
-          else {
-            val stats = df.queryExecution.optimizedPlan.stats
-            if (stats.rowCount.isDefined) stats.rowCount.get.toLong else df.count()
-          }
-        planesFor(n, bucketTarget)
-      }
+    val planes = autoPlanes(df, bucketTarget, planesOverride, nHint)
     // (node, vec) scanned twice per scoring round (query + candidate
     // side) across buildRounds+beamRounds+2 rounds — persist once
     // (row-sized, recomputable) instead of 2×rounds source scans
-    val vecs = graft.core.Tables.spread(
-        df.select(col(idCol).as("node"), col(vecCol).as("_v")), col("node"))
+    val vecs = Tables.spread(df.select(col(idCol).as("node"), col(vecCol).as("_v")), col("node"))
       .persist(lvl)
     def rescore(cands: DataFrame, keep: Int): DataFrame = {
       // cands: (node, cand) — dedup, exact cosine, top-`keep` per node.
@@ -812,20 +745,14 @@ object Vectors {
       // (distinct on the pair key, then window on node) — with 6
       // checkpointed rounds that is 6 extra barrier stages per query
       // at the bench's stage-latency floor.
-      val scored = graft.core.Tables.spread(cands, col("node")).distinct()
+      val scored = Tables.spread(cands, col("node")).distinct()
         .join(vecs.select(col("node"), col("_v").as("_nv")), "node")
         .join(vecs.select(col("node").as("cand"), col("_v").as("_cv")), "cand")
-        .select(col("node"), col("cand"),
-          round(graft.functions.Expressions.cosineSim(col("_nv"), col("_cv")), 6)
-            .as("cosine"))
-      val w = Window.partitionBy("node").orderBy(col("cosine").desc, col("cand"))
-      scored.withColumn("_rn", row_number().over(w)).where(col("_rn") <= keep)
-        .drop("_rn")
+        .select(col("node"), col("cand"), exactCosine(col("_nv"), col("_cv")).as("cosine"))
+      topKPer(scored, "node", keep, col("cosine").desc, col("cand"))
     }
     // 1. INIT: within-bucket pairs under `initTables` hyperplane tables
-    val keyed = vecs.select(col("node"),
-      posexplode(graft.functions.Expressions.lshTableKeys(col("_v"), dim, planes, initTables))
-        .as(Seq("_tbl", "_key")))
+    val keyed = vecs.select(col("node"), lshKeys(col("_v"), dim, planes, initTables))
     val initPairs = keyed.join(
         keyed.select(col("_tbl"), col("_key"), col("node").as("cand")),
         Seq("_tbl", "_key"))
@@ -892,23 +819,25 @@ object Vectors {
         .localCheckpoint()
     }
     // beamRounds == 0: emit top-k of the seed beam (g's top-m rows)
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("cid"))
-    beamDf.withColumn("_rn", row_number().over(w)).where(col("_rn") <= k)
-      .drop("_rn")
+    topKPer(beamDf, "qid", k, col("cosine").desc, col("cid"))
   }
 
+  /** Embedding near-dup pairs blocked by LSH buckets instead of a
+    * label column — removes [[cosineNearDupPairs]]'s dependence on a
+    * meaningful blocking key: candidates are the pairs colliding in
+    * any of the `tables` hyperplane tables (OR-banding), verified by
+    * the codegen'd cosine kernel. Same shuffle shape as [[lshTopK]];
+    * recall follows the OR-banding collision probability
+    * 1 − (1 − (1 − θ/π)^planes)^tables for angle θ. */
   def lshNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                       dim: Int, threshold: Double,
                       tables: Int = 8, planes: Int = 6): DataFrame = {
-    val keyed = graft.core.Tables.spread(df.select(col(idCol), col(vecCol)), col(idCol))
-      .select(col(idCol), col(vecCol),
-        posexplode(graft.functions.Expressions.lshTableKeys(col(vecCol), dim, planes, tables))
-          .as(Seq("_tbl", "_key")))
+    val keyed = Tables.spread(df.select(col(idCol), col(vecCol)), col(idCol))
+      .select(col(idCol), col(vecCol), lshKeys(col(vecCol), dim, planes, tables))
     val a = keyed.select(col("_tbl"), col("_key"), col(idCol).as("a"), col(vecCol).as("_av"))
     val b = keyed.select(col("_tbl"), col("_key"), col(idCol).as("b"), col(vecCol).as("_bv"))
     a.join(b, Seq("_tbl", "_key")).where(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        round(graft.functions.Expressions.cosineSim(col("_av"), col("_bv")), 6).as("cosine"))
+      .select(col("a"), col("b"), exactCosine(col("_av"), col("_bv")).as("cosine"))
       .distinct()
       .where(col("cosine") >= threshold)
   }

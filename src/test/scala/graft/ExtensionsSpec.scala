@@ -30,6 +30,17 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(math.abs(r - 1.0) < 1e-12)
   }
 
+  test("graft_cosine: non-numeric-array arguments fail analysis; a length mismatch is NULL") {
+    Seq("graft_cosine(1, 2)", "graft_cosine(array('a'), array('b'))").foreach { call =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $call AS c"))
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+    }
+    val row = spark.sql(
+      """SELECT graft_cosine(array(1D, 2D, 3D), array(1D, 2D)) AS short,
+         graft_cosine(array(1D, CAST(NULL AS DOUBLE)), array(1D, 2D)) AS null_elem""").head()
+    assert(row.isNullAt(0) && row.isNullAt(1))
+  }
+
   test("graft_shingle_jaccard and graft_simhash from SQL") {
     val row = spark.sql(
       """SELECT graft_shingle_jaccard('hello world', 'hello world', 5) AS j,
