@@ -35,8 +35,8 @@ object Harness {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // reclaim unpersists checkpointed loop-state RDDs on purpose; each
-    // one logs a "lineage has been truncated" WARN — hundreds per full
+    // reclaim and LoopFrames unpersist checkpointed loop RDDs on purpose;
+    // each logs a "lineage has been truncated" WARN — hundreds per full
     // run, drowning real warnings (VERDICT r11 cosmetic #3). Expected
     // by design here, so silence just that logger, not the level.
     org.apache.logging.log4j.core.config.Configurator.setLevel(

@@ -304,13 +304,6 @@ object QueriesAnalytics {
           * 1e6 + 0.5) / 1e6).as("z"))
     })
 
-  /** X-EV4: ordered-step funnel (view → click → purchase, each step
-    * within 7 days of the previous step's first completion) — the
-    * product-analytics staple. Three user-keyed min aggregates, each
-    * joined back onto the event stream; every frame that moves is
-    * user-cardinality, and at 100 TB the three aggregates shuffle on
-    * the same user key so AQE co-partitions them. Timestamps are
-    * exact micros — no float anywhere. */
   /** X-EV20: deterministic bootstrap confidence interval for the
     * mean per-user purchase total — resampling-based uncertainty, the
     * inference tool that works when no closed form does (next to
@@ -520,6 +513,13 @@ object QueriesAnalytics {
         .orderBy("duration_h")
   }
 
+  /** X-EV4: ordered-step funnel (view → click → purchase, each step
+    * within 7 days of the previous step's first completion) — the
+    * product-analytics staple. Three user-keyed min aggregates, each
+    * joined back onto the event stream; every frame that moves is
+    * user-cardinality, and at 100 TB the three aggregates shuffle on
+    * the same user key so AQE co-partitions them. Timestamps are
+    * exact micros — no float anywhere. */
   private val evFunnel = Q(
     "ev_funnel",
     Some("""WITH t1 AS (SELECT user_id, min(ts) AS t1 FROM events
@@ -779,10 +779,6 @@ object QueriesAnalytics {
         .agg(dsum(col("value"), 6))
         .orderBy("user_id"))
 
-  /** A19: key-skew diagnostics — the pre-flight report that decides
-    * whether a join/agg key needs salting (j13) before a cluster run.
-    * Top-10 heavy hitters with shares + the max/mean skew ratio.
-    * Exact counts, round-6 ratios, key-string tie-break. */
   /** X-A20: concentration report — HHI and top-share metrics over
     * the supplier revenue distribution: the "is this mix too
     * concentrated?" gate (same question tx_domain_mix asks of corpus
@@ -834,6 +830,10 @@ object QueriesAnalytics {
       glob.crossJoin(topAgg)
     })
 
+  /** A19: key-skew diagnostics — the pre-flight report that decides
+    * whether a join/agg key needs salting (j13) before a cluster run.
+    * Top-10 heavy hitters with shares + the max/mean skew ratio.
+    * Exact counts, round-6 ratios, key-string tie-break. */
   private val a19Skew = Q(
     "a19_skew_report",
     Some("""WITH c AS (SELECT CAST(l_suppkey AS VARCHAR) AS key, count(*) AS n

@@ -417,8 +417,6 @@ object QueriesSources {
         .orderBy("mon")
     })
 
-  /** Streaming surface, tumbling windows: hourly per-type counts
-    * (batch flavor here; StreamsSpec drives readStream). */
   /** X-S14: DYNAMIC partition pruning — the fact table is hive-
     * partitioned on the join key, and the dimension side's filter
     * values are only known at runtime (a LIKE over the type column),
@@ -471,6 +469,8 @@ object QueriesSources {
     (s, dir) =>
       Streams.cdcCurrentState(t(s, dir, "events")).orderBy("user_id"))
 
+  /** Streaming surface, tumbling windows: hourly per-type counts
+    * (batch flavor here; StreamsSpec drives readStream). */
   private val st1 = Q(
     "st_hourly_counts",
     Some(s"""SELECT date_trunc('hour', ts) AS bucket, event_type,
@@ -533,9 +533,6 @@ object QueriesSources {
           ascii(col("text")).as("first_code"))
         .orderBy("doc_id"))
 
-  /** Multimodal: STUB decode + feature extraction via mapPartitions
-    * record batches (the mapInPandas shape); features exploded to
-    * scalars so the oracle can mirror the deterministic fake decode. */
   /** S12 (scale extension): hive-partitioned parquet layout —
     * write partitioned by a low-cardinality column, read back with a
     * partition predicate. At 100 TB this is THE layout lever: the
@@ -614,6 +611,9 @@ object QueriesSources {
           md5(col("frame")).as("frame_md5"))
         .orderBy("doc_id", "frame_no"))
 
+  /** Multimodal: STUB decode + feature extraction via mapPartitions
+    * record batches (the mapInPandas shape); features exploded to
+    * scalars so the oracle can mirror the deterministic fake decode. */
   private val mm2 = Q(
     "mm_decode_features",
     Some("""WITH f AS (SELECT doc_id, length(text) AS n, CAST(i.range AS BIGINT) AS dim
@@ -815,12 +815,6 @@ object QueriesSources {
         .orderBy("media_id")
     })
 
-  /** X-MM9: REAL AIFF decode — the third audio container (FORM/AIFF,
-    * big-endian PCM, 80-bit extended-float rate field), same
-    * closed-form-oracle design: ±a square wave has rms = peak =
-    * a/32768 exactly; 256 frames at 8 kHz give duration 0.032 (the
-    * IEEE division 256/8000 and the decimal literal 0.032 round to
-    * the same double on both engines — the mm5/mm7 recipe). */
   /** X-MM10: image perceptual near-dedup — synthesize an 8×8 gray P6
     * per key (keys sharing k%50 render IDENTICAL images), decode
     * through the REAL parser, average-hash with the exact integer
@@ -877,6 +871,12 @@ object QueriesSources {
         .orderBy("a", "b")
     })
 
+  /** X-MM9: REAL AIFF decode — the third audio container (FORM/AIFF,
+    * big-endian PCM, 80-bit extended-float rate field), same
+    * closed-form-oracle design: ±a square wave has rms = peak =
+    * a/32768 exactly; 256 frames at 8 kHz give duration 0.032 (the
+    * IEEE division 256/8000 and the decimal literal 0.032 round to
+    * the same double on both engines — the mm5/mm7 recipe). */
   private val mm9 = Q(
     "mm_aiff_decode",
     Some("""SELECT CAST(p_partkey AS BIGINT) AS media_id,

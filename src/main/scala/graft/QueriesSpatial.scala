@@ -392,8 +392,9 @@ object QueriesSpatial {
   /** X-M7: fully-distributed OLS (two predictors) — one moment
     * aggregate (exact decimal sums), Cramer closed form, R² via the
     * SSE identity. Nothing detail-sized leaves the executors (the
-    * scale path M4's driver-side sample fit can't take). */
-  /** Inputs are floor-quantized to short decimal grids (x2 integer,
+    * scale path M4's driver-side sample fit can't take).
+    *
+    * Inputs are floor-quantized to short decimal grids (x2 integer,
     * y 2 decimals) so every cross-moment product terminates within
     * the Det scale — un-quantized, (integer × 5-decimal) products
     * land exactly ON scale-4 half-quanta, where Spark's exact-

@@ -265,11 +265,6 @@ object QueriesText {
     * inside any WHERE/SELECT over a frame with a `text` column). */
   private val qualityInlineSql: String = qualityInlineSql2
 
-  /** EP4: the corpus-curation flagship — quality cut, exact dedup,
-    * near-dup canonicalization, deterministic split, per-(split,
-    * lang) report — oracle-checked END-TO-END (the near-dup stage
-    * runs the poly CTE chain over the filtered CTE, the group
-    * resolution is the recursive-CTE transitive closure). */
   /** X-EP7: continuous crawl-batch ingestion — quality gate +
     * incremental near-dedup against the existing corpus + per-lang
     * admission report, oracle-checked end-to-end (the poly band CTE
@@ -306,6 +301,11 @@ object QueriesText {
           ORDER BY lang"""),
     (s, dir) => Pipeline.incrementalIngest(s, dir))
 
+  /** EP4: the corpus-curation flagship — quality cut, exact dedup,
+    * near-dup canonicalization, deterministic split, per-(split,
+    * lang) report — oracle-checked END-TO-END (the near-dup stage
+    * runs the poly CTE chain over the filtered CTE, the group
+    * resolution is the recursive-CTE transitive closure). */
   private val ep4Corpus = Q(
     "ep4_corpus_curation",
     Some(s"""WITH RECURSIVE base AS (
@@ -363,13 +363,6 @@ object QueriesText {
       Text.commonnessScore(t(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id"))
 
-  /** X-TX16: bigram LM fluency score — the CCNet-style perplexity
-    * quality gate, self-trained (add-0.5 smoothing). The oracle
-    * retrains the same model independently: DuckDB list lambdas build
-    * the bigram stream, the context counts come from a w1-window, and
-    * the per-doc mean uses the scale-8 decimal sum + 1e-6 floor
-    * quantization recipe (see Text.bigramLmScore for the error
-    * model). */
   /** Shared CTE chain of the self-trained add-alpha bigram LM score
     * (one source of truth for tx_bigram_lm and the CCNet-style
     * fluency buckets): emits `lmsc(doc_id, n_bigrams, lm_score)`. */
@@ -443,6 +436,13 @@ object QueriesText {
       Text.lmPerplexityEval(t(s, dir, "documents"), "doc_id", "text", "lang")
         .orderBy("lang"))
 
+  /** X-TX16: bigram LM fluency score — the CCNet-style perplexity
+    * quality gate, self-trained (add-0.5 smoothing). The oracle
+    * retrains the same model independently: DuckDB list lambdas build
+    * the bigram stream, the context counts come from a w1-window, and
+    * the per-doc mean uses the scale-8 decimal sum + 1e-6 floor
+    * quantization recipe (see Text.bigramLmScore for the error
+    * model). */
   private val txBigramLm = Q(
     "tx_bigram_lm",
     Some(s"""WITH $bigramLmCtes
@@ -922,12 +922,6 @@ object QueriesText {
         .orderBy("threshold_bin")
     })
 
-  /** MinHash + LSH near-dedup, polynomial/LCG hash family — the
-    * ENGINE path for scale (VERDICT r01 #1): Horner shingle codes +
-    * per-hash LCG replace 8 md5 compress calls per shingle with a few
-    * multiplies, and the family is still exactly SQL-mirrorable (all
-    * arithmetic < 2^63), so this keeps the full hash-match gate
-    * rather than dropping to a rows-only check. */
   /** Shared poly-family CTE chain: src -> shingles -> Horner
     * codes -> 8 LCG minima -> 2 band keys -> candidate pairs ->
     * Jaccard-verified pairs (`v`). Used by dd_minhash_lsh_poly,
@@ -970,6 +964,12 @@ object QueriesText {
             / (len(da.sh) + len(db.sh) - len(list_intersect(da.sh, db.sh))) AS jaccard
           FROM cand JOIN d da ON cand.a = da.doc_id JOIN d db ON cand.b = db.doc_id)"""
 
+  /** MinHash + LSH near-dedup, polynomial/LCG hash family — the
+    * ENGINE path for scale (VERDICT r01 #1): Horner shingle codes +
+    * per-hash LCG replace 8 md5 compress calls per shingle with a few
+    * multiplies, and the family is still exactly SQL-mirrorable (all
+    * arithmetic < 2^63), so this keeps the full hash-match gate
+    * rather than dropping to a rows-only check. */
   private val ddMinhashPoly = Q(
     "dd_minhash_lsh_poly",
     Some(s"""WITH $polyPairCtes
@@ -1754,14 +1754,6 @@ object QueriesText {
           nBuckets = 256, testBelowPerMille = 200)
         .orderBy("lang", "lang_pred"))
 
-  /** X-TX21: DSIR importance resampling (Xie et al. '23) — select the
-    * 200 raw documents whose hashed-unigram distribution best matches
-    * the target domain (here: the labeled-'en' subset), by add-1-
-    * smoothed log-likelihood ratio. Bucket log-ratios are quantized
-    * once to exact micro-longs (the bigram-LM ln recipe), so doc
-    * weights are integer sums and the top-N cut is bit-stable; the
-    * 256-row ratio table broadcasts, the doc pass is one doc-keyed
-    * shuffle + TakeOrdered (see [[Text.dsirWeights]]). */
   /** SQL twin of [[graft.functions.Expressions.TokenBuckets]]:
     * hashed-unigram bucket per token instance over `textExpr`. */
   private def tokenBucketsSql(nBuckets: Int, textExpr: String = "text"): String =
@@ -1772,6 +1764,14 @@ object QueriesText {
                 i -> CAST(unicode(x[CAST(i AS INT)]) AS BIGINT)),
                 (a, b) -> (a * 31 + b) % 1000000007) % $nBuckets AS INT))"""
 
+  /** X-TX21: DSIR importance resampling (Xie et al. '23) — select the
+    * 200 raw documents whose hashed-unigram distribution best matches
+    * the target domain (here: the labeled-'en' subset), by add-1-
+    * smoothed log-likelihood ratio. Bucket log-ratios are quantized
+    * once to exact micro-longs (the bigram-LM ln recipe), so doc
+    * weights are integer sums and the top-N cut is bit-stable; the
+    * 256-row ratio table broadcasts, the doc pass is one doc-keyed
+    * shuffle + TakeOrdered (see [[Text.dsirWeights]]). */
   private val txDsir = Q(
     "tx_dsir",
     Some {
@@ -1890,16 +1890,6 @@ object QueriesText {
                 * CAST($b[CAST(i AS INT)] AS DOUBLE)))))
        , 6)"""
 
-  /** LSH-bucketed ANN: multi-table OR-banding with corpus-scaled
-    * planes, so within-bucket candidates per doc stay O(1) in corpus
-    * size (VERDICT r01 #3; auto-scaling covered by lshTopK defaults +
-    * LshScalingSpec). Registry queries auto-scale planes from the
-    * parquet footer row count and GENERATE the oracle at the same
-    * count (r13 — the r01–r12 pinned planes=6 measured honest k=16
-    * ratios of 10–14 on this family): the ±1 hyperplane weights are
-    * deterministic constants, inlined into the SQL as literal
-    * arrays — bucketing, OR-dedup, scoring and ranking all
-    * hash-match DuckDB (r01 left this rows-only). */
   /** SQL for the LSH-keyed embeddings rows: the same ±1 hyperplane
     * weights LshTableKeys derives (MurmurHash3 of (t,p,d)), inlined
     * as literal arrays so the whole bucketing is oracle-exact.
@@ -1949,12 +1939,6 @@ object QueriesText {
       .mkString("\nUNION ALL\n")
   }
 
-  /** X-SS10: MIPS top-k via the norm-augmentation reduction (append
-    * sqrt(M²−‖c‖²) to candidates, 0 to queries; cosine order in the
-    * augmented space = inner-product order) — recommendation-style
-    * retrieval where magnitude matters, on the same hyperplane-LSH
-    * scale path as ss_topk_lsh. M² is computed IN-PLAN both sides
-    * (one scalar aggregate / CTE — no generated literals). */
   /** Shared MIPS oracle body at a given plane count. */
   private def mipsSql(planes: Int): String = {
     val keyedRows = mipsKeyedRowsSql(planes, tables = 8, dim = 64)
@@ -1980,6 +1964,12 @@ object QueriesText {
           ORDER BY qid, dot DESC, cid"""
   }
 
+  /** X-SS10: MIPS top-k via the norm-augmentation reduction (append
+    * sqrt(M²−‖c‖²) to candidates, 0 to queries; cosine order in the
+    * augmented space = inner-product order) — recommendation-style
+    * retrieval where magnitude matters, on the same hyperplane-LSH
+    * scale path as ss_topk_lsh. M² is computed IN-PLAN both sides
+    * (one scalar aggregate / CTE — no generated literals). */
   private val ssMips = Q(
     "ss_mips_topk",
     None,
@@ -2033,15 +2023,6 @@ object QueriesText {
               b -> CAST(len(list_filter(bks, x -> x = b)) AS DOUBLE)) AS cnts
             FROM $srcCte))"""
 
-  /** X-EP8: RAG indexing + retrieval composite — documents chunk into
-    * overlapping passages (tx_chunk_overlap), passages and queries
-    * featurize with the model-free hashed-TF embedding
-    * (tx_hashing_tf), and every 25th document retrieves its top-3
-    * OTHER-document passages through shared hyperplane tables with
-    * exact cosine rerank ([[Vectors.ragRetrieveTopK]]). End-to-end
-    * text→vector→retrieve, every stage individually oracled
-    * elsewhere; no broadcast assumption on the query side (it grows
-    * with the corpus). */
   /** Shared ep8 oracle body at a given plane count. */
   private def ep8Sql(planes: Int): String = {
       val chunkBks = tokenBucketsSql(64, "chunk_text")
@@ -2105,6 +2086,15 @@ object QueriesText {
     docs + textBytes / (6L * 48L)
   }
 
+  /** X-EP8: RAG indexing + retrieval composite — documents chunk into
+    * overlapping passages (tx_chunk_overlap), passages and queries
+    * featurize with the model-free hashed-TF embedding
+    * (tx_hashing_tf), and every 25th document retrieves its top-3
+    * OTHER-document passages through shared hyperplane tables with
+    * exact cosine rerank ([[Vectors.ragRetrieveTopK]]). End-to-end
+    * text→vector→retrieve, every stage individually oracled
+    * elsewhere; no broadcast assumption on the query side (it grows
+    * with the corpus). */
   private val ep8Rag = Q(
     "ep8_rag_retrieval",
     None,
@@ -2318,6 +2308,16 @@ object QueriesText {
         SELECT qid, cid, cosine FROM r WHERE rn <= $k"""
   }
 
+  /** LSH-bucketed ANN: multi-table OR-banding with corpus-scaled
+    * planes, so within-bucket candidates per doc stay O(1) in corpus
+    * size (VERDICT r01 #3; auto-scaling covered by lshTopK defaults +
+    * LshScalingSpec). Registry queries auto-scale planes from the
+    * parquet footer row count and GENERATE the oracle at the same
+    * count (r13 — the r01–r12 pinned planes=6 measured honest k=16
+    * ratios of 10–14 on this family): the ±1 hyperplane weights are
+    * deterministic constants, inlined into the SQL as literal
+    * arrays — bucketing, OR-dedup, scoring and ranking all
+    * hash-match DuckDB (r01 left this rows-only). */
   private val ssLsh = Q(
     "ss_topk_lsh",
     None,
@@ -2551,14 +2551,6 @@ object QueriesText {
       Vectors.quantizeInt8(t(s, dir, "embeddings"), "vec_id", "embedding", dim = 64)
         .orderBy("vec_id"))
 
-  /** IVF-bucketed ANN (coarse k-means quantizer + probed inverted
-    * lists). The oracle is generated at Verify time: centroid training
-    * is deterministic (hash-ordered sample, maximin init, fixed
-    * iterations), so the trained centroids are inlined as SQL literals
-    * and assignment + ranking mirror [[graft.functions.Expressions.NearestCells]]
-    * exactly — sequential double squared-L2 per centroid, argmin ties
-    * by centroid index, probe the 2 nearest lists, round-6 cosine
-    * ranking. Recall vs brute force additionally in VectorsSpec. */
   /** X-SS11: graph-based ANN — single-layer navigable small world
     * (the HNSW family minus the hierarchy: NN-descent construction,
     * beam-search probe; see [[graft.operators.Vectors.nswTopK]]), the
@@ -2584,6 +2576,14 @@ object QueriesText {
           ORDER BY qid, cosine DESC, cid"""
     })
 
+  /** IVF-bucketed ANN (coarse k-means quantizer + probed inverted
+    * lists). The oracle is generated at Verify time: centroid training
+    * is deterministic (hash-ordered sample, maximin init, fixed
+    * iterations), so the trained centroids are inlined as SQL literals
+    * and assignment + ranking mirror [[graft.functions.Expressions.NearestCells]]
+    * exactly — sequential double squared-L2 per centroid, argmin ties
+    * by centroid index, probe the 2 nearest lists, round-6 cosine
+    * ranking. Recall vs brute force additionally in VectorsSpec. */
   private val ssIvf = Q(
     "ss_topk_ivf",
     None,
@@ -2902,12 +2902,6 @@ object QueriesText {
           threshold = 0.6, ngram = 3)
         .orderBy("a", "b"))
 
-  /** X-DD14: cross-corpus duplicated-span coverage — fraction of each
-    * document's tokens lying inside a word 8-gram that occurs more
-    * than once corpus-wide (the MassiveText boilerplate signal;
-    * tx_repetition's dup-3gram fraction is the within-doc sibling).
-    * Positional grams zip by parallel unnest in the oracle, exactly
-    * mirroring posexplode. */
   /** X-DD19: CCNet/Gopher-style line-level dedup as a rewrite — drop
     * every segment duplicated corpus-wide and reassemble each doc
     * from its kept segments in order (see Dedup.segmentDedup for the
@@ -3156,6 +3150,12 @@ object QueriesText {
       Dedup.cdcDedup(t(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id"))
 
+  /** X-DD14: cross-corpus duplicated-span coverage — fraction of each
+    * document's tokens lying inside a word 8-gram that occurs more
+    * than once corpus-wide (the MassiveText boilerplate signal;
+    * tx_repetition's dup-3gram fraction is the within-doc sibling).
+    * Positional grams zip by parallel unnest in the oracle, exactly
+    * mirroring posexplode. */
   private val ddDupSpan = Q(
     "dd_dupspan",
     Some(s"""WITH tt AS (SELECT doc_id, $toksSql AS toks FROM documents),

@@ -225,12 +225,12 @@ object syntax {
                   nProbe: Int, k: Int, rerank: Int = 0): DataFrame =
       Vectors.ivfPqTopK(df, idCol, vecCol, centroids, codebooks, nProbe, k, rerank)
 
-    /** Robust MAD outlier flags per group. */
     /** One two-predictor OLS fit per group key (b0, b1, b2, r2, n). */
     def olsPerGroup(keys: Seq[String], x1: Column, x2: Column,
                     y: Column): DataFrame =
       graft.ml.Ols.olsFitPerGroup(df, keys, x1, x2, y)
 
+    /** Robust MAD outlier flags per group. */
     def madOutliers(keys: Seq[String], valCol: Column, k: Double): DataFrame =
       Outliers.madOutliers(df, keys, valCol, k)
 
@@ -375,7 +375,6 @@ object syntax {
                     tieBreak: String): DataFrame =
       Temporal.scd2History(df, keyCol, tsCol, stateCol, tieBreak)
 
-    /** X-EV10 calendar-spine daily resample with forward fill. */
     /** Rolling z-score anomaly flags against each key's trailing
       * window. */
     def rollingAnomaly(keyCol: String, tsCol: String, tieCol: String,
@@ -384,6 +383,7 @@ object syntax {
       Temporal.rollingAnomaly(df, keyCol, tsCol, tieCol, valCol,
         window, minHistory, k)
 
+    /** X-EV10 calendar-spine daily resample with forward fill. */
     def resampleDaily(keyCol: String, tsCol: String, valueCol: String,
                       tieBreak: String): DataFrame =
       Temporal.resampleDaily(df, keyCol, tsCol, valueCol, tieBreak)

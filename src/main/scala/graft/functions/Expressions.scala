@@ -358,9 +358,9 @@ object Expressions {
   abstract class NumReader { def apply(a: ArrayData, i: Int): Double }
 
   /** Shared base of the numeric-array kernels ([[NearestCells]],
-    * [[CosineSim]], [[DotProduct]], [[PqAdcTable]], [[CellDistTo]],
-    * [[CodesDot]], [[CodesConstLookupSum]]), holding their one input
-    * contract:
+    * [[LshTableKeys]], [[CosineSim]], [[DotProduct]], [[PqAdcTable]],
+    * [[CellDistTo]], [[CodesDot]], [[CodesConstLookupSum]]), holding
+    * their one input contract:
     *  - an argument of the wrong type fails analysis ([[argTypes]]);
     *  - a row whose array has the wrong length or a NULL element
     *    gives NULL ([[wellFormed]]), like the interpreted
@@ -475,11 +475,13 @@ object Expressions {
     * for each of `tables` hash tables, `planes` sign bits of ±1
     * projections (weights derived from public MurmurHash3 of
     * (table, plane, dim-index)). Returns one long key per table;
-    * callers posexplode so (table-index, key) is the join key.
-    * Replaces `planes` interpreted zip_with folds per row.
+    * callers posexplode so (table-index, key) is the join key. A
+    * vector whose length is not `dim` or that holds a NULL gets NULL
+    * keys ([[ArrayKernel]]), so posexplode drops it from the
+    * candidates. Replaces `planes` interpreted zip_with folds per row.
     */
   case class LshTableKeys(child: Expression, dim: Int, planes: Int, tables: Int)
-      extends UnaryExpression {
+      extends UnaryExpression with ArrayKernel {
     require(planes >= 1 && planes <= 63 && tables >= 1)
     // weights[t*planes + p][d] : ±1
     private val weights: Array[Array[Double]] =
@@ -490,19 +492,14 @@ object Expressions {
         }
       }
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    // resolved element type, cached once (child type is fixed after
-    // analysis; kernel is called per row)
-    private lazy val isFloat =
-      child.dataType.asInstanceOf[ArrayType].elementType match {
-        case FloatType  => true
-        case DoubleType => false
-        case other => throw new IllegalArgumentException(s"unsupported element type $other")
-      }
-    override protected def nullSafeEval(input: Any): Any =
-      kernel(input.asInstanceOf[ArrayData])
-    /** public compiled kernel — see [[MinHashBands.kernel]]. */
+    override protected def argTypes: Seq[KernelArg] = Seq(NumArray)
+    @transient private lazy val rd = reader(child)
+
+    override protected def nullSafeEval(input: Any): Any = kernel(input.asInstanceOf[ArrayData])
+
     def kernel(arr: ArrayData): ArrayData = {
-      val n = math.min(dim, arr.numElements())
+      if (!wellFormed(arr, dim)) return null
+      val x = rd
       val keys = new Array[Long](tables)
       var t = 0
       while (t < tables) {
@@ -512,26 +509,18 @@ object Expressions {
           val w = weights(t * planes + p)
           var proj = 0.0
           var i = 0
-          while (i < n) {
-            val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-            proj += x * w(i)
-            i += 1
-          }
+          while (i < dim) { proj += x(arr, i) * w(i); i += 1 }
           if (proj > 0) key |= (1L << p)
           p += 1
         }
         keys(t) = key
         t += 1
       }
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(keys)
+      UnsafeArrayData.fromPrimitiveArray(keys)
     }
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("lshTableKeys", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
-    }
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => callKernel(ctx, ev, a))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 

@@ -72,17 +72,6 @@ object Dedup {
     }: _*)
   }
 
-  /** MinHash-LSH candidate pairs (a < b), deduplicated across bands.
-    * The join key (band index, band hash) is high-cardinality —
-    * shuffle-safe at scale; no cross product anywhere.
-    *
-    * `poly = false` (default) uses the md5 hash family — the form the
-    * DuckDB oracle mirrors hex-for-hex. `poly = true` is the engine
-    * path for scale: the polynomial/LCG family
-    * ([[graft.functions.Expressions.MinHashBandsPoly]]) replaces the
-    * 8 md5 compress calls per shingle with a handful of multiplies —
-    * and is still exactly SQL-mirrorable (both families keep the full
-    * hash-match gate; see dd_minhash_lsh / dd_minhash_lsh64). */
   /** (_id, _band, _key) LSH rows for a corpus — the shared front end
     * of self-dedup and incremental dedup. Spread by id BEFORE the
     * signature math (explicit partition count: AQE would coalesce
@@ -118,6 +107,17 @@ object Dedup {
     bands.select(col("_id"), posexplode(col("_bands")).as(Seq("_band", "_key")))
   }
 
+  /** MinHash-LSH candidate pairs (a < b), deduplicated across bands.
+    * The join key (band index, band hash) is high-cardinality —
+    * shuffle-safe at scale; no cross product anywhere.
+    *
+    * `poly = false` (default) uses the md5 hash family — the form the
+    * DuckDB oracle mirrors hex-for-hex. `poly = true` is the engine
+    * path for scale: the polynomial/LCG family
+    * ([[graft.functions.Expressions.MinHashBandsPoly]]) replaces the
+    * 8 md5 compress calls per shingle with a handful of multiplies —
+    * and is still exactly SQL-mirrorable (both families keep the full
+    * hash-match gate; see dd_minhash_lsh / dd_minhash_lsh64). */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             shingleSize: Int = 5, numHashes: Int = 8,
                             bandSize: Int = 2, poly: Boolean = false): DataFrame = {
@@ -611,9 +611,6 @@ object Dedup {
         count_distinct(col("bench_id")).as("n_bench_docs"))
   }
 
-  /** 64-bit SimHash per document (md5-derived token hashes, sign-of-
-    * sum bits) via the compiled SimHash64 expression: one narrow map,
-    * no explode/shuffle. Not oracle-mirrorable; covered by DedupSpec. */
   /** Cross-document duplicated-span coverage (the MassiveText-style
     * "fraction of text inside duplicated n-grams" signal, computed
     * CORPUS-WIDE rather than within one document — [[Text.dupNgramFraction]]
@@ -839,6 +836,9 @@ object Dedup {
             / col("n_bytes") + 0.5) / 1e6).as("dedup_ratio"))
   }
 
+  /** 64-bit SimHash per document (md5-derived token hashes, sign-of-
+    * sum bits) via the compiled SimHash64 expression: one narrow map,
+    * no explode/shuffle. Not oracle-mirrorable; covered by DedupSpec. */
   def simhash64(df: DataFrame, idCol: String, textCol: String): DataFrame =
     graft.core.Tables.spread(df.select(col(idCol), col(textCol)), col(idCol))
       .select(col(idCol),

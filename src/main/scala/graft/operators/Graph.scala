@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Det
+import graft.core.{Det, LoopFrames}
 
 /** Graph operators over edge frames.
   *
@@ -49,9 +49,21 @@ object Graph {
       .withColumn("node", lit(0L)).withColumn("rank", lit(0.0)).limit(0)
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("_deg"))
     val ew = e.join(outdeg, "src").persist(lvl)   // (src, dst, _deg)
-    val teleport = (1.0 - damping) / n
+    rankRounds(ew, nodes, nodes.withColumn("rank", lit(1.0 / n)),
+      lit((1.0 - damping) / n), damping, scale, iterations, checkpointEvery)
+  }
+
+  /** The round loop of [[pageRank]] and [[personalizedPageRank]]:
+    * `iterations` synchronous rounds from `init` over the degree-
+    * joined edges `ew` (src, dst, _deg). A round's rank for each
+    * `base` node is `teleport` (a column of `base`) plus the damped,
+    * quantized contribution sum. */
+  private def rankRounds(ew: DataFrame, base: DataFrame, init: DataFrame,
+                         teleport: Column, damping: Double, scale: Int,
+                         iterations: Int, checkpointEvery: Int): DataFrame = {
     val f = math.pow(10, scale)
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
+    val frames = new LoopFrames
+    var ranks = init
     for (i <- 1 to iterations) {
       val contribs = ew.join(ranks, ew("src") === ranks("node"))
         .select(col("dst"),
@@ -59,18 +71,17 @@ object Graph {
             .as("_c"))
       val sums = contribs.groupBy(col("dst"))
         .agg(Det.dsum(col("_c"), scale).as("_s"))
-      ranks = nodes.join(sums, nodes("node") === sums("dst"), "left")
-        .select(col("node"),
-          (lit(teleport) + lit(damping) * coalesce(col("_s"), lit(0.0)))
-            .as("rank"))
+      ranks = base.join(sums, base("node") === sums("dst"), "left")
+        .select(base("node"),
+          (teleport + lit(damping) * coalesce(col("_s"), lit(0.0))).as("rank"))
       // a checkpoint per round is an eager materialization job each
       // time; lineage only needs cutting every few rounds (long-run
       // plan-depth control), so short runs stay ONE job
       if (i % checkpointEvery == 0 && i < iterations)
         // CP-OK: loop-carried state — lineage GROWS each round and
-        // must be cut; the frame is node-sized (narrow), freed by the
-        // harness reclaim, and persist cannot bound plan depth here
-        ranks = ranks.localCheckpoint()
+        // must be cut; the frame is node-sized (narrow), and persist
+        // cannot bound plan depth here
+        ranks = frames.cut(ranks)
     }
     ranks
   }
@@ -153,10 +164,6 @@ object Graph {
         .otherwise(0.0).as("global_cc"))
   }
 
-  /** The same computation as DuckDB SQL (iterations unrolled), for
-    * the oracle: `edgesSql` must yield (src, dst). Every float op
-    * mirrors [[pageRank]]: IEEE division, 1e-12 floor quantization,
-    * exact decimal sums, teleport + damping in the same order. */
   /** Semi-supervised label propagation, `rounds` synchronous rounds:
     * seeded nodes keep their label forever; every other node adopts
     * the MAJORITY label among its labeled neighbors from the previous
@@ -176,16 +183,11 @@ object Graph {
     // best-vote join — rejoining a separate seeds frame every round
     // costs an extra exchange per round (measured ~0.3 s/stage floor
     // on the tiny per-round frames)
-    var cur = seeds.select(col("node"), col("seed_label"),
-        col("seed_label").as("label"))
-      .persist(lvl)
-    // superseded round frames, unpersisted at each checkpoint round
-    // (the eager materialization point — unpersisting earlier would
-    // force lineage recompute of a not-yet-materialized round). Caps
-    // a long loop's cache debt at checkpointEvery frames instead of
-    // `rounds` (ADVICE r12: library consumers outside the bench
-    // harness have no external reclaim).
-    val stale = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    // each cut frees the rounds before it: a long loop holds at most
+    // checkpointEvery round frames (ADVICE r12)
+    val frames = new LoopFrames
+    var cur = frames.keep(seeds.select(col("node"), col("seed_label"),
+        col("seed_label").as("label")))
     for (i <- 1 to rounds) {
       // ONE exchange per vote round (r15): hash-partition the joined
       // edge rows by src first — HashPartitioning(src) satisfies the
@@ -209,24 +211,17 @@ object Graph {
         .where(col("_rn") === 1)
         .select(col("_v").as("node"), col("_nl").as("_best"))
       // persist each round's frame: cur is referenced TWICE per round
-      // (the vote join and the label join-back), so an unpersisted
+      // (the vote join and the label join-back), so an uncached
       // loop frame recomputes 2^rounds times — the r11 ScaleStudy
       // superlinearity (k=16 ratio 3.4 -> 1.x after this persist).
-      // Node-sized, recomputable, freed by harness reclaim.
-      stale += cur
-      cur = cur.join(best, Seq("node"), "left")
+      // Node-sized and recomputable.
+      cur = frames.keep(cur.join(best, Seq("node"), "left")
         .select(col("node"), col("seed_label"),
-          coalesce(col("seed_label"), col("_best"), col("label")).as("label"))
-        .persist(lvl)
-      if (i % checkpointEvery == 0 && i < rounds) {
+          coalesce(col("seed_label"), col("_best"), col("label")).as("label")))
+      if (i % checkpointEvery == 0 && i < rounds)
         // CP-OK: loop-carried state — lineage grows each round and
-        // must be cut; node-sized (narrow), freed by harness reclaim
-        val cp = cur.localCheckpoint() // eager: cur + ancestors now free
-        stale += cur
-        stale.foreach(_.unpersist(blocking = false))
-        stale.clear()
-        cur = cp
-      }
+        // must be cut; node-sized (narrow)
+        cur = frames.cut(cur)
     }
     cur.select(col("node"), col("label"))
   }
@@ -258,27 +253,11 @@ object Graph {
     require(nSeeds > 0, "personalized PageRank needs a non-empty seed set")
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("_deg"))
     val ew = e.join(outdeg, "src").persist(lvl)
-    val teleport = (1.0 - damping) / nSeeds
-    val f = math.pow(10, scale)
-    var ranks = marked.select(col("node"),
-      when(col("_isSeed"), lit(1.0 / nSeeds)).otherwise(lit(0.0)).as("rank"))
-    for (i <- 1 to iterations) {
-      val contribs = ew.join(ranks, ew("src") === ranks("node"))
-        .select(col("dst"),
-          (floor(col("rank") / col("_deg").cast(DoubleType) * f + 0.5) / f)
-            .as("_c"))
-      val sums = contribs.groupBy(col("dst"))
-        .agg(Det.dsum(col("_c"), scale).as("_s"))
-      ranks = marked.join(sums, marked("node") === sums("dst"), "left")
-        .select(marked("node"),
-          (when(col("_isSeed"), lit(teleport)).otherwise(lit(0.0))
-            + lit(damping) * coalesce(col("_s"), lit(0.0))).as("rank"))
-      if (i % checkpointEvery == 0 && i < iterations)
-        // CP-OK: loop-carried state — lineage grows each round and
-        // must be cut; node-sized, freed by harness reclaim
-        ranks = ranks.localCheckpoint()
-    }
-    ranks
+    rankRounds(ew, marked,
+      marked.select(col("node"),
+        when(col("_isSeed"), lit(1.0 / nSeeds)).otherwise(lit(0.0)).as("rank")),
+      when(col("_isSeed"), lit((1.0 - damping) / nSeeds)).otherwise(lit(0.0)),
+      damping, scale, iterations, checkpointEvery)
   }
 
   /** Unrolled SQL twin of [[personalizedPageRank]]: `edgesSql` yields
@@ -288,10 +267,10 @@ object Graph {
                               scale: Int = 12): String = {
     val f = s"1e$scale"
     def iter(i: Int): String = {
-      val prev = s"r${i - 1}"
+      val last = s"r${i - 1}"
       s"""c$i AS (SELECT e.dst,
             floor(r.rank / CAST(e.deg AS DOUBLE) * $f + 0.5) / $f AS c
-          FROM ew e JOIN $prev r ON e.src = r.node),
+          FROM ew e JOIN $last r ON e.src = r.node),
           s$i AS (SELECT dst, CAST(sum(CAST(c AS DECIMAL(30,$scale))) AS DOUBLE) AS s
             FROM c$i GROUP BY dst),
           r$i AS (SELECT n.node,
@@ -329,26 +308,23 @@ object Graph {
     * the edge frame — everything keyed on node ids, no all-pairs.
     * Each round's edge frame persists (recomputable, spills): it is
     * referenced by the degree aggregate AND next round's join, and
-    * an unpersisted loop frame recomputes geometrically (the
+    * an uncached loop frame recomputes geometrically (the
     * m13_label_prop lesson, r12). */
   def kcorePeel(edges: DataFrame, k: Int, rounds: Int,
                 broadcastKeep: Boolean = true,
                 checkpointEvery: Int = 4): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def degrees(e: DataFrame): DataFrame =
       // ONE scan per degree pass: each edge explodes to both
       // endpoints (a unionAll would scan the cached frame twice)
       e.select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-    var e = edges.select(
+    // each cut frees the rounds before it (the labelPropagation rule;
+    // dormant at the registry's rounds=3)
+    val frames = new LoopFrames
+    var e = frames.keep(edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct().persist(lvl)
-    // superseded round frames — unpersisted at checkpoint rounds (the
-    // labelPropagation recipe, ADVICE r12): caps a long peel's cache
-    // debt at checkpointEvery edge frames; dormant at the registry's
-    // rounds=3, real for library consumers running deep peels.
-    val stale = scala.collection.mutable.ArrayBuffer[DataFrame]()
+      .where(col("a") =!= col("b")).distinct())
     for (i <- 1 to rounds) {
       val kept = degrees(e).where(col("deg") >= k).select("node")
       // the survivor set is node-sized — here bounded by the part
@@ -360,23 +336,17 @@ object Graph {
         val r = kept.withColumnRenamed("node", c)
         if (broadcastKeep) broadcast(r) else r
       }
-      stale += e
       // the LAST round's edge frame is consumed exactly ONCE (the
       // final degree pass) — persisting it is a pure cache-write tax
       // (the dbscan stays-LAZY rule, r16); every earlier round's frame
       // feeds its round's degree aggregate AND the next round's join
       val joined = e.join(side("a"), Seq("a")).join(side("b"), Seq("b"))
         .select(col("a"), col("b"))
-      e = if (i < rounds) joined.persist(lvl) else joined
-      if (i % checkpointEvery == 0 && i < rounds) {
+      e = if (i < rounds) frames.keep(joined) else joined
+      if (i % checkpointEvery == 0 && i < rounds)
         // CP-OK: loop-carried state — lineage grows each round and
-        // must be cut; edge-frame-sized, freed by harness reclaim
-        val cp = e.localCheckpoint() // eager: e + ancestors now free
-        stale += e
-        stale.foreach(_.unpersist(blocking = false))
-        stale.clear()
-        e = cp
-      }
+        // must be cut; edge-frame-sized
+        e = frames.cut(e)
     }
     degrees(e)
   }
@@ -385,12 +355,12 @@ object Graph {
     * (src, dst). */
   def kcorePeelSql(edgesSql: String, k: Int, rounds: Int): String = {
     def round(i: Int): String = {
-      val prev = s"e${i - 1}"
+      val last = s"e${i - 1}"
       s"""d$i AS (SELECT node, count(*) AS deg FROM
-            (SELECT unnest([a, b]) AS node FROM $prev)
+            (SELECT unnest([a, b]) AS node FROM $last)
             GROUP BY node),
           k$i AS (SELECT node FROM d$i WHERE deg >= $k),
-          e$i AS (SELECT e.a, e.b FROM $prev e
+          e$i AS (SELECT e.a, e.b FROM $last e
             JOIN k$i x ON e.a = x.node JOIN k$i y ON e.b = y.node)"""
     }
     s"""WITH ee AS ($edgesSql),
@@ -407,16 +377,16 @@ object Graph {
   def labelPropagationSql(edgesSql: String, seedsSql: String,
                           rounds: Int): String = {
     def iter(i: Int): String = {
-      val prev = s"r${i - 1}"
+      val last = s"r${i - 1}"
       s"""c$i AS (SELECT e.src AS v, r.label AS nl, count(*) AS c
-            FROM e JOIN $prev r ON e.dst = r.node
+            FROM e JOIN $last r ON e.dst = r.node
             WHERE r.label IS NOT NULL GROUP BY e.src, r.label),
           b$i AS (SELECT v, nl FROM (SELECT v, nl,
               ROW_NUMBER() OVER (PARTITION BY v ORDER BY c DESC, nl) AS rn
             FROM c$i) WHERE rn = 1),
           r$i AS (SELECT p.node, p.seed_label,
               coalesce(p.seed_label, b.nl, p.label) AS label
-            FROM $prev p LEFT JOIN b$i b ON p.node = b.v)"""
+            FROM $last p LEFT JOIN b$i b ON p.node = b.v)"""
     }
     s"""WITH e AS ($edgesSql),
         seeds AS ($seedsSql),
@@ -425,14 +395,18 @@ object Graph {
         SELECT node, label FROM r$rounds ORDER BY node"""
   }
 
+  /** The same computation as DuckDB SQL (iterations unrolled), for
+    * the oracle: `edgesSql` must yield (src, dst). Every float op
+    * mirrors [[pageRank]]: IEEE division, 1e-12 floor quantization,
+    * exact decimal sums, teleport + damping in the same order. */
   def pageRankSql(edgesSql: String, iterations: Int,
                   damping: Double = 0.85, scale: Int = 12): String = {
     val f = s"1e$scale"
     def iter(i: Int): String = {
-      val prev = if (i == 1) "r0" else s"r${i - 1}"
+      val last = if (i == 1) "r0" else s"r${i - 1}"
       s"""c$i AS (SELECT e.dst,
             floor(r.rank / CAST(e.deg AS DOUBLE) * $f + 0.5) / $f AS c
-          FROM ew e JOIN $prev r ON e.src = r.node),
+          FROM ew e JOIN $last r ON e.src = r.node),
           s$i AS (SELECT dst, CAST(sum(CAST(c AS DECIMAL(30,$scale))) AS DOUBLE) AS s
             FROM c$i GROUP BY dst),
           r$i AS (SELECT n.node,

@@ -22,8 +22,8 @@ object Outliers {
     * `useJenks = true` reproduces the reference's jenkspy binning:
     * breaks computed driver-side on the collected *cluster-level*
     * aggregate (one value per cluster, small), like the reference.
-    */
-  /** `detScale`: quantization scale of the decimal-exact means. Pick
+    *
+    * `detScale`: quantization scale of the decimal-exact means. Pick
     * it so every INPUT VALUE's decimal expansion terminates within
     * `detScale` digits — then the double→decimal cast is exact and
     * cross-engine deterministic by construction. A value with MORE

@@ -104,17 +104,17 @@ object Spatial {
     *
     * Two interchangeable cell schemes generate candidates (identical
     * results — the residual distance predicate and ranking are
-    * shared; HealpixSpec asserts equality):
+    * shared; HealpixSpec asserts equality), picked by the radius:
     *
-    *  - "healpix" (default): the codegen'd HEALPix NESTED cell id
+    *  - [[nnJoinSphereHealpix]]: the codegen'd HEALPix NESTED cell id
     *    (the reference's own index structure,
     *    PS1Cal_matching.py:198-200) on the left side, and the disk
     *    cover of each right row's pixel as the neighbor set. Equal-
-    *    area cells — no pole-cap skew in the shuffle key. Falls back
-    *    to the grid when the radius exceeds half a base-face scale.
-    *  - "grid": 3D unit-vector embedding; angular separation θ =
-    *    chord 2·sin(θ/2), so a 3×3×3 chord-grid neighborhood is an
-    *    exact euclidean range search.
+    *    area cells — no pole-cap skew in the shuffle key. Used up to
+    *    half a base-face scale;
+    *  - [[nnJoinSphereGrid]] beyond it: 3D unit-vector embedding;
+    *    angular separation θ = chord 2·sin(θ/2), so a 3×3×3 chord-grid
+    *    neighborhood is an exact euclidean range search.
     *
     * Ranking uses the angular distance rounded to 1e-6 degrees (libm
     * trig differs across platforms in the last ulp), ties broken by
@@ -122,11 +122,8 @@ object Spatial {
     */
   def nnJoinSphere(left: DataFrame, leftId: String, lRa: String, lDec: String,
                    right: DataFrame, rightId: String, rRa: String, rDec: String,
-                   radiusDeg: Double, broadcastRight: Boolean = true,
-                   scheme: String = "healpix"): DataFrame = {
-    val radiusRad = math.toRadians(radiusDeg)
-    if (scheme == "healpix" &&
-        radiusRad <= 0.5 * graft.functions.Healpix.pixelScaleRad(1))
+                   radiusDeg: Double, broadcastRight: Boolean = true): DataFrame = {
+    if (math.toRadians(radiusDeg) <= 0.5 * graft.functions.Healpix.pixelScaleRad(1))
       nnJoinSphereHealpix(left, leftId, lRa, lDec, right, rightId, rRa, rDec,
         radiusDeg, broadcastRight)
     else
@@ -134,8 +131,8 @@ object Spatial {
         radiusDeg, broadcastRight)
   }
 
-  /** Angular distance in degrees between two unit vectors, rounded to
-    * 1e-6 (shared by both cell schemes so results are identical). */
+  /** The unit vector (x, y, z) of (ra, dec) degrees, shared by both
+    * cell schemes so their distances are identical. */
   private def unitVec(ra: Column, dec: Column): (Column, Column, Column) = (
     cos(radians(dec)) * cos(radians(ra)),
     cos(radians(dec)) * sin(radians(ra)),
@@ -182,10 +179,6 @@ object Spatial {
                        right: DataFrame, rightId: String, rRa: String, rDec: String,
                        radiusDeg: Double, broadcastRight: Boolean = true): DataFrame = {
     val chord = 2.0 * math.sin(math.toRadians(radiusDeg) / 2.0)
-    def unitVec(ra: Column, dec: Column): (Column, Column, Column) = (
-      cos(radians(dec)) * cos(radians(ra)),
-      cos(radians(dec)) * sin(radians(ra)),
-      sin(radians(dec)))
     def cellId(c: Column): Column = floor(c / chord).cast("long")
 
     val (lx, ly, lz) = unitVec(col(lRa), col(lDec))

@@ -220,10 +220,6 @@ object Temporal {
       .drop("_cell")
   }
 
-  /** Top-k rows per group by `order` (largest first, deterministic
-    * tie-break columns required in `order`) — the "best k per key"
-    * idiom as one window pass; partial top-k runs map-side via the
-    * rank filter pushed into the window's sort. */
   /** Rolling z-score anomaly detection: each observation is scored
     * against the TRAILING `window` observations of its own key
     * (current row excluded — a spike must not dilute the history it
@@ -268,6 +264,10 @@ object Temporal {
         coalesce(abs(col("z")) > k, lit(false)) || degenerate)
   }
 
+  /** Top-k rows per group by `order` (largest first, deterministic
+    * tie-break columns required in `order`) — the "best k per key"
+    * idiom as one window pass; partial top-k runs map-side via the
+    * rank filter pushed into the window's sort. */
   def topKPerGroup(df: DataFrame, keys: Seq[String], order: Seq[Column],
                    k: Int): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)

@@ -848,24 +848,21 @@ object Text {
     require(merges >= 1, s"merges=$merges must be >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sep = ""
     val sep2 = sep + sep
-    var cur = docs
+    // each round's collect() is an eager point that materializes the
+    // CURRENT frame (reading the round before it once via lineage),
+    // after which the older round is superseded and freed — a long
+    // merge loop holds at most 2 round frames instead of `merges`
+    // (ADVICE r12: no external reclaim for library consumers).
+    val frames = new graft.core.LoopFrames
+    var cur = frames.keep(docs
       .select(explode(tokens(col(textCol))).as("tok"))
       .where(length(col("tok")) >= 1)
       .groupBy("tok").agg(count(lit(1)).as("freq"))
       // ␟c␟ per character — regexp_replace is global in both engines
-      .withColumn("seg", regexp_replace(col("tok"), "(.)", s"$sep$$1$sep"))
-      .persist(lvl)
+      .withColumn("seg", regexp_replace(col("tok"), "(.)", s"$sep$$1$sep")))
     val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
-    // the round BEFORE the current one: each round's collect() is an
-    // eager point that materializes the CURRENT frame (reading the
-    // previous round's cache once via lineage), after which the
-    // previous frame is superseded and unpersisted here — a long
-    // merge loop holds at most 2 round frames instead of `merges`
-    // (ADVICE r12: no external reclaim for library consumers).
-    var prev: org.apache.spark.sql.DataFrame = null
     var r = 1
     var dry = false
     while (r <= merges && !dry) {
@@ -882,18 +879,16 @@ object Text {
       // merge decision is a global argmax, inherently sequential
       val best = pairs.orderBy(col("n").desc, col("l"), col("r")).limit(1).collect()
       // the collect just materialized `cur`; the frame it was derived
-      // from is now superseded (kept persisted through the collect so
-      // cur's one lineage read of it hit cache)
-      if (prev != null) { prev.unpersist(blocking = false); prev = null }
+      // from is now superseded (kept through the collect so cur's one
+      // lineage read of it hit cache)
+      frames.settle()
       if (best.isEmpty) dry = true
       else {
         val l = best(0).getString(0); val rr = best(0).getString(1)
         val n = best(0).getLong(2)
         out += ((r, l, rr, l + rr, n))
-        prev = cur
-        cur = cur.withColumn("seg",
-            replace(col("seg"), lit(s"$sep$l$sep$sep$rr$sep"), lit(s"$sep$l$rr$sep")))
-          .persist(lvl)
+        cur = frames.keep(cur.withColumn("seg",
+            replace(col("seg"), lit(s"$sep$l$sep$sep$rr$sep"), lit(s"$sep$l$rr$sep"))))
         r += 1
       }
     }
@@ -965,8 +960,8 @@ object Text {
     val s1 = "chr(31)"
     val s2 = "chr(31) || chr(31)"
     def round(i: Int): String = {
-      val prev = s"v${i - 1}"
-      s"""x$i AS (SELECT freq, string_split(trim(seg, $s1), $s2) AS syms FROM $prev),
+      val last = s"v${i - 1}"
+      s"""x$i AS (SELECT freq, string_split(trim(seg, $s1), $s2) AS syms FROM $last),
           p$i AS (SELECT syms[CAST(j AS INT)] AS l, syms[CAST(j + 1 AS INT)] AS r,
               CAST(sum(freq) AS BIGINT) AS n
             FROM (SELECT freq, syms, unnest(range(1, len(syms))) AS j
@@ -979,7 +974,7 @@ object Text {
               CASE WHEN b.l IS NULL THEN seg
                    ELSE replace(seg, $s1 || b.l || $s2 || b.r || $s1,
                                      $s1 || b.l || b.r || $s1) END AS seg
-            FROM $prev CROSS JOIN b$i b)"""
+            FROM $last CROSS JOIN b$i b)"""
     }
     s"""v0 AS (SELECT tok, CAST(count(*) AS BIGINT) AS freq,
             regexp_replace(tok, '(.)', $s1 || '\\1' || $s1, 'g') AS seg

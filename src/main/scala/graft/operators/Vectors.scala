@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.Tables
+import graft.core.{LoopFrames, Tables}
 import graft.functions.Expressions.{cellDistTo, codesConstLookupSum, codesDot, cosineSim,
   dotProduct, lshTableKeys, nearestCells, pqAdcTable}
 
@@ -45,7 +45,8 @@ object Vectors {
       .where(col("_rn") <= k).drop("_rn")
 
   /** One (table, bucket) row per LSH table of `vec`: the `_tbl`,
-    * `_key` join key of the bucketed methods. */
+    * `_key` join key of the bucketed methods; none for a vector that
+    * is not `dim` long or holds a NULL. */
   private def lshKeys(vec: Column, dim: Int, planes: Int, tables: Int): Column =
     posexplode(lshTableKeys(vec, dim, planes, tables)).as(Seq("_tbl", "_key"))
 
@@ -711,9 +712,9 @@ object Vectors {
     *     beam by its graph neighbors (≤ beam·m), rescores, keeps
     *     top-`beam`; emit top-`k` of the final beam.
     *
-    * Scale shape: the graph is an (n·m)-row frame persisted per round
-    * (recomputable; ≤ buildRounds+1 frames live — bounded small
-    * constants, freed by harness reclaim); probe rounds shuffle
+    * Scale shape: the graph is an (n·m)-row frame cut per round (one
+    * graph frame and one beam frame live at a time — each cut frees
+    * its predecessor); probe rounds shuffle
     * (qid, cid) pairs bounded by n·beam·m. Recall vs brute force is
     * asserted in VectorsSpec and graded per-method in
     * `ss_recall_methods`. Output shape matches [[lshTopK]]:
@@ -763,15 +764,15 @@ object Vectors {
     // LOGICAL PLAN TREE doubles per round — persist dedups execution
     // but not the tree, and at 3+3 rounds plan construction/rendering
     // itself OOMs (measured: heap death inside generateTreeString).
-    // localCheckpoint is the correct cut for this shape: eager, flat
-    // LogicalRDD, node×m-row frames, ≤ rounds+1 live at once, freed
-    // by harness reclaim. (The lineage-chain loops — pageRank, label
-    // prop — only need it every 4 rounds; a DAG loop needs it every
-    // round.)
+    // A checkpoint is the correct cut for this shape: eager, flat
+    // LogicalRDD, node×m-row frames; each cut frees the round before
+    // it. (The lineage-chain loops — pageRank, label prop — only need
+    // it every 4 rounds; a DAG loop needs it every round.)
+    val graph = new LoopFrames
     // CP-OK: loop-carried state, multiply-referenced per round —
     // plan tree is exponential without the cut; graph frames are
     // node×m-sized and recomputable
-    var g = rescore(initPairs, m).localCheckpoint()
+    var g = graph.cut(rescore(initPairs, m))
     // 2. BUILD: NN-descent rounds
     for (_ <- 1 to buildRounds) {
       val fwd = g.select(col("node"), col("cand"))
@@ -780,13 +781,13 @@ object Vectors {
         .join(g.select(col("node").as("_mid"), col("cand")), "_mid")
         .select(col("node"), col("cand"))
       // CP-OK: same exponential-plan cut as above, once per round
-      g = rescore(fwd.union(rev).union(twoHop).where(col("node") =!= col("cand")), m)
-        .localCheckpoint()
+      g = graph.cut(rescore(fwd.union(rev).union(twoHop).where(col("node") =!= col("cand")), m))
     }
     // 3. PROBE: beam₀ = own neighbors, then bounded expansion rounds
-    // (beam frames: same ≥2-references-per-round shape — unpersisted
-    // they also recompute 2^beamRounds times, measured 5.5 → 73 s at
-    // sf0.1 when rounds went 2 → 3)
+    // (beam frames: same ≥2-references-per-round shape — uncut they
+    // also recompute 2^beamRounds times, measured 5.5 → 73 s at sf0.1
+    // when rounds went 2 → 3). The beam reads `g`, so beam cuts have
+    // their own owner and never free the graph.
     // queryPred restricts the PROBE side only (per-qid beams are
     // independent; the GRAPH above is always built over the full
     // corpus, so kept queries' results are byte-identical — the
@@ -794,6 +795,7 @@ object Vectors {
     val probeSeed = queryPred.fold(g)(p => g.where(p(col("node"))))
     var beamDf = probeSeed.select(col("node").as("qid"), col("cand").as("cid"),
       col("cosine"))
+    val beams = new LoopFrames
     for (r <- 1 to beamRounds) {
       val expanded = beamDf.select(col("qid"), col("cid").as("node"))
         .join(g.select(col("node"), col("cand")), "node")
@@ -814,9 +816,8 @@ object Vectors {
           .select(col("node").as("qid"), col("cand").as("cid"), col("cosine"))
       // CP-OK: beam loop state, (n·beam)-row, multiply-referenced —
       // the exponential-plan cut, once per round
-      beamDf = rescore(cands, beam)
-        .select(col("node").as("qid"), col("cand").as("cid"), col("cosine"))
-        .localCheckpoint()
+      beamDf = beams.cut(rescore(cands, beam)
+        .select(col("node").as("qid"), col("cand").as("cid"), col("cosine")))
     }
     // beamRounds == 0: emit top-k of the seed beam (g's top-m rows)
     topKPer(beamDf, "qid", k, col("cosine").desc, col("cid"))

@@ -557,18 +557,6 @@ object Streams {
     }
   }
 
-  /** Stateful streaming token-budget admission — the streaming twin of
-    * [[graft.operators.Text.tokenBudgetMix]]: each (domain, shard) key
-    * keeps its spent-token running total in state and admits arrivals
-    * while the per-shard budget (budget/nShards) lasts. Rows sort by
-    * (bucket, id) INSIDE each invocation, so batch-mode execution (one
-    * invocation per key) equals the batch twin's global-prefix cut
-    * exactly and shares its oracle; under a real multi-batch stream
-    * the budget is spent in arrival order across batches — precisely
-    * an ingestion-time cap (StatefulStreamsSpec drives that case with
-    * bucket-ordered files, where stream == batch still holds).
-    * Rejected rows still charge the total (the batch twin's window
-    * sums every row), so admission is prefix-closed per shard. */
   /** STATEFUL-STREAMING last-touch attribution — the ev_attribution
     * semantics as events arrive: per-user state holds the most
     * recent touch (tsUs, type); each purchase emits (channel, value)
@@ -615,6 +603,18 @@ object Streams {
       .toDF("channel", "value")
   }
 
+  /** Stateful streaming token-budget admission — the streaming twin of
+    * [[graft.operators.Text.tokenBudgetMix]]: each (domain, shard) key
+    * keeps its spent-token running total in state and admits arrivals
+    * while the per-shard budget (budget/nShards) lasts. Rows sort by
+    * (bucket, id) INSIDE each invocation, so batch-mode execution (one
+    * invocation per key) equals the batch twin's global-prefix cut
+    * exactly and shares its oracle; under a real multi-batch stream
+    * the budget is spent in arrival order across batches — precisely
+    * an ingestion-time cap (StatefulStreamsSpec drives that case with
+    * bucket-ordered files, where stream == batch still holds).
+    * Rejected rows still charge the total (the batch twin's window
+    * sums every row), so admission is prefix-closed per shard. */
   def tokenBudgetStream(docs: DataFrame, budgetPerDomain: Long,
                         nShards: Int = 4,
                         stateTtlMs: Option[Long] = None): DataFrame = {

@@ -89,6 +89,25 @@ class ArrayKernelSpec extends SparkSpec {
       transform(slice(ranked, 1, take), _.getField("i")))
   }
 
+  private val (lshPlanes, lshTables) = (3, 2)
+
+  /** the ±1 projection folds of [[LshTableKeys]] (weights from the
+    * documented MurmurHash3 of (table, plane, dim-index)), one sign
+    * bit per plane. The kernel compares in IEEE order, where NaN > 0
+    * is false; Spark SQL orders NaN above every number, so the twin
+    * excludes it explicitly. */
+  private def lshTwin(v: Column): Column = {
+    val projs = for (t <- 0 until lshTables; p <- 0 until lshPlanes) yield
+      fold(toDoubles(v), typedlit(Seq.tabulate(dim) { d =>
+        if (scala.util.hashing.MurmurHash3.productHash((t, p, d)) % 2 == 0) 1.0 else -1.0
+      }))(_ * _)
+    val keys = (0 until lshTables).map(t => (0 until lshPlanes).map { p =>
+      val proj = projs(t * lshPlanes + p)
+      when(proj > 0 && !isnan(proj), lit(1L << p)).otherwise(lit(0L))
+    }.reduce(_ + _))
+    when(forall(array(projs: _*), _.isNotNull), array(keys: _*))
+  }
+
   private def adcTwin(v: Column): Column = {
     val t = array(codebooks.zipWithIndex.map { case (cb, j) =>
       transform(lit2(cb), c => fold(slice(toDoubles(v), j * ds + 1, ds), c)(_ * _))
@@ -101,6 +120,7 @@ class ArrayKernelSpec extends SparkSpec {
     ("CosineSim", cosineSim(v, w), cosine(toDoubles(v), toDoubles(w))),
     ("DotProduct", dotProduct(v, w), dot(toDoubles(v), toDoubles(w))),
     ("NearestCells", nearestCells(v, centroids, 2), nearestTwin(v, 2)),
+    ("LshTableKeys", lshTableKeys(v, dim, lshPlanes, lshTables), lshTwin(v)),
     ("PqAdcTable", pqAdcTable(v, codebooks), adcTwin(v)),
     ("CellDistTo", cellDistTo(v, col("cell"), centroids),
       fold(toDoubles(v), element_at(lit2(centroids), col("cell") + 1))((x, c) => (x - c) * (x - c))),
@@ -153,6 +173,8 @@ class ArrayKernelSpec extends SparkSpec {
           if (!integral) got(nanElem)._1 match {
             case d: Double => assert(d.isNaN, s"$name[$et]: NaN row gave $d")
             case cells: collection.Seq[_] if name == "NearestCells" => assert(cells == Seq(0, 1))
+            // every projection is NaN, and NaN > 0 sets no bit
+            case keys: collection.Seq[_] if name == "LshTableKeys" => assert(keys == Seq(0L, 0L))
             case t: collection.Seq[_] =>
               assert(t(1).asInstanceOf[collection.Seq[Double]].forall(_.isNaN), s"$name: $t")
           }
@@ -191,6 +213,7 @@ class ArrayKernelSpec extends SparkSpec {
       () => d.select(cosineSim(col("id"), col("id"))),
       () => d.select(dotProduct(col("v"), lit("x"))),
       () => d.select(nearestCells(array(lit("a")), centroids, 1)),
+      () => d.select(lshTableKeys(array(lit("a")), dim, lshPlanes, lshTables)),
       () => d.select(cellDistTo(col("v"), col("v"), centroids)),
       () => d.select(codesDot(col("v"), col("codes"))),
       () => d.select(codesConstLookupSum(col("v"), constTable))

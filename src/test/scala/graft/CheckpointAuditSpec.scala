@@ -13,8 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `persist(MEMORY_AND_DISK)` instead — recomputable and spillable
   * (the PMI recipe, Text.scala).
   *
-  * Enforcement: every `.localCheckpoint()` call in src/main must
-  * carry a `CP-OK:` justification comment within the preceding lines.
+  * Enforcement: every `.localCheckpoint()` call in src/main, and every
+  * `.cut(` of a [[graft.core.LoopFrames]] (whose one localCheckpoint
+  * serves all loops), must carry a `CP-OK:` justification comment
+  * within the preceding lines.
   * A new unjustified call fails here until its author writes down why
   * the frame is bounded or why the cut is required — the same
   * explicit-allowlist discipline PlanAuditSpec applies to broadcast
@@ -33,24 +35,37 @@ class CheckpointAuditSpec extends AnyFunSuite {
     * must sit adjacent to the call, not anywhere in the file. */
   private val MarkerWindow = 8
 
+  /** `file:line` of every code line matching `isCall` with no
+    * `CP-OK:` marker in the window above it. */
+  private def unjustified(isCall: String => Boolean): Seq[String] = for {
+    file <- scalaFiles(root)
+    src = {
+      val s = scala.io.Source.fromFile(file, "UTF-8")
+      try s.getLines().toVector finally s.close()
+    }
+    (line, i) <- src.zipWithIndex
+    // match the CALL, not prose in Scaladoc/comments
+    if isCall(line)
+    if !Seq("*", "/*", "//").exists(line.trim.startsWith)
+    window = src.slice(math.max(0, i - MarkerWindow), i + 1)
+    if !window.exists(_.contains("CP-OK:"))
+  } yield s"${file.getPath}:${i + 1}"
+
+  private def hint(what: String, offenders: Seq[String]): String =
+    s"\nunjustified $what call sites (add a `// CP-OK: <why bounded / why the cut is required>` " +
+      s"comment within $MarkerWindow lines, or convert to persist(MEMORY_AND_DISK)):\n  " +
+      offenders.mkString("\n  ")
+
   test("every localCheckpoint call site in src/main carries a CP-OK justification") {
-    val offenders = for {
-      file <- scalaFiles(root)
-      src = {
-        val s = scala.io.Source.fromFile(file, "UTF-8")
-        try s.getLines().toVector finally s.close()
-      }
-      (line, i) <- src.zipWithIndex
-      // match the CALL, not prose in Scaladoc/comments
-      if line.contains(".localCheckpoint()")
-      if !line.trim.startsWith("*") && !line.trim.startsWith("//")
-      window = src.slice(math.max(0, i - MarkerWindow), i + 1)
-      if !window.exists(_.contains("CP-OK:"))
-    } yield s"${file.getPath}:${i + 1}"
-    assert(offenders.isEmpty,
-      s"\nunjustified localCheckpoint call sites (add a `// CP-OK: <why bounded / why the cut is required>` " +
-        s"comment within $MarkerWindow lines, or convert to persist(MEMORY_AND_DISK)):\n  " +
-        offenders.mkString("\n  "))
+    val offenders = unjustified(_.contains(".localCheckpoint()"))
+    assert(offenders.isEmpty, hint("localCheckpoint", offenders))
+  }
+
+  test("every LoopFrames cut call site in src/main carries a CP-OK justification") {
+    // LoopFrames.cut holds the one loop-state localCheckpoint, so the
+    // loops' own sites would escape the audit above
+    val offenders = unjustified(_.contains(".cut("))
+    assert(offenders.isEmpty, hint("LoopFrames cut", offenders))
   }
 
   test("corpus-sized dedup frames stay on recomputable persist (regression guard)") {
