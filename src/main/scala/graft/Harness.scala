@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -13,7 +14,8 @@ import org.apache.spark.sql.SparkSession
   *   - [[session]]: the one SparkSession builder;
   *   - [[reclaim]]: free what a run left in executor storage;
   *   - [[timed]]: snapshot, time, reclaim — one measured run;
-  *   - [[StageLog]]: per-stage task counts and times, attributed to a run;
+  *   - [[StageLog]]: per-stage task counts and times and the job count,
+  *     attributed to a run;
   *   - [[jsonString]]: the JSON string escaper of the mains' artifacts.
   */
 object Harness {
@@ -85,17 +87,19 @@ object Harness {
     * (the stage name when no scope is recorded). */
   final case class Stage(id: Int, tasks: Int, wallS: Double, cpuMs: Long, name: String)
 
-  /** The one stage listener. [[run]] puts `body` in a fresh job group
-    * (local properties propagate to the threads Spark runs a query's
-    * jobs on), so stages of anything else on the session never count.
-    * A marker job in a second group then flushes the asynchronous
-    * listener bus: events arrive in order, so once the marker's job
-    * start is seen every stage of the run has completed and been seen
-    * — no sleep, no late events leaking into the next run. */
+  /** The one stage and job listener. [[run]] puts `body` in a fresh
+    * job group (local properties propagate to the threads Spark runs a
+    * query's jobs on), so jobs and stages of anything else on the
+    * session never count. A marker job in a second group then flushes
+    * the asynchronous listener bus: events arrive in order, so once the
+    * marker's job start is seen every job start and stage of the run
+    * has been seen — no sleep, no late events leaking into the next
+    * run. */
   final class StageLog(spark: SparkSession) extends SparkListener {
     private val sc = spark.sparkContext
     private val stageGroup = new ConcurrentHashMap[Int, String]()
     private val byGroup = new ConcurrentHashMap[String, ConcurrentLinkedQueue[Stage]]()
+    private val jobs = new ConcurrentHashMap[String, AtomicInteger]()
     private val markers = new ConcurrentHashMap[String, CountDownLatch]()
     sc.addSparkListener(this)
 
@@ -119,13 +123,20 @@ object Harness {
     }
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      group(e.properties).flatMap(g => Option(markers.get(g))).foreach(_.countDown())
+      group(e.properties).foreach { g =>
+        Option(jobs.get(g)).foreach(_.incrementAndGet())
+        Option(markers.get(g)).foreach(_.countDown())
+      }
 
-    /** `body`'s result and the stages it completed, in completion order. */
-    def run[T](body: => T): (T, Seq[Stage]) = {
+    /** `body`'s result, the stages it completed (in completion order)
+      * and the number of jobs it started. Throws when the listener bus
+      * does not flush within a minute: a short count must never read
+      * as a real one. */
+    def run[T](body: => T): (T, Seq[Stage], Int) = {
       val (g, marker) = (java.util.UUID.randomUUID().toString, java.util.UUID.randomUUID().toString)
       val flushed = new CountDownLatch(1)
       byGroup.put(g, new ConcurrentLinkedQueue[Stage]())
+      jobs.put(g, new AtomicInteger)
       markers.put(marker, flushed)
       try {
         sc.setJobGroup(g, "StageLog run")
@@ -133,11 +144,12 @@ object Harness {
         sc.setJobGroup(marker, "StageLog flush")
         sc.parallelize(Seq(1), 1).count()
         if (!flushed.await(60, TimeUnit.SECONDS))
-          System.err.println("[stagelog] listener bus never flushed — stage list may be short")
-        (out, byGroup.get(g).asScala.toSeq)
+          throw new IllegalStateException("listener bus never flushed: stage and job counts would be short")
+        (out, byGroup.get(g).asScala.toSeq, jobs.get(g).get)
       } finally {
         sc.clearJobGroup()
         byGroup.remove(g)
+        jobs.remove(g)
         markers.remove(marker)
       }
     }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
@@ -84,10 +84,9 @@ object QueriesAgg {
           countDistinct(col("user_id")).as("n_users"))
         .orderBy("event_type"))
 
-  /** A6: exposure-quality table (_objtable_methods.py:190-262): the
-    * per-RCID python loop collapses into one extra grouping key; one
-    * hash aggregate, partials map-side. Exact percentile for oracle
-    * parity; percentile_approx is the 100 TB path. */
+  /** A6: exposure-quality table (_objtable_methods.py:190-262) through
+    * [[GroupOps.qualityTable]]: the per-RCID python loop collapses into
+    * one extra grouping key; one hash aggregate, partials map-side. */
   private val a6 = Q(
     "a6_quality_table",
     Some(s"""WITH t AS (SELECT year(l_shipdate) AS expid, l_returnflag AS fieldid,
@@ -106,13 +105,10 @@ object QueriesAgg {
         year(col("l_shipdate")).cast(LongType).as("expid"),
         col("l_returnflag").as("fieldid"),
         col("l_linenumber").as("rcid"),
-        (abs(lit(10) * (col("l_tax") - col("l_discount"))) * 1000).as("mmd"))
-      df.groupBy("expid", "fieldid", "rcid")
-        .agg(
-          davg(col("mmd"), 6).as("bias"),
-          dstd(col("mmd"), 6).as("spread"),
-          round(percentile(col("mmd"), lit(0.5)), 6).as("median"),
-          count(lit(1)).as("nstars"))
+        col("l_tax"), col("l_discount"))
+      // |10·(tax − discount) − 0| is bit-equal to the oracle's |10·(tax − discount)|
+      GroupOps.qualityTable(df, Seq("expid", "fieldid"), "rcid",
+        calMag = lit(10) * (col("l_tax") - col("l_discount")), refMag = lit(0.0))
         .orderBy("expid", "fieldid", "rcid")
     })
 

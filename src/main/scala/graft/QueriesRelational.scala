@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.expressions.Window
 
 import graft.core.{Det, QueryDialect, Tables}
 import graft.functions.{Coords, Photometry}

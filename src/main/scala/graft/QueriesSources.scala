@@ -303,9 +303,10 @@ object QueriesSources {
         .agg(count(lit(1)).as("n"))
         .select(regexp_extract(col("path"), "[^/]+$", 0).as("file"), col("n")))
 
-  /** S3+S7+EP1: per-file metadata (cache-or-reload) + metadata-pruned
-    * source read + J1 metadata merge-back — the dataset.load()
-    * lifecycle (dataset.py:151-170) on a real multi-file layout.
+  /** S3+S7+EP1+P2: per-file metadata (cache-or-reload) + metadata-
+    * pruned source read + preselection + J1 metadata merge-back — the
+    * dataset.load() lifecycle (dataset.py:151-170) on a real multi-file
+    * layout.
     * Pruning here physically reads 3 of 12 files. */
   private val ep1 = Q(
     "ep1_pruned_load",
@@ -322,8 +323,8 @@ object QueriesSources {
         requestedCols = Seq("PATH", "mon", "n_rows"))
       ds.loadObjtable(
         metaExpr = Some("mon <= 3"),
-        selectCols = Seq("o_orderkey", "o_totalprice", "mon"),
-        rowFilter = Some("o_totalprice > 50000"))
+        selectCols = Seq("o_orderkey", "o_totalprice", "mon"))
+      ds.selectObjects("o_totalprice > 50000")
       ds.mergeMetadataToSources(Seq("n_rows"), joinOn = "mon")
         .select(col("o_orderkey"), col("o_totalprice"), col("mon").cast(LongType).as("mon"), col("n_rows"))
         .orderBy("o_orderkey")
@@ -1593,7 +1594,7 @@ object QueriesSources {
       val m1 = Snapshots.commit(base, tdir, version = 1, bucket, nBuckets = 8)
       val m2 = Snapshots.deleteCommit(
         base.where(col("o_orderkey") % 7 === 3), tdir, 2, "o_orderkey", m1)
-      val m3 = Snapshots.compact(s, tdir, version = 3, bucket, nBuckets = 8, m2)
+      Snapshots.compact(s, tdir, version = 3, bucket, nBuckets = 8, m2)
       val (nLive, nExpired) = Snapshots.expire(tdir, keepFrom = 3, upTo = 3)
       // v1/v2 are gone for good; v3 must read exactly as before
       val oldGone =

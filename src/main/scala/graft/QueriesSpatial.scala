@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Det, Tables}
 import graft.ml.{Jenks, Odr, Ols}
-import graft.operators.{Clustering, GroupOps, Joins, Outliers, Spatial}
+import graft.operators.{Clustering, Joins, Outliers, Spatial}
 
 /** SURVEY §2.3 spatial joins + §2.9 ML-flavored operators.
   *

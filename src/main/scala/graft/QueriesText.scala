@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -2123,8 +2123,7 @@ object QueriesText {
   // recall report — one source of truth per method's SQL mirror -----
 
   /** LSH top-k body (the ss_topk_lsh pipeline). */
-  private def lshTopkSql(planes: Int = 6, tables: Int = 8,
-                         dim: Int = 64, k: Int = 3): String = {
+  private def lshTopkSql(planes: Int, tables: Int, dim: Int, k: Int): String = {
     val tableRows = lshKeyedRowsSql(planes, tables, dim)
     s"""WITH keyed AS ($tableRows),
         cand AS (SELECT DISTINCT a.vec_id AS qid, b.vec_id AS cid,
@@ -2201,8 +2200,7 @@ object QueriesText {
 
   /** IVF top-k body: trained coarse centroids inlined as literals;
     * assignment/probing mirror NearestCells op-for-op. */
-  private def ivfTopkSql(cents: Array[Array[Double]], nProbe: Int = 2,
-                         k: Int = 3): String = {
+  private def ivfTopkSql(cents: Array[Array[Double]], nProbe: Int, k: Int): String = {
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"($i, ${c.mkString("[", ", ", "]")})"
     }.mkString(",\n              ")
@@ -2233,8 +2231,7 @@ object QueriesText {
     * exact rerank mirror the Spark plan op-for-op. */
   private def ivfPqTopkSql(cents: Array[Array[Double]],
                            cbs: Array[Array[Array[Double]]],
-                           nProbe: Int = 2, k: Int = 3,
-                           rerank: Int = 20): String = {
+                           nProbe: Int, k: Int, rerank: Int): String = {
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"($i, ${c.mkString("[", ", ", "]")})"
     }.mkString(",\n              ")

@@ -42,9 +42,9 @@ object Expressions {
     new String(out)
   }
 
-  /** Distinct char k-shingles of the lowercased text; mirrors
-    * Text.charShingles / the oracle's substr-range SQL (a text shorter
-    * than k yields its single truncated shingle). */
+  /** Distinct char k-shingles of the lowercased text; mirrors the
+    * oracle's substr-range SQL (a text shorter than k yields its single
+    * truncated shingle). */
   private def shingleSet(text: String, k: Int): java.util.HashSet[String] = {
     val lc = text.toLowerCase(java.util.Locale.ROOT)
     val set = new java.util.HashSet[String]()

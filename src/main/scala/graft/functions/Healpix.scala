@@ -144,13 +144,6 @@ object Healpix {
   // 4·nside pixels at z = (2·nside - i)·2/(3·nside); south mirrors)
   // ---------------------------------------------------------------
 
-  private def isqrt(x: Long): Long = {
-    var r = math.sqrt(x.toDouble).toLong
-    while (r > 0 && r * r > x) r -= 1
-    while ((r + 1) * (r + 1) <= x) r += 1
-    r
-  }
-
   /** z of ring i (1..4·nside-1) — identical arithmetic to
     * [[pix2zphiNest]]'s branches. */
   def ringZ(nside: Int, i: Long): Double = {

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -63,10 +63,4 @@ object Photometry {
       cos(radians(dec1)) * cos(radians(dec2)) * sin(dLon) * sin(dLon)
     degrees(asin(sqrt(h)) * 2)
   }
-
-  /** Squared planar distance — exact IEEE arithmetic (used by the
-    * pixel-space spatial joins, srcdf.py:616-694 tag_dust).
-    */
-  def dist2(x1: Column, y1: Column, x2: Column, y2: Column): Column =
-    (x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2)
 }

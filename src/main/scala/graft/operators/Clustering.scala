@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -263,7 +263,6 @@ object Clustering {
   /** Returns (idCol, cluster) for every non-noise point. */
   def dbscan(points: DataFrame, idCol: String, xCol: String, yCol: String,
              eps: Double, minSamples: Int): DataFrame = {
-    val spark = points.sparkSession
     // spread (NO checkpoint): `points` typically arrives from an
     // AQE-coalesced aggregate (1 post-shuffle partition at small SF),
     // and every downstream map — binning, the 9× probe explode, the

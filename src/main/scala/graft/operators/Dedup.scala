@@ -49,29 +49,6 @@ object Dedup {
       .select(col(idCol), col("content_key"), col("n_copies"), col("weight"))
   }
 
-  /** MinHash signature of a shingle-set column: for each of
-    * `numHashes` hash functions, the minimum md5(seed:shingle).
-    * Hex-string min == numeric min of the 128-bit hash — no integer
-    * conversion needed, and the DuckDB oracle can mirror it exactly.
-    * This and [[bandKeys]] are the composable pure-built-ins
-    * reference implementation; the pipeline itself uses the compiled
-    * [[graft.functions.Expressions.MinHashBands]] (same result,
-    * orders of magnitude faster on interpreted lambdas). */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { j =>
-      array_min(transform(shingles, x => md5(concat(lit(s"$j:"), x))))
-    }: _*)
-
-  /** LSH band keys: hash of each band's signature slice. Documents
-    * sharing any band key are near-dup candidates. */
-  def bandKeys(sig: Column, numHashes: Int, bandSize: Int): Column = {
-    require(numHashes % bandSize == 0, "numHashes must be divisible by bandSize")
-    array((0 until numHashes / bandSize).map { b =>
-      val parts = (0 until bandSize).map(i => element_at(sig, b * bandSize + i + 1))
-      md5(concat(parts: _*))
-    }: _*)
-  }
-
   /** (_id, _band, _key) LSH rows for a corpus — the shared front end
     * of self-dedup and incremental dedup. Spread by id BEFORE the
     * signature math (explicit partition count: AQE would coalesce

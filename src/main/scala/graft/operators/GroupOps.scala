@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+
+import graft.core.Det.{davg, dstd}
+import graft.functions.Photometry.absMilliMag
 
 /** Group-wise relational operators from the reference's objtable layer. */
 object GroupOps {
@@ -17,24 +19,11 @@ object GroupOps {
                   valCol: Column): org.apache.spark.sql.DataFrame = {
     val keys = keyCols.map(col)
     val stats = df.groupBy(keys: _*).agg(
-      graft.core.Det.davg(valCol, 6).as("_mean"),
-      graft.core.Det.dstd(valCol, 6).as("_std"))
+      davg(valCol, 6).as("_mean"),
+      dstd(valCol, 6).as("_std"))
     df.join(broadcast(stats), keyCols)
       .withColumn("zscore", try_divide(valCol - col("_mean"), col("_std")))
   }
-
-  /** A3: per-group {min,max,count,mean,std} (df_utils.py:241-251
-    * group_stats + :191-231 cluster_op). pandas std is ddof=1 ->
-    * stddev_samp. One hash aggregate; partial aggregation map-side.
-    */
-  def groupStats(df: DataFrame, key: Seq[String], valueCol: String): DataFrame =
-    df.groupBy(key.map(col): _*)
-      .agg(
-        min(col(valueCol)).as("min"),
-        max(col(valueCol)).as("max"),
-        count(lit(1)).as("count"),
-        avg(col(valueCol)).as("mean"),
-        stddev_samp(col(valueCol)).as("std"))
 
   /** A2: cluster centroid (objtable.py:171-198), plus the weighted
     * variant the reference declares but leaves NotImplemented
@@ -77,19 +66,24 @@ object GroupOps {
     df.join(df.groupBy(col(key)).agg(aggs.head, aggs.tail: _*), Seq(key), "left")
 
   /** A6: exposure-quality table (_objtable_methods.py:190-262
-    * calculate_quality). The reference loops over RCIDs inside a
-    * 4-key groupby apply; here RCID is simply a fifth grouping key and
-    * the whole thing is one hash aggregate. Pure (no self-mutation —
-    * SURVEY §2.12). Values in millimags.
+    * calculate_quality) over the millimag |Δ| of the calibrated and
+    * reference magnitudes ([[graft.functions.Photometry.absMilliMag]]).
+    * The reference loops over RCIDs inside a 4-key groupby apply; here
+    * RCID is simply a fifth grouping key and the whole thing is one
+    * hash aggregate. Pure (no self-mutation — SURVEY §2.12). bias and
+    * spread are [[graft.core.Det]]-exact at scale 6 and the median an
+    * exact percentile rounded to 6, so results do not depend on the
+    * summation order (percentile_approx is the 100 TB path).
     */
   def qualityTable(df: DataFrame, groupKeys: Seq[String], rcidCol: String,
-                   calMag: String, refMag: String): DataFrame = {
-    val mmd = abs(col(calMag) - col(refMag)) * 1000
-    df.groupBy((groupKeys :+ rcidCol).map(col): _*)
+                   calMag: Column, refMag: Column): DataFrame = {
+    val keys = (groupKeys :+ rcidCol).map(col)
+    df.select(keys :+ absMilliMag(calMag, refMag).as("mmd"): _*)
+      .groupBy(keys: _*)
       .agg(
-        avg(mmd).as("bias"),
-        stddev_samp(mmd).as("spread"),
-        percentile_approx(mmd, lit(0.5), lit(10000)).as("median"),
+        davg(col("mmd"), 6).as("bias"),
+        dstd(col("mmd"), 6).as("spread"),
+        round(percentile(col("mmd"), lit(0.5)), 6).as("median"),
         count(lit(1)).as("nstars"))
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -42,7 +42,6 @@ object Multimodal {
     * `dim`-element array so mixed corpora stay one column. */
   def decodeFeaturesStub(df: DataFrame, idCol: String, blobCol: String,
                          dim: Int = 8, batchSize: Int = 256): DataFrame = {
-    val spark = df.sparkSession
     val schema = StructType(Seq(
       StructField(idCol, LongType),
       StructField("features", ArrayType(DoubleType, containsNull = false))))

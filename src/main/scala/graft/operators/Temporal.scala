@@ -364,7 +364,6 @@ object Temporal {
     * date bounds are collected driver-side (two scalars). */
   def resampleDaily(events: DataFrame, keyCol: String, tsCol: String,
                     valueCol: String, tieBreak: String): DataFrame = {
-    val spark = events.sparkSession
     val bounds = events.agg(min(to_date(col(tsCol))).as("lo"),
       // BOUNDED: single-row min/max aggregate
       max(to_date(col(tsCol))).as("hi")).collect()(0)

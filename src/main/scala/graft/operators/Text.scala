@@ -78,14 +78,6 @@ object Text {
   def fingerprint(c: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(tokens(c)))))
 
-  /** Distinct character k-shingles of the lowercased text. */
-  def charShingles(c: Column, k: Int): Column = {
-    val lc = lower(c)
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(lc) - (k - 1), lit(1))),
-      i => lc.substr(i, lit(k))))
-  }
-
   /** Distinct word n-gram shingles. */
   def wordShingles(c: Column, n: Int): Column = {
     val t = tokens(c)

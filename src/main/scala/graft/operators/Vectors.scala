@@ -16,22 +16,12 @@ import graft.functions.Expressions.{cellDistTo, codesConstLookupSum, codesDot, c
   * Scale path: random-hyperplane LSH bucketing so only same-bucket
   * candidates are compared (bucket id is a high-cardinality shuffle
   * key). The hot cosine kernel is the compiled
-  * [[graft.functions.Expressions.CosineSim]] expression; the
-  * composable `zip_with`/`aggregate` forms below are kept as the
-  * pure-built-ins reference implementation (identical results,
-  * asserted in VectorsSpec). Floats widen to double before
-  * multiplying.
+  * [[graft.functions.Expressions.CosineSim]] expression; its
+  * interpreted `zip_with`/`aggregate` twin lives in ArrayKernelSpec
+  * (identical results, asserted there and in VectorsSpec). Floats
+  * widen to double before multiplying.
   */
 object Vectors {
-
-  def toDoubles(v: Column): Column = transform(v, _.cast(DoubleType))
-
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** The exact score every method ranks or thresholds on: the compiled
     * cosine rounded to 6 — rounding makes the ranking deterministic
@@ -113,21 +103,6 @@ object Vectors {
         exactCosine(col("_va"), col("_vb")).as("cosine"))
       .where(col("cosine") >= threshold)
   }
-
-  /** Random-hyperplane LSH bucket id: `planes` sign bits, each the
-    * sign of a pseudo-random ±1 projection. Weights are deterministic
-    * data-independent constants, materialized driver-side so the
-    * per-row work is one zip_with per plane (no per-element hashing). */
-  def lshBucket(vec: Column, dim: Int, planes: Int): Column =
-    (0 until planes).foldLeft(lit(0L)) { (acc, p) =>
-      val weights = Array.tabulate(dim) { d =>
-        if (scala.util.hashing.MurmurHash3.productHash((p, d)) % 2 == 0) 1.0 else -1.0
-      }
-      val proj = aggregate(
-        zip_with(toDoubles(vec), typedlit(weights), (x, w) => x * w),
-        lit(0.0), (a2, x) => a2 + x)
-      acc.bitwiseOR(when(proj > 0, lit(1L << p)).otherwise(0L))
-    }
 
   /** Deterministic hash-ordered sample, NOT limit(): the first N rows
     * in file order are not a sample — a corpus written sorted by

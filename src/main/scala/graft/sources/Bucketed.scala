@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table layout for shuffle-free co-located joins.
   *
@@ -30,10 +30,4 @@ object Bucketed {
       .option("path", path.toString)
       .saveAsTable(table)
   }
-
-  def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
-  /** True if the physical plan of `df` contains no shuffle exchange. */
-  def isShuffleFree(df: DataFrame): Boolean =
-    !df.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning")
 }

@@ -60,12 +60,12 @@ class DatasetSession(val spark: SparkSession, val name: String,
 
   /** EP1: metadata-pruned source load (dataset.py:143-147): evaluate
     * `metaExpr` on the metadata table, read only the surviving files,
-    * apply scan-time projection and row filter (fits_to_df pushdown,
-    * df_utils.py:52-71 — Catalyst pushes both into the parquet scan).
+    * apply the scan-time projection (fits_to_df pushdown,
+    * df_utils.py:52-71). A row filter is [[selectObjects]] on the
+    * result; Catalyst pushes both into the parquet scan.
     */
   def loadObjtable(metaExpr: Option[String] = None,
-                   selectCols: Seq[String] = Seq("*"),
-                   rowFilter: Option[String] = None): DataFrame = {
+                   selectCols: Seq[String] = Seq("*")): DataFrame = {
     require(metadata != null, "load metadata first")
     val meta = metaExpr.map(e => QueryDialect.query(metadata, e)).getOrElse(metadata)
     // BOUNDED: file-path list — metadata-sized
@@ -73,11 +73,9 @@ class DatasetSession(val spark: SparkSession, val name: String,
     require(paths.nonEmpty, s"no files survive the metadata query for dataset $name")
     // basePath keeps partition-directory columns visible when reading
     // an explicit pruned file list
-    var df = spark.read.schema(Tables.parquetSchema(spark, paths.toIndexedSeq: _*))
+    val df = spark.read.schema(Tables.parquetSchema(spark, paths.toIndexedSeq: _*))
       .option("basePath", dataDir).parquet(paths.toIndexedSeq: _*)
-    if (selectCols != Seq("*")) df = Tables.wildcardSelect(df, selectCols)
-    rowFilter.foreach(e => df = QueryDialect.query(df, e))
-    objtable = df
+    objtable = if (selectCols == Seq("*")) df else Tables.wildcardSelect(df, selectCols)
     objtable
   }
 

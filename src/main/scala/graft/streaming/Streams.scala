@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.core.Det
 
@@ -146,8 +145,7 @@ object Streams {
     * the TTL has their running total dropped and restarts at 0. */
   def runningTotalAlerts(events: DataFrame, step: Double = 100.0,
                          stateTtlMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
     val typed = events.select(col("user_id"), col("ts"), col("value"))
@@ -214,7 +212,7 @@ object Streams {
                    shingleSize: Int = 5, numHashes: Int = 8,
                    bandSize: Int = 4,
                    stateTtlMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val spark = docs.sparkSession
     import spark.implicits._
     val keyed = docs.select(col("doc_id"), col("text"),
@@ -332,7 +330,7 @@ object Streams {
     * StatefulStreamsSpec asserts multi-micro-batch == batch. */
   def streamCepMatches(events: DataFrame,
                        stateTtlMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
     def us(t: java.sql.Timestamp): Long =
@@ -391,7 +389,7 @@ object Streams {
   def anomalyStream(events: DataFrame, window: Int = 8,
                     minHistory: Int = 4, k: Double = 3.0,
                     stateTtlMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
     def us(t: java.sql.Timestamp): Long =

@@ -70,7 +70,7 @@ object ScaleStudy {
       // scaling instead of compute scaling
       def once() = Harness.timed(spark)(graft.SparkEntry.queries(name)(spark, dir).count())._2
       val (t1, t2) = (once(), once())
-      val (t3, stages) = log.run(once())
+      val (t3, stages, _) = log.run(once())
       (Seq(t1, t2, t3).sorted.apply(1), stages)
     }
     println(f"${"query"}%-24s ${"1x"}%8s ${s"${k}x"}%8s ratio  stages  1-task  (linear = $k%d.0)")

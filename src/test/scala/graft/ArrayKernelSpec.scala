@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Expressions._
-import graft.operators.Vectors.{cosine, dot, toDoubles}
 
 /** The numeric-array kernels against their interpreted
   * zip_with/aggregate/element_at twins, under whole-stage codegen and
@@ -17,6 +16,7 @@ import graft.operators.Vectors.{cosine, dot, toDoubles}
   * element gives NaN; a PQ code or cell index outside its table
   * throws. */
 class ArrayKernelSpec extends SparkSpec {
+  import ArrayKernelSpec._
 
   // own session on the shared context: the codegen confs set below
   // stay out of the suites running beside this one
@@ -222,4 +222,16 @@ class ArrayKernelSpec extends SparkSpec {
       assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
     }
   }
+}
+
+/** The interpreted twins of the compiled vector kernels. Floats widen
+  * to double before multiplying, as in the kernels. */
+object ArrayKernelSpec {
+
+  def toDoubles(v: Column): Column = transform(v, _.cast(DoubleType))
+
+  def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+
+  def cosine(a: Column, b: Column): Column = dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 }

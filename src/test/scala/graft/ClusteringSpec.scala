@@ -14,7 +14,6 @@ class ClusteringSpec extends SparkSpec {
     * member id). */
   private def bruteDbscan(pts: Seq[(Long, Double, Double)], eps: Double,
                           minSamples: Int): Map[Long, Long] = {
-    val n = pts.length
     def d2(a: (Long, Double, Double), b: (Long, Double, Double)) =
       (a._2 - b._2) * (a._2 - b._2) + (a._3 - b._3) * (a._3 - b._3)
     val neigh = pts.map(p => p._1 ->

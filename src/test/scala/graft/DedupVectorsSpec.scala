@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.ArrayKernelSpec.{cosine, toDoubles}
 import graft.operators.{Dedup, Text, Vectors}
 
 class DedupSpec extends SparkSpec {
@@ -138,8 +139,8 @@ class VectorsSpec extends SparkSpec {
       (Array(1.0f, 1.0f), Array(2.0f, 2.0f)),   // parallel
       (Array(1.0f, 0.0f), Array(-1.0f, 0.0f))   // opposite
     ).toDF("a", "b")
-    val c = df.select(Vectors.cosine(Vectors.toDoubles(col("a")),
-      Vectors.toDoubles(col("b"))).as("c")).as[Double].collect()
+    val c = df.select(cosine(toDoubles(col("a")),
+      toDoubles(col("b"))).as("c")).as[Double].collect()
     assert(math.abs(c(0)) < 1e-12)
     assert(math.abs(c(1) - 1.0) < 1e-12)
     assert(math.abs(c(2) + 1.0) < 1e-12)
@@ -314,7 +315,7 @@ class VectorsSpec extends SparkSpec {
         col("b") === col("a") + 1)
     val rows = pairs.select(
       graft.functions.Expressions.cosineSim(col("va"), col("vb")).as("fast"),
-      Vectors.cosine(Vectors.toDoubles(col("va")), Vectors.toDoubles(col("vb"))).as("ref"))
+      cosine(toDoubles(col("va")), toDoubles(col("vb"))).as("ref"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
@@ -487,13 +488,6 @@ class VectorsSpec extends SparkSpec {
     val q = Vectors.quantizeInt8(e, "vec_id", "embedding", dim = 64)
     assert(q.where(col("max_abs_err") > col("scale") / 2 + 1e-6).count() == 0)
     assert(q.where(col("max_q") > 127).count() == 0)
-  }
-
-  test("lsh buckets are deterministic") {
-    val e = graft.core.Tables.load(spark, sf001, "embeddings").limit(50)
-    val b1 = e.select(Vectors.lshBucket(col("embedding"), 64, 4).as("b")).as[Long].collect()
-    val b2 = e.select(Vectors.lshBucket(col("embedding"), 64, 4).as("b")).as[Long].collect()
-    assert(b1.sameElements(b2))
   }
 
   test("semanticDupGroups: cosine-connected components get min-id canonicals") {

@@ -79,12 +79,17 @@ class HarnessSpec extends SparkSpec {
     val log = new Harness.StageLog(spark)
     try {
       sc.parallelize(1 to 100, 2).count() // outside any run: never attributed
-      val other = Future(log.run(sc.parallelize(1 to 100, 3).map(_ * 2).count()))
-      val (n, stages) = log.run(sc.parallelize(1 to 10, 1).count())
-      val (_, otherStages) = Await.result(other, 2.minutes)
+      val other = Future(log.run {
+        sc.parallelize(1 to 100, 3).map(_ * 2).count()
+        sc.parallelize(1 to 10, 2).count()
+      })
+      val (n, stages, jobs) = log.run(sc.parallelize(1 to 10, 1).count())
+      val (_, otherStages, otherJobs) = Await.result(other, 2.minutes)
       assert(n == 10L)
       assert(stages.map(_.tasks) == Seq(1), s"own run saw: $stages")
-      assert(otherStages.map(_.tasks) == Seq(3), s"concurrent run saw: $otherStages")
+      assert(jobs == 1, s"own run counted $jobs jobs")
+      assert(otherStages.map(_.tasks) == Seq(3, 2), s"concurrent run saw: $otherStages")
+      assert(otherJobs == 2, s"concurrent run counted $otherJobs jobs")
       assert(stages.head.wallS >= 0 && stages.head.cpuMs >= 0 && stages.head.name.nonEmpty)
     } finally log.close()
   }

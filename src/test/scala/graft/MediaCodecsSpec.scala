@@ -3,7 +3,6 @@ package graft
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.functions._
 
 import graft.operators.{MediaCodecs, Multimodal}
 

@@ -49,7 +49,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("cluster labels are min member part keys") {
-    import spark.implicits._
     val bad = out.groupBy("cluster").agg(min("l_partkey").as("m"))
       .where(col("cluster") > col("m")).count()
     assert(bad == 0)

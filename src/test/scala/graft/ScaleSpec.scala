@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -224,6 +225,10 @@ class PartitionPruneSpec extends SparkSpec {
 
 class BucketedSpec extends SparkSpec {
 
+  /** True if the physical plan of `df` contains no hash shuffle exchange. */
+  private def isShuffleFree(df: DataFrame): Boolean =
+    !df.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning")
+
   test("bucketed join and aggregation run without a shuffle exchange") {
     val li = Tables.load(spark, sf001, "lineitem")
       .select("l_orderkey", "l_quantity", "l_extendedprice")
@@ -233,9 +238,9 @@ class BucketedSpec extends SparkSpec {
     Bucketed.write(li, "li_bucketed", "l_orderkey", 8)
     Bucketed.write(o, "o_bucketed", "l_orderkey", 8)
 
-    val joined = Bucketed.read(spark, "li_bucketed")
-      .join(Bucketed.read(spark, "o_bucketed"), Seq("l_orderkey"))
-    assert(Bucketed.isShuffleFree(joined), joined.queryExecution.executedPlan.toString)
+    val joined = spark.table("li_bucketed")
+      .join(spark.table("o_bucketed"), Seq("l_orderkey"))
+    assert(isShuffleFree(joined), joined.queryExecution.executedPlan.toString)
 
     // result parity with the plain-layout join
     val expected = li.join(o, Seq("l_orderkey")).count()
@@ -313,7 +318,7 @@ class BucketedSpec extends SparkSpec {
     // the only permitted hash exchange would come from the final
     // ORDER BY (range partitioning) — the join and the groupBy must
     // both consume the scans' bucket layout
-    assert(Bucketed.isShuffleFree(df), df.queryExecution.executedPlan.toString)
+    assert(isShuffleFree(df), df.queryExecution.executedPlan.toString)
     // parity with the plain-layout equivalent
     val o = Tables.load(spark, sf001, "orders")
     val l = Tables.load(spark, sf001, "lineitem")

@@ -9,8 +9,6 @@ import graft.operators.Temporal
 class TemporalSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ts(s: String) = to_timestamp(lit(s))
-
   test("ev_survival_km == independent sequential Kaplan-Meier over collected durations") {
     // sequential reference: recompute per-user durations and walk the
     // classic KM product loop in plain Scala (quantizing exactly as
