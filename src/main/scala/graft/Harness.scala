@@ -44,6 +44,12 @@ object Harness {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
+    // each unpartitioned window WARNs per run (~200 lines a Verify).
+    // PlanAuditSpec is the gate: it fails a registry query with an
+    // unpartitioned WindowExec its globalWindowAllowed does not justify.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     spark
   }
 

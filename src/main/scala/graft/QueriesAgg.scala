@@ -225,14 +225,12 @@ object QueriesAgg {
                   ORDER BY l_extendedprice, l_linenumber) AS rn
               FROM lineitem) WHERE rn = 1
             ORDER BY l_orderkey"""),
-    (s, dir) => {
-      val w = Window.partitionBy("l_orderkey").orderBy("l_extendedprice", "l_linenumber")
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"),
-          row_number().over(w).as("rn"))
-        .where(col("rn") === 1).drop("rn")
-        .orderBy("l_orderkey")
-    })
+    (s, dir) =>
+      GroupOps.topKPerGroup(
+          t(s, dir, "lineitem").select("l_orderkey", "l_linenumber", "l_extendedprice"),
+          Seq("l_orderkey"), Seq(col("l_extendedprice"), col("l_linenumber")), 1)
+        .drop("rank_in_group")
+        .orderBy("l_orderkey"))
 
   /** W2: largest-wins assignment (srcdf.py:666,680-682: sort-then-
     * overwrite becomes a rank-desc window). */
@@ -244,15 +242,13 @@ object QueriesAgg {
                   ORDER BY l_quantity DESC, l_orderkey, l_linenumber) AS rn
               FROM lineitem) WHERE rn = 1
             ORDER BY l_partkey"""),
-    (s, dir) => {
-      val w = Window.partitionBy("l_partkey")
-        .orderBy(col("l_quantity").desc, col("l_orderkey"), col("l_linenumber"))
-      t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          row_number().over(w).as("rn"))
-        .where(col("rn") === 1).drop("rn")
-        .orderBy("l_partkey")
-    })
+    (s, dir) =>
+      GroupOps.topKPerGroup(
+          t(s, dir, "lineitem").select("l_partkey", "l_orderkey", "l_linenumber", "l_quantity"),
+          Seq("l_partkey"),
+          Seq(col("l_quantity").desc, col("l_orderkey"), col("l_linenumber")), 1)
+        .drop("rank_in_group")
+        .orderBy("l_partkey"))
 
   /** W3: per-group value broadcast as a window aggregate (exact
     * decimal sum over the partition — deterministic). */

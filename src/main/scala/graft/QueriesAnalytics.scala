@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
+import graft.operators.GroupOps
 import graft.core.{Det, Tables}
 
 /** General analytics surface beyond the reference's own operators:
@@ -650,10 +651,8 @@ object QueriesAnalytics {
         .where(col("to_type").isNotNull)
       val model = nx.where(col("to_early"))
         .groupBy("from_type", "to_type").agg(count(lit(1)).as("_n"))
-      val wm = Window.partitionBy("from_type")
-        .orderBy(col("_n").desc, col("to_type"))
-      val pred = model.withColumn("_rn", row_number().over(wm))
-        .where(col("_rn") === 1)
+      val pred = GroupOps.topKPerGroup(model, Seq("from_type"),
+          Seq(col("_n").desc, col("to_type")), 1)
         .select(col("from_type"), col("to_type").as("predicted"))
       nx.where(!col("to_early"))
         .join(broadcast(pred), Seq("from_type"), "left")

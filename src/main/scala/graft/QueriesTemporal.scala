@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.operators.Temporal
+import graft.operators.{GroupOps, Temporal}
 
 /** Temporal operators over the `events` stream table: as-of join,
   * interval (range) containment join, top-k per group, sliding
@@ -229,7 +229,7 @@ object QueriesTemporal {
             WHERE rank_in_group <= 3
             ORDER BY l_suppkey, rank_in_group"""),
     (s, dir) =>
-      Temporal.topKPerGroup(
+      GroupOps.topKPerGroup(
           t(s, dir, "lineitem")
             .select("l_suppkey", "l_orderkey", "l_linenumber", "l_extendedprice"),
           keys = Seq("l_suppkey"),

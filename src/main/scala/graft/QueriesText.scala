@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.operators.{Dedup, Text, Vectors}
+import graft.operators.{Dedup, GroupOps, Text, Vectors}
 
 /** LLM-training-data pipeline operators over `documents` and
   * `embeddings` (builder-prompt first-class components): text
@@ -2497,11 +2497,8 @@ object QueriesText {
         .select(col("qid"), col("cid"),
           (coalesce(lit(1.0) / (lit(60) + col("r_lsh")), lit(0.0)) +
            coalesce(lit(1.0) / (lit(60) + col("r_ivf")), lit(0.0))).as("rrf"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col("rrf").desc, col("cid"))
-      fused.withColumn("rank",
-          row_number().over(w).cast(org.apache.spark.sql.types.LongType))
-        .where(col("rank") <= 5)
+      GroupOps.topKPerGroup(fused, Seq("qid"), Seq(col("rrf").desc, col("cid")), 5)
+        .withColumnRenamed("rank_in_group", "rank")
         .orderBy("qid", "rank")
     },
     sqlGen = Some { (s, dir) =>

@@ -286,11 +286,10 @@ object Clustering {
     // full parallelism instead of the single post-shuffle task AQE
     // picks for byte-small inputs.
     val binned = graft.core.Tables.spread(binned0, col("_cx"), col("_cy"))
-    val probe = graft.core.Tables.spread(binned0
-      .withColumn("_dx", explode(array(lit(-1), lit(0), lit(1))))
-      .withColumn("_dy", explode(array(lit(-1), lit(0), lit(1))))
-      .select(col("_id").as("_bid"), col("_x").as("_bx"), col("_y").as("_by"),
-        (col("_cx") + col("_dx")).as("_cx"), (col("_cy") + col("_dy")).as("_cy")),
+    val probe = graft.core.Tables.spread(
+      Spatial.withNeighborCells(binned0, Seq("_cx" -> col("_cx"), "_cy" -> col("_cy")))
+        .select(col("_id").as("_bid"), col("_x").as("_bx"), col("_y").as("_by"),
+          col("_cx"), col("_cy")),
       col("_cx"), col("_cy"))
 
     val d2 = (col("_x") - col("_bx")) * (col("_x") - col("_bx")) +

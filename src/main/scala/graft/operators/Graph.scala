@@ -205,10 +205,7 @@ object Graph {
           .select(col("src"), col("_nl")), col("src"))
         .groupBy(col("src").as("_v"), col("_nl"))
         .agg(count(lit(1)).as("_c"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("_v").orderBy(col("_c").desc, col("_nl"))
-      val best = votes.withColumn("_rn", row_number().over(w))
-        .where(col("_rn") === 1)
+      val best = GroupOps.topKPerGroup(votes, Seq("_v"), Seq(col("_c").desc, col("_nl")), 1)
         .select(col("_v").as("node"), col("_nl").as("_best"))
       // persist each round's frame: cur is referenced TWICE per round
       // (the vote join and the label join-back), so an uncached

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.core.Det.{davg, dstd}
 import graft.functions.Photometry.absMilliMag
@@ -85,6 +87,20 @@ object GroupOps {
         dstd(col("mmd"), 6).as("spread"),
         round(percentile(col("mmd"), lit(0.5)), 6).as("median"),
         count(lit(1)).as("nstars"))
+  }
+
+  /** The first `k` rows per `keys` group under `order`, numbered 1..k
+    * in the long column `rank_in_group` — the one "best k per key"
+    * tail. One window pass; the constant bound plans a WindowGroupLimit.
+    * Precondition: `order` is total within every group (a score, then
+    * a unique id) — rows tied on all of it survive in arrival order,
+    * which changes from run to run. */
+  def topKPerGroup(df: DataFrame, keys: Seq[String], order: Seq[Column],
+                   k: Int): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+    df.withColumn("_rk", row_number().over(w).cast(LongType))
+      .where(col("_rk") <= k)
+      .withColumnRenamed("_rk", "rank_in_group")
   }
 
   /** P11: threshold split with pandas NaN semantics

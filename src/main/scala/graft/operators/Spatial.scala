@@ -2,21 +2,23 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Spatial joins re-expressed as cell-bucketed equi-joins.
   *
   * The reference does nearest-neighbor matching against a calibrator
   * catalog via a per-row healpix index probe over a Mongo connection
   * (PS1Cal_matching.py:21-132, :135-217) and point-in-circle dust
-  * tagging via a python loop over grains (srcdf.py:616-694). Both
-  * become shuffle-free-or-broadcast DataFrame joins here:
-  *
-  *  - grid cells of size = search radius; a point can only match
-  *    candidates in its own or the 8 neighboring cells, so the
-  *    theta-join collapses to an equi-join on cell id + a residual
-  *    distance predicate (exact, no false negatives);
-  *  - "nearest" / "largest wins" = row_number over a window.
+  * tagging via a python loop over grains (srcdf.py:616-694). SURVEY
+  * §2 gives J3/J4 match_to_PS1cal, J9 tag_dust and M1 cluster_sources
+  * one recipe, and every join here is it: bucket both sides on a cell
+  * no smaller than the match distance, equi-join each left cell with
+  * the right side exploded to its neighbour cells, keep the pairs
+  * within the residual distance (exact, no false negatives:
+  * `candidates`), then the best right row per left id, left-joined
+  * back (`bestPerLeft`, on [[GroupOps.topKPerGroup]]). The planar
+  * grid, the HEALPix pixel and the 3D chord grid differ only in the
+  * keys and the distance they supply; M1's DBSCAN explodes its
+  * ε-graph probe side with the same `withNeighborCells`.
   *
   * At 100 TB the cell id is a high-cardinality shuffle key (no skew
   * hot-spots for approximately uniform skies); the catalog side is
@@ -28,18 +30,56 @@ object Spatial {
   def cellCoords(x: Column, y: Column, cellSize: Double): (Column, Column) =
     (floor(x / cellSize).cast("long"), floor(y / cellSize).cast("long"))
 
-  /** Explode a frame to its 3x3 cell neighborhood — candidates for any
-    * query point whose cell is within one step.
-    */
-  private def withNeighborCells(df: DataFrame, x: String, y: String,
-                                cellSize: Double): DataFrame = {
-    val (cx, cy) = cellCoords(col(x), col(y), cellSize)
-    df.withColumn("_dx", explode(array(lit(-1), lit(0), lit(1))))
-      .withColumn("_dy", explode(array(lit(-1), lit(0), lit(1))))
-      .withColumn("_cx", cx + col("_dx"))
-      .withColumn("_cy", cy + col("_dy"))
-      .drop("_dx", "_dy")
+  /** `df` exploded to its 3×3 (3×3×3) neighbour cells: each `cells`
+    * (name, cell id) dimension steps by -1, 0, 1 into column `name`. */
+  private[operators] def withNeighborCells(df: DataFrame,
+                                           cells: Seq[(String, Column)]): DataFrame = {
+    val steps = cells.indices.map(i => s"_step$i")
+    val exploded = steps.foldLeft(df)(
+      (d, s) => d.withColumn(s, explode(array(lit(-1), lit(0), lit(1)))))
+    cells.zip(steps).foldLeft(exploded) { case (d, ((name, cell), s)) =>
+      d.withColumn(name, cell + col(s))
+    }.drop(steps: _*)
   }
+
+  /** The one candidate builder: `leftKeyed` equi-joins `rightKeyed`
+    * (broadcast unless `broadcastRight` is false) on `keys`, the pairs
+    * with `dist <= bound` survive, projected to `leftId`, `right`'s
+    * columns but `leftId`, and `dist` as `distCol` when one is named. */
+  private def candidates(leftKeyed: DataFrame, leftId: String,
+                         right: DataFrame, rightKeyed: DataFrame, keys: Seq[String],
+                         broadcastRight: Boolean, dist: Column, bound: Column,
+                         distCol: Option[String]): DataFrame = {
+    val rightSide = if (broadcastRight) broadcast(rightKeyed) else rightKeyed
+    val d = distCol.getOrElse("_dist")
+    val rightCols = right.columns.filter(_ != leftId).toIndexedSeq
+    leftKeyed.join(rightSide, keys)
+      .withColumn(d, dist)
+      .where(col(d) <= bound)
+      .select((col(leftId) +: rightCols.map(col)) ++ distCol.map(col): _*)
+  }
+
+  /** Planar candidates on a grid of `cellSize`, the squared distance
+    * checked against `bound`. */
+  private def planarCandidates(left: DataFrame, leftId: String, lx: String, ly: String,
+                               right: DataFrame, rx: String, ry: String,
+                               cellSize: Double, bound: Column, distCol: Option[String],
+                               broadcastRight: Boolean): DataFrame = {
+    val (lcx, lcy) = cellCoords(col(lx), col(ly), cellSize)
+    val (rcx, rcy) = cellCoords(col(rx), col(ry), cellSize)
+    val d2 = (col(lx) - col(rx)) * (col(lx) - col(rx)) +
+      (col(ly) - col(ry)) * (col(ly) - col(ry))
+    candidates(left.withColumn("_cx", lcx).withColumn("_cy", lcy), leftId,
+      right, withNeighborCells(right, Seq("_cx" -> rcx, "_cy" -> rcy)), Seq("_cx", "_cy"),
+      broadcastRight, d2, bound, distCol)
+  }
+
+  /** Every `left` row with its first candidate under `order` — null
+    * right columns when it has none. */
+  private def bestPerLeft(left: DataFrame, leftId: String, cand: DataFrame,
+                          order: Column*): DataFrame =
+    left.join(GroupOps.topKPerGroup(cand, Seq(leftId), order, 1).drop("rank_in_group"),
+      Seq(leftId), "left")
 
   /** J3/J4: nearest neighbor within `radius`, else null columns (the
     * reference's NaN-flag semantics, PS1Cal_matching.py:113-117).
@@ -51,24 +91,11 @@ object Spatial {
     */
   def nnJoinWithin(left: DataFrame, leftId: String, lx: String, ly: String,
                    right: DataFrame, rightId: String, rx: String, ry: String,
-                   radius: Double, broadcastRight: Boolean = true): DataFrame = {
-    val (lcx, lcy) = cellCoords(col(lx), col(ly), radius)
-    val leftC = left.withColumn("_cx", lcx).withColumn("_cy", lcy)
-    val rightC = withNeighborCells(right, rx, ry, radius)
-    val rightSide = if (broadcastRight) broadcast(rightC) else rightC
-    val d2 = (col(lx) - col(rx)) * (col(lx) - col(rx)) +
-      (col(ly) - col(ry)) * (col(ly) - col(ry))
-    val rightCols = right.columns.filter(_ != leftId).toIndexedSeq
-    val cand = leftC.join(rightSide, Seq("_cx", "_cy"))
-      .withColumn("dist2", d2)
-      .where(col("dist2") <= radius * radius)
-      .select((col(leftId) +: rightCols.map(col)) :+ col("dist2"): _*)
-    val w = Window.partitionBy(leftId).orderBy(col("dist2"), col(rightId))
-    val best = cand.withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1)
-      .drop("_rn")
-    left.join(best, Seq(leftId), "left")
-  }
+                   radius: Double, broadcastRight: Boolean = true): DataFrame =
+    bestPerLeft(left, leftId,
+      planarCandidates(left, leftId, lx, ly, right, rx, ry, radius, lit(radius * radius),
+        Some("dist2"), broadcastRight),
+      col("dist2"), col(rightId))
 
   /** k-nearest-neighbors join (the k > 1 generalization of
     * [[nnJoinWithin]]): up to `k` right rows per left row within
@@ -83,20 +110,10 @@ object Spatial {
                     radius: Double, k: Int,
                     broadcastRight: Boolean = true): DataFrame = {
     require(k >= 1, s"k=$k")
-    val (lcx, lcy) = cellCoords(col(lx), col(ly), radius)
-    val leftC = left.withColumn("_cx", lcx).withColumn("_cy", lcy)
-    val rightC = withNeighborCells(right, rx, ry, radius)
-    val rightSide = if (broadcastRight) broadcast(rightC) else rightC
-    val d2 = (col(lx) - col(rx)) * (col(lx) - col(rx)) +
-      (col(ly) - col(ry)) * (col(ly) - col(ry))
-    val rightCols = right.columns.filter(_ != leftId).toIndexedSeq
-    val cand = leftC.join(rightSide, Seq("_cx", "_cy"))
-      .withColumn("dist2", d2)
-      .where(col("dist2") <= radius * radius)
-      .select((col(leftId) +: rightCols.map(col)) :+ col("dist2"): _*)
-    val w = Window.partitionBy(leftId).orderBy(col("dist2"), col(rightId))
-    cand.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    val cand = planarCandidates(left, leftId, lx, ly, right, rx, ry, radius,
+      lit(radius * radius), Some("dist2"), broadcastRight)
+    GroupOps.topKPerGroup(cand, Seq(leftId), Seq(col("dist2"), col(rightId)), k)
+      .withColumnRenamed("rank_in_group", "rank")
   }
 
   /** J3 on the sphere: nearest neighbor within an angular radius for
@@ -147,31 +164,12 @@ object Spatial {
     import graft.functions.{Expressions, Healpix}
     val radiusRad = math.toRadians(radiusDeg)
     val nside = Healpix.nsideFor(radiusRad)
-    val (lx, ly, lz) = unitVec(col(lRa), col(lDec))
-    val leftC = left
-      .withColumn("_ux", lx).withColumn("_uy", ly).withColumn("_uz", lz)
-      .withColumn("_hpx", Expressions.healpixCell(
-        col(lRa).cast("double"), col(lDec).cast("double"), nside))
-    val (rx, ry, rz) = unitVec(col(rRa), col(rDec))
-    val rightC = right
-      .withColumn("_vx", rx).withColumn("_vy", ry).withColumn("_vz", rz)
-      .withColumn("_hpx", explode(Expressions.healpixCoverDisk(
-        col(rRa).cast("double"), col(rDec).cast("double"), nside, radiusRad)))
-    val rightSide = if (broadcastRight) broadcast(rightC) else rightC
-    val chord2 = (col("_ux") - col("_vx")) * (col("_ux") - col("_vx")) +
-      (col("_uy") - col("_vy")) * (col("_uy") - col("_vy")) +
-      (col("_uz") - col("_vz")) * (col("_uz") - col("_vz"))
-    val distDeg = round(degrees(lit(2.0) * asin(sqrt(chord2) / 2.0)), 6)
-    val rightCols = right.columns.filter(_ != leftId).toIndexedSeq
-    val cand = leftC.join(rightSide, Seq("_hpx"))
-      .withColumn("dist_deg", distDeg)
-      .where(col("dist_deg") <= radiusDeg)
-      .select((col(leftId) +: rightCols.map(col)) :+ col("dist_deg"): _*)
-    val w = Window.partitionBy(leftId).orderBy(col("dist_deg"), col(rightId))
-    val best = cand.withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1)
-      .drop("_rn")
-    left.join(best, Seq(leftId), "left")
+    nearestOnSphere(left, leftId, lRa, lDec, right, rightId, rRa, rDec, radiusDeg,
+        broadcastRight, Seq("_hpx"))(
+      _.withColumn("_hpx", Expressions.healpixCell(
+        col(lRa).cast("double"), col(lDec).cast("double"), nside)),
+      _.withColumn("_hpx", explode(Expressions.healpixCoverDisk(
+        col(rRa).cast("double"), col(rDec).cast("double"), nside, radiusRad))))
   }
 
   /** 3D chord-grid flavor (r01 implementation). */
@@ -179,39 +177,36 @@ object Spatial {
                        right: DataFrame, rightId: String, rRa: String, rDec: String,
                        radiusDeg: Double, broadcastRight: Boolean = true): DataFrame = {
     val chord = 2.0 * math.sin(math.toRadians(radiusDeg) / 2.0)
-    def cellId(c: Column): Column = floor(c / chord).cast("long")
+    def cellId(c: String): Column = floor(col(c) / chord).cast("long")
+    val keys = Seq("_cx", "_cy", "_cz")
+    nearestOnSphere(left, leftId, lRa, lDec, right, rightId, rRa, rDec, radiusDeg,
+        broadcastRight, keys)(
+      l => keys.zip(Seq("_ux", "_uy", "_uz"))
+        .foldLeft(l) { case (d, (k, u)) => d.withColumn(k, cellId(u)) },
+      withNeighborCells(_, keys.zip(Seq("_vx", "_vy", "_vz").map(cellId))))
+  }
 
+  /** Both sphere flavors: unit vectors (`_ux`.. left, `_vx`.. right)
+    * keyed by the scheme's `leftCells` / `rightCells` on `keys`, the
+    * angular distance `dist_deg` rounded to 1e-6 degrees, the nearest
+    * within `radiusDeg` kept per left row. */
+  private def nearestOnSphere(left: DataFrame, leftId: String, lRa: String, lDec: String,
+                              right: DataFrame, rightId: String, rRa: String, rDec: String,
+                              radiusDeg: Double, broadcastRight: Boolean, keys: Seq[String])(
+                              leftCells: DataFrame => DataFrame,
+                              rightCells: DataFrame => DataFrame): DataFrame = {
     val (lx, ly, lz) = unitVec(col(lRa), col(lDec))
-    val leftC = left.withColumn("_ux", lx).withColumn("_uy", ly).withColumn("_uz", lz)
-      .withColumn("_cx", cellId(col("_ux")))
-      .withColumn("_cy", cellId(col("_uy")))
-      .withColumn("_cz", cellId(col("_uz")))
-
     val (rx, ry, rz) = unitVec(col(rRa), col(rDec))
-    val d = explode(array(lit(-1), lit(0), lit(1)))
-    val rightC = right
-      .withColumn("_vx", rx).withColumn("_vy", ry).withColumn("_vz", rz)
-      .withColumn("_dx", d).withColumn("_dy", d).withColumn("_dz", d)
-      .withColumn("_cx", cellId(col("_vx")) + col("_dx"))
-      .withColumn("_cy", cellId(col("_vy")) + col("_dy"))
-      .withColumn("_cz", cellId(col("_vz")) + col("_dz"))
-      .drop("_dx", "_dy", "_dz")
-    val rightSide = if (broadcastRight) broadcast(rightC) else rightC
-
     val chord2 = (col("_ux") - col("_vx")) * (col("_ux") - col("_vx")) +
       (col("_uy") - col("_vy")) * (col("_uy") - col("_vy")) +
       (col("_uz") - col("_vz")) * (col("_uz") - col("_vz"))
     val distDeg = round(degrees(lit(2.0) * asin(sqrt(chord2) / 2.0)), 6)
-    val rightCols = right.columns.filter(_ != leftId).toIndexedSeq
-    val cand = leftC.join(rightSide, Seq("_cx", "_cy", "_cz"))
-      .withColumn("dist_deg", distDeg)
-      .where(col("dist_deg") <= radiusDeg)
-      .select((col(leftId) +: rightCols.map(col)) :+ col("dist_deg"): _*)
-    val w = Window.partitionBy(leftId).orderBy(col("dist_deg"), col(rightId))
-    val best = cand.withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1)
-      .drop("_rn")
-    left.join(best, Seq(leftId), "left")
+    val cand = candidates(
+      leftCells(left.withColumn("_ux", lx).withColumn("_uy", ly).withColumn("_uz", lz)),
+      leftId, right,
+      rightCells(right.withColumn("_vx", rx).withColumn("_vy", ry).withColumn("_vz", rz)),
+      keys, broadcastRight, distDeg, lit(radiusDeg), Some("dist_deg"))
+    bestPerLeft(left, leftId, cand, col("dist_deg"), col(rightId))
   }
 
   /** J9: point-in-circle theta join with largest-grain-wins
@@ -238,21 +233,10 @@ object Spatial {
     val maxR = Option(grains.agg(max(col(gr).cast("double"))).collect()(0).get(0))
       .map(_.asInstanceOf[Double]).getOrElse(0.0)
     val cellSize = math.max(maxR * radiusMultiplier, 1e-9)
-    val (scx, scy) = cellCoords(col(sx), col(sy), cellSize)
-    val srcC = sources.withColumn("_cx", scx).withColumn("_cy", scy)
-    val grainC = withNeighborCells(grains, gx, gy, cellSize)
-    val grainSide = if (broadcastGrains) broadcast(grainC) else grainC
-    val d2 = (col(sx) - col(gx)) * (col(sx) - col(gx)) +
-      (col(sy) - col(gy)) * (col(sy) - col(gy))
     val rr = col(gr) * radiusMultiplier
-    val grainCols = grains.columns.filter(_ != srcId).toIndexedSeq
-    val cand = srcC.join(grainSide, Seq("_cx", "_cy"))
-      .where(d2 <= rr * rr)
-      .select(col(srcId) +: grainCols.map(col): _*)
-    val w = Window.partitionBy(srcId).orderBy(col(gr).desc, col(grainId))
-    val best = cand.withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1)
-      .drop("_rn")
-    sources.join(best, Seq(srcId), "left")
+    bestPerLeft(sources, srcId,
+      planarCandidates(sources, srcId, sx, sy, grains, gx, gy, cellSize, rr * rr,
+        None, broadcastGrains),
+      col(gr).desc, col(grainId))
   }
 }

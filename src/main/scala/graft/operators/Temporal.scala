@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -262,18 +262,6 @@ object Temporal {
       .withColumn("z", z)
       .withColumn("is_anomaly",
         coalesce(abs(col("z")) > k, lit(false)) || degenerate)
-  }
-
-  /** Top-k rows per group by `order` (largest first, deterministic
-    * tie-break columns required in `order`) — the "best k per key"
-    * idiom as one window pass; partial top-k runs map-side via the
-    * rank filter pushed into the window's sort. */
-  def topKPerGroup(df: DataFrame, keys: Seq[String], order: Seq[Column],
-                   k: Int): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("_rk", row_number().over(w).cast(LongType))
-      .where(col("_rk") <= k)
-      .withColumnRenamed("_rk", "rank_in_group")
   }
 
   /** Cohort retention matrix: users cohorted by the DATE of their

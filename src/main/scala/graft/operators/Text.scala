@@ -708,7 +708,7 @@ object Text {
       .crossJoin(broadcast(df.agg(count_distinct(col(idCol)).as("_n"))))
     val scored = withStats.withColumn("tfidf",
       round((col("tf") / col("_dl")) * log(col("_n") / col("_df")), 6))
-    Temporal.topKPerGroup(
+    GroupOps.topKPerGroup(
         scored.select(col(idCol), col("term"), col("tfidf")),
         keys = Seq(idCol),
         order = Seq(col("tfidf").desc, col("term").asc), k = k)
@@ -1019,7 +1019,6 @@ object Text {
                    textCol: String, langCol: String, nBuckets: Int = 256,
                    testBelowPerMille: Int = 200)
       : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val bucketed = df.select(col(idCol), col(langCol), col(textCol),
       sampleBucket(col(idCol)).as("_sb"))
     val tr = bucketed.where(col("_sb") >= testBelowPerMille)
@@ -1058,8 +1057,7 @@ object Text {
       .join(broadcast(prior), Seq("_lang"))
       .select(col(idCol), col(langCol), col("_lang"),
         (col("_s") + col("_prm")).as("_score"))
-    val w = Window.partitionBy(idCol).orderBy(col("_score").desc, col("_lang"))
-    scored.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
+    GroupOps.topKPerGroup(scored, Seq(idCol), Seq(col("_score").desc, col("_lang")), 1)
       .groupBy(col(langCol).as("lang"), col("_lang").as("lang_pred"))
       .agg(count(lit(1)).as("n"))
   }

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.expressions.Window
 
 import graft.core.{LoopFrames, Tables}
 import graft.functions.Expressions.{cellDistTo, codesConstLookupSum, codesDot, cosineSim,
@@ -27,12 +26,6 @@ object Vectors {
     * cosine rounded to 6 — rounding makes the ranking deterministic
     * across engines/summation orders. */
   private def exactCosine(a: Column, b: Column): Column = round(cosineSim(a, b), 6)
-
-  /** The `k` first rows per `part` under `order` — the one rank tail
-    * of every top-k method. `order` must be total (score, then id). */
-  private def topKPer(scored: DataFrame, part: String, k: Int, order: Column*): DataFrame =
-    scored.withColumn("_rn", row_number().over(Window.partitionBy(part).orderBy(order: _*)))
-      .where(col("_rn") <= k).drop("_rn")
 
   /** One (table, bucket) row per LSH table of `vec`: the `_tbl`,
     * `_key` join key of the bucketed methods; none for a vector that
@@ -58,7 +51,8 @@ object Vectors {
     val scored = Tables.spread(candidates, col(cId))
       .join(broadcast(queries), col(qId) =!= col(cId))
       .select(col(qId), col(cId), exactCosine(col(qVec), col(cVec)).as("cosine"))
-    topKPer(scored, qId, k, col("cosine").desc, col(cId))
+    GroupOps.topKPerGroup(scored, Seq(qId), Seq(col("cosine").desc, col(cId)), k)
+      .drop("rank_in_group")
   }
 
   /** Symmetric int8 scalar quantization of an embedding column with a
@@ -261,9 +255,10 @@ object Vectors {
     // compiled kernel (r16), one eval per row
     val d2 = cellDistTo(col(vecCol), col("_cell"), centroids)
     val distQ = floor(sqrt(d2) * 1e6 + 0.5) / 1e6
-    topKPer(assigned.select(col(idCol), col("_cell").cast(LongType).as("cell"),
-        distQ.as("dist_q")),
-      "cell", perCell, col("dist_q"), col(idCol))
+    GroupOps.topKPerGroup(
+        assigned.select(col(idCol), col("_cell").cast(LongType).as("cell"), distQ.as("dist_q")),
+        Seq("cell"), Seq(col("dist_q"), col(idCol)), perCell)
+      .drop("rank_in_group")
   }
 
   /** Product-quantization codebooks: the `dim`-dimensional space is
@@ -312,7 +307,8 @@ object Vectors {
     val scored = queries.join(candidates, Seq("_cell"))
       .where(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), exactCosine(col("_qv"), col("_cv")).as("cosine"))
-    topKPer(scored, "qid", k, col("cosine").desc, col("cid"))
+    GroupOps.topKPerGroup(scored, Seq("qid"), Seq(col("cosine").desc, col("cid")), k)
+      .drop("rank_in_group")
   }
 
   /** PQ encode: the m small-int codes of a vector — per subspace, the
@@ -398,9 +394,9 @@ object Vectors {
       .select(col("qid"), col("cid"),
         round(ip / (col("_qnorm") * sqrt(col("_cnorm2"))), 6).as("cosine"))
     val order = Seq(col("cosine").desc, col("cid"))
-    if (rerank <= 0) topKPer(scored, "qid", k, order: _*)
+    if (rerank <= 0) GroupOps.topKPerGroup(scored, Seq("qid"), order, k).drop("rank_in_group")
     else {
-      val short = topKPer(scored, "qid", rerank, order: _*).select("qid", "cid")
+      val short = GroupOps.topKPerGroup(scored, Seq("qid"), order, rerank).select("qid", "cid")
       // cid-side vector first, qid-side LAST (r15): the final exact
       // window partitions by qid, so in the sort-merge regime it rides
       // the qid join's exchange instead of paying its own after a
@@ -411,7 +407,7 @@ object Vectors {
         .join(base.select(col(idCol).as("cid"), col(vecCol).as("_cv")), Seq("cid"))
         .join(base.select(col(idCol).as("qid"), col(vecCol).as("_qv")), Seq("qid"))
         .select(col("qid"), col("cid"), exactCosine(col("_qv"), col("_cv")).as("cosine"))
-      topKPer(exact, "qid", k, order: _*)
+      GroupOps.topKPerGroup(exact, Seq("qid"), order, k).drop("rank_in_group")
     }
   }
 
@@ -532,7 +528,8 @@ object Vectors {
           .select(col("qid"), col("cid"), exactCosine(col("_qv"), col("_cv")).as("cosine")),
         col("qid"))
       .distinct() // a pair may collide in several tables
-    topKPer(scored, "qid", k, col("cosine").desc, col("cid"))
+    GroupOps.topKPerGroup(scored, Seq("qid"), Seq(col("cosine").desc, col("cid")), k)
+      .drop("rank_in_group")
   }
 
   /** Cross-frame LSH retrieval (the RAG serving shape): queries and a
@@ -570,7 +567,8 @@ object Vectors {
           exactCosine(col("_qv"), col("_cv")).as("cosine"): _*),
         col(qIdCol))
       .distinct() // a pair may collide in several tables
-    topKPer(scored, qIdCol, k, col("cosine").desc +: cKeyCols.map(col): _*)
+    GroupOps.topKPerGroup(scored, Seq(qIdCol), col("cosine").desc +: cKeyCols.map(col), k)
+      .drop("rank_in_group")
   }
 
   /** MIPS (maximum inner-product search) top-k via the norm-
@@ -617,7 +615,8 @@ object Vectors {
             round(dotProduct(col("_qv"), col("_cv")), 6).as("dot")),
         col("qid"))
       .distinct() // a pair may collide in several tables
-    topKPer(scored, "qid", k, col("dot").desc, col("cid"))
+    GroupOps.topKPerGroup(scored, Seq("qid"), Seq(col("dot").desc, col("cid")), k)
+      .drop("rank_in_group")
   }
 
   /** Attribute-constrained (PRE-filtered) ANN top-k: each query sees
@@ -725,7 +724,8 @@ object Vectors {
         .join(vecs.select(col("node"), col("_v").as("_nv")), "node")
         .join(vecs.select(col("node").as("cand"), col("_v").as("_cv")), "cand")
         .select(col("node"), col("cand"), exactCosine(col("_nv"), col("_cv")).as("cosine"))
-      topKPer(scored, "node", keep, col("cosine").desc, col("cand"))
+      GroupOps.topKPerGroup(scored, Seq("node"), Seq(col("cosine").desc, col("cand")), keep)
+        .drop("rank_in_group")
     }
     // 1. INIT: within-bucket pairs under `initTables` hyperplane tables
     val keyed = vecs.select(col("node"), lshKeys(col("_v"), dim, planes, initTables))
@@ -795,7 +795,8 @@ object Vectors {
         .select(col("node").as("qid"), col("cand").as("cid"), col("cosine")))
     }
     // beamRounds == 0: emit top-k of the seed beam (g's top-m rows)
-    topKPer(beamDf, "qid", k, col("cosine").desc, col("cid"))
+    GroupOps.topKPerGroup(beamDf, Seq("qid"), Seq(col("cosine").desc, col("cid")), k)
+      .drop("rank_in_group")
   }
 
   /** Embedding near-dup pairs blocked by LSH buckets instead of a

@@ -15,15 +15,18 @@ object ReadmeStats {
     val nDynOracle = qs.count(q => q.sql.isEmpty && q.sqlGen.isDefined)
     val noOracle = qs.filter(q => q.sql.isEmpty && q.sqlGen.isEmpty).map(_.name)
 
-    // test count: static ScalaTest `test(` registrations, with the one
-    // registry-driven loop (EntrySmokeSpec: one smoke per query)
-    // expanded to its real cardinality
+    // test count: the cases the last `sbt test` ran (`tests=` of its
+    // reports; a loop's cases all count), skipping suites since deleted
     val testDir = repo.resolve("src/test/scala/graft")
-    val nStaticTests = Files.walk(testDir).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .map(p => "(?m)^\\s*test\\(".r.findAllIn(Files.readString(p)).size)
-      .sum
-    val nTests = nStaticTests - 1 + nQueries
+    val reports = repo.resolve("target/test-reports")
+    require(Files.isDirectory(reports), s"no $reports: run `sbt test` first")
+    val testSrc = Files.walk(testDir).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala")).map(Files.readString(_)).mkString
+    val nTests = Files.list(reports).iterator().asScala.toSeq
+      .filter(p => "TEST-graft\\.(\\w+)\\.xml".r.findFirstMatchIn(p.getFileName.toString)
+        .exists(m => testSrc.contains(s"class ${m.group(1)} ")))
+      .flatMap(p => "\\btests=\"(\\d+)\"".r.findFirstMatchIn(Files.readString(p)))
+      .map(_.group(1).toInt).sum
 
     // latest bench artifact, if any
     val bench = Files.list(repo).iterator().asScala

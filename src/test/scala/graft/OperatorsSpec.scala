@@ -221,6 +221,91 @@ class GroupApplySpec extends SparkSpec {
 class SpatialSpec extends SparkSpec {
   import spark.implicits._
 
+  /** `n` seeded points (id, x, y) on the integer grid [-30, 30]²: every
+    * squared distance is exact, a fifth of the coordinates sit on the
+    * edges of 5-wide cells, and 3-4-5 offsets put many pairs exactly
+    * at a radius of 5. */
+  private def field(seed: Int, n: Int): Seq[(Long, Double, Double)] = {
+    val rnd = new scala.util.Random(seed)
+    (1 to n).map(i => (i.toLong, (rnd.nextInt(61) - 30).toDouble, (rnd.nextInt(61) - 30).toDouble))
+  }
+
+  private def d2(ax: Double, ay: Double, bx: Double, by: Double): Double =
+    (ax - bx) * (ax - bx) + (ay - by) * (ay - by)
+
+  test("nn join equals a brute-force nearest within the radius on a seeded field") {
+    val radius = 5.0
+    val lefts = field(11, 300)
+    // every right point twice (ids i and 1000 + i): each match is an
+    // exact distance tie that only the right id can break
+    val rights = field(12, 120).flatMap { case (i, x, y) => Seq((i, x, y), (1000 + i, x, y)) }
+    val left = lefts.map { case (i, x, y) => (i, x, y, s"l$i") }.toDF("lid", "lx", "ly", "tag")
+    val right = rights.map { case (i, x, y) => (i, x, y, i * 10) }.toDF("rid", "rx", "ry", "mag")
+    val expected = lefts.map { case (l, lx, ly) =>
+      val within = rights.map { case (r, rx, ry) => (r, d2(lx, ly, rx, ry)) }
+        .filter(_._2 <= radius * radius)
+      l -> within.minByOption { case (r, dist2) => (dist2, r) }
+    }.toMap
+    val rows = Spatial.nnJoinWithin(left, "lid", "lx", "ly", right, "rid", "rx", "ry", radius)
+      .collect()
+    val got = rows.map { r =>
+      r.getAs[Long]("lid") ->
+        Option.when(!r.isNullAt(r.fieldIndex("rid")))((r.getAs[Long]("rid"), r.getAs[Double]("dist2")))
+    }.toMap
+    assert(rows.length == lefts.length)
+    assert(got == expected)
+    assert(rows.forall(r => r.getAs[String]("tag") == s"l${r.getAs[Long]("lid")}"))
+    assert(rows.filterNot(r => r.isNullAt(r.fieldIndex("rid")))
+      .forall(r => r.getAs[Long]("mag") == r.getAs[Long]("rid") * 10))
+    // the field exercises what it claims: misses, hits exactly at the
+    // radius, and matches on cell edges
+    val hits = lefts.filter(p => expected(p._1).nonEmpty)
+    assert(hits.size < lefts.size)
+    assert(hits.exists(p => expected(p._1).get._2 == radius * radius))
+    assert(hits.exists(p => p._2 % radius == 0 || p._3 % radius == 0))
+  }
+
+  test("theta circle join equals a brute-force largest containing grain on a seeded field") {
+    val m = 1.5
+    val rnd = new scala.util.Random(23)
+    // duplicated grains (ids i and 1000 + i) tie on radius and position
+    val grains = field(21, 60).flatMap { case (i, x, y) =>
+      val r = (1 + rnd.nextInt(4)).toDouble
+      Seq((i, x, y, r), (1000 + i, x, y, r))
+    }
+    val sources = field(22, 300)
+    val expected = sources.map { case (s, sx, sy) =>
+      s -> grains.filter { case (_, gx, gy, r) => d2(sx, sy, gx, gy) <= (r * m) * (r * m) }
+        .minByOption { case (g, _, _, r) => (-r, g) }.map { case (g, _, _, r) => (g, r) }
+    }.toMap
+    val rows = Spatial.thetaCircleJoin(sources.toDF("sid", "sx", "sy"), "sid", "sx", "sy",
+        grains.toDF("gid", "gx", "gy", "gr"), "gid", "gx", "gy", "gr", radiusMultiplier = m)
+      .collect()
+    val got = rows.map { r =>
+      r.getAs[Long]("sid") ->
+        Option.when(!r.isNullAt(r.fieldIndex("gid")))((r.getAs[Long]("gid"), r.getAs[Double]("gr")))
+    }.toMap
+    assert(rows.length == sources.length)
+    assert(got == expected)
+    val hits = sources.filter(p => expected(p._1).nonEmpty)
+    assert(hits.nonEmpty && hits.size < sources.size)
+    // a source exactly on the rim of its winning grain
+    assert(hits.exists { case (s, sx, sy) =>
+      val (g, r) = expected(s).get
+      grains.exists(gr => gr._1 == g && d2(sx, sy, gr._2, gr._3) == (r * m) * (r * m))
+    })
+  }
+
+  test("nn join output columns: left columns, right columns minus leftId, then dist2") {
+    val left = Seq((1L, 0.0, "a", 0.0)).toDF("lid", "ly", "tag", "lx")
+    val right = Seq((1.0, 9L, 3, 1.0)).toDF("ry", "rid", "mag", "rx")
+    val out = Spatial.nnJoinWithin(left, "lid", "lx", "ly", right, "rid", "rx", "ry", 5.0)
+    assert(out.columns.toSeq == Seq("lid", "ly", "tag", "lx", "ry", "rid", "mag", "rx", "dist2"))
+    val theta = Spatial.thetaCircleJoin(left, "lid", "lx", "ly",
+      Seq((2.0, 9L, 0.0, 3.0)).toDF("gr", "gid", "gy", "gx"), "gid", "gx", "gy", "gr")
+    assert(theta.columns.toSeq == Seq("lid", "ly", "tag", "lx", "gr", "gid", "gy", "gx"))
+  }
+
   test("nn join finds the true nearest inside the radius, nulls beyond") {
     val left = Seq((1L, 0.0, 0.0), (2L, 500.0, 500.0)).toDF("lid", "lx", "ly")
     val right = Seq((10L, 3.0, 4.0), (11L, 1.0, 1.0), (12L, 30.0, 0.0))

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * caller (it only gives reference methods a second spelling), and each
   * of its methods must cite the reference method it mirrors. */
 class ReachSpec extends AnyFunSuite {
+  import ReachSpec.code
 
   private val root = new java.io.File("src/main/scala/graft")
 
@@ -34,12 +35,97 @@ class ReachSpec extends AnyFunSuite {
     try s.mkString finally s.close()
   }
 
+  private val owner =
+    """^((?:(?:final|case|abstract|sealed|implicit|private|protected)(?:\[\w+\])?\s+)*)(object|class|trait)\s+(\w+)""".r
+  private val member = """^  (?:(?:final|implicit|@\w+)\s+)*def\s+([A-Za-z_]\w*)""".r
+
+  /** (file, "Object.def") of every public member def of a top-level
+    * object in the scanned packages. */
+  private lazy val declared: Seq[(String, String)] =
+    scanned.flatMap(d => sources(new java.io.File(root, d))).flatMap { f =>
+      var obj: Option[String] = None
+      code(read(f)).split('\n').toSeq.flatMap { line =>
+        owner.findPrefixMatchOf(line) match {
+          case Some(m) =>
+            val public = !m.group(1).contains("private") && !m.group(1).contains("protected")
+            obj = if (public && m.group(2) == "object") Some(m.group(3)) else None
+            None
+          case None =>
+            for (o <- obj; m <- member.findPrefixMatchOf(line)) yield f.getPath -> s"$o.${m.group(1)}"
+        }
+      }
+    }
+
+  private lazy val publicDefs: Seq[String] = declared.map(_._2).distinct
+
+  /** The files declaring each scanned object. */
+  private lazy val homes: Map[String, Set[String]] =
+    declared.groupMap(_._2.split('.').head)(_._1).view.mapValues(_.toSet).toMap
+
+  private val importStmt = """\bimport\s+[\w.]+(?:\{[^}]*\})?""".r
+
+  /** Comment-stripped src/main, graft.syntax left out: (file, its import
+    * statements, the code without them). */
+  private lazy val callers: Seq[(String, Seq[String], String)] =
+    sources(root).filterNot(_.getName == "Syntax.scala").map { f =>
+      val c = code(read(f))
+      (f.getPath, importStmt.findAllIn(c).toSeq, importStmt.replaceAllIn(c, " "))
+    }
+
+  /** `Obj.name` is reached where src/main says `Obj.name`, or says the
+    * bare `name` (more often than it declares `def name`) in Obj's own
+    * file or in a file importing `Obj._`, `Obj.name` or `Obj.{…name…}`.
+    * A same-named word anywhere else is not a call. */
+  private def reached(qualified: String): Boolean = {
+    val Array(obj, name) = qualified.split('.')
+    val (o, n) = (java.util.regex.Pattern.quote(obj), java.util.regex.Pattern.quote(name))
+    val (bare, decl) = (s"\\b$n\\b".r, s"\\bdef\\s+$n\\b".r)
+    val viaObj = s"\\b$o\\s*\\.\\s*$n\\b".r
+    val grants = s"\\b$o\\.(?:_|$n|\\{[^}]*\\b$n\\b[^}]*\\})$$".r
+    callers.exists { case (path, imports, body) =>
+      viaObj.findFirstIn(body).nonEmpty ||
+        ((homes(obj).contains(path) || imports.exists(grants.findFirstIn(_).nonEmpty)) &&
+          bare.findAllIn(body).size > decl.findAllIn(body).size)
+    }
+  }
+
+  test("the scan finds the public defs") {
+    // a parser that found nothing would pass every other check
+    assert(publicDefs.size > 250, s"only ${publicDefs.size} public defs found")
+    assert(publicDefs.contains("Dedup.exact") && publicDefs.contains("Tables.load"))
+  }
+
+  test("every public def has a src/main caller or an allowlisted reason") {
+    val unreached = publicDefs.filterNot(reached).filterNot(allowlist.contains)
+    assert(unreached.isEmpty,
+      s"no src/main caller (route a query through it, delete it, or allowlist it with a reason): $unreached")
+  }
+
+  test("every allowlisted def exists and still has no src/main caller") {
+    val stale = allowlist.keys.toSeq.sorted.filter(d => !publicDefs.contains(d) || reached(d))
+    assert(stale.isEmpty, s"allowlist entries that are gone or now reached: $stale")
+  }
+
+  test("every graft.syntax method cites the reference method it mirrors") {
+    val text = read(new java.io.File(root, "Syntax.scala"))
+    val defs = """(?s)/\*\*((?:(?!\*/).)*)\*/\s*def\s+(\w+)""".r.findAllMatchIn(text)
+      .map(m => m.group(2) -> m.group(1)).toSeq
+    val undocumented = """\n    def\s+(\w+)""".r.findAllMatchIn(text).map(_.group(1)).toSeq
+      .filterNot(defs.map(_._1).contains)
+    assert(undocumented.isEmpty, s"graft.syntax methods without a scaladoc: $undocumented")
+    val uncited = defs.collect { case (name, doc) if """\w+\.py:\d+""".r.findFirstIn(doc).isEmpty => name }
+    assert(uncited.isEmpty, s"graft.syntax methods citing no reference .py location: $uncited")
+  }
+}
+
+object ReachSpec {
+
   private val charLiteral = """'(?:\\u[0-9a-fA-F]{4}|\\.|[^\\'\n])'""".r
 
   /** `src` without comments, each string literal reduced to the code it
     * interpolates (`${expr}`, `$name`): a name in prose or in SQL text
     * is not a call. Line breaks are kept. */
-  private def code(src: String): String = {
+  def code(src: String): String = {
     val out = new StringBuilder
     def charLit(i: Int): Option[Int] =
       charLiteral.findPrefixOf(src.substring(i, math.min(i + 8, src.length))).map(i + _.length)
@@ -106,64 +192,5 @@ class ReachSpec extends AnyFunSuite {
 
     scanCode(0, nested = false)
     out.toString
-  }
-
-  private val owner =
-    """^((?:(?:final|case|abstract|sealed|implicit|private|protected)(?:\[\w+\])?\s+)*)(object|class|trait)\s+(\w+)""".r
-  private val member = """^  (?:(?:final|implicit|@\w+)\s+)*def\s+([A-Za-z_]\w*)""".r
-
-  /** "Object.def" of every public member def of a top-level object in
-    * the scanned packages. */
-  private lazy val publicDefs: Seq[String] =
-    scanned.flatMap(d => sources(new java.io.File(root, d))).flatMap { f =>
-      var obj: Option[String] = None
-      code(read(f)).split('\n').toSeq.flatMap { line =>
-        owner.findPrefixMatchOf(line) match {
-          case Some(m) =>
-            val public = !m.group(1).contains("private") && !m.group(1).contains("protected")
-            obj = if (public && m.group(2) == "object") Some(m.group(3)) else None
-            None
-          case None =>
-            for (o <- obj; m <- member.findPrefixMatchOf(line)) yield s"$o.${m.group(1)}"
-        }
-      }
-    }.distinct
-
-  /** Comment-stripped src/main, graft.syntax left out. */
-  private lazy val callers: Seq[String] =
-    sources(root).filterNot(_.getName == "Syntax.scala").map(f => code(read(f)))
-
-  private def reached(qualified: String): Boolean = {
-    val name = java.util.regex.Pattern.quote(qualified.split('.').last)
-    val (uses, decls) = (s"\\b$name\\b".r, s"\\bdef\\s+$name\\b".r)
-    callers.exists(c => uses.findAllIn(c).size > decls.findAllIn(c).size)
-  }
-
-  test("the scan finds the public defs") {
-    // a parser that found nothing would pass every other check
-    assert(publicDefs.size > 250, s"only ${publicDefs.size} public defs found")
-    assert(publicDefs.contains("Dedup.exact") && publicDefs.contains("Tables.load"))
-  }
-
-  test("every public def has a src/main caller or an allowlisted reason") {
-    val unreached = publicDefs.filterNot(reached).filterNot(allowlist.contains)
-    assert(unreached.isEmpty,
-      s"no src/main caller (route a query through it, delete it, or allowlist it with a reason): $unreached")
-  }
-
-  test("every allowlisted def exists and still has no src/main caller") {
-    val stale = allowlist.keys.toSeq.sorted.filter(d => !publicDefs.contains(d) || reached(d))
-    assert(stale.isEmpty, s"allowlist entries that are gone or now reached: $stale")
-  }
-
-  test("every graft.syntax method cites the reference method it mirrors") {
-    val text = read(new java.io.File(root, "Syntax.scala"))
-    val defs = """(?s)/\*\*((?:(?!\*/).)*)\*/\s*def\s+(\w+)""".r.findAllMatchIn(text)
-      .map(m => m.group(2) -> m.group(1)).toSeq
-    val undocumented = """\n    def\s+(\w+)""".r.findAllMatchIn(text).map(_.group(1)).toSeq
-      .filterNot(defs.map(_._1).contains)
-    assert(undocumented.isEmpty, s"graft.syntax methods without a scaladoc: $undocumented")
-    val uncited = defs.collect { case (name, doc) if """\w+\.py:\d+""".r.findFirstIn(doc).isEmpty => name }
-    assert(uncited.isEmpty, s"graft.syntax methods citing no reference .py location: $uncited")
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Temporal
+import graft.operators.{GroupOps, Temporal}
 
 /** As-of join, range join, top-k per group: fixture semantics +
   * scale-shape (no BroadcastNestedLoopJoin) assertions. */
@@ -198,7 +198,7 @@ class TemporalSpec extends SparkSpec {
   test("topKPerGroup: k best with deterministic ties") {
     val df = Seq(("a", 1L, 5.0), ("a", 2L, 5.0), ("a", 3L, 7.0), ("a", 4L, 1.0),
       ("b", 5L, 2.0)).toDF("g", "id", "v")
-    val out = Temporal.topKPerGroup(df, Seq("g"),
+    val out = GroupOps.topKPerGroup(df, Seq("g"),
         Seq(col("v").desc, col("id").asc), 2)
       .select("g", "id", "rank_in_group").as[(String, Long, Long)]
       .collect().toSet
