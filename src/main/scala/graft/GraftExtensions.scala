@@ -14,11 +14,20 @@ import graft.functions.Expressions
   *   spark.sql.extensions=graft.GraftExtensions
   *
   *   SELECT graft_cosine(a.embedding, b.embedding) ...
-  *     -- NULL when the arrays differ in length or hold a NULL;
-  *     -- a non-numeric-array argument fails analysis
+  *     -- NULL when the arrays differ in length or hold a NULL
   *   SELECT graft_minhash_bands(text, 5, 8, 4) ...
   *   SELECT graft_shingle_jaccard(t1, t2, 5) ...
   *   SELECT graft_simhash(text) ...
+  *   SELECT graft_healpix(ra, dec, 64) ...
+  *     -- ra/dec of any numeric type, read as DOUBLE: an unsuffixed
+  *     -- literal such as 10.5 (a DECIMAL) works
+  *
+  * Every function follows the kernel contract of
+  * [[graft.functions.Expressions.Kernel]]: an argument of the wrong
+  * type (`graft_simhash(42)`, `graft_cosine(1, 2)`) fails analysis
+  * with DATATYPE_MISMATCH, and a NULL argument gives NULL. The
+  * integer and double parameters after the data arguments must be
+  * literals.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

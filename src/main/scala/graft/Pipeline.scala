@@ -133,10 +133,11 @@ object Pipeline {
       Seq("l_partkey"), "left")
 
     // J8: keep only clusters whose every member matched within radius.
-    // The kept -> clean -> result stretch shares ONE materialization
-    // (the `result` checkpoint in flagship): every upstream frame the
-    // tail re-scans is already checkpointed (withCoords, matched, ca
-    // inside M3), the re-scanned tail segments are cheap row-wise
+    // The kept -> clean -> result stretch is not materialized here
+    // (flagship checkpoints `result` only on its dump path, which has
+    // two consumers): every upstream frame the tail re-scans is
+    // already checkpointed (withCoords, matched, ca inside M3), the
+    // re-scanned tail segments are cheap row-wise
     // passes + broadcast joins over those checkpoints (cheap again
     // now that the tail's means are long sums, not decimals), and AQE
     // reuses identical shuffle exchanges within the single action —

@@ -4,7 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -19,6 +19,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * here makes ONE eval call per row and runs plain JVM code inside,
   * while computing bit-identical results to the SQL the DuckDB oracle
   * runs (md5 hex strings, IEEE double accumulation in index order).
+  * Every expression extends [[Kernel]], which states their one input
+  * and codegen contract.
   */
 object Expressions {
 
@@ -28,17 +30,21 @@ object Expressions {
 
   private val hexDigits = "0123456789abcdef".toCharArray
 
+  /** the 32 lowercase hex chars of a 16-byte digest, into `out` from `off` */
+  private def hexInto(d: Array[Byte], out: Array[Char], off: Int): Unit = {
+    var i = 0
+    while (i < 16) {
+      out(off + 2 * i) = hexDigits((d(i) >> 4) & 0xf)
+      out(off + 2 * i + 1) = hexDigits(d(i) & 0xf)
+      i += 1
+    }
+  }
+
   private def md5Hex(s: String): String = {
     val d = md5Local.get()
     d.reset()
-    val bytes = d.digest(s.getBytes("UTF-8"))
     val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = hexDigits((bytes(i) >> 4) & 0xf)
-      out(2 * i + 1) = hexDigits(bytes(i) & 0xf)
-      i += 1
-    }
+    hexInto(d.digest(s.getBytes("UTF-8")), out, 0)
     new String(out)
   }
 
@@ -53,6 +59,36 @@ object Expressions {
     val n = lc.length - k + 1
     while (i < n) { set.add(lc.substring(i, i + k)); i += 1 }
     set
+  }
+
+  /** The token buckets of [[TokenBuckets]] and [[HashedTf]], in token
+    * order. It walks CODE POINTS (not UTF-16 units), so the SQL twin's
+    * unicode(x[i]) walk matches even for non-BMP text; whitespace code
+    * points are all BMP, so the char-class check stays exact. */
+  private def tokenBucketIds(input: UTF8String, nBuckets: Int): Array[Int] = {
+    def isWs(ch: Char): Boolean =
+      ch == ' ' || ch == '\t' || ch == '\n' || ch == '\u000B' || ch == '\f' || ch == '\r'
+    val text = input.toString.toLowerCase(java.util.Locale.ROOT)
+    val out = new java.util.ArrayList[Integer]()
+    var i = 0
+    val len = text.length
+    while (i < len) {
+      // skip whitespace run (Java regex \s — parity with split("\\s+"))
+      while (i < len && isWs(text.charAt(i))) i += 1
+      if (i < len) {
+        var c = 0L
+        while (i < len && !isWs(text.charAt(i))) {
+          val cp = text.codePointAt(i)
+          c = (c * 31 + cp) % PolyP
+          i += Character.charCount(cp)
+        }
+        out.add((c % nBuckets).toInt)
+      }
+    }
+    val arr = new Array[Int](out.size)
+    var j = 0
+    while (j < arr.length) { arr(j) = out.get(j); j += 1 }
+    arr
   }
 
   /** Sorted 64-bit FNV-1a signature of a text's k-shingle SET — the
@@ -102,13 +138,119 @@ object Expressions {
     inter.toDouble / (a.length + b.length - inter)
   }
 
+  /** Accepted type of one [[Kernel]] argument, checked at analysis.
+    * An accepted argument is read as `readAs` when one is set (Spark's
+    * implicit cast widens it), else as its own type. An argument kind
+    * with `malformedIsNull` makes a malformed row NULL. */
+  sealed abstract class KernelArg(val sql: String, accepted: PartialFunction[DataType, Unit],
+      readAs: Option[DataType] = None, val malformedIsNull: Boolean = false) {
+    def accepts(dt: DataType): Boolean = accepted.isDefinedAt(dt)
+    /** the type an argument of type `dt` is cast to: `dt` itself (no
+      * cast) unless it is accepted and widened */
+    def castTarget(dt: DataType): DataType = readAs.filter(_ => accepts(dt)).getOrElse(dt)
+  }
+  /** a vector: array of float, double, int or bigint */
+  case object NumArray extends KernelArg("ARRAY<FLOAT | DOUBLE | INT | BIGINT>",
+    { case ArrayType(FloatType | DoubleType | IntegerType | LongType, _) => },
+    malformedIsNull = true)
+  /** PQ codes: one int index per subspace */
+  case object CodeArray extends KernelArg("ARRAY<INT>", { case ArrayType(IntegerType, _) => },
+    malformedIsNull = true)
+  /** a per-query ADC table ([[PqAdcTable]]'s output) */
+  case object TableArray extends KernelArg("ARRAY<ARRAY<DOUBLE>>",
+    { case ArrayType(ArrayType(DoubleType, _), _) => }, malformedIsNull = true)
+  /** a cell index into a constant table */
+  case object CellIndex extends KernelArg("INT", { case IntegerType => })
+  /** text */
+  case object Str extends KernelArg("STRING", { case _: StringType => })
+  /** an angle in degrees: any numeric type, DECIMAL included, read as DOUBLE */
+  case object Degrees extends KernelArg("NUMERIC", { case _: NumericType => }, Some(DoubleType))
+  /** a sketch key: BIGINT, or a narrower integer read as BIGINT */
+  case object LongKey extends KernelArg("BIGINT | INT | SMALLINT | TINYINT",
+    { case LongType | IntegerType | ShortType | ByteType => }, Some(LongType))
+
+  /** Element `i` of a numeric array widened to double. One reader is
+    * resolved per expression from the element type, so kernel loops
+    * never match on the type per element. */
+  abstract class NumReader { def apply(a: ArrayData, i: Int): Double }
+
+  /** The one contract of every expression in this object:
+    *  - each argument has a declared kind ([[argTypes]]); an argument
+    *    of another type fails analysis with DATATYPE_MISMATCH, and a
+    *    [[Degrees]] or [[LongKey]] argument is widened to DOUBLE or
+    *    BIGINT by Spark's implicit cast;
+    *  - a NULL argument gives NULL; for the array kinds, a row whose
+    *    array has the wrong length or a NULL element gives NULL too
+    *    ([[wellFormed]]), like the interpreted zip_with/aggregate twin;
+    *  - a PQ code or cell index outside its table throws
+    *    IllegalArgumentException ([[index]]).
+    * Each kernel has ONE implementation, its public `kernel` method:
+    * eval calls it, and codegen emits a call to it through a reference
+    * object ([[callKernel]]), so whole-stage codegen skips the
+    * interpreted eval(InternalRow) + boxing detour CodegenFallback
+    * would take. */
+  sealed trait Kernel extends Expression with ImplicitCastInputTypes {
+    protected def argTypes: Seq[KernelArg]
+
+    /** some argument kind makes a malformed row NULL: `kernel` returns
+      * a boxed value, null for that row */
+    private def malformedIsNull: Boolean = argTypes.exists(_.malformedIsNull)
+
+    override def nullable: Boolean = malformedIsNull || children.exists(_.nullable)
+
+    override def inputTypes: Seq[DataType] =
+      children.zip(argTypes).map { case (c, t) => t.castTarget(c.dataType) }
+
+    override def checkInputDataTypes(): TypeCheckResult =
+      children.zip(argTypes).zipWithIndex.collectFirst {
+        case ((c, t), i) if !t.accepts(c.dataType) => TypeCheckResult.TypeCheckFailure(
+          s"argument ${i + 1} of $prettyName must be ${t.sql}, got ${c.dataType.sql}")
+      }.getOrElse(TypeCheckResult.TypeCheckSuccess)
+
+    /** reader for the elements of `e`, a [[NumArray]] argument */
+    protected final def reader(e: Expression): NumReader =
+      e.dataType.asInstanceOf[ArrayType].elementType match {
+        case FloatType   => (a, i) => a.getFloat(i).toDouble
+        case DoubleType  => (a, i) => a.getDouble(i)
+        case IntegerType => (a, i) => a.getInt(i).toDouble
+        case LongType    => (a, i) => a.getLong(i).toDouble
+        case other => throw new IllegalArgumentException(s"unsupported element type $other")
+      }
+
+    /** `a` has exactly `len` elements and none is NULL */
+    protected final def wellFormed(a: ArrayData, len: Int): Boolean = {
+      if (a.numElements() != len) return false
+      var i = 0
+      while (i < len) { if (a.isNullAt(i)) return false; i += 1 }
+      true
+    }
+
+    /** `i` checked against a table of `size` entries */
+    protected final def index(i: Int, size: Int): Int = {
+      if (i < 0 || i >= size) throw new IllegalArgumentException(
+        s"$prettyName: index $i outside its table [0, $size)")
+      i
+    }
+
+    /** codegen body: call `kernel` on the evaluated arguments */
+    protected final def callKernel(ctx: CodegenContext, ev: ExprCode, args: String*): String = {
+      val call = s"${ctx.addReferenceObj(prettyName, this)}.kernel(${args.mkString(", ")})"
+      if (!malformedIsNull) s"${ev.value} = $call;"
+      else {
+        val r = ctx.freshName("r")
+        s"""${CodeGenerator.boxedType(dataType)} $r = $call;
+           |if ($r == null) ${ev.isNull} = true; else ${ev.value} = $r;""".stripMargin
+      }
+    }
+  }
+
   /** MinHash LSH band keys of a text column, one compiled pass:
     * shingle → numHashes × md5("j:"+shingle) minima → per-band md5 of
     * the concatenated signature slice. Result: array of band-key hex
     * strings (index = band id). */
   case class MinHashBands(child: Expression, shingleSize: Int,
                           numHashes: Int, bandSize: Int)
-      extends UnaryExpression {
+      extends UnaryExpression with Kernel {
     require(numHashes % bandSize == 0)
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     // "j:" prefix bytes per hash index — hashing md5(prefix ++ shingleBytes)
@@ -127,19 +269,9 @@ object Expressions {
       }
       false
     }
-    private def toHex(d: Array[Byte], out: Array[Char], off: Int): Unit = {
-      var i = 0
-      while (i < 16) {
-        out(off + 2 * i) = hexDigits((d(i) >> 4) & 0xf)
-        out(off + 2 * i + 1) = hexDigits(d(i) & 0xf)
-        i += 1
-      }
-    }
+    override protected def argTypes: Seq[KernelArg] = Seq(Str)
     override protected def nullSafeEval(input: Any): Any =
       kernel(input.asInstanceOf[UTF8String])
-    /** public compiled kernel — doGenCode emits a direct call to it,
-      * so whole-stage codegen skips the interpreted eval(InternalRow)
-      * + boxing detour CodegenFallback would take (VERDICT r05 #7). */
     def kernel(input: UTF8String): ArrayData = {
       val text = input.toString
       val mins = Array.fill[Array[Byte]](numHashes)(null)
@@ -162,30 +294,25 @@ object Expressions {
       var b = 0
       while (b < nBands) {
         var i = 0
-        while (i < bandSize) { toHex(mins(b * bandSize + i), hexBuf, 32 * i); i += 1 }
+        while (i < bandSize) { hexInto(mins(b * bandSize + i), hexBuf, 32 * i); i += 1 }
         bands(b) = UTF8String.fromString(md5Hex(new String(hexBuf)))
         b += 1
       }
       new GenericArrayData(bands)
     }
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("minHashBands", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
-    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => callKernel(ctx, ev, a))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
   /** Exact Jaccard similarity of the char-k-shingle sets of two
     * texts: |A∩B| / (|A|+|B|−|A∩B|), int counts, one double divide. */
   case class ShingleJaccard(left: Expression, right: Expression, shingleSize: Int)
-      extends BinaryExpression {
+      extends BinaryExpression with Kernel {
     override def dataType: DataType = DoubleType
+    override protected def argTypes: Seq[KernelArg] = Seq(Str, Str)
     override protected def nullSafeEval(a: Any, b: Any): Any =
       kernel(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-    /** public compiled kernel — see [[MinHashBands.kernel]]. */
     def kernel(a: UTF8String, b: UTF8String): Double = {
       val sa = shingleSet(a.toString, shingleSize)
       val sb = shingleSet(b.toString, shingleSize)
@@ -194,13 +321,8 @@ object Expressions {
       while (it.hasNext) if (sb.contains(it.next())) inter += 1
       inter.toDouble / (sa.size + sb.size - inter)
     }
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("shingleJaccard", this)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.kernel($a, $b);")
-    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, (a, b) => callKernel(ctx, ev, a, b))
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
   }
@@ -211,11 +333,10 @@ object Expressions {
     * The token hash is the LAST 8 digest bytes little-endian — the
     * same 64 bits DuckDB's `md5_number_lower` exposes, so the
     * dd_simhash oracle mirrors the whole signature exactly. */
-  case class SimHash64(child: Expression) extends UnaryExpression {
+  case class SimHash64(child: Expression) extends UnaryExpression with Kernel {
     override def dataType: DataType = LongType
-    override protected def nullSafeEval(input: Any): Any =
-      java.lang.Long.valueOf(kernel(input.asInstanceOf[UTF8String]))
-    /** public compiled kernel — see [[MinHashBands.kernel]]. */
+    override protected def argTypes: Seq[KernelArg] = Seq(Str)
+    override protected def nullSafeEval(input: Any): Any = kernel(input.asInstanceOf[UTF8String])
     def kernel(input: UTF8String): Long = {
       val text = input.toString.toLowerCase(java.util.Locale.ROOT)
       val sums = new Array[Int](64)
@@ -245,13 +366,8 @@ object Expressions {
       while (bit < 64) { if (sums(bit) > 0) sig |= (1L << bit); bit += 1 }
       sig
     }
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("simHash64", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
-    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => callKernel(ctx, ev, a))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -280,14 +396,13 @@ object Expressions {
 
   case class MinHashBandsPoly(child: Expression, shingleSize: Int,
                               numHashes: Int, bandSize: Int)
-      extends UnaryExpression {
+      extends UnaryExpression with Kernel {
     require(numHashes % bandSize == 0)
     private val coeffs = polyCoeffs(numHashes)
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
+    override protected def argTypes: Seq[KernelArg] = Seq(Str)
     override protected def nullSafeEval(input: Any): Any =
       kernel(input.asInstanceOf[UTF8String])
-    /** public compiled kernel — see [[MinHashBands.kernel]]. This one
-      * dominates the near-dedup banded-keys stage (VERDICT r05 #7). */
     def kernel(input: UTF8String): ArrayData = {
       val text = input.toString
         .toLowerCase(java.util.Locale.ROOT)
@@ -327,93 +442,9 @@ object Expressions {
       }
       new GenericArrayData(bands)
     }
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("minHashBandsPoly", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
-    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => callKernel(ctx, ev, a))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  /** Accepted type of one [[ArrayKernel]] argument, checked at analysis. */
-  sealed abstract class KernelArg(val sql: String, accepted: PartialFunction[DataType, Unit]) {
-    def accepts(dt: DataType): Boolean = accepted.isDefinedAt(dt)
-  }
-  /** a vector: array of float, double, int or bigint */
-  case object NumArray extends KernelArg("ARRAY<FLOAT | DOUBLE | INT | BIGINT>",
-    { case ArrayType(FloatType | DoubleType | IntegerType | LongType, _) => })
-  /** PQ codes: one int index per subspace */
-  case object CodeArray extends KernelArg("ARRAY<INT>", { case ArrayType(IntegerType, _) => })
-  /** a per-query ADC table ([[PqAdcTable]]'s output) */
-  case object TableArray extends KernelArg("ARRAY<ARRAY<DOUBLE>>",
-    { case ArrayType(ArrayType(DoubleType, _), _) => })
-  /** a cell index into a constant table */
-  case object CellIndex extends KernelArg("INT", { case IntegerType => })
-
-  /** Element `i` of a numeric array widened to double. One reader is
-    * resolved per expression from the element type, so kernel loops
-    * never match on the type per element. */
-  abstract class NumReader { def apply(a: ArrayData, i: Int): Double }
-
-  /** Shared base of the numeric-array kernels ([[NearestCells]],
-    * [[LshTableKeys]], [[CosineSim]], [[DotProduct]], [[PqAdcTable]],
-    * [[CellDistTo]], [[CodesDot]], [[CodesConstLookupSum]]), holding
-    * their one input contract:
-    *  - an argument of the wrong type fails analysis ([[argTypes]]);
-    *  - a row whose array has the wrong length or a NULL element
-    *    gives NULL ([[wellFormed]]), like the interpreted
-    *    zip_with/aggregate twin; a NULL argument gives NULL;
-    *  - a PQ code or cell index outside its table throws
-    *    IllegalArgumentException ([[index]]).
-    * Each kernel has ONE implementation, its public `kernel` method:
-    * eval calls it and codegen emits a call to it through a reference
-    * object ([[callKernel]]), the [[MinHashBands.kernel]] pattern. */
-  sealed trait ArrayKernel extends Expression {
-    protected def argTypes: Seq[KernelArg]
-
-    override def nullable: Boolean = true
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      children.zip(argTypes).zipWithIndex.collectFirst {
-        case ((c, t), i) if !t.accepts(c.dataType) => TypeCheckResult.TypeCheckFailure(
-          s"argument ${i + 1} of $prettyName must be ${t.sql}, got ${c.dataType.sql}")
-      }.getOrElse(TypeCheckResult.TypeCheckSuccess)
-
-    /** reader for the elements of `e`, a [[NumArray]] argument */
-    protected final def reader(e: Expression): NumReader =
-      e.dataType.asInstanceOf[ArrayType].elementType match {
-        case FloatType   => (a, i) => a.getFloat(i).toDouble
-        case DoubleType  => (a, i) => a.getDouble(i)
-        case IntegerType => (a, i) => a.getInt(i).toDouble
-        case LongType    => (a, i) => a.getLong(i).toDouble
-        case other => throw new IllegalArgumentException(s"unsupported element type $other")
-      }
-
-    /** `a` has exactly `len` elements and none is NULL */
-    protected final def wellFormed(a: ArrayData, len: Int): Boolean = {
-      if (a.numElements() != len) return false
-      var i = 0
-      while (i < len) { if (a.isNullAt(i)) return false; i += 1 }
-      true
-    }
-
-    /** `i` checked against a table of `size` entries */
-    protected final def index(i: Int, size: Int): Int = {
-      if (i < 0 || i >= size) throw new IllegalArgumentException(
-        s"$prettyName: index $i outside its table [0, $size)")
-      i
-    }
-
-    /** codegen body: call `kernel` on the evaluated arguments; its
-      * null return is the row's NULL */
-    protected final def callKernel(ctx: CodegenContext, ev: ExprCode, args: String*): String = {
-      val ref = ctx.addReferenceObj(prettyName, this)
-      val r = ctx.freshName("r")
-      s"""${CodeGenerator.boxedType(dataType)} $r = $ref.kernel(${args.mkString(", ")});
-         |if ($r == null) ${ev.isNull} = true; else ${ev.value} = $r;""".stripMargin
-    }
   }
 
   /** Squared-L2 nearest coarse centroids: one compiled pass computes
@@ -425,7 +456,7 @@ object Expressions {
     * have the centroids' length.
     */
   case class NearestCells(child: Expression, centroids: Array[Array[Double]], take: Int)
-      extends UnaryExpression with ArrayKernel {
+      extends UnaryExpression with Kernel {
     require(centroids.nonEmpty && take >= 1 && take <= centroids.length)
     private val dim = centroids(0).length
     require(centroids.forall(_.length == dim), "centroids must share one length")
@@ -477,11 +508,11 @@ object Expressions {
     * (table, plane, dim-index)). Returns one long key per table;
     * callers posexplode so (table-index, key) is the join key. A
     * vector whose length is not `dim` or that holds a NULL gets NULL
-    * keys ([[ArrayKernel]]), so posexplode drops it from the
+    * keys ([[Kernel]]), so posexplode drops it from the
     * candidates. Replaces `planes` interpreted zip_with folds per row.
     */
   case class LshTableKeys(child: Expression, dim: Int, planes: Int, tables: Int)
-      extends UnaryExpression with ArrayKernel {
+      extends UnaryExpression with Kernel {
     require(planes >= 1 && planes <= 63 && tables >= 1)
     // weights[t*planes + p][d] : ±1
     private val weights: Array[Array[Double]] =
@@ -525,32 +556,20 @@ object Expressions {
   }
 
   /** HEALPix NESTED cell id of (ra, dec) degrees (SURVEY §4 item 2) —
-    * the codegen'd spherical cell id for bucketed spatial joins.
-    * Generates a static call into [[Healpix.ang2pixNest]], fusing
-    * into the surrounding whole-stage-codegen span. */
+    * the codegen'd spherical cell id for bucketed spatial joins:
+    * [[Healpix.ang2pixNest]] inside the surrounding whole-stage-codegen
+    * span. */
   case class HealpixCell(left: Expression, right: Expression, nside: Int)
-      extends BinaryExpression {
+      extends BinaryExpression with Kernel {
     require(nside >= 1 && (nside & (nside - 1)) == 0 && nside <= 8192,
       "nside must be a power of two in [1, 8192]")
     override def dataType: DataType = LongType
-    override protected def nullSafeEval(ra: Any, dec: Any): Any = {
-      def d(v: Any): Double = v match {
-        case x: Double => x
-        case x: Float  => x.toDouble
-        case x: Int    => x.toDouble
-        case x: Long   => x.toDouble
-        case other     => throw new IllegalArgumentException(s"unsupported type $other")
-      }
-      java.lang.Long.valueOf(Healpix.ang2pixNest(nside, d(ra), d(dec)))
-    }
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, (ra, dec) => s"""
-        ${ev.value} = graft.functions.Healpix.ang2pixNest(
-          $nside, (double) $ra, (double) $dec);
-        """)
+    override protected def argTypes: Seq[KernelArg] = Seq(Degrees, Degrees)
+    override protected def nullSafeEval(ra: Any, dec: Any): Any =
+      kernel(ra.asInstanceOf[Double], dec.asInstanceOf[Double])
+    def kernel(ra: Double, dec: Double): Long = Healpix.ang2pixNest(nside, ra, dec)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, (a, b) => callKernel(ctx, ev, a, b))
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
   }
@@ -559,39 +578,22 @@ object Expressions {
     * pixel a radius-`radiusRad` match around any point of that pixel
     * can fall in ([[Healpix.coverDisk]]). Replaces the last
     * interpreted ScalaUDF in the spatial join path (r7 judge finding
-    * #3): the kernel rides into whole-stage codegen via the same
-    * reference-object call the LSH band expressions use, so the
+    * #3): as a [[Kernel]] it rides into whole-stage codegen, so the
     * catalog-side explode stays inside the codegen span instead of
     * forcing a black-box UDF island. */
   case class HealpixCoverDisk(left: Expression, right: Expression,
                               nside: Int, radiusRad: Double)
-      extends BinaryExpression {
+      extends BinaryExpression with Kernel {
     require(nside >= 1 && (nside & (nside - 1)) == 0 && nside <= 8192,
       "nside must be a power of two in [1, 8192]")
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-    def kernel(ra: Double, dec: Double): org.apache.spark.sql.catalyst.util.ArrayData =
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-        Healpix.coverDisk(nside, Healpix.ang2pixNest(nside, ra, dec), radiusRad))
-
-    override protected def nullSafeEval(ra: Any, dec: Any): Any = {
-      def d(v: Any): Double = v match {
-        case x: Double => x
-        case x: Float  => x.toDouble
-        case x: Int    => x.toDouble
-        case x: Long   => x.toDouble
-        case other     => throw new IllegalArgumentException(s"unsupported type $other")
-      }
-      kernel(d(ra), d(dec))
-    }
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("healpixCoverDisk", this)
-      nullSafeCodeGen(ctx, ev, (ra, dec) =>
-        s"${ev.value} = $ref.kernel((double) $ra, (double) $dec);")
-    }
+    override protected def argTypes: Seq[KernelArg] = Seq(Degrees, Degrees)
+    override protected def nullSafeEval(ra: Any, dec: Any): Any =
+      kernel(ra.asInstanceOf[Double], dec.asInstanceOf[Double])
+    def kernel(ra: Double, dec: Double): ArrayData = UnsafeArrayData.fromPrimitiveArray(
+      Healpix.coverDisk(nside, Healpix.ang2pixNest(nside, ra, dec), radiusRad))
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, (a, b) => callKernel(ctx, ev, a, b))
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
   }
@@ -599,10 +601,10 @@ object Expressions {
   /** Cosine similarity of two numeric arrays of equal length,
     * accumulated in index order: bit-identical to the
     * zip_with/aggregate fold and to the oracle up to the documented
-    * round-6. A contract kernel ([[ArrayKernel]]), so it fuses into
+    * round-6. A contract kernel ([[Kernel]]), so it fuses into
     * the surrounding whole-stage-codegen span. */
   case class CosineSim(left: Expression, right: Expression)
-      extends BinaryExpression with ArrayKernel {
+      extends BinaryExpression with Kernel {
     override def dataType: DataType = DoubleType
     override protected def argTypes: Seq[KernelArg] = Seq(NumArray, NumArray)
     @transient private lazy val rl = reader(left)
@@ -637,7 +639,7 @@ object Expressions {
     * Left-to-right accumulation, bit-equal to the list_sum SQL
     * mirror (same contract as [[CosineSim]]). */
   case class DotProduct(left: Expression, right: Expression)
-      extends BinaryExpression with ArrayKernel {
+      extends BinaryExpression with Kernel {
     override def dataType: DataType = DoubleType
     override protected def argTypes: Seq[KernelArg] = Seq(NumArray, NumArray)
     @transient private lazy val rl = reader(left)
@@ -675,7 +677,7 @@ object Expressions {
     * 27–38 CPU-s per warm run over a 2 000-row corpus. The vector must
     * have length m·ds. */
   case class PqAdcTable(child: Expression,
-      codebooks: Array[Array[Array[Double]]]) extends UnaryExpression with ArrayKernel {
+      codebooks: Array[Array[Array[Double]]]) extends UnaryExpression with Kernel {
     require(codebooks.nonEmpty && codebooks(0).nonEmpty)
     private val ds = codebooks(0)(0).length
     require(codebooks.forall(_.forall(_.length == ds)), "codebook entries must share one length")
@@ -723,7 +725,7 @@ object Expressions {
     * (x−c)² fold — the exact value [[NearestCells]] minimized), one
     * eval per row instead of one lambda per dimension. */
   case class CellDistTo(left: Expression, right: Expression,
-      centroids: Array[Array[Double]]) extends BinaryExpression with ArrayKernel {
+      centroids: Array[Array[Double]]) extends BinaryExpression with Kernel {
     override def dataType: DataType = DoubleType
     override protected def argTypes: Seq[KernelArg] = Seq(NumArray, CellIndex)
     @transient private lazy val rd = reader(left)
@@ -754,7 +756,7 @@ object Expressions {
     * left fold from 0.0); one eval per PAIR on the scoring join's hot
     * path. */
   case class CodesDot(left: Expression, right: Expression)
-      extends BinaryExpression with ArrayKernel {
+      extends BinaryExpression with Kernel {
     override def dataType: DataType = DoubleType
     override protected def argTypes: Seq[KernelArg] = Seq(TableArray, CodeArray)
 
@@ -787,7 +789,7 @@ object Expressions {
     * centroid norms). Bit-identical left fold from 0.0, one eval per
     * candidate row. */
   case class CodesConstLookupSum(child: Expression,
-      table: Array[Array[Double]]) extends UnaryExpression with ArrayKernel {
+      table: Array[Array[Double]]) extends UnaryExpression with Kernel {
     override def dataType: DataType = DoubleType
     override protected def argTypes: Seq[KernelArg] = Seq(CodeArray)
 
@@ -819,21 +821,16 @@ object Expressions {
     * an exact join downstream only removes false positives — output
     * is exact while shuffle volume shrinks by the join selectivity.
     * Codegen'd (one `mightContainLong` call per row, fused into the
-    * scan's whole-stage span). */
+    * scan's whole-stage span); a narrower integer key is widened to
+    * BIGINT first ([[LongKey]]). */
   case class BloomMightContainLong(child: Expression,
-      bloom: org.apache.spark.util.sketch.BloomFilter) extends UnaryExpression {
+      bloom: org.apache.spark.util.sketch.BloomFilter) extends UnaryExpression with Kernel {
     override def dataType: DataType = BooleanType
-    override protected def nullSafeEval(input: Any): Any =
-      java.lang.Boolean.valueOf(kernel(input.asInstanceOf[Long]))
-    /** public compiled kernel — see [[MinHashBands.kernel]]. */
+    override protected def argTypes: Seq[KernelArg] = Seq(LongKey)
+    override protected def nullSafeEval(input: Any): Any = kernel(input.asInstanceOf[Long])
     def kernel(v: Long): Boolean = bloom.mightContainLong(v)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("bloomMightContain", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
-    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => callKernel(ctx, ev, a))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -847,19 +844,13 @@ object Expressions {
     * estimate never undercounts, and overcounts by ≤ eps·N w.p. ≥
     * confidence. Codegen'd like [[BloomMightContainLong]]. */
   case class CmsEstimateLong(child: Expression,
-      cms: org.apache.spark.util.sketch.CountMinSketch) extends UnaryExpression {
+      cms: org.apache.spark.util.sketch.CountMinSketch) extends UnaryExpression with Kernel {
     override def dataType: DataType = LongType
-    override protected def nullSafeEval(input: Any): Any =
-      java.lang.Long.valueOf(kernel(input.asInstanceOf[Long]))
-    /** public compiled kernel — see [[MinHashBands.kernel]]. */
+    override protected def argTypes: Seq[KernelArg] = Seq(LongKey)
+    override protected def nullSafeEval(input: Any): Any = kernel(input.asInstanceOf[Long])
     def kernel(v: Long): Long = cms.estimateCount(java.lang.Long.valueOf(v))
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("cmsEstimate", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
-    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => callKernel(ctx, ev, a))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -873,49 +864,16 @@ object Expressions {
     * skipped — parity with `list_filter(regexp_split_to_array(...))`.
     */
   case class TokenBuckets(child: Expression, nBuckets: Int)
-      extends UnaryExpression {
+      extends UnaryExpression with Kernel {
     require(nBuckets >= 2)
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+    override protected def argTypes: Seq[KernelArg] = Seq(Str)
     override protected def nullSafeEval(input: Any): Any =
       kernel(input.asInstanceOf[UTF8String])
-    /** public compiled kernel — see [[MinHashBands.kernel]]. */
-    def kernel(input: UTF8String): ArrayData = {
-      val text = input.toString.toLowerCase(java.util.Locale.ROOT)
-      val out = new java.util.ArrayList[Integer]()
-      var i = 0
-      val len = text.length
-      // Iterate CODE POINTS (codePointAt + charCount), not UTF-16
-      // units, so the SQL twin's unicode(x[i]) per-codepoint walk
-      // matches even for non-BMP text (emoji etc.); whitespace code
-      // points are all BMP, so the char-class check stays exact.
-      while (i < len) {
-        // skip whitespace run (Java regex \s — parity with split("\\s+"))
-        while (i < len && isWs(text.charAt(i))) i += 1
-        if (i < len) {
-          var c = 0L
-          while (i < len && !isWs(text.charAt(i))) {
-            val cp = text.codePointAt(i)
-            c = (c * 31 + cp) % PolyP
-            i += Character.charCount(cp)
-          }
-          out.add((c % nBuckets).toInt)
-        }
-      }
-      val arr = new Array[Int](out.size)
-      var j = 0
-      while (j < arr.length) { arr(j) = out.get(j); j += 1 }
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(arr)
-    }
-    private def isWs(ch: Char): Boolean =
-      ch == ' ' || ch == '\t' || ch == '\n' || ch == '\u000B' ||
-        ch == '\f' || ch == '\r'
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("tokenBuckets", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
-    }
+    def kernel(input: UTF8String): ArrayData =
+      UnsafeArrayData.fromPrimitiveArray(tokenBucketIds(input, nBuckets))
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => callKernel(ctx, ev, a))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -929,17 +887,14 @@ object Expressions {
     * (chunk embeddings for retrieval, clustering, semantic dedup)
     * without a model. */
   case class HashedTf(child: Expression, nBuckets: Int)
-      extends UnaryExpression {
+      extends UnaryExpression with Kernel {
     require(nBuckets >= 2)
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+    override protected def argTypes: Seq[KernelArg] = Seq(Str)
     override protected def nullSafeEval(input: Any): Any =
       kernel(input.asInstanceOf[UTF8String])
-    // bucket hashing shared with TokenBuckets (kernel is a pure
-    // function of (text, nBuckets) — the child expr is unused there)
-    private lazy val buckets = TokenBuckets(child, nBuckets)
-    /** public compiled kernel — see [[MinHashBands.kernel]]. */
     def kernel(input: UTF8String): ArrayData = {
-      val bks = buckets.kernel(input).toIntArray()
+      val bks = tokenBucketIds(input, nBuckets)
       val counts = new Array[Double](nBuckets)
       var i = 0
       while (i < bks.length) { counts(bks(i)) += 1.0; i += 1 }
@@ -951,15 +906,10 @@ object Expressions {
         b = 0
         while (b < nBuckets) { counts(b) = counts(b) / norm; b += 1 }
       }
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(counts)
+      UnsafeArrayData.fromPrimitiveArray(counts)
     }
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("hashedTf", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
-    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => callKernel(ctx, ev, a))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -972,11 +922,10 @@ object Expressions {
     * reproduces it bit-for-bit:
     * H = (n·lnq(n) − Σ_c k_c·lnq(k_c)) / (n·1e6). Code points (not
     * UTF-16 units) to match SQL per-character substr semantics. */
-  case class CharEntropy(child: Expression) extends UnaryExpression {
+  case class CharEntropy(child: Expression) extends UnaryExpression with Kernel {
     override def dataType: DataType = DoubleType
-    override protected def nullSafeEval(input: Any): Any =
-      java.lang.Double.valueOf(kernel(input.asInstanceOf[UTF8String]))
-    /** public compiled kernel — see [[MinHashBands.kernel]]. */
+    override protected def argTypes: Seq[KernelArg] = Seq(Str)
+    override protected def nullSafeEval(input: Any): Any = kernel(input.asInstanceOf[UTF8String])
     def kernel(input: UTF8String): Double = {
       val text = input.toString
       val counts = new java.util.HashMap[Integer, Integer]()
@@ -996,13 +945,8 @@ object Expressions {
     }
     private def lnq(x: Long): Long =
       math.floor(math.log(x.toDouble) * 1e6 + 0.5).toLong
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("charEntropy", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
-    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => callKernel(ctx, ev, a))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -1017,16 +961,16 @@ object Expressions {
     * (not UTF-16 units) for per-character SQL substr parity. Returns
     * array<struct<clen, ctext>> of the chunks in order. */
   case class CdcChunks(child: Expression, w: Int, divisor: Int)
-      extends UnaryExpression {
+      extends UnaryExpression with Kernel {
     require(w >= 2 && divisor >= 2)
     override def dataType: DataType = ArrayType(
       StructType(Seq(
         StructField("clen", LongType, nullable = false),
         StructField("ctext", StringType, nullable = false))),
       containsNull = false)
+    override protected def argTypes: Seq[KernelArg] = Seq(Str)
     override protected def nullSafeEval(input: Any): Any =
       kernel(input.asInstanceOf[UTF8String])
-    /** public compiled kernel — see [[MinHashBands.kernel]]. */
     def kernel(input: UTF8String): ArrayData = {
       val text = input.toString.toLowerCase(java.util.Locale.ROOT)
       val cps = text.codePoints().toArray
@@ -1058,13 +1002,8 @@ object Expressions {
       }
       new GenericArrayData(rows)
     }
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("cdcChunks", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
-    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => callKernel(ctx, ev, a))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 

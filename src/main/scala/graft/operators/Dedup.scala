@@ -62,8 +62,8 @@ object Dedup {
     * predicate below the spread exchange into the scan stage — which
     * is single-partition at bench scale — evaluating the signature
     * kernel TWO extra times, serially (measured 3.4 CPU-s pinned to
-    * one task per md5-family run at sf0.1). The checkpoint pins the
-    * kernel to exactly one eval in the wide post-spread stage; the
+    * one task per md5-family run at sf0.1). The persisted frame pins
+    * the kernel to exactly one eval in the wide post-spread stage; the
     * inferred filter then runs on materialized arrays. */
   private def bandedKeys(df: DataFrame, idCol: String, textCol: String,
                          shingleSize: Int, numHashes: Int, bandSize: Int,
@@ -98,9 +98,9 @@ object Dedup {
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             shingleSize: Int = 5, numHashes: Int = 8,
                             bandSize: Int = 2, poly: Boolean = false): DataFrame = {
-    // bandedKeys checkpoints the (id, bands) frame internally, so the
+    // bandedKeys persists the (id, bands) frame internally, so the
     // self-join's two sides re-explode materialized arrays — the
-    // signatures are never recomputed
+    // signatures are computed once
     val banded = bandedKeys(df, idCol, textCol, shingleSize, numHashes, bandSize, poly)
     val a = banded.select(col("_band"), col("_key"), col("_id").as("a"))
     val b = banded.select(col("_band"), col("_key"), col("_id").as("b"))

@@ -308,7 +308,6 @@ object Graph {
     * an uncached loop frame recomputes geometrically (the
     * m13_label_prop lesson, r12). */
   def kcorePeel(edges: DataFrame, k: Int, rounds: Int,
-                broadcastKeep: Boolean = true,
                 checkpointEvery: Int = 4): DataFrame = {
     def degrees(e: DataFrame): DataFrame =
       // ONE scan per degree pass: each edge explodes to both
@@ -326,13 +325,8 @@ object Graph {
       val kept = degrees(e).where(col("deg") >= k).select("node")
       // the survivor set is node-sized — here bounded by the part
       // dimension, so it BROADCASTS and a peel round never shuffles
-      // the edge frame (only the degree aggregate exchanges). For a
-      // fact-scale node set pass broadcastKeep = false and the joins
-      // fall back to shuffles.
-      def side(c: String) = {
-        val r = kept.withColumnRenamed("node", c)
-        if (broadcastKeep) broadcast(r) else r
-      }
+      // the edge frame (only the degree aggregate exchanges)
+      def side(c: String) = broadcast(kept.withColumnRenamed("node", c))
       // the LAST round's edge frame is consumed exactly ONCE (the
       // final degree pass) — persisting it is a pure cache-write tax
       // (the dbscan stays-LAZY rule, r16); every earlier round's frame

@@ -222,13 +222,11 @@ object Spatial {
     * predicate — O(per-cell candidates), not O(sources × grains), and
     * the plan is a hash join instead of a BroadcastNestedLoopJoin.
     * One tiny driver-side max() on the dimension-sized grain table
-    * picks the cell size. `broadcastGrains = false` shuffles both
-    * sides on the cell id for grain tables too big to broadcast.
+    * picks the cell size; the grain side is broadcast.
     */
   def thetaCircleJoin(sources: DataFrame, srcId: String, sx: String, sy: String,
                       grains: DataFrame, grainId: String, gx: String, gy: String,
-                      gr: String, radiusMultiplier: Double = 1.0,
-                      broadcastGrains: Boolean = true): DataFrame = {
+                      gr: String, radiusMultiplier: Double = 1.0): DataFrame = {
     // BOUNDED: single-row global aggregate
     val maxR = Option(grains.agg(max(col(gr).cast("double"))).collect()(0).get(0))
       .map(_.asInstanceOf[Double]).getOrElse(0.0)
@@ -236,7 +234,7 @@ object Spatial {
     val rr = col(gr) * radiusMultiplier
     bestPerLeft(sources, srcId,
       planarCandidates(sources, srcId, sx, sy, grains, gx, gy, cellSize, rr * rr,
-        None, broadcastGrains),
+        None, broadcastRight = true),
       col(gr).desc, col(grainId))
   }
 }

@@ -7,14 +7,23 @@ import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
+
+import graft.functions.Healpix
 import graft.functions.Expressions._
 
-/** The numeric-array kernels against their interpreted
-  * zip_with/aggregate/element_at twins, under whole-stage codegen and
-  * with code generation off. Well-formed rows must match bit for bit;
-  * a short array, a NULL element or a NULL array gives NULL; a NaN
-  * element gives NaN; a PQ code or cell index outside its table
-  * throws. */
+/** The Catalyst kernels under whole-stage codegen and with code
+  * generation off. The numeric-array kernels against their interpreted
+  * zip_with/aggregate/element_at twins: well-formed rows must match bit
+  * for bit; a short array, a NULL element or a NULL array gives NULL; a
+  * NaN element gives NaN; a PQ code or cell index outside its table
+  * throws. The text, hash, HEALPix and sketch kernels against
+  * [[Healpix]], the sketches' own probes, or a direct `kernel` call on
+  * the driver, for every accepted argument type; a NULL argument gives
+  * NULL. A wrong argument type fails analysis. */
 class ArrayKernelSpec extends SparkSpec {
   import ArrayKernelSpec._
 
@@ -204,6 +213,118 @@ class ArrayKernelSpec extends SparkSpec {
         val twin = data(Seq(Row.fromSeq(ok.toSeq.updated(4, Seq(0, kSub, 0)))))
         intercept[Exception](twin.select(lookupSum(col("tab"), col("codes"))).collect())
       }
+    }
+  }
+
+  private val texts: Seq[String] = Seq(
+    "", "abc", "Hello World", "  tab\tand\nnewline  run ",
+    "non-BMP 😀 code points 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 and é accents", "𝔘𝔫") ++
+    Seq.fill(6)(Seq.fill(3 + rnd.nextInt(20))(
+      Seq("lorem", "ipsum", "dolor", "sit", "amet", "😀x", "Zeta")(rnd.nextInt(7))).mkString(" "))
+  private val inBloom = 0L until 40L
+  private val keys: Seq[Long] = inBloom.take(5) ++ Seq(-7L, 41L, 1000L, 123456L, -99999L)
+  private val bloom = BloomFilter.create(inBloom.size.toLong, 0.05)
+  inBloom.foreach(bloom.putLong)
+  private val cms = CountMinSketch.create(0.2, 0.9, 11)
+  keys.zipWithIndex.foreach { case (k, i) => cms.add(java.lang.Long.valueOf(k), i + 1L) }
+
+  private val rowSchema = StructType(Seq(
+    StructField("id", IntegerType), StructField("t", StringType), StructField("u", StringType),
+    StructField("ra", DoubleType), StructField("dec", DoubleType), StructField("key", LongType)))
+  private val nullRow = 99
+  private val rowInput: Seq[Row] = texts.indices.map { i =>
+    Row(i, texts(i), texts((i + 1) % texts.size), rnd.nextDouble() * 360.0,
+      rnd.nextDouble() * 180.0 - 90.0, keys(i % keys.size))
+  } :+ Row(nullRow, null, null, null, null, null)
+
+  /** (kernel name, kernel column, reference on the input row) for the
+    * text, hash, HEALPix and sketch kernels; `raT` is the type ra/dec
+    * are given as and `keyT` the key's. The reference reads ra/dec and
+    * the key after the same cast, so DECIMAL and INT inputs are
+    * compared at the values the kernel sees. */
+  private def rowKernels(raT: DataType, keyT: DataType): Seq[(String, Column, Row => Any)] = {
+    val (sh, nHash, band, nb) = (5, 8, 4, 16)
+    val (nside, radius) = (64, 0.01)
+    def txt(r: Row, c: String): UTF8String = UTF8String.fromString(r.getAs[String](c))
+    def ang(r: Row, c: String): Double = r.getAs[Number](c).doubleValue
+    def key(r: Row): Long = r.getAs[Number]("key").longValue
+    val (t, u) = (Literal(""), Literal(""))
+    val text: Seq[(Expression, Column)] = Seq(
+      MinHashBands(t, sh, nHash, band) -> minHashBands(col("t"), sh, nHash, band),
+      MinHashBandsPoly(t, sh, nHash, band) -> minHashBandsPoly(col("t"), sh, nHash, band),
+      ShingleJaccard(t, u, sh) -> shingleJaccard(col("t"), col("u"), sh),
+      SimHash64(t) -> simHash64(col("t")),
+      TokenBuckets(t, nb) -> tokenBuckets(col("t"), nb),
+      HashedTf(t, nb) -> hashedTf(col("t"), nb),
+      CharEntropy(t) -> charEntropy(col("t")),
+      CdcChunks(t, 3, 4) -> cdcChunks(col("t"), 3, 4))
+    /** the kernel called directly on the driver, as a Scala value */
+    def direct(e: Expression, r: Row): Any = CatalystTypeConverters.convertToScala(e match {
+      case k: MinHashBands => k.kernel(txt(r, "t"))
+      case k: MinHashBandsPoly => k.kernel(txt(r, "t"))
+      case k: ShingleJaccard => k.kernel(txt(r, "t"), txt(r, "u"))
+      case k: SimHash64 => k.kernel(txt(r, "t"))
+      case k: TokenBuckets => k.kernel(txt(r, "t"))
+      case k: HashedTf => k.kernel(txt(r, "t"))
+      case k: CharEntropy => k.kernel(txt(r, "t"))
+      case k: CdcChunks => k.kernel(txt(r, "t"))
+    }, e.dataType)
+    val (ra, dec, k) = (col("ra").cast(raT), col("dec").cast(raT), col("key").cast(keyT))
+    text.map { case (e, c) => (e.nodeName, c, (r: Row) => direct(e, r)) } ++ Seq(
+      ("HealpixCell", healpixCell(ra, dec, nside),
+        (r: Row) => Healpix.ang2pixNest(nside, ang(r, "ra"), ang(r, "dec"))),
+      ("HealpixCoverDisk", healpixCoverDisk(ra, dec, nside, radius), (r: Row) =>
+        Healpix.coverDisk(nside, Healpix.ang2pixNest(nside, ang(r, "ra"), ang(r, "dec")), radius).toSeq),
+      ("BloomMightContainLong", bloomMightContain(k, bloom), (r: Row) => bloom.mightContainLong(key(r))),
+      ("CmsEstimateLong", cmsEstimate(k, cms),
+        (r: Row) => cms.estimateCount(java.lang.Long.valueOf(key(r)))))
+  }
+
+  for ((mode, conf) <- modes) {
+    test(s"$mode: each text, hash, HEALPix and sketch kernel == its reference; a NULL argument gives NULL") {
+      inMode(conf) {
+        val in = spark.createDataFrame(rowInput.asJava, rowSchema).repartition(1)
+        for ((raT, keyT) <- Seq(DoubleType -> LongType, IntegerType -> IntegerType,
+            LongType -> LongType, DecimalType(12, 6) -> IntegerType);
+            (name, kernel, ref) <- rowKernels(raT, keyT)) {
+          // the kernel's inputs as it reads them, beside its result
+          val q = in.select(col("id"), col("t"), col("u"), col("ra").cast(raT).as("ra"),
+            col("dec").cast(raT).as("dec"), col("key").cast(keyT).as("key"), kernel.as("k"))
+          val codegen = q.queryExecution.executedPlan.find(_.isInstanceOf[WholeStageCodegenExec])
+          assert(codegen.isDefined == (mode == "whole-stage codegen"), s"$name: plan mode")
+          val got = q.collect()
+          assert(got.length == rowInput.length)
+          got.foreach { r =>
+            val k = r.get(r.fieldIndex("k"))
+            if (r.getInt(0) == nullRow) assert(k == null, s"$name[$raT, $keyT]: NULL row gave $k")
+            else {
+              val want = ref(r)
+              assert(same(k, want), s"$name[$raT, $keyT] id=${r.getInt(0)} kernel=$k reference=$want")
+            }
+          }
+        }
+      }
+    }
+  }
+
+  test("text, HEALPix and sketch kernels reject other argument types at analysis") {
+    val d = data()
+    Seq(
+      () => d.select(simHash64(col("id"))),
+      () => d.select(shingleJaccard(lit("a"), col("v"), 5)),
+      () => d.select(minHashBands(col("cell"), 5, 8, 4)),
+      () => d.select(minHashBandsPoly(lit(1.5), 5, 8, 4)),
+      () => d.select(tokenBuckets(col("v"), 16)),
+      () => d.select(hashedTf(lit(true), 16)),
+      () => d.select(charEntropy(col("id"))),
+      () => d.select(cdcChunks(col("codes"), 3, 4)),
+      () => d.select(healpixCell(lit("10"), lit(20.0), 64)),
+      () => d.select(healpixCoverDisk(lit(10.0), col("v"), 64, 0.01)),
+      () => d.select(bloomMightContain(lit(1.5), BloomFilter.create(10))),
+      () => d.select(cmsEstimate(lit("k"), CountMinSketch.create(0.1, 0.9, 1)))
+    ).foreach { q =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](q())
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
     }
   }
 

@@ -2,11 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source tripwires, in the style of HarnessSpec, that keep two
+/** Source tripwires, in the style of HarnessSpec, that keep three
   * collapsed families collapsed: the "first k rows per key" window has
-  * one owner, [[graft.operators.GroupOps.topKPerGroup]], and the
-  * neighbour-cell explode of the cell-bucketed joins lives in Spatial.
-  * Both scan comment-stripped code ([[ReachSpec.code]]). */
+  * one owner, [[graft.operators.GroupOps.topKPerGroup]]; the
+  * neighbour-cell explode of the cell-bucketed joins lives in Spatial;
+  * and every Catalyst kernel sits on the one contract,
+  * [[graft.functions.Expressions.Kernel]]. They scan comment-stripped
+  * code ([[ReachSpec.code]]). */
 class CollapsedFamiliesSpec extends AnyFunSuite {
 
   private def sources(f: java.io.File): Seq[java.io.File] =
@@ -57,5 +59,27 @@ class CollapsedFamiliesSpec extends AnyFunSuite {
       case (file, src) if explode3.findFirstIn(src).nonEmpty => file -> explode3.findAllIn(src).size
     }
     assert(hits == Seq("Spatial.scala" -> 1), s"neighbour explodes (use Spatial.withNeighborCells): $hits")
+  }
+
+  test("every Catalyst kernel is on the one contract, whose base alone writes codegen Java") {
+    val main = code("src/main/scala")
+    val refs = main.map { case (file, src) => file -> """addReferenceObj\(""".r.findAllIn(src).size }
+      .filter(_._2 > 0)
+    assert(refs == Seq("Expressions.scala" -> 1),
+      s"addReferenceObj( sites (emit kernel calls through Kernel.callKernel): $refs")
+    val expressions = main.collect { case ("Expressions.scala", src) => src }.head
+    val kernels = """case class (\w+)\b[^{]*?\bextends\s+(?:Unary|Binary)Expression\b([^{]*)\{""".r
+      .findAllMatchIn(expressions).map(m => m.group(1) -> m.group(2)).toSeq
+    val off = kernels.collect { case (name, mixins) if !mixins.matches("""(?s).*\bwith\s+Kernel\b.*""") => name }
+    assert(kernels.nonEmpty && off.isEmpty, s"kernels off the Kernel contract: $off")
+    // code() keeps a string's interpolations, so `ev.value` outside the
+    // base is a kernel writing its own Java
+    val base = """(?s)sealed trait Kernel\b.*?\n  \}\n""".r.findFirstMatchIn(expressions)
+    val writes = main.flatMap { case (file, src) =>
+      """\bev\.value\b""".r.findAllMatchIn(src)
+        .filterNot(m => file == "Expressions.scala" && base.exists(b => b.start <= m.start && m.end <= b.end))
+        .map(m => file -> src.take(m.start).count(_ == '\n'))
+    }
+    assert(writes.isEmpty, s"codegen Java outside the Kernel base: $writes")
   }
 }

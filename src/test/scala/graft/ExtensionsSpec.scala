@@ -72,4 +72,25 @@ class ExtensionsSpec extends AnyFunSuite {
       graft.functions.Healpix.ang2pixNest(64, 10.0, -45.0), 0.01).toSet
     assert(got == expected && got.nonEmpty)
   }
+
+  test("graft_healpix and graft_healpix_cover read an unsuffixed DECIMAL literal as DOUBLE") {
+    val row = spark.sql(
+      """SELECT graft_healpix(10.5, 20.1, 64) = graft_healpix(10.5D, 20.1D, 64) AS cell,
+         graft_healpix_cover(10.5, -45.0, 64, 0.01) = graft_healpix_cover(10.5D, -45.0D, 64, 0.01D)
+           AS cover,
+         graft_healpix(10.5, 20.1, 64) AS pix""").head()
+    assert(row.getBoolean(0) && row.getBoolean(1))
+    assert(row.getLong(2) == graft.functions.Healpix.ang2pixNest(64, 10.5, 20.1))
+  }
+
+  test("text kernels given a number fail analysis with DATATYPE_MISMATCH, ANSI on or off") {
+    val calls = Seq("graft_simhash(42)", "graft_shingle_jaccard(1, 2, 5)",
+      "graft_minhash_bands(42, 5, 8, 4)", "graft_minhash_bands_poly(42, 5, 8, 4)")
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try for (on <- Seq("true", "false"); call <- calls) {
+      spark.conf.set("spark.sql.ansi.enabled", on)
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $call AS c"))
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), s"ansi=$on $call: ${e.getMessage}")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
 }
