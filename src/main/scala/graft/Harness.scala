@@ -12,6 +12,7 @@ import org.apache.spark.sql.SparkSession
 /** The run machinery every main shares — Bench and Verify (the two
   * `SparkEntry` consumers) and the dev tools under `graft.tools`:
   *   - [[session]]: the one SparkSession builder;
+  *   - [[quietLogs]]: its log levels, shared with the test session;
   *   - [[reclaim]]: free what a run left in executor storage;
   *   - [[timed]]: snapshot, time, reclaim — one measured run;
   *   - [[StageLog]]: per-stage task counts and times and the job count,
@@ -36,6 +37,13 @@ object Harness {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    quietLogs(spark)
+    spark
+  }
+
+  /** WARN for `spark`'s context, ERROR for two loggers whose warnings
+    * are expected by design. */
+  def quietLogs(spark: SparkSession): Unit = {
     spark.sparkContext.setLogLevel("WARN")
     // reclaim and LoopFrames unpersist checkpointed loop RDDs on purpose;
     // each logs a "lineage has been truncated" WARN — hundreds per full
@@ -50,7 +58,6 @@ object Harness {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    spark
   }
 
   /** Unpersist every persistent RDD not in `before` — reclaims the

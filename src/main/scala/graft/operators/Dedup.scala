@@ -609,9 +609,28 @@ object Dedup {
     * explode after an expensive projection). */
   def dupSpanCoverage(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 8): DataFrame = {
-    // persist, not localCheckpoint: (id, tokens, n_tokens) is strictly
-    // LARGER than the input corpus — recomputable spill-to-disk keeps
-    // executor loss survivable at scale (the PMI recipe, Text.scala).
+    val (base, covered) = repeatedNgramCover(df, idCol, textCol, n)
+    base.select(col(idCol), col("n_tokens"))
+      .join(covered.groupBy(idCol).agg(count(lit(1)).as("_ncov")), Seq(idCol), "left")
+      .select(col(idCol), col("n_tokens"),
+        fraction(coalesce(col("_ncov"), lit(0L)), col("n_tokens")).as("dup_span_fraction"))
+  }
+
+  // ------------------------------------ repeated-unit core of the rewrites
+
+  /** The values of `units`' column `unit` that occur more than once. */
+  private def repeated(units: DataFrame, unit: String): DataFrame =
+    units.groupBy(unit).agg(count(lit(1)).as("_cnt"))
+      .where(col("_cnt") > 1).select(unit)
+
+  /** The token base (id, _toks, n_tokens) and its covered positions
+    * (id, _p): the distinct positions inside any word `n`-gram that
+    * occurs more than once corpus-wide. The base persists, not
+    * localCheckpoints: it is strictly LARGER than the input corpus, and
+    * recomputable spill-to-disk keeps executor loss survivable at scale
+    * (the PMI recipe, Text.scala). */
+  private def repeatedNgramCover(df: DataFrame, idCol: String, textCol: String,
+                                 n: Int): (DataFrame, DataFrame) = {
     val base = graft.core.Tables.spread(
         df.select(col(idCol), Text.tokens(col(textCol)).as("_toks"))
           .withColumn("n_tokens", size(col("_toks")).cast(LongType)),
@@ -621,19 +640,36 @@ object Dedup {
         when(col("n_tokens") >= n,
           expr(s"transform(sequence(0, int(n_tokens) - $n), i -> concat_ws(' ', slice(_toks, i + 1, $n)))"))
           .otherwise(array().cast(ArrayType(StringType)))).as(Seq("_pos", "_gram")))
-    val dup = grams.groupBy("_gram").agg(count(lit(1)).as("_cnt"))
-      .where(col("_cnt") > 1).select("_gram")
-    val covered = grams.join(dup, Seq("_gram"))
+    val covered = grams.join(repeated(grams, "_gram"), Seq("_gram"))
       .select(col(idCol), explode(sequence(col("_pos"), col("_pos") + lit(n - 1))).as("_p"))
       .distinct()
-      .groupBy(idCol).agg(count(lit(1)).as("_ncov"))
-    base.select(col(idCol), col("n_tokens"))
-      .join(covered, Seq(idCol), "left")
-      .select(col(idCol), col("n_tokens"),
-        when(col("n_tokens") === 0, lit(0.0)).otherwise(
-          floor(coalesce(col("_ncov"), lit(0L)).cast(DoubleType) * 1e6
-            / col("n_tokens") + 0.5) / 1e6).as("dup_span_fraction"))
+    (base, covered)
   }
+
+  /** (id, clean_text, `total`, n_removed, removed_fraction): each
+    * document of `counts` (id, `total` units) rebuilt from its `kept`
+    * (id, `pos`, `unit`) rows in position order; "" if none is kept. */
+  private def orderedRebuild(counts: DataFrame, kept: DataFrame, idCol: String,
+                             pos: String, unit: String, total: String): DataFrame = {
+    val rebuilt = kept.groupBy(col(idCol))
+      .agg(
+        array_join(transform(
+          array_sort(collect_list(struct(col(pos), col(unit)))),
+          s => s.getField(unit)), " ").as("clean_text"),
+        count(lit(1)).as("_nkept"))
+    val removed = col(total) - coalesce(col("_nkept"), lit(0L))
+    counts.join(rebuilt, Seq(idCol), "left")
+      .select(col(idCol),
+        coalesce(col("clean_text"), lit("")).as("clean_text"),
+        col(total),
+        removed.as("n_removed"),
+        fraction(removed, col(total)).as("removed_fraction"))
+  }
+
+  /** `num` / `den` rounded half-up to 1e-6, 0 when `den` is 0. */
+  private def fraction(num: Column, den: Column): Column =
+    when(den === 0, lit(0.0)).otherwise(
+      floor(num.cast(DoubleType) * 1e6 / den + 0.5) / 1e6)
 
   /** CCNet/Gopher-style LINE-level dedup as a REWRITE: drop every
     * segment (line) whose exact text occurs more than `maxCount`
@@ -666,22 +702,9 @@ object Dedup {
     val segs = base.select(col(idCol), posexplode(col("_segs")).as(Seq("_pos", "_seg")))
     val counts = segs.groupBy("_seg").agg(count(lit(1)).as("_cnt"))
     val kept = segs.join(counts, Seq("_seg")).where(col("_cnt") <= maxCount)
-    val rebuilt = kept.groupBy(col(idCol))
-      .agg(
-        array_join(transform(
-          array_sort(collect_list(struct(col("_pos"), col("_seg")))),
-          s => s.getField("_seg")), " ").as("clean_text"),
-        count(lit(1)).as("_nkept"))
-    base.select(col(idCol), size(col("_segs")).cast(LongType).as("n_segments"))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("clean_text"), lit("")).as("clean_text"),
-        col("n_segments"),
-        (col("n_segments") - coalesce(col("_nkept"), lit(0L))).as("n_removed"),
-        when(col("n_segments") === 0, lit(0.0)).otherwise(
-          floor((col("n_segments") - coalesce(col("_nkept"), lit(0L)))
-            .cast(DoubleType) * 1e6 / col("n_segments") + 0.5) / 1e6)
-          .as("removed_fraction"))
+    orderedRebuild(
+      base.select(col(idCol), size(col("_segs")).cast(LongType).as("n_segments")),
+      kept, idCol, "_pos", "_seg", "n_segments")
   }
 
   /** Exact-substring dedup as a REWRITE (the MassiveText-style pass:
@@ -707,40 +730,10 @@ object Dedup {
     * all-pairs, no driver state. */
   def substringDedup(df: DataFrame, idCol: String, textCol: String,
                      n: Int = 8): DataFrame = {
-    // persist, not localCheckpoint: (id, tokens) is corpus-sized,
-    // recomputable — the dupSpanCoverage rule
-    val base = graft.core.Tables.spread(
-        df.select(col(idCol), Text.tokens(col(textCol)).as("_toks"))
-          .withColumn("n_tokens", size(col("_toks")).cast(LongType)),
-        col(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val grams = base.select(col(idCol), posexplode(
-        when(col("n_tokens") >= n,
-          expr(s"transform(sequence(0, int(n_tokens) - $n), i -> concat_ws(' ', slice(_toks, i + 1, $n)))"))
-          .otherwise(array().cast(ArrayType(StringType)))).as(Seq("_pos", "_gram")))
-    val dup = grams.groupBy("_gram").agg(count(lit(1)).as("_cnt"))
-      .where(col("_cnt") > 1).select("_gram")
-    val covered = grams.join(dup, Seq("_gram"))
-      .select(col(idCol), explode(sequence(col("_pos"), col("_pos") + lit(n - 1))).as("_p"))
-      .distinct()
+    val (base, covered) = repeatedNgramCover(df, idCol, textCol, n)
     val positions = base.select(col(idCol), posexplode(col("_toks")).as(Seq("_p", "_tok")))
     val kept = positions.join(covered, Seq(idCol, "_p"), "left_anti")
-    val rebuilt = kept.groupBy(col(idCol))
-      .agg(
-        array_join(transform(
-          array_sort(collect_list(struct(col("_p"), col("_tok")))),
-          s => s.getField("_tok")), " ").as("clean_text"),
-        count(lit(1)).as("_nkept"))
-    base.select(col(idCol), col("n_tokens"))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("clean_text"), lit("")).as("clean_text"),
-        col("n_tokens"),
-        (col("n_tokens") - coalesce(col("_nkept"), lit(0L))).as("n_removed"),
-        when(col("n_tokens") === 0, lit(0.0)).otherwise(
-          floor((col("n_tokens") - coalesce(col("_nkept"), lit(0L)))
-            .cast(DoubleType) * 1e6 / col("n_tokens") + 0.5) / 1e6)
-          .as("removed_fraction"))
+    orderedRebuild(base.select(col(idCol), col("n_tokens")), kept, idCol, "_p", "_tok", "n_tokens")
   }
 
   /** Content-defined chunking (the FastCDC/LBFS idea applied to
@@ -791,7 +784,7 @@ object Dedup {
   def cdcDedup(df: DataFrame, idCol: String, textCol: String,
                w: Int = 16, divisor: Int = 64): DataFrame = {
     // persist, not localCheckpoint: (id, chunks) is corpus-sized,
-    // recomputable — the dupSpanCoverage rule
+    // recomputable — the repeatedNgramCover rule
     val base = graft.core.Tables.spread(
         df.select(col(idCol), col(textCol)), col(idCol))
       .select(col(idCol), length(lower(col(textCol))).cast(LongType).as("n_bytes"),
@@ -799,18 +792,14 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ch = base.select(col(idCol), explode(col("_chunks")).as("_c"))
       .select(col(idCol), col("_c.clen").as("clen"), col("_c.ctext").as("ctext"))
-    val dup = ch.groupBy("ctext").agg(count(lit(1)).as("_cnt"))
-      .where(col("_cnt") > 1).select("ctext")
-    val dupBytes = ch.join(dup, Seq("ctext"))
+    val dupBytes = ch.join(repeated(ch, "ctext"), Seq("ctext"))
       .groupBy(col(idCol)).agg(sum(col("clen")).as("_dup"))
     base.select(col(idCol), size(col("_chunks")).cast(LongType).as("n_chunks"),
         col("n_bytes"))
       .join(dupBytes, Seq(idCol), "left")
       .select(col(idCol), col("n_chunks"), col("n_bytes"),
         coalesce(col("_dup"), lit(0L)).as("dup_bytes"),
-        when(col("n_bytes") === 0, lit(0.0)).otherwise(
-          floor(coalesce(col("_dup"), lit(0L)).cast(DoubleType) * 1e6
-            / col("n_bytes") + 0.5) / 1e6).as("dedup_ratio"))
+        fraction(coalesce(col("_dup"), lit(0L)), col("n_bytes")).as("dedup_ratio"))
   }
 
   /** 64-bit SimHash per document (md5-derived token hashes, sign-of-

@@ -250,14 +250,29 @@ object Text {
                        stratumCol: String,
                        ratesPerMille: Seq[(String, Int)]): org.apache.spark.sql.DataFrame = {
     val bucket = sampleBucket(col(idCol))
-    val rate = ratesPerMille.tail.foldLeft(
-        when(col(stratumCol) === ratesPerMille.head._1, lit(ratesPerMille.head._2))) {
-      case (acc, (s, r)) => acc.when(col(stratumCol) === s, lit(r))
-    }.otherwise(lit(0))
+    val rate = stratumWeight(col(stratumCol), ratesPerMille, 0)
     df.withColumn("sample_bucket", bucket).where(col("sample_bucket") < rate)
   }
 
   // ------------------------------------------------ domain mixing
+
+  /** `weights`' value of each stratum, `default` for any other; the
+    * default's type types the literal (INT `0`, DOUBLE `0.0`). */
+  private def stratumWeight[W](stratum: Column, weights: Seq[(String, W)], default: W): Column =
+    weights.tail.foldLeft(when(stratum === weights.head._1, lit(weights.head._2))) {
+      case (acc, (s, w)) => acc.when(stratum === s, lit(w))
+    }.otherwise(lit(default))
+
+  /** Keep each stratum's first `_k` rows (`quota`, broadcast) in the
+    * deterministic LCG-bucket-then-id order, ranked as `mix_rank`. */
+  private def quotaCut(df: org.apache.spark.sql.DataFrame, idCol: String, stratumCol: String,
+                       quota: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df.withColumn("mix_rank", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col(stratumCol))
+          .orderBy(sampleBucket(col(idCol)), col(idCol))))
+      .join(broadcast(quota), Seq(stratumCol))
+      .where(col("mix_rank") <= col("_k"))
+      .drop("_k")
 
   /** Balanced domain mixing: downsample every stratum to integer
     * target weights `w` — the "data mixing" step that turns a skewed
@@ -276,26 +291,15 @@ object Text {
   def balancedMix(df: org.apache.spark.sql.DataFrame, idCol: String,
                   stratumCol: String,
                   weights: Seq[(String, Int)]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = weights.tail.foldLeft(
-        when(col(stratumCol) === weights.head._1, lit(weights.head._2))) {
-      case (acc, (s, wt)) => acc.when(col(stratumCol) === s, lit(wt))
-    }.otherwise(lit(0))
     val counts = df.groupBy(col(stratumCol)).agg(count(lit(1)).as("_n"))
-      .withColumn("_w", w)
+      .withColumn("_w", stratumWeight(col(stratumCol), weights, 0))
       .where(col("_w") > 0)
     // C = min(n_s / w_s): one tiny aggregate; k_s rides back on the
     // broadcast. The same IEEE division + floor runs in the oracle.
     val c = counts.agg(min(col("_n") / col("_w")).as("_c"))
     val quota = counts.crossJoin(broadcast(c))
       .select(col(stratumCol), floor(col("_c") * col("_w")).as("_k"))
-    val rn = row_number().over(
-      Window.partitionBy(col(stratumCol))
-        .orderBy(sampleBucket(col(idCol)), col(idCol)))
-    df.withColumn("mix_rank", rn)
-      .join(broadcast(quota), Seq(stratumCol))
-      .where(col("mix_rank") <= col("_k"))
-      .drop("_k")
+    quotaCut(df, idCol, stratumCol, quota)
   }
 
   /** Epoch-based UP-sampling mix — the "repeat high-quality sources
@@ -312,10 +316,7 @@ object Text {
   def epochMix(df: org.apache.spark.sql.DataFrame, idCol: String,
                stratumCol: String,
                weights: Seq[(String, Double)]): org.apache.spark.sql.DataFrame = {
-    val w = weights.tail.foldLeft(
-        when(col(stratumCol) === weights.head._1, lit(weights.head._2))) {
-      case (acc, (s, wt)) => acc.when(col(stratumCol) === s, lit(wt))
-    }.otherwise(lit(0.0))
+    val w = stratumWeight(col(stratumCol), weights, 0.0)
     val copies = (floor(w).cast(IntegerType) +
       when(sampleBucket(col(idCol)) < round((w - floor(w)) * 1000).cast(IntegerType), 1)
         .otherwise(0)).as("_copies")
@@ -347,7 +348,6 @@ object Text {
   def temperatureMix(df: org.apache.spark.sql.DataFrame, idCol: String,
                      stratumCol: String, targetFraction: Double,
                      tau: Double = 0.5): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val wOf = (n: org.apache.spark.sql.Column) =>
       if (tau == 0.5) sqrt(n) else pow(n, tau)
     val counts = df.groupBy(col(stratumCol)).agg(count(lit(1)).as("_n"))
@@ -361,13 +361,7 @@ object Text {
       .select(col(stratumCol),
         floor(col("_tot").cast(DoubleType) * targetFraction * wOf(col("_n"))
           / col("_z")).as("_k"))
-    val rn = row_number().over(
-      Window.partitionBy(col(stratumCol))
-        .orderBy(sampleBucket(col(idCol)), col(idCol)))
-    df.withColumn("mix_rank", rn)
-      .join(broadcast(quota), Seq(stratumCol))
-      .where(col("mix_rank") <= col("_k"))
-      .drop("_k")
+    quotaCut(df, idCol, stratumCol, quota)
   }
 
   // ------------------------------------------------ sequence packing

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.core.Det
 
@@ -145,41 +146,55 @@ object Streams {
     * the TTL has their running total dropped and restarts at 0. */
   def runningTotalAlerts(events: DataFrame, step: Double = 100.0,
                          stateTtlMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
     val typed = events.select(col("user_id"), col("ts"), col("value"))
       .as[(Long, java.sql.Timestamp, Double)]
-    def fn(user: Long, rows: Iterator[(Long, java.sql.Timestamp, Double)],
-           state: GroupState[Double]): Iterator[(Long, Double, Long)] = {
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      var total = state.getOption.getOrElse(0.0)
-      val alerts = scala.collection.mutable.ArrayBuffer[(Long, Double, Long)]()
-      // deterministic order within the group
-      rows.toSeq.sortBy(r => (r._2.getTime, r._3)).foreach { case (_, _, v) =>
-        val before = (total / step).toLong
-        total += v
+    keyedFold(typed, stateTtlMs)(_._1, r => (r._2.getTime, r._3), Some(0.0)) {
+      case (user, s, (_, _, v)) =>
+        val total = s.get + v
         val after = (total / step).toLong
-        if (after > before) alerts += ((user, total, after))
-      }
-      state.update(total)
-      stateTtlMs.foreach(state.setTimeoutDuration)
-      alerts.iterator
-    }
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtlMs))(fn)
-      .toDF("user_id", "running_total", "milestone")
+        (Some(total), if (after > (s.get / step).toLong) List((user, total, after)) else Nil)
+    }.toDF("user_id", "running_total", "milestone")
   }
 
-  /** Shared TTL-timeout selector for the stateful ops: a TTL arms
-    * ProcessingTimeTimeout (each invocation re-arms after updating
-    * state; an expiry tick removes the key's state), TTL off keeps
-    * the exact-batch-parity NoTimeout mode. */
-  private def ttlTimeout(stateTtlMs: Option[Long])
-      : org.apache.spark.sql.streaming.GroupStateTimeout =
-    if (stateTtlMs.isDefined)
-      org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout
-    else org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout
+  /** The one keyed stateful fold behind every `flatMapGroupsWithState`
+    * operator here. Per key and call: the rows sort by `order` (one
+    * deterministic order whatever the arrival order, so a static run
+    * equals the batch twin), the state is read (`init` for a key that
+    * has none), `step` folds each row into the next state and the rows
+    * it emits, and the last state is stored back; a key that ends the
+    * call with no state stores none. `stateTtlMs` arms a
+    * ProcessingTimeTimeout that every call re-arms; the expiry call of
+    * an idle key drops its state and emits nothing. TTL off keeps
+    * NoTimeout, the exact-batch-parity mode. Output mode Append. */
+  private def keyedFold[R, K: Encoder, S: Encoder, O: Encoder, T: Ordering](
+      rows: Dataset[R], stateTtlMs: Option[Long])(
+      key: R => K, order: R => T, init: Option[S])(
+      step: (K, Option[S], R) => (Option[S], Seq[O])): Dataset[O] = {
+    def fn(k: K, group: Iterator[R], state: GroupState[S]): Iterator[O] =
+      if (state.hasTimedOut) { state.remove(); Iterator.empty }
+      else {
+        var s = state.getOption.orElse(init)
+        val out = scala.collection.mutable.ArrayBuffer[O]()
+        group.toSeq.sortBy(order).foreach { r =>
+          val (next, emit) = step(k, s, r)
+          s = next
+          out ++= emit
+        }
+        s.foreach(state.update)
+        stateTtlMs.foreach(state.setTimeoutDuration)
+        out.iterator
+      }
+    val timeout =
+      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
+      else GroupStateTimeout.NoTimeout
+    rows.groupByKey(key).flatMapGroupsWithState(OutputMode.Append, timeout)(fn)
+  }
+
+  /** Microseconds since the epoch of a timestamp (`unix_micros`). */
+  private def us(t: java.sql.Timestamp): Long =
+    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
   /** Stateful streaming near-dedup: documents arrive as a stream and
     * every doc that near-duplicates ANY previously-seen doc is flagged
@@ -212,7 +227,6 @@ object Streams {
                    shingleSize: Int = 5, numHashes: Int = 8,
                    bandSize: Int = 4,
                    stateTtlMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val spark = docs.sparkSession
     import spark.implicits._
     val keyed = docs.select(col("doc_id"), col("text"),
@@ -230,34 +244,23 @@ object Streams {
     // ShingleJaccard.kernel's (same set sizes, same double division),
     // so batch-mode output — and the shared dd_minhash_lsh_poly
     // DuckDB oracle — are unchanged (StreamsSpec pins sig == kernel
-    // on real corpus texts).
-    def fn(bucket: (Int, String), rows: Iterator[(Int, String, Long, String)],
-           state: GroupState[List[(Long, Array[Long])]]): Iterator[(Long, Long, Double)] = {
-      // TTL expiry: this bucket's seen-list is the dedup HORIZON —
-      // dropping it on inactivity is exactly where a crawl pipeline
-      // wants its near-dup window bounded (docs older than the TTL no
-      // longer suppress new arrivals)
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      var seen = state.getOption.getOrElse(Nil)
-      val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-      rows.toSeq.sortBy(_._3).foreach { case (_, _, id, text) =>
-        if (!seen.exists(_._1 == id)) {
-          val sig = graft.functions.Expressions.shingleSig(text, shingleSize)
-          seen.foreach { case (oid, osig) =>
-            val j = graft.functions.Expressions.sigJaccard(sig, osig)
-            if (j >= threshold)
-              out += ((math.min(id, oid), math.max(id, oid), j))
-          }
-          seen = (id, sig) :: seen
+    // on real corpus texts). TTL expiry drops a bucket's seen-list:
+    // the dedup HORIZON, where a crawl pipeline wants its near-dup
+    // window bounded (docs older than the TTL no longer suppress new
+    // arrivals).
+    keyedFold(keyed, stateTtlMs)(r => (r._1, r._2), _._3,
+        Some(List.empty[(Long, Array[Long])])) { case (_, s, (_, _, id, text)) =>
+      val seen = s.get
+      if (seen.exists(_._1 == id)) (s, Nil)
+      else {
+        val sig = graft.functions.Expressions.shingleSig(text, shingleSize)
+        val pairs = seen.flatMap { case (oid, osig) =>
+          val j = graft.functions.Expressions.sigJaccard(sig, osig)
+          if (j >= threshold) Some((math.min(id, oid), math.max(id, oid), j)) else None
         }
+        (Some((id, sig) :: seen), pairs)
       }
-      state.update(seen)
-      stateTtlMs.foreach(state.setTimeoutDuration)
-      out.iterator
-    }
-    keyed.groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtlMs))(fn)
-      .toDF("a", "b", "jaccard")
+    }.toDF("a", "b", "jaccard")
   }
 
   /** X-ST13: stateful streaming exact-dedup ingest gate — the
@@ -286,7 +289,6 @@ object Streams {
     * EARLIER micro-batch still flags (cross-batch state). */
   def exactIngestGate(docs: DataFrame,
                       stateTtlMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val spark = docs.sparkSession
     import spark.implicits._
     val keyed = docs
@@ -294,26 +296,14 @@ object Streams {
         md5(lower(col("text"))).as("_ck"))
       .select(col("doc_id"), col("_ck"), substring(col("_ck"), 1, 3).as("_bucket"))
       .as[(Long, String, String)]
-    def fn(bucket: String, rows: Iterator[(Long, String, String)],
-           state: GroupState[Set[String]]): Iterator[(Long, String, Boolean)] = {
-      // TTL expiry: the bucket's seen-key set is the dedup horizon —
-      // an idle slice of the key space restarts cold (same contract
-      // as the near-dup horizon above)
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      var seen = state.getOption.getOrElse(Set.empty[String])
-      val out = scala.collection.mutable.ArrayBuffer[(Long, String, Boolean)]()
-      rows.toSeq.sortBy(_._1).foreach { case (id, ck, _) =>
-        val dup = seen.contains(ck)
-        out += ((id, ck, dup))
-        if (!dup) seen += ck
-      }
-      state.update(seen)
-      stateTtlMs.foreach(state.setTimeoutDuration)
-      out.iterator
-    }
-    keyed.groupByKey(_._3)
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtlMs))(fn)
-      .toDF("doc_id", "content_key", "is_dup")
+    // TTL expiry drops the bucket's seen-key set, the dedup horizon:
+    // an idle slice of the key space restarts cold (the near-dup
+    // horizon's contract)
+    keyedFold(keyed, stateTtlMs)(_._3, _._1, Some(Set.empty[String])) {
+      case (_, s, (id, ck, _)) =>
+        val dup = s.get.contains(ck)
+        (if (dup) s else s.map(_ + ck), List((id, ck, dup)))
+    }.toDF("doc_id", "content_key", "is_dup")
   }
 
   /** X-ST7: stateful streaming CEP — the strict view→click→purchase
@@ -330,42 +320,27 @@ object Streams {
     * StatefulStreamsSpec asserts multi-micro-batch == batch. */
   def streamCepMatches(events: DataFrame,
                        stateTtlMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
     val typed = events
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
       .as[(Long, Long, java.sql.Timestamp, String)]
-    // state: the user's two most-recent events, newest first
-    def fn(user: Long, rows: Iterator[(Long, Long, java.sql.Timestamp, String)],
-           state: GroupState[List[(Long, Long, String)]])
-        : Iterator[(Long, Long, Long, Long, java.sql.Timestamp, Long)] = {
-      // TTL expiry: an idle user's 2-event prefix is dropped — a
-      // pattern must then restart from scratch (the recency bound a
-      // long-running CEP deployment needs)
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      var last = state.getOption.getOrElse(Nil)
-      val out = scala.collection.mutable
-        .ArrayBuffer[(Long, Long, Long, Long, java.sql.Timestamp, Long)]()
-      rows.toSeq.sortBy(r => (us(r._3), r._2)).foreach { case (_, id, ts, typ) =>
-        last match {
-          case (id1, _, "click") :: (id2, us2, "view") :: _ if typ == "purchase" =>
-            val viewTs = new java.sql.Timestamp(math.floorDiv(us2, 1000L))
-            viewTs.setNanos((math.floorMod(us2, 1000000L) * 1000L).toInt)
-            out += ((user, id2, id1, id, viewTs, us(ts) - us2))
-          case _ =>
-        }
-        last = ((id, us(ts), typ) :: last).take(2)
+    // state: the user's two most-recent events, newest first. TTL
+    // expiry drops an idle user's 2-event prefix, so a pattern must
+    // restart from scratch (the recency bound a long-running CEP
+    // deployment needs).
+    keyedFold(typed, stateTtlMs)(_._1, r => (us(r._3), r._2),
+        Some(List.empty[(Long, Long, String)])) { case (user, s, (_, id, ts, typ)) =>
+      val last = s.get
+      val matched = last match {
+        case (id1, _, "click") :: (id2, us2, "view") :: _ if typ == "purchase" =>
+          val viewTs = new java.sql.Timestamp(math.floorDiv(us2, 1000L))
+          viewTs.setNanos((math.floorMod(us2, 1000000L) * 1000L).toInt)
+          List((user, id2, id1, id, viewTs, us(ts) - us2))
+        case _ => Nil
       }
-      state.update(last)
-      stateTtlMs.foreach(state.setTimeoutDuration)
-      out.iterator
-    }
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtlMs))(fn)
-      .toDF("user_id", "view_id", "click_id", "purchase_id", "view_ts", "span_us")
+      (Some(((id, us(ts), typ) :: last).take(2)), matched)
+    }.toDF("user_id", "view_id", "click_id", "purchase_id", "view_ts", "span_us")
   }
 
   /** X-ST9: stateful-streaming rolling anomaly (the
@@ -389,11 +364,8 @@ object Streams {
   def anomalyStream(events: DataFrame, window: Int = 8,
                     minHistory: Int = 4, k: Double = 3.0,
                     stateTtlMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
     def q6(x: Double): Long =
       BigDecimal.valueOf(x)
         .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP)
@@ -405,41 +377,25 @@ object Streams {
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .as[(Long, java.sql.Timestamp, Long, Double)]
     // state: trailing observations, newest first: (usec, eventId, value)
-    def fn(user: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Double)],
-           state: GroupState[List[(Long, Long, Double)]])
-        : Iterator[(Long, java.sql.Timestamp, Long, Double, Option[Double], Boolean)] = {
-      if (state.hasTimedOut) { // TTL expiry tick: drop idle key's history
-        state.remove()
-        return Iterator.empty
+    keyedFold(typed, stateTtlMs)(_._1, r => (us(r._2), r._3),
+        Some(List.empty[(Long, Long, Double)])) { case (user, s, (_, ts, id, v)) =>
+      val hist = s.get
+      val n = hist.size
+      var z: Option[Double] = None
+      var flag = false
+      if (n >= minHistory) {
+        val s1 = hist.iterator.map(h => q6(h._3)).sum.toDouble / 1e6
+        val s2 = hist.iterator.map(h => q6(h._3 * h._3)).sum.toDouble / 1e6
+        val nD = n.toDouble
+        val mean = s1 / nD
+        val std = math.sqrt(math.max(0.0, (s2 - s1 * s1 / nD) / (nD - 1.0)))
+        if (std > 0.0) {
+          val zz = round6((v - mean) / std)
+          z = Some(zz); flag = math.abs(zz) > k
+        } else flag = v != mean
       }
-      var hist = state.getOption.getOrElse(Nil)
-      val out = scala.collection.mutable
-        .ArrayBuffer[(Long, java.sql.Timestamp, Long, Double, Option[Double], Boolean)]()
-      rows.toSeq.sortBy(r => (us(r._2), r._3)).foreach { case (_, ts, id, v) =>
-        val n = hist.size
-        var z: Option[Double] = None
-        var flag = false
-        if (n >= minHistory) {
-          val s1 = hist.iterator.map(h => q6(h._3)).sum.toDouble / 1e6
-          val s2 = hist.iterator.map(h => q6(h._3 * h._3)).sum.toDouble / 1e6
-          val nD = n.toDouble
-          val mean = s1 / nD
-          val std = math.sqrt(math.max(0.0, (s2 - s1 * s1 / nD) / (nD - 1.0)))
-          if (std > 0.0) {
-            val zz = round6((v - mean) / std)
-            z = Some(zz); flag = math.abs(zz) > k
-          } else flag = v != mean
-        }
-        out += ((user, ts, id, v, z, flag))
-        hist = ((us(ts), id, v) :: hist).take(window)
-      }
-      state.update(hist)
-      stateTtlMs.foreach(state.setTimeoutDuration)
-      out.iterator
-    }
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtlMs))(fn)
-      .toDF("user_id", "ts", "event_id", "value", "z", "is_anomaly")
+      (Some(((us(ts), id, v) :: hist).take(window)), List((user, ts, id, v, z, flag)))
+    }.toDF("user_id", "ts", "event_id", "value", "z", "is_anomaly")
   }
 
   /** Read the events table as a (bounded) stream: same parquet file,
@@ -568,37 +524,26 @@ object Streams {
     * users' touches — their later purchases become 'direct'. */
   def attributionStream(events: DataFrame, lookbackUs: Long = 86400000000L,
                         stateTtlMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
     val typed = events.select(col("user_id"),
         unix_micros(col("ts")).as("_tsus"), col("event_id"),
         col("event_type"), col("value"))
       .as[(Long, Long, Long, String, Double)]
-    def fn(key: Long, rows: Iterator[(Long, Long, Long, String, Double)],
-           state: GroupState[(Long, String)]): Iterator[(String, Double)] = {
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      var touch = state.getOption
-      val out = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-      // deterministic order within the invocation: (ts, event_id) —
-      // a same-timestamp touch with a smaller id precedes, matching
-      // the batch window's strictly-preceding frame
-      rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, tsUs, _, tpe, v) =>
-        if (tpe == "purchase") {
+    // order (ts, event_id): a same-timestamp touch with a smaller id
+    // precedes, matching the batch window's strictly-preceding frame.
+    // A user with no touch yet has no state.
+    keyedFold(typed, stateTtlMs)(_._1, r => (r._2, r._3), Option.empty[(Long, String)]) {
+      case (_, touch, (_, tsUs, _, tpe, v)) =>
+        if (tpe != "purchase") (Some((tsUs, tpe)), Nil)
+        else {
           val ch = touch match {
             case Some((tts, tch)) if tsUs - tts <= lookbackUs => tch
             case _ => "direct"
           }
-          out += ((ch, v))
-        } else touch = Some((tsUs, tpe))
-      }
-      touch.foreach(state.update)
-      stateTtlMs.foreach(state.setTimeoutDuration)
-      out.iterator
-    }
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtlMs))(fn)
-      .toDF("channel", "value")
+          (touch, List((ch, v)))
+        }
+    }.toDF("channel", "value")
   }
 
   /** Stateful streaming token-budget admission — the streaming twin of
@@ -616,7 +561,6 @@ object Streams {
   def tokenBudgetStream(docs: DataFrame, budgetPerDomain: Long,
                         nShards: Int = 4,
                         stateTtlMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val spark = docs.sparkSession
     import spark.implicits._
     require(budgetPerDomain >= nShards,
@@ -630,24 +574,12 @@ object Streams {
         size(graft.operators.Text.tokens(col("text"))).cast("long").as("n_toks"))
       .withColumn("_shard", pmod(col("_bucket"), lit(nShards.toLong)))
       .as[(String, Long, Long, Long, Long)]
-    def fn(key: (String, Long),
-           rows: Iterator[(String, Long, Long, Long, Long)],
-           state: GroupState[Long]): Iterator[(String, Long, Long)] = {
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      val shardBudget = baseBudget + (if (key._2 < remBudget) 1L else 0L)
-      var spent = state.getOption.getOrElse(0L)
-      val admitted = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
-      // deterministic order within the invocation: (bucket, id)
-      rows.toSeq.sortBy(r => (r._3, r._2)).foreach { case (src, id, _, nt, _) =>
-        spent += nt // every row charges the shard (prefix semantics)
-        if (spent <= shardBudget) admitted += ((src, id, nt))
-      }
-      state.update(spent)
-      stateTtlMs.foreach(state.setTimeoutDuration)
-      admitted.iterator
-    }
-    typed.groupByKey(r => (r._1, r._5))
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtlMs))(fn)
-      .toDF("source", "doc_id", "n_toks")
+    // order (bucket, id); every row charges the shard (prefix semantics)
+    keyedFold(typed, stateTtlMs)(r => (r._1, r._5), r => (r._3, r._2), Some(0L)) {
+      case (key, s, (src, id, _, nt, _)) =>
+        val spent = s.get + nt
+        val shardBudget = baseBudget + (if (key._2 < remBudget) 1L else 0L)
+        (Some(spent), if (spent <= shardBudget) List((src, id, nt)) else Nil)
+    }.toDF("source", "doc_id", "n_toks")
   }
 }

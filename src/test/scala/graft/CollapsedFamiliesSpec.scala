@@ -2,13 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source tripwires, in the style of HarnessSpec, that keep three
+/** Source tripwires, in the style of HarnessSpec, that keep five
   * collapsed families collapsed: the "first k rows per key" window has
   * one owner, [[graft.operators.GroupOps.topKPerGroup]]; the
   * neighbour-cell explode of the cell-bucketed joins lives in Spatial;
-  * and every Catalyst kernel sits on the one contract,
-  * [[graft.functions.Expressions.Kernel]]. They scan comment-stripped
-  * code ([[ReachSpec.code]]). */
+  * every Catalyst kernel sits on the one contract,
+  * [[graft.functions.Expressions.Kernel]]; the stateful stream
+  * operators share one keyed fold in Streams; and the corpus-rewrite
+  * dedups share one repeated-n-gram core in Dedup. They scan
+  * comment-stripped code ([[ReachSpec.code]]). */
 class CollapsedFamiliesSpec extends AnyFunSuite {
 
   private def sources(f: java.io.File): Seq[java.io.File] =
@@ -16,19 +18,18 @@ class CollapsedFamiliesSpec extends AnyFunSuite {
     else if (f.getName.endsWith(".scala")) Seq(f)
     else Seq.empty
 
-  /** (file name, comment-stripped code) of every source under `dir`. */
-  private def code(dir: String): Seq[(String, String)] =
+  /** (file name, comment-stripped code) of every source under `dir`;
+    * string literals keep their text only when `keepStrings`. */
+  private def code(dir: String, keepStrings: Boolean = false): Seq[(String, String)] =
     sources(new java.io.File(dir)).map { f =>
       val s = scala.io.Source.fromFile(f, "UTF-8")
-      f.getName -> ReachSpec.code(try s.mkString finally s.close())
+      f.getName -> ReachSpec.code(try s.mkString finally s.close(), keepStrings)
     }
 
   /** The row_number() windows outside GroupOps, by (file, enclosing
     * def), each with the reason it is not a first-k-per-key tail. */
   private val rankAllowed: Map[(String, String), String] = Map(
-    ("Text.scala", "balancedMix") ->
-      "per-row quota: keeps mix_rank <= _k, a bound joined in per stratum",
-    ("Text.scala", "temperatureMix") ->
+    ("Text.scala", "quotaCut") ->
       "per-row quota: keeps mix_rank <= _k, a bound joined in per stratum",
     ("Dedup.scala", "containmentPairs") ->
       "prefix rank: each document's own prefix length bounds its rank",
@@ -81,5 +82,23 @@ class CollapsedFamiliesSpec extends AnyFunSuite {
         .map(m => file -> src.take(m.start).count(_ == '\n'))
     }
     assert(writes.isEmpty, s"codegen Java outside the Kernel base: $writes")
+  }
+
+  test("stateful stream operators share one keyed fold; rewrite dedups one n-gram core") {
+    def sites(files: Seq[(String, String)], text: String): Seq[(String, Int)] =
+      files.map { case (file, src) =>
+        file -> java.util.regex.Pattern.quote(text).r.findAllIn(src).size
+      }.filter(_._2 > 0)
+    val main = code("src/main/scala")
+    Seq("flatMapGroupsWithState(", "hasTimedOut").foreach { text =>
+      assert(sites(main, text) == Seq("Streams.scala" -> 1),
+        s"$text sites (write a stateful operator as a step of Streams.keyedFold): ${sites(main, text)}")
+    }
+    // the positional n-gram expression is SQL text inside expr(s"..."),
+    // which code() drops unless string literals are kept
+    val ngrams = sites(code("src/main/scala", keepStrings = true),
+      "transform(sequence(0, int(n_tokens) - ")
+    assert(ngrams == Seq("Dedup.scala" -> 1),
+      s"positional n-gram sites (use Dedup.repeatedNgramCover): $ngrams")
   }
 }

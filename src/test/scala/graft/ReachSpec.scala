@@ -124,8 +124,9 @@ object ReachSpec {
 
   /** `src` without comments, each string literal reduced to the code it
     * interpolates (`${expr}`, `$name`): a name in prose or in SQL text
-    * is not a call. Line breaks are kept. */
-  def code(src: String): String = {
+    * is not a call. Line breaks are kept. `keepStrings` keeps each
+    * literal's text as written, for checks that read SQL text. */
+  def code(src: String, keepStrings: Boolean = false): String = {
     val out = new StringBuilder
     def charLit(i: Int): Option[Int] =
       charLiteral.findPrefixOf(src.substring(i, math.min(i + 8, src.length))).map(i + _.length)
@@ -171,12 +172,17 @@ object ReachSpec {
           return i
         } else if (!triple && c == '"') return i + 1
         else if (!triple && c == '\n') return i
-        else if (!triple && c == '\\') i += 2
-        else if (src.startsWith("$$", i)) i += 2
+        else if (!triple && c == '\\') {
+          if (keepStrings) out ++= src.substring(i, math.min(i + 2, src.length))
+          i += 2
+        } else if (src.startsWith("$$", i)) i += 2
         else if (src.startsWith("${", i)) {
           out += ' '
           i = scanCode(i + 2, nested = true)
           out += ' '
+        } else if (keepStrings) {
+          out += c
+          i += 1
         } else if (c == '$' && i + 1 < src.length && Character.isJavaIdentifierStart(src(i + 1))) {
           var j = i + 1
           while (j < src.length && Character.isJavaIdentifierPart(src(j))) j += 1

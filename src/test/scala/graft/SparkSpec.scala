@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one JVM-wide SparkSession across suites. */
+/** Shared session: one JVM-wide SparkSession across suites, at
+  * `local[4]` whatever `SPARK_GRAFT_CPUS` says, with the log levels of
+  * [[Harness.session]]. */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -13,7 +15,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    Harness.quietLogs(s)
     s
   }
 }

@@ -395,54 +395,62 @@ class StatefulStreamsSpec extends SparkSpec {
     assert(q.exception.isEmpty, s"query failed: ${q.exception.map(_.toString)}")
   }
 
+  /** The TTL restart protocol: one AvailableNow run of `op` per frame
+    * of `phases`, each restarting from one checkpoint, with a 1.2 s
+    * sleep after the first, past the 400 ms TTL the tests arm. The
+    * ProcessingTimeTimeout timestamps live IN the state, so expiry
+    * fires in whichever later run's batch observes the clock past
+    * them; a continuously running trigger would never quiesce, since
+    * armed timeouts schedule batches forever. The second frame is the
+    * tick: a batch for another key, whose run lets the idle key
+    * expire. Returns every row the runs wrote. */
+  private def ttlRuns(phases: Seq[org.apache.spark.sql.DataFrame])(
+      op: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.streaming.Trigger
+    val base = java.nio.file.Files.createTempDirectory("graft_ttl").toString
+    val (src, ckpt, out) = (s"$base/src", s"$base/ckpt", s"$base/out")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
+    phases.zipWithIndex.foreach { case (rows, seq) =>
+      if (seq == 1) Thread.sleep(1200) // sit out the 400 ms TTL
+      rows.repartition(1).write.parquet(s"$src/b$seq")
+      // flatten: file source watches one dir
+      java.nio.file.Files.list(java.nio.file.Paths.get(s"$src/b$seq"))
+        .filter(_.toString.endsWith(".parquet"))
+        .forEach { f =>
+          java.nio.file.Files.copy(f,
+            java.nio.file.Paths.get(src).resolve(s"f$seq.parquet"))
+        }
+      val schema = spark.read.parquet(s"$src/f$seq.parquet").schema
+      val stream = spark.readStream.schema(schema)
+        .option("pathGlobFilter", "f*.parquet").parquet(src)
+      val q = op(stream)
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", out).option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      settle(q, ckpt, seq); q.stop()
+    }
+    val p = java.nio.file.Paths.get(out)
+    val parts = if (!java.nio.file.Files.exists(p)) 0L
+      else java.nio.file.Files.list(p).filter(_.toString.endsWith(".parquet")).count()
+    if (parts == 0) Seq.empty else spark.read.parquet(out).collect().toSeq
+  }
+
   test("state TTL drops an idle key's state; TTL off preserves it (running totals)") {
     // VERDICT r10 #3: the TTL seam must actually DROP state. Protocol
-    // (three AvailableNow runs restarting from one checkpoint — the
-    // ProcessingTimeTimeout timestamps live IN the state, so expiry
-    // fires in whichever later run's batch observes the clock past
-    // it; a continuously-running trigger would never quiesce, since
-    // armed timeouts schedule batches forever):
+    // (ttlRuns):
     //   run 1: user 1 accumulates 80 (below step 100), TTL armed
     //   sleep past the TTL
     //   run 2: a batch for user 2 ticks the engine -> user 1 expires
     //   run 3: user 1 sends 80 again
     // TTL on: restart total is 80, no alert ever. TTL off: 160, the
     // milestone fires. Same three batches both ways.
-    import org.apache.spark.sql.streaming.Trigger
-    def phase(src: String, ckpt: String, out: String, ttl: Option[Long],
-              rows: Seq[(Long, java.sql.Timestamp, Double)], seq: Int): Unit = {
-      rows.toDF("user_id", "ts", "value").repartition(1)
-        .write.parquet(s"$src/b$seq")
-      val fs = java.nio.file.Paths.get(src)
-      // flatten: file source watches one dir
-      java.nio.file.Files.list(java.nio.file.Paths.get(s"$src/b$seq"))
-        .filter(_.toString.endsWith(".parquet"))
-        .forEach { f =>
-          val dst = fs.resolve(s"f$seq.parquet")
-          java.nio.file.Files.copy(f, dst)
-        }
-      val schema = spark.read.parquet(s"$src/f$seq.parquet").schema
-      val stream = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "f*.parquet").parquet(src)
-      val q = Streams.runningTotalAlerts(stream, step = 100.0, stateTtlMs = ttl)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      settle(q, ckpt, seq); q.stop()
-    }
     def run(ttl: Option[Long]): Set[(Long, Double, Long)] = {
-      val base = java.nio.file.Files.createTempDirectory("graft_ttl").toString
-      val (src, ckpt, out) = (s"$base/src", s"$base/ckpt", s"$base/out")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
       val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
-      phase(src, ckpt, out, ttl, Seq((1L, ts, 80.0)), 0)
-      Thread.sleep(1200) // sit out the 400 ms TTL
-      phase(src, ckpt, out, ttl, Seq((2L, ts, 1.0)), 1) // expiry tick
-      phase(src, ckpt, out, ttl, Seq((1L, ts, 80.0)), 2)
-      val parts = java.nio.file.Files.list(java.nio.file.Paths.get(out))
-        .filter(_.toString.endsWith(".parquet")).count()
-      if (parts == 0) Set.empty
-      else spark.read.parquet(out).as[(Long, Double, Long)].collect().toSet
+      ttlRuns(Seq((1L, 80.0), (2L, 1.0), (1L, 80.0)).map { case (user, v) =>
+          Seq((user, ts, v)).toDF("user_id", "ts", "value")
+        })(st => Streams.runningTotalAlerts(st, step = 100.0, stateTtlMs = ttl))
+        .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
     }
     val withTtl = run(Some(400L))
     assert(!withTtl.exists(_._1 == 1L),
@@ -453,36 +461,7 @@ class StatefulStreamsSpec extends SparkSpec {
   }
 
   test("state TTL drops CEP prefix and near-dup horizon after idle") {
-    // same 3-run restart protocol as the running-total TTL test
-    import org.apache.spark.sql.streaming.Trigger
-    def phase(src: String, ckpt: String, out: String, seq: Int,
-              write: String => Unit, mk: org.apache.spark.sql.DataFrame =>
-                org.apache.spark.sql.DataFrame): Unit = {
-      write(s"$src/b$seq")
-      java.nio.file.Files.list(java.nio.file.Paths.get(s"$src/b$seq"))
-        .filter(_.toString.endsWith(".parquet"))
-        .forEach { f =>
-          java.nio.file.Files.copy(f,
-            java.nio.file.Paths.get(src).resolve(s"f$seq.parquet"))
-        }
-      val schema = spark.read.parquet(s"$src/f$seq.parquet").schema
-      val stream = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "f*.parquet").parquet(src)
-      val q = mk(stream)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      settle(q, ckpt, seq); q.stop()
-    }
-    def readOut(out: String): Long = {
-      val p = java.nio.file.Paths.get(out)
-      if (!java.nio.file.Files.exists(p)) 0L
-      else {
-        val parts = java.nio.file.Files.list(p)
-          .filter(_.toString.endsWith(".parquet")).count()
-        if (parts == 0) 0L else spark.read.parquet(out).count()
-      }
-    }
+    // the ttlRuns protocol of the running-total TTL test
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
     val t1 = java.sql.Timestamp.valueOf("2024-01-01 10:00:01")
     val t2 = java.sql.Timestamp.valueOf("2024-01-01 10:00:02")
@@ -490,40 +469,38 @@ class StatefulStreamsSpec extends SparkSpec {
 
     // CEP: view+click land, user idles past the TTL, purchase arrives
     // -> prefix dropped, pattern must NOT fire
-    locally {
-      val base = java.nio.file.Files.createTempDirectory("graft_cep_ttl").toString
-      val (src, ckpt, out) = (s"$base/src", s"$base/ckpt", s"$base/out")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-      def cepPhase(seq: Int, rows: Seq[(Long, Long, java.sql.Timestamp, String)]) =
-        phase(src, ckpt, out, seq,
-          d => rows.toDF("user_id", "event_id", "ts", "event_type")
-            .repartition(1).write.parquet(d),
-          st => Streams.streamCepMatches(st, stateTtlMs = Some(400L)))
-      cepPhase(0, Seq((7L, 1L, t0, "view"), (7L, 2L, t1, "click")))
-      Thread.sleep(1200)
-      cepPhase(1, Seq((8L, 9L, t1, "view"))) // expiry tick
-      cepPhase(2, Seq((7L, 3L, t2, "purchase")))
-      assert(readOut(out) == 0L,
-        "CEP prefix survived the TTL — pattern fired after idle gap")
-    }
+    val cep = ttlRuns(Seq(
+        Seq((7L, 1L, t0, "view"), (7L, 2L, t1, "click")),
+        Seq((8L, 9L, t1, "view")), // expiry tick
+        Seq((7L, 3L, t2, "purchase"))
+      ).map(_.toDF("user_id", "event_id", "ts", "event_type")))(
+      st => Streams.streamCepMatches(st, stateTtlMs = Some(400L)))
+    assert(cep.isEmpty, "CEP prefix survived the TTL — pattern fired after idle gap")
 
     // near-dedup: identical doc re-sent after the TTL -> horizon
     // dropped, no pair
-    locally {
-      val base = java.nio.file.Files.createTempDirectory("graft_nd_ttl").toString
-      val (src, ckpt, out) = (s"$base/src", s"$base/ckpt", s"$base/out")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-      def ndPhase(seq: Int, rows: Seq[(Long, String)]) =
-        phase(src, ckpt, out, seq,
-          d => rows.toDF("doc_id", "text").repartition(1).write.parquet(d),
-          st => Streams.nearDupPairs(st, threshold = 0.5,
-            stateTtlMs = Some(400L)))
-      ndPhase(0, Seq((1L, doc)))
-      Thread.sleep(1200)
-      ndPhase(1, Seq((9L, "unrelated text entirely"))) // expiry tick
-      ndPhase(2, Seq((2L, doc)))
-      assert(readOut(out) == 0L,
-        "near-dup horizon survived the TTL — pair emitted after idle gap")
-    }
+    val nd = ttlRuns(Seq(
+        Seq((1L, doc)),
+        Seq((9L, "unrelated text entirely")), // expiry tick
+        Seq((2L, doc))
+      ).map(_.toDF("doc_id", "text")))(
+      st => Streams.nearDupPairs(st, threshold = 0.5, stateTtlMs = Some(400L)))
+    assert(nd.isEmpty, "near-dup horizon survived the TTL — pair emitted after idle gap")
+
+    // attribution: a touch lands, the user idles past the TTL, a
+    // purchase arrives -> the touch is gone and the purchase is
+    // 'direct'; TTL off, it keeps the touch's channel
+    def attribution(ttl: Option[Long]): Seq[String] =
+      ttlRuns(Seq(
+          Seq((5L, t0, 1L, "click", 0.0)),
+          Seq((6L, t1, 2L, "view", 0.0)), // expiry tick
+          Seq((5L, t2, 3L, "purchase", 9.5))
+        ).map(_.toDF("user_id", "ts", "event_id", "event_type", "value")))(
+        st => Streams.attributionStream(st, stateTtlMs = ttl))
+        .map(_.getString(0))
+    val expired = attribution(Some(400L))
+    assert(expired == Seq("direct"), s"attribution touch survived the TTL: $expired")
+    val kept = attribution(None)
+    assert(kept == Seq("click"), s"TTL-off attribution lost the touch: $kept")
   }
 }
