@@ -21,9 +21,10 @@ import graft.operators.{Clustering, GroupOps, Joins, Outliers, Spatial}
   *   (S10, notebook cell 10).
   *
   * One lazy DataFrame lineage end-to-end; the only materialization
-  * barriers are the DBSCAN label-propagation loop, the (tiny)
-  * metadata/aggregate collects, and the final sink — exactly the
-  * barriers SURVEY §3 predicts. Detections are lineitem rows; "stars"
+  * barriers are the DBSCAN (one bounded collect of the centroids when
+  * they are dimension-sized, else the ε-graph's connected-components
+  * cut), the (tiny) metadata/aggregate collects, and the final sink —
+  * the barriers SURVEY §3 predicts. Detections are lineitem rows; "stars"
   * are partkeys; "calibrators" are suppliers on a synthetic plane;
   * "filter bands" are order statuses.
   */

@@ -1,15 +1,22 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** M1: distributed DBSCAN (objtable.py:116-168 cluster_sources).
+/** M1: DBSCAN (objtable.py:116-168 cluster_sources).
   *
   * The reference clusters source detections with sklearn DBSCAN
-  * (ball_tree + haversine, eps = radians(arcsec/3600)). That is a
-  * single-node algorithm; here the same semantics are built from
-  * Spark primitives:
+  * (ball_tree + haversine, eps = radians(arcsec/3600)), a single-node
+  * algorithm. A point set of broadcastable size is
+  * clustered the same way here: fetched in one bounded job and
+  * clustered on the driver (`onDriver`). Larger sets take the
+  * distributed path, the same semantics built from Spark primitives:
   *
   *   1. bucket points into grid cells of size eps; neighbor pairs can
   *      only span adjacent cells -> cell equi-join + exact distance
@@ -60,8 +67,6 @@ object Clustering {
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           driverMaxEdges: Long = DriverMaxEdges): DataFrame = {
     val idType = nodes.schema.fields.find(_.name == "_id").get.dataType
-    val integralId = idType == LongType || idType == IntegerType ||
-      idType == ShortType || idType == ByteType
 
     // Canonicalize FIRST — orientation _a > _b, self-loops stripped —
     // and checkpoint once; the adaptive probe and both execution
@@ -96,7 +101,7 @@ object Clustering {
     // chooses the distributed path a little earlier — the safe side.
     val nEdges = e0.count()
 
-    if (integralId && nEdges <= driverMaxEdges) {
+    if (integral(idType) && nEdges <= driverMaxEdges) {
       // Below the threshold the whole (two-long-column) edge list is
       // dimension-sized; one O(E α(E)) driver pass beats 3-5 rounds
       // of join+checkpoint fixed latency — same adaptive rationale as
@@ -105,7 +110,7 @@ object Clustering {
         // BOUNDED: gated by the nEdges <= driverMaxEdges count above
         .select(col("_a").cast(LongType), col("_b").cast(LongType)).collect()
       frames.close() // result below depends only on nodes + broadcast labels
-      val labeled = driverUnionFind(fetched)
+      val labeled = driverUnionFind(fetched.flatMap(r => Array(r.getLong(0), r.getLong(1))))
       val spark = nodes.sparkSession
       import spark.implicits._
       val labels = labeled.toSeq.toDF("_id", "_label")
@@ -206,7 +211,6 @@ object Clustering {
       converged = cs == last
       last = cs
     }
-    System.err.println(s"[cc] rounds=$rounds converged=$converged")
     // converged: e is exactly {(v, component-min) : v not a min};
     // the roots label themselves.
     // parity with the union-find path: only endpoints in `nodes` get
@@ -218,51 +222,156 @@ object Clustering {
     labels.unionByName(isolated)
   }
 
-  /** Union-find (path compression + union by min) over a collected
-    * edge list; returns label = min node id per component for every
-    * edge endpoint. Only invoked for dimension-sized edge lists —
-    * see [[DriverMaxEdges]]. */
-  private def driverUnionFind(es: Array[org.apache.spark.sql.Row]): Array[(Long, Long)] = {
-    val parent = new java.util.HashMap[Long, Long]()
+  /** Union-find (path halving + union by min) over an edge list laid
+    * out as endpoint pairs (`ends(2k)`, `ends(2k+1)`); returns label =
+    * min node id of its component for every endpoint. Only invoked for
+    * dimension-sized edge lists — see [[DriverMaxEdges]]. */
+  private def driverUnionFind(ends: Array[Long]): mutable.LongMap[Long] = {
+    val parent = new mutable.LongMap[Long]()
     def find(x0: Long): Long = {
       var x = x0
-      var p = parent.getOrDefault(x, x)
+      var p = parent.getOrElse(x, x)
       while (p != x) { // path halving
-        val gp = parent.getOrDefault(p, p)
-        parent.put(x, gp)
+        val gp = parent.getOrElse(p, p)
+        parent(x) = gp
         x = gp
-        p = parent.getOrDefault(x, x)
+        p = parent.getOrElse(x, x)
       }
       x
     }
     var i = 0
-    while (i < es.length) {
-      val r = es(i)
-      val ra = find(r.getLong(0)); val rb = find(r.getLong(1))
+    while (i < ends.length) {
+      val ra = find(ends(i)); val rb = find(ends(i + 1))
       if (ra != rb) { // union under the smaller root: root == min id
-        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
       }
-      i += 1
+      i += 2
     }
-    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-    val seen = new java.util.HashSet[Long]()
-    var j = 0
-    while (j < es.length) {
-      val r = es(j)
-      var k = 0
-      while (k < 2) {
-        val id = r.getLong(k)
-        if (seen.add(id)) out += ((id, find(id)))
-        k += 1
-      }
-      j += 1
-    }
-    out.toArray
+    val out = new mutable.LongMap[Long](parent.size)
+    for (id <- ends) if (!out.contains(id)) out(id) = find(id)
+    out
   }
 
-  /** Returns (idCol, cluster) for every non-noise point. */
+  /** Returns (idCol, cluster) for every non-noise point, `cluster`
+    * typed as `idCol`. A dimension-sized point set is clustered on the
+    * driver ([[onDriver]]); anything larger takes the distributed
+    * ε-graph ([[distributed]]). Both return the same rows. */
   def dbscan(points: DataFrame, idCol: String, xCol: String, yCol: String,
              eps: Double, minSamples: Int): DataFrame = {
+    val pts = points.select(col(idCol).as("_id"), col(xCol).as("_x"), col(yCol).as("_y"))
+    onDriver(pts, eps, minSamples).getOrElse(distributed(pts, eps, minSamples))
+      .select(col("_id").as(idCol), col("_label").as("cluster"))
+  }
+
+  private def integral(t: DataType): Boolean =
+    t == LongType || t == IntegerType || t == ShortType || t == ByteType
+
+  /** DBSCAN of (`_id`, `_x`, `_y`) on the driver: (`_id`, `_label`) as a
+    * local frame, or None when the point set is not dimension-sized.
+    *
+    * Same adaptive rationale as [[DriverMaxEdges]] one level up: a
+    * point set whose size ([[knownBytes]]) is within
+    * `spark.sql.autoBroadcastJoinThreshold` (Spark's own bound for a
+    * broadcastable side; -1 turns this path off as it turns off
+    * broadcast joins) is fetched in ONE bounded job and clustered in
+    * memory, instead of the ~20 jobs of the distributed ε-graph. It
+    * computes exactly what [[distributed]] returns:
+    *   - cells `floor(v / eps)` of the coordinate as a double; pairs
+    *     from the 3×3 neighbouring cells with `id_a != id_b` and
+    *     `(xa-xb)²+(ya-yb)² <= eps²` in the coordinates' own
+    *     arithmetic (long, overflow-checked as ANSI Catalyst does, or
+    *     double; a long sum is widened to double for the comparison);
+    *   - core = degree ≥ minSamples - 1, clusters = components of the
+    *     core-core pairs ([[driverUnionFind]]), borders = min label of
+    *     their core neighbours, noise dropped;
+    *   - a NULL id or coordinate never pairs; with minSamples ≤ 1 every
+    *     row is a node, so such a row labels itself (NULL id -> NULL).
+    * Integral ids and long or double coordinates only (the arithmetic
+    * reproduced here); the distributed path takes every other input, a
+    * fetch past [[DriverMaxEdges]] rows and a grid past
+    * [[DriverMaxEdges]] candidate pairs (a dense blob). */
+  private def onDriver(pts: DataFrame, eps: Double, minSamples: Int): Option[DataFrame] = {
+    val Array(idType, xType, yType) = pts.schema.fields.map(_.dataType)
+    val coord = (t: DataType) => t == LongType || t == DoubleType
+    val spark = pts.sparkSession
+    if (!integral(idType) || !coord(xType) || !coord(yType) || !(eps > 0) ||
+        knownBytes(pts) > spark.sessionState.conf.autoBroadcastJoinThreshold) return None
+    // one partition, so the limit is one job whatever the input's width
+    // BOUNDED: at most DriverMaxEdges + 1 rows of (id, x, y)
+    val rows = pts.coalesce(1).limit(DriverMaxEdges.toInt + 1).collect()
+    if (rows.length > DriverMaxEdges) return None
+
+    val ids = rows.map(r => if (r.isNullAt(0)) 0L else r.get(0).asInstanceOf[Number].longValue)
+    def sqLong(k: Int, a: Int, b: Int) = {
+      val d = Math.subtractExact(rows(a).getLong(k), rows(b).getLong(k)); Math.multiplyExact(d, d)
+    }
+    def sq(t: DataType, k: Int, a: Int, b: Int): Double =
+      if (t == LongType) sqLong(k, a, b).toDouble
+      else { val d = rows(a).getDouble(k) - rows(b).getDouble(k); d * d }
+    def d2(a: Int, b: Int): Double =
+      if (xType == LongType && yType == LongType) Math.addExact(sqLong(1, a, b), sqLong(2, a, b)).toDouble
+      else sq(xType, 1, a, b) + sq(yType, 2, a, b)
+    def cell(k: Int, i: Int) = math.floor(rows(i).get(k).asInstanceOf[Number].doubleValue / eps).toLong
+    val cells = rows.indices.filter(i => !(0 to 2).exists(rows(i).isNullAt))
+      .groupBy(i => (cell(1, i), cell(2, i)))
+
+    def around(c: (Long, Long)) = for (sx <- -1L to 1L; sy <- -1L to 1L)
+      yield cells.getOrElse((Math.addExact(c._1, sx), Math.addExact(c._2, sy)), IndexedSeq.empty)
+    // the candidate pairs bound the driver's work and the ε-pairs: a
+    // dense blob goes to the distributed path before any is computed
+    val candidates = cells.iterator.map { case (c, as) => as.size.toLong * around(c).map(_.size).sum }.sum
+    if (candidates > DriverMaxEdges) return None
+
+    // directed ε-pairs (a, b) of row indices, both orientations
+    val e2 = eps * eps
+    val pairs = for ((c, as) <- cells.toArray; bs <- around(c); a <- as; b <- bs
+                     if ids(a) != ids(b) && d2(a, b) <= e2) yield (a, b)
+
+    val degree = new mutable.LongMap[Int]()
+    for ((a, _) <- pairs) degree(ids(a)) = degree.getOrElse(ids(a), 0) + 1
+    def core(i: Int) = minSamples <= 1 || degree.getOrElse(ids(i), 0) >= minSamples - 1
+    val labels = driverUnionFind(pairs.iterator.filter { case (a, b) => core(a) && core(b) }
+      .flatMap { case (a, b) => Iterator(ids(a), ids(b)) }.toArray)
+    def label(i: Int) = labels.getOrElse(ids(i), ids(i))
+
+    val out: Seq[Row] =
+      if (minSamples <= 1) rows.indices.map(i =>
+        if (rows(i).isNullAt(0)) Row(null, null) else Row(ids(i), label(i)))
+      else {
+        val cores = pairs.iterator.map(_._1).filter(core).map(a => ids(a) -> label(a)).toMap
+        val borders = new mutable.LongMap[Long]()
+        for ((a, b) <- pairs if !core(a) && core(b))
+          borders(ids(a)) = math.min(borders.getOrElse(ids(a), Long.MaxValue), label(b))
+        (cores ++ borders).toSeq.map { case (id, l) => Row(id, l) }
+      }
+    val schema = StructType(Seq(StructField("_id", LongType), StructField("_label", LongType)))
+    Some(spark.createDataFrame(out.asJava, schema)
+      .select(col("_id").cast(idType).as("_id"), col("_label").cast(idType).as("_label")))
+  }
+
+  /** The bytes `df` holds as far as the driver knows without a job:
+    * the optimizer's estimate, or, for a projection or filter of one
+    * materialized checkpoint (ep2's centroids), the checkpoint's stored
+    * size. Without CBO the estimate a checkpoint inherits from its plan
+    * takes an inner join's size as the product of its sides, so it can
+    * overstate the rows by orders of magnitude (24 GiB for ep2's 2,000
+    * centroids); the stored size is a measured one, as AQE's runtime
+    * statistics are. */
+  private def knownBytes(df: DataFrame): BigInt = {
+    val plan = df.queryExecution.optimizedPlan
+    val stored = plan match {
+      case PhysicalOperation(_, _, r: LogicalRDD) =>
+        df.sparkSession.sparkContext.getRDDStorageInfo.find(_.id == r.rdd.id)
+          .map(i => BigInt(i.memSize + i.diskSize))
+      case _ => None
+    }
+    stored.getOrElse(plan.stats.sizeInBytes)
+  }
+
+  /** The scale path: the ε-graph as a cell-bucketed self-join, core
+    * and border frames, and [[connectedComponents]] over the core-core
+    * pairs; returns (`_id`, `_label`). */
+  private def distributed(points: DataFrame, eps: Double, minSamples: Int): DataFrame = {
     // spread (NO checkpoint): `points` typically arrives from an
     // AQE-coalesced aggregate (1 post-shuffle partition at small SF),
     // and every downstream map — binning, the 9× probe explode, the
@@ -273,9 +382,7 @@ object Clustering {
     // source scans beat a materialization job at this end — and at
     // 100 TB, pinning a FACT-sized points frame on executor storage
     // is the bigger hazard (r10).
-    val pts = graft.core.Tables.spread(
-        points.select(col(idCol).as("_id"), col(xCol).as("_x"), col(yCol).as("_y")),
-        col("_id"))
+    val pts = graft.core.Tables.spread(points, col("_id"))
 
     val (cx, cy) = Spatial.cellCoords(col("_x"), col("_y"), eps)
     val binned0 = pts.withColumn("_cx", cx).withColumn("_cy", cy)
@@ -306,10 +413,7 @@ object Clustering {
     // pair join stays LAZY here: connectedComponents canonicalizes
     // and checkpoints its edge input exactly once up front — a
     // second checkpoint job here would be pure overhead.
-    if (minSamples <= 1) {
-      val labels = connectedComponents(pts.select("_id"), pairsLazy)
-      return labels.select(col("_id").as(idCol), col("_label").as("cluster"))
-    }
+    if (minSamples <= 1) return connectedComponents(pts.select("_id"), pairsLazy)
 
     // minSamples > 1: degrees/core/border each rescan the pairs —
     // materialize once. persist (recomputable, spills), not
@@ -342,6 +446,5 @@ object Clustering {
       .groupBy(col("_a").as("_id")).agg(min("_label").as("_label"))
 
     labels.unionByName(borderAssign)
-      .select(col("_id").as(idCol), col("_label").as("cluster"))
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.operators.Clustering
@@ -8,17 +10,28 @@ import graft.operators.Clustering
 class ClusteringSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Jobs the distributed DBSCAN starts while it builds its result on
+    * the 400-point minSamples = 2 field below (the query stages of the
+    * ε-pair join and the canonical-edge cut, its count and the edge
+    * collect): the count the operator had before the driver path. */
+  private val DistributedBuildJobs = 15
+
   /** Brute-force DBSCAN (same semantics as Clustering.dbscan: core =
     * ≥ minSamples points within eps incl. self; clusters = CCs of the
     * core ε-graph; borders -> min core-neighbor label; label = min
-    * member id). */
-  private def bruteDbscan(pts: Seq[(Long, Double, Double)], eps: Double,
-                          minSamples: Int): Map[Long, Long] = {
+    * member id). A point with a NULL id or coordinate has no
+    * neighbours; with minSamples <= 1 it is still its own cluster,
+    * labelled by its id (NULL for a NULL id). Expects distinct
+    * non-NULL ids. */
+  private def bruteDbscan(pts: Seq[(Option[Long], Option[Double], Option[Double])], eps: Double,
+                          minSamples: Int): Seq[(Option[Long], Option[Long])] = {
+    val placed = pts.collect { case (Some(id), Some(x), Some(y)) => (id, x, y) }
     def d2(a: (Long, Double, Double), b: (Long, Double, Double)) =
       (a._2 - b._2) * (a._2 - b._2) + (a._3 - b._3) * (a._3 - b._3)
-    val neigh = pts.map(p => p._1 ->
-      pts.filter(q => q._1 != p._1 && d2(p, q) <= eps * eps).map(_._1).toSet).toMap
-    val core = pts.map(_._1).filter(id => neigh(id).size + 1 >= minSamples).toSet
+    val neigh = pts.flatMap(_._1).map(id => id -> Set.empty[Long]).toMap ++
+      placed.map(p => p._1 ->
+        placed.filter(q => q._1 != p._1 && d2(p, q) <= eps * eps).map(_._1).toSet)
+    val core = neigh.keySet.filter(id => neigh(id).size + 1 >= minSamples)
     // union-find over core-core edges
     val parent = scala.collection.mutable.Map(core.map(c => c -> c).toSeq: _*)
     def find(x: Long): Long = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
@@ -29,22 +42,38 @@ class ClusteringSpec extends SparkSpec {
     val coreLabel = core.map(c => c -> find(c)).toMap
     // min label per component
     val compMin = coreLabel.groupBy(_._2).map { case (root, m) => root -> m.keys.min }
-    val coreOut = core.map(c => c -> compMin(coreLabel(c))).toMap
-    val borderOut = pts.map(_._1).filterNot(core)
+    val coreOut = core.toSeq.map(c => Option(c) -> Option(compMin(coreLabel(c))))
+    val borderOut = neigh.keys.filterNot(core).toSeq
       .flatMap { id =>
         val cs = neigh(id).filter(core)
-        if (cs.isEmpty) None else Some(id -> cs.map(coreOut).min)
-      }.toMap
-    coreOut ++ borderOut
+        if (cs.isEmpty) None else Some(Option(id) -> Option(cs.map(c => compMin(coreLabel(c))).min))
+      }
+    val nullIds = if (minSamples <= 1) pts.filter(_._1.isEmpty).map(_ => (None, None)) else Nil
+    (coreOut ++ borderOut ++ nullIds).sorted
   }
 
-  private def check(pts: Seq[(Long, Double, Double)], eps: Double, minSamples: Int): Unit = {
-    val df = pts.toDF("id", "x", "y")
-    val got = Clustering.dbscan(df, "id", "x", "y", eps, minSamples)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  /** Both DBSCAN paths on `frame` (built in the given session, columns
+    * id, x, y) equal the brute force: the driver path under the
+    * default settings and the distributed path with broadcasting off. */
+  private def checkFrame(frame: SparkSession => DataFrame, eps: Double, minSamples: Int): Unit = {
+    val pts = frame(spark).collect().toSeq.map(r => (
+      Option(r.get(0)).map(_.asInstanceOf[Number].longValue),
+      Option(r.get(1)).map(_.asInstanceOf[Number].doubleValue),
+      Option(r.get(2)).map(_.asInstanceOf[Number].doubleValue)))
     val exp = bruteDbscan(pts, eps, minSamples)
-    assert(got == exp)
+    for ((path, session) <- Seq("driver" -> spark, "distributed" -> noBroadcast)) {
+      val out = Clustering.dbscan(frame(session), "id", "x", "y", eps, minSamples)
+      val local = out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+      assert(local == (path == "driver"), s"$path path expected")
+      val got = out.collect().toSeq.map(r =>
+        (Option(r.get(0)).map(_.asInstanceOf[Number].longValue),
+          Option(r.get(1)).map(_.asInstanceOf[Number].longValue))).sorted
+      assert(got == exp, s"$path path")
+    }
   }
+
+  private def check(pts: Seq[(Long, Double, Double)], eps: Double, minSamples: Int): Unit =
+    checkFrame(_.createDataFrame(pts).toDF("id", "x", "y"), eps, minSamples)
 
   test("three well-separated clusters + noise") {
     val pts = Seq[(Long, Double, Double)](
@@ -119,6 +148,58 @@ class ClusteringSpec extends SparkSpec {
     val pts = (0L until 500L).map(i =>
       (i, rnd.nextDouble() * 300, rnd.nextDouble() * 300))
     check(pts, eps = 10.0, minSamples = 3)
+  }
+
+  test("integral coordinates: pairs exactly at eps are neighbours") {
+    // (0,0)-(3,4) and (3,4)-(6,8) at exactly 5; (6,8)-(11,8) at 5;
+    // (20,0)-(25,1) just past it (26 > 25)
+    val pts = Seq[(Long, Long, Long)]((1L, 0L, 0L), (2L, 3L, 4L), (3L, 6L, 8L),
+      (4L, 11L, 8L), (5L, 20L, 0L), (6L, 25L, 1L), (7L, 100L, 100L))
+    for (minSamples <- Seq(1, 2, 3))
+      checkFrame(_.createDataFrame(pts).toDF("id", "x", "y"), eps = 5.0, minSamples)
+  }
+
+  test("negative coordinates: cells across zero") {
+    val rnd = new scala.util.Random(3)
+    val pts = (0L until 120L).map(i => (i, rnd.nextDouble() * 8 - 4, rnd.nextDouble() * 8 - 4))
+    check(pts, eps = 0.7, minSamples = 3)
+    check(pts :+ ((500L, -0.5, -0.5)) :+ ((501L, 0.2, 0.2)), eps = 1.0, minSamples = 1)
+  }
+
+  test("co-located points with distinct ids") {
+    val pts = Seq[(Long, Double, Double)]((1L, 2.0, 2.0), (2L, 2.0, 2.0), (3L, 2.0, 2.0),
+      (4L, 9.0, 9.0), (5L, 9.0, 9.0), (6L, 30.0, 30.0))
+    for (minSamples <- Seq(1, 2, 3)) check(pts, eps = 0.5, minSamples)
+  }
+
+  test("dbscan on a dimension-sized parquet frame starts one job; broadcasting off, the distributed path's") {
+    val rnd = new scala.util.Random(19)
+    val dir = tempDir("graft_dbscan_jobs").resolve("pts").toString
+    // several files, so the one-job fetch is not an artifact of one partition
+    (0L until 400L).map(i => (i, rnd.nextDouble() * 40, rnd.nextDouble() * 40))
+      .toDF("id", "x", "y").repartition(4).write.parquet(dir)
+    def run(session: SparkSession) = {
+      val pts = session.read.parquet(dir)
+      val (out, built) = jobsStarted(Clustering.dbscan(pts, "id", "x", "y", eps = 2.0, minSamples = 2))
+      val (n, counted) = jobsStarted(out.count())
+      (built, counted, n)
+    }
+    val (built, counted, n) = run(spark)
+    assert(built == 1, s"the driver path fetches the points in one job, not $built")
+    assert(counted <= 2, s"counting the local result took $counted jobs")
+    val (builtD, _, nD) = run(noBroadcast)
+    assert(builtD == DistributedBuildJobs, s"the distributed path built its result with $builtD jobs")
+    assert(n == nD && n > 0)
+  }
+
+  test("a NULL coordinate never pairs; a NULL id labels nothing but itself") {
+    val pts = Seq[(Option[Long], Option[Double], Option[Double])](
+      (Some(1L), Some(0.0), Some(0.0)), (Some(2L), Some(0.5), Some(0.0)),
+      (Some(3L), None, Some(0.2)), (Some(4L), Some(0.2), None),
+      (None, Some(0.1), Some(0.1)), (None, Some(8.0), Some(8.0)),
+      (Some(5L), Some(8.0), Some(8.2)))
+    for (minSamples <- Seq(1, 2))
+      checkFrame(_.createDataFrame(pts).toDF("id", "x", "y"), eps = 1.0, minSamples)
   }
 }
 

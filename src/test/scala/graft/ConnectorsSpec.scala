@@ -11,7 +11,7 @@ class ConnectorsSpec extends SparkSpec {
   import spark.implicits._
 
   private def snapshotDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_conn").toString
+    val dir = tempDir("graft_conn").toString
     Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0), (4L, "d", 40.0))
       .toDF("hpxid", "star", "mag")
       .write.mode("overwrite").parquet(s"$dir/cal.parquet")
@@ -92,7 +92,7 @@ class ConnectorsSpec extends SparkSpec {
       .toDF("ra", "dec")
     val cellOf = (ra: Double, dec: Double) =>
       graft.functions.Healpix.ang2pixNest(nside, ra, dec)
-    val dir = java.nio.file.Files.createTempDirectory("graft_cal").toString
+    val dir = tempDir("graft_cal").toString
     Seq(
       (cellOf(10.0, 10.0), "near1"),
       (cellOf(200.0, -45.0), "near2"),

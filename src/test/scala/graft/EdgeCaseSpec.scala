@@ -34,8 +34,12 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("dbscan and connectedComponents on empty input") {
-    val pts = Seq((1L, 0.0, 0.0)).toDF("id", "x", "y").where(lit(false))
-    assert(Clustering.dbscan(pts, "id", "x", "y", 1.0, 1).count() == 0)
+    // the driver path, then the distributed one (broadcasting off)
+    for (session <- Seq(spark, noBroadcast)) {
+      val pts = session.createDataFrame(Seq((1L, 0.0, 0.0))).toDF("id", "x", "y").where(lit(false))
+      for (minSamples <- Seq(1, 2))
+        assert(Clustering.dbscan(pts, "id", "x", "y", 1.0, minSamples).count() == 0)
+    }
     val nodes = Seq(1L).toDF("_id").where(lit(false))
     val edges = Seq((1L, 2L)).toDF("_a", "_b").where(lit(false))
     assert(Clustering.connectedComponents(nodes, edges).count() == 0)
@@ -257,7 +261,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("deleteCommit with zero matching keys leaves reads unchanged") {
     import graft.sources.Snapshots
-    val tdir = java.nio.file.Files.createTempDirectory("graft_snap_edge").toString
+    val tdir = tempDir("graft_snap_edge").toString
     val base = (0L until 16L).map(k => (k, k)).toDF("k", "v")
     val m1 = Snapshots.commit(base, tdir, 1, pmod(col("k"), lit(2)), nBuckets = 2)
     val m2 = Snapshots.deleteCommit(base.where(lit(false)), tdir, 2, "k", m1)

@@ -12,7 +12,7 @@ import graft.sources.FitsSource
 class FitsSpec extends SparkSpec {
 
   private def tmpDir(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft_fits_$tag")
+    val d = tempDir(s"graft_fits_$tag")
     d.toAbsolutePath.toString
   }
 

@@ -63,9 +63,12 @@ class LoopFramesSpec extends SparkSpec {
     survives("connectedComponents, star rounds", edges(2))(
       Clustering.connectedComponents(nodes, _, driverMaxEdges = -1L))
     val rnd = new scala.util.Random(5)
-    val points = (0L until 400L).map(i => (i, rnd.nextDouble() * 20, rnd.nextDouble() * 20))
-      .toDF("id", "x", "y")
-    survives("dbscan(minSamples = 2)", points)(
+    val field = (0L until 400L).map(i => (i, rnd.nextDouble() * 20, rnd.nextDouble() * 20))
+    // broadcasting off: the distributed path and its persisted pair
+    // and core frames; then the driver path
+    survives("dbscan(minSamples = 2), distributed", noBroadcast.createDataFrame(field).toDF("id", "x", "y"))(
+      Clustering.dbscan(_, "id", "x", "y", eps = 1.0, minSamples = 2))
+    survives("dbscan(minSamples = 2), driver", field.toDF("id", "x", "y"))(
       Clustering.dbscan(_, "id", "x", "y", eps = 1.0, minSamples = 2))
   }
 

@@ -57,7 +57,7 @@ class PipelineSpec extends SparkSpec {
   test("tail: CSV dump (S10) roundtrips the result row count") {
     // isolated dump dir: the default path is shared with EntrySmokeSpec
     // and ReportsSpec, which run in PARALLEL and overwrite it mid-read
-    val dir = java.nio.file.Files.createTempDirectory("graft_ep2_dump_ps").toString
+    val dir = tempDir("graft_ep2_dump_ps").toString
     val n = Pipeline.flagship(spark, sf001, dump = true, dumpDir = Some(dir)).count()
     // sharded contract: parts live under result/data.csv (+ sidecar)
     val dumped = spark.read.option("header", "true")

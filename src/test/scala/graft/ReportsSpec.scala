@@ -11,7 +11,7 @@ class ReportsSpec extends SparkSpec {
 
   test("a14_histogram report dumps to csv.gz + JSON sidecar and reads back") {
     val report = SparkEntry.queries("a14_histogram")(spark, sf001)
-    val dir = Files.createTempDirectory("graft_reports").toString
+    val dir = tempDir("graft_reports").toString
     val (csvDir, sidecar) = Reports.dump(report, dir, "histogram",
       provenance = s"a14_histogram @ $sf001")
     // exactly one gzip part file
@@ -37,7 +37,7 @@ class ReportsSpec extends SparkSpec {
     val fact = spark.range(0, 10000).select(col("id"),
       (col("id") % 97).as("k"), (col("id") * 1.5).as("v"))
       .repartition(8)
-    val dir = Files.createTempDirectory("graft_reports").toString
+    val dir = tempDir("graft_reports").toString
     val (csvDir, sidecar) = Reports.dumpSharded(fact, dir, "fact",
       provenance = "spec")
     // MULTIPLE parts — no one-task write stage
@@ -62,7 +62,7 @@ class ReportsSpec extends SparkSpec {
     // identical either way — only the sink layout changes
     // isolated dump dir: the default path is shared with EntrySmokeSpec
     // and PipelineSpec, which run in PARALLEL and overwrite it mid-read
-    val outDir = java.nio.file.Files.createTempDirectory("graft_ep2_dump_rs").toString
+    val outDir = tempDir("graft_ep2_dump_rs").toString
     val sharded = Pipeline.flagship(spark, sf001, dump = true,
       dumpDir = Some(outDir))
     val meta = Files.readString(Paths.get(s"$outDir/result/meta.json"))

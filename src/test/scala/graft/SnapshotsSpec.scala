@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.Snapshots
@@ -11,7 +9,7 @@ import graft.sources.Snapshots
 class SnapshotsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshDir = Files.createTempDirectory("graft_snap").toString
+  private def freshDir = tempDir("graft_snap").toString
 
   test("commit + time-travel read returns each version's exact content") {
     val tdir = freshDir

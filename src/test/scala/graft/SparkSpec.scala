@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session: one JVM-wide SparkSession across suites, at
@@ -18,10 +22,21 @@ object SparkSpec {
     Harness.quietLogs(s)
     s
   }
+
+  /** A session over the same context with broadcasting off
+    * (`spark.sql.autoBroadcastJoinThreshold=-1`): frames built in it
+    * take the scale paths that the broadcast bound gates (the
+    * distributed DBSCAN). Its own conf, so no other suite sees it. */
+  lazy val noBroadcast: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
 }
 
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
+  lazy val noBroadcast: SparkSession = SparkSpec.noBroadcast
   val sf001 = "/root/testdata/sf0.001"
   val sf01 = "/root/testdata/sf0.01"
 
@@ -35,4 +50,21 @@ trait SparkSpec extends AnyFunSuite {
       (out, jobs)
     } finally log.close()
   }
+
+  private var scratchRoot: Option[Path] = None
+
+  /** A fresh directory named `prefix…` under this suite's scratch root,
+    * which `afterAll` deletes with everything in it. */
+  def tempDir(prefix: String): Path = synchronized {
+    val root = scratchRoot.getOrElse(Files.createTempDirectory(s"graft_${getClass.getSimpleName}_"))
+    scratchRoot = Some(root)
+    Files.createTempDirectory(root, prefix)
+  }
+
+  override def afterAll(): Unit =
+    try scratchRoot.foreach { root =>
+      val paths = Files.walk(root)
+      try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    } finally super.afterAll()
 }

@@ -34,13 +34,13 @@ class StatefulStreamsSpec extends SparkSpec {
     // twin's global (bucket, id) admission order — the case where the
     // ingestion-time cap and the batch prefix cut must agree
     val bucket = graft.operators.Text.sampleBucket(col("doc_id"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_budget_stream")
+    val dir = tempDir("graft_budget_stream")
     // ONE file per half (a half split across parts would arrive in
     // arbitrary bucket order and legitimately diverge from the batch
     // prefix); explicit mtimes pin the micro-batch order
     docs.where(bucket < 500).repartition(1).write.parquet(s"$dir/p0")
     docs.where(bucket >= 500).repartition(1).write.parquet(s"$dir/p1")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_budget_src")
+    val srcDir = tempDir("graft_budget_src")
     var n = 0
     Seq("p0", "p1").foreach { p =>
       java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$p"))
@@ -81,12 +81,12 @@ class StatefulStreamsSpec extends SparkSpec {
     val mid = events.agg(
       // BOUNDED: single-row median timestamp aggregate (test-only)
       expr("percentile_approx(unix_micros(ts), 0.5)")).collect()(0).getLong(0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr_stream")
+    val dir = tempDir("graft_attr_stream")
     events.where(unix_micros(col("ts")) < mid).repartition(1)
       .write.parquet(s"$dir/p0")
     events.where(unix_micros(col("ts")) >= mid).repartition(1)
       .write.parquet(s"$dir/p1")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_attr_src")
+    val srcDir = tempDir("graft_attr_src")
     var n = 0
     Seq("p0", "p1").foreach { p =>
       java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$p"))
@@ -125,10 +125,10 @@ class StatefulStreamsSpec extends SparkSpec {
     // split the corpus into two parquet files and force one file per
     // micro-batch, so matches must cross BATCH boundaries through the
     // bucket state (not just within one invocation)
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardup_stream")
+    val dir = tempDir("graft_neardup_stream")
     docs.where(col("doc_id") % 2 === 0).write.parquet(s"$dir/p0")
     docs.where(col("doc_id") % 2 === 1).write.parquet(s"$dir/p1")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_neardup_src")
+    val srcDir = tempDir("graft_neardup_src")
     var n = 0
     Seq("p0", "p1").foreach { p =>
       java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$p"))
@@ -183,10 +183,10 @@ class StatefulStreamsSpec extends SparkSpec {
     // split by id parity and force one file per micro-batch: a dup
     // whose FIRST occurrence arrived in batch 1 must still flag in
     // batch 2, through the seen-key state
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_stream")
+    val dir = tempDir("graft_ingest_stream")
     docs.where(col("doc_id") % 2 === 0).repartition(1).write.parquet(s"$dir/p0")
     docs.where(col("doc_id") % 2 === 1).repartition(1).write.parquet(s"$dir/p1")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ingest_src")
+    val srcDir = tempDir("graft_ingest_src")
     var n = 0
     Seq("p0", "p1").foreach { p =>
       java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$p"))
@@ -259,12 +259,12 @@ class StatefulStreamsSpec extends SparkSpec {
     // batch boundary through the per-user state
     val mid = ev.select(expr("percentile(unix_micros(ts), 0.5)"))
       .head.getDouble(0).toLong
-    val dir = java.nio.file.Files.createTempDirectory("graft_cep_stream")
+    val dir = tempDir("graft_cep_stream")
     // one file per half: within a micro-batch the state fn sorts by
     // (ts, id); ACROSS batches arrival order must follow event time
     ev.where(unix_micros(col("ts")) <= mid).repartition(1).write.parquet(s"$dir/p0")
     ev.where(unix_micros(col("ts")) > mid).repartition(1).write.parquet(s"$dir/p1")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_cep_src")
+    val srcDir = tempDir("graft_cep_src")
     var n = 0
     Seq("p0", "p1").foreach { p =>
       java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$p"))
@@ -308,10 +308,10 @@ class StatefulStreamsSpec extends SparkSpec {
     // boundary through the per-user state
     val mid = ev.select(expr("percentile(unix_micros(ts), 0.5)"))
       .head.getDouble(0).toLong
-    val dir = java.nio.file.Files.createTempDirectory("graft_anom_stream")
+    val dir = tempDir("graft_anom_stream")
     ev.where(unix_micros(col("ts")) <= mid).repartition(1).write.parquet(s"$dir/p0")
     ev.where(unix_micros(col("ts")) > mid).repartition(1).write.parquet(s"$dir/p1")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_anom_src")
+    val srcDir = tempDir("graft_anom_src")
     var n = 0
     Seq("p0", "p1").foreach { p =>
       java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$p"))
@@ -348,14 +348,13 @@ class StatefulStreamsSpec extends SparkSpec {
     // micro-batches; file order is whatever the source lists, and the
     // final state must be identical anyway (newer-wins merge)
     val ev = graft.core.Tables.load(spark, sf001, "events")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_cdc_src").toString
+    val srcDir = tempDir("graft_cdc_src").toString
     ev.repartition(5).write.mode("overwrite").parquet(srcDir)
     val batch = Streams.cdcCurrentState(ev)
       .as[(Long, java.sql.Timestamp, String, Double, Long)]
       .collect().toSet
     Seq(1, 3).foreach { mfpt =>
-      val stateDir = java.nio.file.Files
-        .createTempDirectory(s"graft_cdc_state_$mfpt").toString
+      val stateDir = tempDir(s"graft_cdc_state_$mfpt").toString
       val fin = Streams.cdcApplyStream(spark, srcDir, stateDir,
           maxFilesPerTrigger = mfpt)
         .as[(Long, java.sql.Timestamp, String, Double, Long)]
@@ -408,7 +407,7 @@ class StatefulStreamsSpec extends SparkSpec {
       op: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : Seq[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.streaming.Trigger
-    val base = java.nio.file.Files.createTempDirectory("graft_ttl").toString
+    val base = tempDir("graft_ttl").toString
     val (src, ckpt, out) = (s"$base/src", s"$base/ckpt", s"$base/out")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
     phases.zipWithIndex.foreach { case (rows, seq) =>

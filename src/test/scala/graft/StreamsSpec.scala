@@ -17,7 +17,7 @@ class StreamsSpec extends SparkSpec {
       .orderBy("bucket", "event_type").collect()
 
     // file streaming source wants a directory; stage the single file
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val dir = tempDir("graft_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -38,7 +38,7 @@ class StreamsSpec extends SparkSpec {
     val batch = Streams.slidingTypeCounts(Tables.load(spark, sf001, "events"))
       .orderBy("window_start", "event_type").collect()
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_sl")
+    val dir = tempDir("graft_stream_sl")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -58,7 +58,7 @@ class StreamsSpec extends SparkSpec {
     val batch = Streams.dedupFirstPerKey(Tables.load(spark, sf001, "events"))
       .orderBy("bucket", "user_id", "event_type").collect()
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_dd")
+    val dir = tempDir("graft_stream_dd")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -82,7 +82,7 @@ class StreamsSpec extends SparkSpec {
       .orderBy("click_id", "purchase_id").collect()
     assert(batch.nonEmpty)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_attr")
+    val dir = tempDir("graft_stream_attr")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -110,7 +110,7 @@ class StreamsSpec extends SparkSpec {
       .orderBy("window_start").collect()
       .map(r => r.getTimestamp(0) -> (r.getLong(1), r.getLong(2))).toMap
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_au")
+    val dir = tempDir("graft_stream_au")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf001/events.parquet"),
       dir.resolve("events.parquet"))

@@ -146,7 +146,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("footer schema equals inference on a partitioned Spark-written directory") {
-    val out = java.nio.file.Files.createTempDirectory("graft_tables").resolve("ev").toString
+    val out = tempDir("graft_tables").resolve("ev").toString
     Tables.load(spark, sf001, "events").write.partitionBy("event_type").parquet(out)
     val got = Tables.readParquet(spark, out)
     assert(got.schema == spark.read.parquet(out).schema)
@@ -163,8 +163,8 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a directory without parquet data files fails naming the path") {
-    val empty = java.nio.file.Files.createTempDirectory("graft_empty")
-    val onlyMarker = java.nio.file.Files.createTempDirectory("graft_marker")
+    val empty = tempDir("graft_empty")
+    val onlyMarker = tempDir("graft_marker")
     java.nio.file.Files.createFile(onlyMarker.resolve("_SUCCESS"))
     Seq(empty, onlyMarker).map(_.toString).foreach { d =>
       val e = intercept[IllegalArgumentException](Tables.readParquet(spark, d))
