@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -270,53 +270,76 @@ object Clustering {
     * local frame, or None when the point set is not dimension-sized.
     *
     * Same adaptive rationale as [[DriverMaxEdges]] one level up: a
-    * point set whose size ([[knownBytes]]) is within
-    * `spark.sql.autoBroadcastJoinThreshold` (Spark's own bound for a
-    * broadcastable side; -1 turns this path off as it turns off
-    * broadcast joins) is fetched in ONE bounded job and clustered in
-    * memory, instead of the ~20 jobs of the distributed ε-graph. It
-    * computes exactly what [[distributed]] returns:
+    * point set within `spark.sql.autoBroadcastJoinThreshold` (Spark's
+    * own bound for a broadcastable side; -1 turns this path off as it
+    * turns off broadcast joins) is fetched in ONE bounded job and
+    * clustered in memory, instead of the ~20 jobs of the distributed
+    * ε-graph. The size is the optimizer's estimate, except for a
+    * projection of one materialized checkpoint (ep2's centroids): the
+    * estimate such a frame inherits from its plan can overstate it by
+    * orders of magnitude (24 GiB for ep2's 2,000 centroids: without CBO
+    * an inner join's estimate is the product of its sides), while its
+    * rows are stored, so the fetch reads at most the bound and stops.
+    * Every fetch is bounded by the threshold in rows of Spark's own row
+    * size, and a fetch past that bound goes to the distributed path.
+    * It computes exactly what [[distributed]] returns:
     *   - cells `floor(v / eps)` of the coordinate as a double; pairs
     *     from the 3×3 neighbouring cells with `id_a != id_b` and
     *     `(xa-xb)²+(ya-yb)² <= eps²` in the coordinates' own
-    *     arithmetic (long, overflow-checked as ANSI Catalyst does, or
-    *     double; a long sum is widened to double for the comparison);
+    *     arithmetic (long, overflow-checked when ANSI mode is on and
+    *     wrapping when it is off, as Catalyst's, or double; a long sum
+    *     is widened to double for the comparison);
     *   - core = degree ≥ minSamples - 1, clusters = components of the
     *     core-core pairs ([[driverUnionFind]]), borders = min label of
     *     their core neighbours, noise dropped;
     *   - a NULL id or coordinate never pairs; with minSamples ≤ 1 every
     *     row is a node, so such a row labels itself (NULL id -> NULL).
     * Integral ids and long or double coordinates only (the arithmetic
-    * reproduced here); the distributed path takes every other input, a
-    * fetch past [[DriverMaxEdges]] rows and a grid past
-    * [[DriverMaxEdges]] candidate pairs (a dense blob). */
+    * reproduced here); the distributed path takes every other input and
+    * a grid past [[DriverMaxEdges]] candidate pairs (a dense blob). */
   private def onDriver(pts: DataFrame, eps: Double, minSamples: Int): Option[DataFrame] = {
     val Array(idType, xType, yType) = pts.schema.fields.map(_.dataType)
     val coord = (t: DataType) => t == LongType || t == DoubleType
     val spark = pts.sparkSession
-    if (!integral(idType) || !coord(xType) || !coord(yType) || !(eps > 0) ||
-        knownBytes(pts) > spark.sessionState.conf.autoBroadcastJoinThreshold) return None
-    // one partition, so the limit is one job whatever the input's width
-    // BOUNDED: at most DriverMaxEdges + 1 rows of (id, x, y)
-    val rows = pts.coalesce(1).limit(DriverMaxEdges.toInt + 1).collect()
-    if (rows.length > DriverMaxEdges) return None
-
-    val ids = rows.map(r => if (r.isNullAt(0)) 0L else r.get(0).asInstanceOf[Number].longValue)
-    def sqLong(k: Int, a: Int, b: Int) = {
-      val d = Math.subtractExact(rows(a).getLong(k), rows(b).getLong(k)); Math.multiplyExact(d, d)
+    val conf = spark.sessionState.conf
+    val threshold = conf.autoBroadcastJoinThreshold
+    val plan = pts.queryExecution.optimizedPlan
+    val stored = plan match {
+      case Project(_, r: LogicalRDD) => r.rdd.isCheckpointed
+      case r: LogicalRDD => r.rdd.isCheckpointed
+      case _ => false
     }
+    if (!integral(idType) || !coord(xType) || !coord(yType) || !(eps > 0) || threshold < 0 ||
+        !stored && plan.stats.sizeInBytes > threshold) return None
+    // 8 bytes of row overhead plus each column's default size: the row
+    // width Spark's size estimates use
+    val maxRows = math.min(DriverMaxEdges, threshold / (8 + pts.schema.map(_.dataType.defaultSize).sum))
+    // one partition, so the limit is one job whatever the input's width
+    // BOUNDED: at most maxRows + 1 (≤ DriverMaxEdges + 1) rows of (id, x, y)
+    val rows = pts.coalesce(1).limit(maxRows.toInt + 1).collect()
+    if (rows.length > maxRows) return None
+
+    // Catalyst's long arithmetic: overflow-checked under ANSI, else wrapping
+    val ansi = conf.ansiEnabled
+    def add(a: Long, b: Long) = if (ansi) Math.addExact(a, b) else a + b
+    def sqLong(k: Int, a: Int, b: Int) = {
+      val (u, v) = (rows(a).getLong(k), rows(b).getLong(k))
+      val d = if (ansi) Math.subtractExact(u, v) else u - v
+      if (ansi) Math.multiplyExact(d, d) else d * d
+    }
+    val ids = rows.map(r => if (r.isNullAt(0)) 0L else r.get(0).asInstanceOf[Number].longValue)
     def sq(t: DataType, k: Int, a: Int, b: Int): Double =
       if (t == LongType) sqLong(k, a, b).toDouble
       else { val d = rows(a).getDouble(k) - rows(b).getDouble(k); d * d }
     def d2(a: Int, b: Int): Double =
-      if (xType == LongType && yType == LongType) Math.addExact(sqLong(1, a, b), sqLong(2, a, b)).toDouble
+      if (xType == LongType && yType == LongType) add(sqLong(1, a, b), sqLong(2, a, b)).toDouble
       else sq(xType, 1, a, b) + sq(yType, 2, a, b)
     def cell(k: Int, i: Int) = math.floor(rows(i).get(k).asInstanceOf[Number].doubleValue / eps).toLong
     val cells = rows.indices.filter(i => !(0 to 2).exists(rows(i).isNullAt))
       .groupBy(i => (cell(1, i), cell(2, i)))
 
     def around(c: (Long, Long)) = for (sx <- -1L to 1L; sy <- -1L to 1L)
-      yield cells.getOrElse((Math.addExact(c._1, sx), Math.addExact(c._2, sy)), IndexedSeq.empty)
+      yield cells.getOrElse((add(c._1, sx), add(c._2, sy)), IndexedSeq.empty)
     // the candidate pairs bound the driver's work and the ε-pairs: a
     // dense blob goes to the distributed path before any is computed
     val candidates = cells.iterator.map { case (c, as) => as.size.toLong * around(c).map(_.size).sum }.sum
@@ -347,25 +370,6 @@ object Clustering {
     val schema = StructType(Seq(StructField("_id", LongType), StructField("_label", LongType)))
     Some(spark.createDataFrame(out.asJava, schema)
       .select(col("_id").cast(idType).as("_id"), col("_label").cast(idType).as("_label")))
-  }
-
-  /** The bytes `df` holds as far as the driver knows without a job:
-    * the optimizer's estimate, or, for a projection or filter of one
-    * materialized checkpoint (ep2's centroids), the checkpoint's stored
-    * size. Without CBO the estimate a checkpoint inherits from its plan
-    * takes an inner join's size as the product of its sides, so it can
-    * overstate the rows by orders of magnitude (24 GiB for ep2's 2,000
-    * centroids); the stored size is a measured one, as AQE's runtime
-    * statistics are. */
-  private def knownBytes(df: DataFrame): BigInt = {
-    val plan = df.queryExecution.optimizedPlan
-    val stored = plan match {
-      case PhysicalOperation(_, _, r: LogicalRDD) =>
-        df.sparkSession.sparkContext.getRDDStorageInfo.find(_.id == r.rdd.id)
-          .map(i => BigInt(i.memSize + i.diskSize))
-      case _ => None
-    }
-    stored.getOrElse(plan.stats.sizeInBytes)
   }
 
   /** The scale path: the ε-graph as a cell-bucketed self-join, core

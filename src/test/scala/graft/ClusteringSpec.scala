@@ -201,6 +201,60 @@ class ClusteringSpec extends SparkSpec {
     for (minSamples <- Seq(1, 2))
       checkFrame(_.createDataFrame(pts).toDF("id", "x", "y"), eps = 1.0, minSamples)
   }
+
+  /** A join's eager checkpoint: its estimate is the product of the
+    * join's sides, far above its stored rows. */
+  private def checkpointedJoin(session: SparkSession, n: Int): DataFrame = {
+    import session.implicits._
+    val rnd = new scala.util.Random(23)
+    val coords = (0L until n.toLong).map(i => (i, rnd.nextDouble() * 60, rnd.nextDouble() * 60))
+      .toDF("id", "x", "y")
+    (0L until n.toLong).toDF("id").join(coords, "id").localCheckpoint()
+  }
+
+  test("a checkpointed join whose estimate exceeds the threshold is clustered on the driver") {
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val pts = checkpointedJoin(spark, 400)
+    assert(pts.queryExecution.optimizedPlan.stats.sizeInBytes > threshold,
+      "the checkpoint carries the join's inflated estimate")
+    checkFrame(checkpointedJoin(_, 400), eps = 3.0, minSamples = 2)
+  }
+
+  test("the driver fetch is bounded by the threshold in rows: past it, the distributed path") {
+    // 32 bytes per (long, double, double) row: a bound of 50 rows
+    val small = spark.newSession()
+    small.conf.set("spark.sql.autoBroadcastJoinThreshold", (32 * 50).toString)
+    for ((n, local) <- Seq(40 -> true, 60 -> false)) {
+      val pts = checkpointedJoin(small, n)
+      val exp = bruteDbscan(pts.collect().toSeq.map(r =>
+        (Some(r.getLong(0)), Some(r.getDouble(1)), Some(r.getDouble(2)))), eps = 8.0, minSamples = 2)
+      val out = Clustering.dbscan(pts, "id", "x", "y", eps = 8.0, minSamples = 2)
+      assert(out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation] == local, s"$n rows")
+      val got = out.collect().toSeq.map(r => (Option(r.getLong(0)), Option(r.getLong(1)))).sorted
+      assert(got == exp, s"$n rows")
+    }
+  }
+
+  test("long coordinates whose squares overflow: ANSI on, both paths fail; ANSI off, both wrap alike") {
+    // 6e18 apart in neighbouring cells of eps = 4e18: the square overflows
+    // a long; wrapped, any long is <= eps², so the two points pair
+    val pts = Seq((1L, -3000000000000000000L, 0L), (2L, 3000000000000000000L, 0L))
+    def run(session: SparkSession) =
+      Clustering.dbscan(session.createDataFrame(pts).toDF("id", "x", "y"), "id", "x", "y", 4e18, 2)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (session <- Seq(spark, noBroadcast)) {
+      val e = intercept[Exception](run(session))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), e)
+    }
+    val off = spark.newSession()
+    off.conf.set("spark.sql.ansi.enabled", "false")
+    val offDistributed = off.newSession()
+    offDistributed.conf.set("spark.sql.ansi.enabled", "false")
+    offDistributed.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    assert(run(off) == Map(1L -> 1L, 2L -> 1L))
+    assert(run(offDistributed) == Map(1L -> 1L, 2L -> 1L))
+  }
 }
 
 class GraphSpec extends SparkSpec {
