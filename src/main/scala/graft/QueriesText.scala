@@ -1062,9 +1062,13 @@ object QueriesText {
     * stage, and only bloom HITS pay the exact content-key join. No
     * false negatives by construction; nBits auto-scales
     * ([[Dedup.bloomBitsFor]], ~16 bits/element) from the parquet
-    * footer count, and the GENERATED oracle mirrors the salted-md5
-    * bit positions (hex-char fold == Spark's conv) and the
-    * positions-set membership exactly. */
+    * footer count ([[ddBloomBits]], shared by the query and its
+    * GENERATED oracle), which mirrors the salted-md5 bit positions
+    * (hex-char fold == Spark's conv) and the positions-set membership
+    * exactly. */
+  private def ddBloomBits(s: SparkSession, dir: String): Int =
+    Dedup.bloomBitsFor(graft.core.Tables.parquetRowCount(s, dir, "documents"))
+
   private val ddBloom = Q(
     "dd_bloom_incremental",
     None,
@@ -1073,13 +1077,11 @@ object QueriesText {
         .withColumn("_bucket", Text.sampleBucket(col("doc_id")))
       Dedup.bloomIncremental(
           d.where(col("_bucket") >= 100), d.where(col("_bucket") < 100),
-          "doc_id", "text",
-          nHint = graft.core.Tables.parquetRowCount(s, dir, "documents"))
+          "doc_id", "text", nBits = ddBloomBits(s, dir))
         .orderBy("doc_id")
     },
     sqlGen = Some { (s, dir) =>
-      val nBits = Dedup.bloomBitsFor(
-        graft.core.Tables.parquetRowCount(s, dir, "documents"))
+      val nBits = ddBloomBits(s, dir)
       def pos(j: Int) = s"(${hex6Sql(s"md5('$j:' || t)")} % $nBits)"
       s"""WITH base AS (SELECT doc_id, text,
               ${Text.sampleBucketSql("doc_id")} AS bucket FROM documents),
@@ -1867,6 +1869,12 @@ object QueriesText {
     Vectors.planesFor(
       graft.core.Tables.parquetRowCount(s, dir, "embeddings"), 16)
 
+  /** [[embPlanes]] at the NSW bucket target ([[Vectors.Nsw]]), for
+    * the graph index's INIT tables and its generated oracle. */
+  private def nswPlanes(s: SparkSession, dir: String): Int =
+    Vectors.planesFor(
+      graft.core.Tables.parquetRowCount(s, dir, "embeddings"), Vectors.Nsw.BucketTarget)
+
   /** Auto-scaled IVF coarse-cell count for the embeddings table
     * (nlist ≈ √n from footer row counts — [[Vectors.cellsFor]]);
     * shared by the IVF/IVF-PQ query fns and their generated oracles
@@ -1976,18 +1984,14 @@ object QueriesText {
     (s, dir) => {
       val e = t(s, dir, "embeddings")
       // planes auto-scale with the corpus (O(1) bucket occupancy —
-      // the lshTopK scale rule); the exact row count comes from the
-      // parquet FOOTERS (driver-side metadata, no Spark job) so the
-      // generated oracle derives the SAME plane count
+      // the lshTopK scale rule) from the parquet FOOTER count
+      // (driver-side metadata, no Spark job): the generated oracle
+      // uses the SAME plane count
       Vectors.mipsTopK(e, "vec_id", "embedding",
-          dim = 64, k = 3, tables = 8,
-          nHint = graft.core.Tables.parquetRowCount(s, dir, "embeddings"))
+          dim = 64, k = 3, planes = embPlanes(s, dir), tables = 8)
         .orderBy(col("qid"), col("dot").desc, col("cid"))
     },
-    sqlGen = Some { (s, dir) =>
-      mipsSql(Vectors.planesFor(
-        graft.core.Tables.parquetRowCount(s, dir, "embeddings"), 16))
-    })
+    sqlGen = Some { (s, dir) => mipsSql(embPlanes(s, dir)) })
 
   /** Hyperplane-key CTE rows over an arbitrary source CTE whose
     * `vec` column is ALREADY a DOUBLE list (the hashed-TF pipelines)
@@ -2067,23 +2071,25 @@ object QueriesText {
       .select(col("doc_id").as("cdoc"), col("chunk_idx"),
         Text.hashedTf(col("chunk_text"), 64).as("cv"))
 
-  /** Chunk-count HINT for plane auto-scaling, derived WITHOUT a
-    * Spark job: each doc yields ceil(max(nToks,1)/stride) chunks, so
+  /** Auto-scaled planes for the ep8 chunk index, from a chunk-count
+    * estimate derived WITHOUT a Spark job: each doc yields
+    * ceil(max(nToks,1)/stride) chunks, so
     * total chunks ≈ docCount (the per-doc partial window) + total
     * tokens / stride. Both terms come from parquet FOOTERS — row
     * count plus the text column's uncompressed byte size (÷ ~6
-    * bytes/token) — so the hint scales with CONTENT volume: corpus
+    * bytes/token) — so the estimate scales with CONTENT volume: corpus
     * growth from LONGER docs grows it too (ADVICE r12: the old
     * rowCount×window/stride hint was doc-length-blind and
     * under-provisioned planes). planesFor is log2-scaled, so an
-    * order-of-magnitude-correct hint gives the same plane count as
-    * the exact chunk count; the oracle generator uses the SAME hint,
-    * so Spark/oracle plane parity holds by construction. */
-  private def ep8ChunkHint(s: SparkSession, dir: String): Long = {
+    * order-of-magnitude-correct estimate gives the same plane count
+    * as the exact chunk count; the query fn and the oracle generator
+    * both read these planes, so Spark/oracle plane parity holds by
+    * construction. */
+  private def ep8Planes(s: SparkSession, dir: String): Int = {
     val docs = graft.core.Tables.parquetRowCount(s, dir, "documents")
     val textBytes =
       graft.core.Tables.parquetColumnBytes(s, dir, "documents", "text")
-    docs + textBytes / (6L * 48L)
+    Vectors.planesFor(docs + textBytes / (6L * 48L), 16)
   }
 
   /** X-EP8: RAG indexing + retrieval composite — documents chunk into
@@ -2104,12 +2110,12 @@ object QueriesText {
       val qs = docs.where(col("doc_id") % 25 === 0)
         .select(col("doc_id").as("qid"), Text.hashedTf(col("text"), 64).as("qv"))
       Vectors.ragRetrieveTopK(qs, "qid", "qv", chunks, Seq("cdoc", "chunk_idx"),
-          "cv", dim = 64, k = 3, nHint = ep8ChunkHint(s, dir),
+          "cv", dim = 64, k = 3, planes = ep8Planes(s, dir),
           selfExcludeCol = Some("cdoc"))
         .orderBy(col("qid"), col("cosine").desc, col("cdoc"), col("chunk_idx"))
     },
     sqlGen = Some { (s, dir) =>
-      ep8Sql(Vectors.planesFor(ep8ChunkHint(s, dir), 16))
+      ep8Sql(ep8Planes(s, dir))
     })
 
   /** [[lshKeyedRowsSql]] with the label column carried through — the
@@ -2307,10 +2313,10 @@ object QueriesText {
 
   /** LSH-bucketed ANN: multi-table OR-banding with corpus-scaled
     * planes, so within-bucket candidates per doc stay O(1) in corpus
-    * size (VERDICT r01 #3; auto-scaling covered by lshTopK defaults +
-    * LshScalingSpec). Registry queries auto-scale planes from the
-    * parquet footer row count and GENERATE the oracle at the same
-    * count (r13 — the r01–r12 pinned planes=6 measured honest k=16
+    * size (VERDICT r01 #3; occupancy scaling covered by ScaleSpec).
+    * Registry queries auto-scale planes from the parquet footer row
+    * count ([[embPlanes]]) and GENERATE the oracle at the same count
+    * (r13 — the r01–r12 pinned planes=6 measured honest k=16
     * ratios of 10–14 on this family): the ±1 hyperplane weights are
     * deterministic constants, inlined into the SQL as literal
     * arrays — bucketing, OR-dedup, scoring and ranking all
@@ -2320,8 +2326,7 @@ object QueriesText {
     None,
     (s, dir) =>
       Vectors.lshTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
-          dim = 64, k = 3, tables = 8,
-          nHint = graft.core.Tables.parquetRowCount(s, dir, "embeddings"))
+          dim = 64, k = 3, planes = embPlanes(s, dir), tables = 8)
         .orderBy(col("qid"), col("cosine").desc, col("cid")),
     sqlGen = Some { (s, dir) =>
       s"""${lshTopkSql(planes = embPlanes(s, dir), tables = 8, dim = 64, k = 3)}
@@ -2381,8 +2386,7 @@ object QueriesText {
       // ss_recall_methods queryPred rationale, r15); the post-filter
       // stays as a no-op guard
       val lsh = Vectors.lshTopK(e, "vec_id", "embedding",
-          dim = 64, k = 3, tables = 8,
-          nHint = graft.core.Tables.parquetRowCount(s, dir, "embeddings"),
+          dim = 64, k = 3, planes = embPlanes(s, dir), tables = 8,
           queryPred = Some(id => id % 20 === 0))
         .where(col("qid") % 20 === 0)
         .select(col("qid"), col("cid").as("_lcid"))
@@ -2481,7 +2485,6 @@ object QueriesText {
     None,
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val n = graft.core.Tables.parquetRowCount(s, dir, "embeddings")
       val cents = Vectors.trainIvfCentroids(e, "embedding",
         nCentroids = embCells(s, dir))
       def ranked(df: org.apache.spark.sql.DataFrame, as: String) = {
@@ -2490,7 +2493,7 @@ object QueriesText {
         df.select(col("qid"), col("cid"), row_number().over(w).as(as))
       }
       val l = ranked(Vectors.lshTopK(e, "vec_id", "embedding",
-        dim = 64, k = 10, tables = 8, nHint = n), "r_lsh")
+        dim = 64, k = 10, planes = embPlanes(s, dir), tables = 8), "r_lsh")
       val iv = ranked(Vectors.ivfTopK(e, "vec_id", "embedding", cents,
         nProbe = Vectors.Ivf.NProbe, k = 10), "r_ivf")
       val fused = l.join(iv, Seq("qid", "cid"), "full_outer")
@@ -2560,13 +2563,10 @@ object QueriesText {
     None,
     (s, dir) =>
       Vectors.nswTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
-          dim = 64, k = 3,
-          nHint = graft.core.Tables.parquetRowCount(s, dir, "embeddings"))
+          dim = 64, k = 3, planes = nswPlanes(s, dir))
         .orderBy(col("qid"), col("cosine").desc, col("cid")),
     sqlGen = Some { (s, dir) =>
-      s"""${nswTopkSql(Vectors.planesFor(
-             graft.core.Tables.parquetRowCount(s, dir, "embeddings"),
-             Vectors.Nsw.BucketTarget))}
+      s"""${nswTopkSql(nswPlanes(s, dir))}
           ORDER BY qid, cosine DESC, cid"""
     })
 
@@ -2674,8 +2674,7 @@ object QueriesText {
       // guard documenting the grading contract.
       val evalQs = Some((id: org.apache.spark.sql.Column) => id % 20 === 0)
       val methods = top3("lsh", Vectors.lshTopK(e, "vec_id", "embedding",
-          dim = 64, k = 3, tables = 8,
-          nHint = graft.core.Tables.parquetRowCount(s, dir, "embeddings"),
+          dim = 64, k = 3, planes = embPlanes(s, dir), tables = 8,
           queryPred = evalQs))
         .unionByName(top3("ivf", Vectors.ivfTopK(e, "vec_id", "embedding",
           cents, nProbe = Vectors.Ivf.NProbe, k = 3, queryPred = evalQs)))
@@ -2683,9 +2682,7 @@ object QueriesText {
           cents, cbs, nProbe = Vectors.Ivf.PqNProbe, k = 3, rerank = Vectors.Ivf.Rerank,
           queryPred = evalQs)))
         .unionByName(top3("hnsw", Vectors.nswTopK(e, "vec_id", "embedding",
-          dim = 64, k = 3,
-          nHint = graft.core.Tables.parquetRowCount(s, dir, "embeddings"),
-          queryPred = evalQs)))
+          dim = 64, k = 3, planes = nswPlanes(s, dir), queryPred = evalQs)))
       // static method list exploded onto brute (narrow op) — a cross
       // join here plans CartesianProduct, which PlanAudit forbids
       val hits = brute.withColumn("method",
@@ -2720,9 +2717,7 @@ object QueriesText {
           lsht AS (${lshTopkSql(planes = embPlanes(s, dir), tables = 8, dim = 64, k = 3)}),
           ivft AS (${ivfTopkSql(cents, nProbe = Vectors.Ivf.NProbe, k = 3)}),
           pqt AS (${ivfPqTopkSql(cents, cbs, nProbe = Vectors.Ivf.PqNProbe, k = 3, rerank = Vectors.Ivf.Rerank)}),
-          hnswt AS (${nswTopkSql(Vectors.planesFor(
-            graft.core.Tables.parquetRowCount(s, dir, "embeddings"),
-            Vectors.Nsw.BucketTarget))}),
+          hnswt AS (${nswTopkSql(nswPlanes(s, dir))}),
           methods AS (
             SELECT 'lsh' AS method, qid, cid FROM lsht WHERE qid % 20 = 0
             UNION ALL

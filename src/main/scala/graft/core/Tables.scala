@@ -210,14 +210,6 @@ object Tables {
     df.select(cols.toIndexedSeq: _*)
   }
 
-  /** Row count of `df` for sizing an operator's parameters: the
-    * caller's hint when positive, else the optimizer's row-count
-    * statistic, else one count() job — a full extra scan, so hot
-    * operators take a hint. */
-  def rowCount(df: DataFrame, nHint: Long = -1L): Long =
-    if (nHint > 0) nHint
-    else df.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong).getOrElse(df.count())
-
   /** Repartition for CPU-heavy narrow compute with an EXPLICIT
     * partition count. `df.repartition(col)` alone lets AQE coalesce
     * the exchange back to one partition when the data is small in

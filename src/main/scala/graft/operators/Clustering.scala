@@ -62,10 +62,13 @@ object Clustering {
     * (`_a`, `_b`) — pass both directions for an undirected graph.
     * Returns (_id, _label) with _label = min node id of the
     * component. Shared by DBSCAN (core-graph clusters) and
-    * near-dedup (duplicate groups).
+    * near-dedup (duplicate groups). Integral ids and at most
+    * [[DriverMaxEdges]] canonical edges go through a driver
+    * union-find unless `spark.sql.autoBroadcastJoinThreshold` is -1
+    * (the switch that also turns off broadcast joins and DBSCAN's
+    * driver path); everything else takes the distributed star rounds.
     */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                          driverMaxEdges: Long = DriverMaxEdges): DataFrame = {
+  def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val idType = nodes.schema.fields.find(_.name == "_id").get.dataType
 
     // Canonicalize FIRST — orientation _a > _b, self-loops stripped —
@@ -99,15 +102,15 @@ object Clustering {
     // pull (the raw checkpointed rows), so the 64 MB fetch-volume
     // contract is unchanged; a heavily-duplicated edge set merely
     // chooses the distributed path a little earlier — the safe side.
-    val nEdges = e0.count()
-
-    if (integral(idType) && nEdges <= driverMaxEdges) {
+    // With broadcasting off the count is skipped: the rounds run anyway.
+    if (integral(idType) && nodes.sparkSession.sessionState.conf.autoBroadcastJoinThreshold >= 0 &&
+        e0.count() <= DriverMaxEdges) {
       // Below the threshold the whole (two-long-column) edge list is
       // dimension-sized; one O(E α(E)) driver pass beats 3-5 rounds
       // of join+checkpoint fixed latency — same adaptive rationale as
       // a broadcast hash join.
       val fetched = e0
-        // BOUNDED: gated by the nEdges <= driverMaxEdges count above
+        // BOUNDED: gated by the count <= DriverMaxEdges test above
         .select(col("_a").cast(LongType), col("_b").cast(LongType)).collect()
       frames.close() // result below depends only on nodes + broadcast labels
       val labeled = driverUnionFind(fetched.flatMap(r => Array(r.getLong(0), r.getLong(1))))
@@ -255,7 +258,13 @@ object Clustering {
   /** Returns (idCol, cluster) for every non-noise point, `cluster`
     * typed as `idCol`. A dimension-sized point set is clustered on the
     * driver ([[onDriver]]); anything larger takes the distributed
-    * ε-graph ([[distributed]]). Both return the same rows. */
+    * ε-graph ([[distributed]]). Both return the same rows.
+    *
+    * The distributed path with minSamples > 1 persists its ε-pair and
+    * core-point frames, and the lazy result still reads both, so the
+    * operator cannot free them: they stay cached until the caller
+    * clears the cache (`spark.catalog.clearCache()` or
+    * `Harness.reclaim`). */
   def dbscan(points: DataFrame, idCol: String, xCol: String, yCol: String,
              eps: Double, minSamples: Int): DataFrame = {
     val pts = points.select(col(idCol).as("_id"), col(xCol).as("_x"), col(yCol).as("_y"))

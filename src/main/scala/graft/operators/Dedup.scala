@@ -505,17 +505,16 @@ object Dedup {
     *      no-false-negative property), `false_positive` = hit ∧ ¬dup.
     *
     * Returns one row per batch doc: (id, bloom_hit, is_dup,
-    * false_positive). nBits auto-scales via [[bloomBitsFor]] (a
-    * saturated fixed-size bloom degrades to hit-everything = the
-    * unfiltered join, never to wrong answers). BloomDedupSpec pins
-    * no-false-negatives, forced false positives at a tiny override,
-    * and equality with a join-only reference. */
+    * false_positive). Callers size `nBits` to the corpus with
+    * [[bloomBitsFor]] (the registry from the parquet footer count,
+    * the same value its generated oracle uses); a saturated bloom
+    * degrades to hit-everything = the unfiltered join, never to
+    * wrong answers. BloomDedupSpec pins no-false-negatives, forced
+    * false positives at a tiny `nBits`, and equality with a join-only
+    * reference. */
   def bloomIncremental(existing: DataFrame, batch: DataFrame,
-                       idCol: String, textCol: String, hashes: Int = 4,
-                       nBitsOverride: Int = -1, nHint: Long = -1L): DataFrame = {
-    val nBits =
-      if (nBitsOverride > 0) nBitsOverride
-      else bloomBitsFor(graft.core.Tables.rowCount(existing, nHint))
+                       idCol: String, textCol: String, nBits: Int,
+                       hashes: Int = 4): DataFrame = {
     val words = math.max(1, (nBits + 63) / 64)
     def posCol(c: Column, j: Int): Column =
       (conv(substring(md5(concat(lit(s"$j:"), lower(c))), 1, 6), 16, 10)

@@ -25,14 +25,19 @@ import graft.core.{Det, LoopFrames}
   */
 object Graph {
 
+  /** Rounds between lineage cuts of the iterative operators' loop
+    * frames: a cut is an eager job, so short runs stay one job while
+    * long runs keep their plan depth bounded. */
+  private val CheckpointEvery = 4
+
   /** PageRank with uniform init and damping, `iterations` synchronous
     * rounds. `edges` must carry `src`/`dst` long columns; dangling
     * nodes (no out-edges) keep only the teleport term — for symmetric
     * edge sets (co-occurrence graphs) none exist. Returns
-    * (node, rank). */
+    * (node, rank). The rank frame is cut every [[CheckpointEvery]]
+    * rounds. */
   def pageRank(edges: DataFrame, iterations: Int,
-               damping: Double = 0.85, scale: Int = 12,
-               checkpointEvery: Int = 4): DataFrame = {
+               damping: Double = 0.85, scale: Int = 12): DataFrame = {
     val spark = edges.sparkSession
     // persist, not localCheckpoint, for the STATIC frames (edges,
     // nodes, degree-joined edges): graph-fact-sized, multi-scanned
@@ -50,7 +55,7 @@ object Graph {
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("_deg"))
     val ew = e.join(outdeg, "src").persist(lvl)   // (src, dst, _deg)
     rankRounds(ew, nodes, nodes.withColumn("rank", lit(1.0 / n)),
-      lit((1.0 - damping) / n), damping, scale, iterations, checkpointEvery)
+      lit((1.0 - damping) / n), damping, scale, iterations)
   }
 
   /** The round loop of [[pageRank]] and [[personalizedPageRank]]:
@@ -60,7 +65,7 @@ object Graph {
     * quantized contribution sum. */
   private def rankRounds(ew: DataFrame, base: DataFrame, init: DataFrame,
                          teleport: Column, damping: Double, scale: Int,
-                         iterations: Int, checkpointEvery: Int): DataFrame = {
+                         iterations: Int): DataFrame = {
     val f = math.pow(10, scale)
     val frames = new LoopFrames
     var ranks = init
@@ -77,7 +82,7 @@ object Graph {
       // a checkpoint per round is an eager materialization job each
       // time; lineage only needs cutting every few rounds (long-run
       // plan-depth control), so short runs stay ONE job
-      if (i % checkpointEvery == 0 && i < iterations)
+      if (i % CheckpointEvery == 0 && i < iterations)
         // CP-OK: loop-carried state — lineage GROWS each round and
         // must be cut; the frame is node-sized (narrow), and persist
         // cannot bound plan depth here
@@ -172,9 +177,9 @@ object Graph {
     * float anywhere — so each round mirrors 1:1 in the unrolled SQL
     * ([[labelPropagationSql]]). Scale: a round is one edge⋈labels
     * join + one (node, label) count + one node-keyed window — the
-    * [[pageRank]] iteration shape; unreached nodes stay null. */
-  def labelPropagation(edges: DataFrame, seeds: DataFrame, rounds: Int,
-                       checkpointEvery: Int = 4): DataFrame = {
+    * [[pageRank]] iteration shape; unreached nodes stay null. The
+    * label frame is cut every [[CheckpointEvery]] rounds. */
+  def labelPropagation(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // persist, not localCheckpoint, for the STATIC frames (edges,
     // seeds): graph-fact-sized, rescanned every round, recomputable.
@@ -184,7 +189,7 @@ object Graph {
     // costs an extra exchange per round (measured ~0.3 s/stage floor
     // on the tiny per-round frames)
     // each cut frees the rounds before it: a long loop holds at most
-    // checkpointEvery round frames (ADVICE r12)
+    // CheckpointEvery round frames (ADVICE r12)
     val frames = new LoopFrames
     var cur = frames.keep(seeds.select(col("node"), col("seed_label"),
         col("seed_label").as("label")))
@@ -215,7 +220,7 @@ object Graph {
       cur = frames.keep(cur.join(best, Seq("node"), "left")
         .select(col("node"), col("seed_label"),
           coalesce(col("seed_label"), col("_best"), col("label")).as("label")))
-      if (i % checkpointEvery == 0 && i < rounds)
+      if (i % CheckpointEvery == 0 && i < rounds)
         // CP-OK: loop-carried state — lineage grows each round and
         // must be cut; node-sized (narrow)
         cur = frames.cut(cur)
@@ -229,11 +234,11 @@ object Graph {
     * machinery, determinism recipe (1e-12 floor-quantized
     * contributions, exact decimal sums) and unrolled SQL twin as
     * [[pageRank]]; non-seed nodes start (and teleport) at zero, so
-    * rank measures proximity to the seeds. `seeds` = (node) frame. */
+    * rank measures proximity to the seeds. `seeds` = (node) frame.
+    * The rank frame is cut every [[CheckpointEvery]] rounds. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            iterations: Int, damping: Double = 0.85,
-                           scale: Int = 12,
-                           checkpointEvery: Int = 4): DataFrame = {
+                           scale: Int = 12): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col("src"), col("dst")).persist(lvl)
     val nodes = e.select(col("src").as("node"))
@@ -254,7 +259,7 @@ object Graph {
       marked.select(col("node"),
         when(col("_isSeed"), lit(1.0 / nSeeds)).otherwise(lit(0.0)).as("rank")),
       when(col("_isSeed"), lit((1.0 - damping) / nSeeds)).otherwise(lit(0.0)),
-      damping, scale, iterations, checkpointEvery)
+      damping, scale, iterations)
   }
 
   /** Unrolled SQL twin of [[personalizedPageRank]]: `edgesSql` yields
@@ -306,9 +311,9 @@ object Graph {
     * Each round's edge frame persists (recomputable, spills): it is
     * referenced by the degree aggregate AND next round's join, and
     * an uncached loop frame recomputes geometrically (the
-    * m13_label_prop lesson, r12). */
-  def kcorePeel(edges: DataFrame, k: Int, rounds: Int,
-                checkpointEvery: Int = 4): DataFrame = {
+    * m13_label_prop lesson, r12); it is cut every [[CheckpointEvery]]
+    * rounds. */
+  def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     def degrees(e: DataFrame): DataFrame =
       // ONE scan per degree pass: each edge explodes to both
       // endpoints (a unionAll would scan the cached frame twice)
@@ -334,7 +339,7 @@ object Graph {
       val joined = e.join(side("a"), Seq("a")).join(side("b"), Seq("b"))
         .select(col("a"), col("b"))
       e = if (i < rounds) frames.keep(joined) else joined
-      if (i % checkpointEvery == 0 && i < rounds)
+      if (i % CheckpointEvery == 0 && i < rounds)
         // CP-OK: loop-carried state — lineage grows each round and
         // must be cut; edge-frame-sized
         e = frames.cut(e)

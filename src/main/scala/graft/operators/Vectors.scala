@@ -33,13 +33,6 @@ object Vectors {
   private def lshKeys(vec: Column, dim: Int, planes: Int, tables: Int): Column =
     posexplode(lshTableKeys(vec, dim, planes, tables)).as(Seq("_tbl", "_key"))
 
-  /** Planes per table: the override if set, else auto-scaled to the
-    * row count of `df` ([[Tables.rowCount]]: hint, statistics, count). */
-  private def autoPlanes(df: DataFrame, bucketTarget: Int, planesOverride: Int,
-                         nHint: Long): Int =
-    if (planesOverride > 0) planesOverride
-    else planesFor(Tables.rowCount(df, nHint), bucketTarget)
-
   /** Brute-force cosine top-k: for each query row, the k nearest
     * candidates by (cosine rounded to 6, id) — rounding makes the
     * ranking deterministic across engines/summation orders. */
@@ -485,16 +478,16 @@ object Vectors {
     * `tables` independent hyperplane tables, each keyed by all of its
     * `planes` sign bits; a pair is a candidate if it collides in ANY
     * table (recall is recovered across tables while buckets stay
-    * fine-grained). planes auto-scales with corpus size unless
-    * overridden. Same output shape as [[bruteForceTopK]]; recall
-    * measured in VectorsSpec, occupancy scaling in ScaleSpec. */
+    * fine-grained). Callers size `planes` to the corpus with
+    * [[planesFor]] (the registry from the parquet footer count, the
+    * same value its generated oracle uses); it has no default, since
+    * any fixed plane count is quadratic in n. Same output shape as
+    * [[bruteForceTopK]]; recall measured in VectorsSpec, occupancy
+    * scaling in ScaleSpec. */
   def lshTopK(df: DataFrame, idCol: String, vecCol: String,
-              dim: Int, k: Int, tables: Int = 8, bucketTarget: Int = 16,
-              planesOverride: Int = -1, nHint: Long = -1L,
-              queryPred: Option[Column => Column] = None): DataFrame = {
-    val planes = autoPlanes(df, bucketTarget, planesOverride, nHint)
+              dim: Int, k: Int, planes: Int, tables: Int = 8,
+              queryPred: Option[Column => Column] = None): DataFrame =
     lshTopKKeyed(df, idCol, vecCol, Nil, dim, k, planes, tables, queryPred)
-  }
 
   /** Shared candidate-generation body for [[lshTopK]] and
     * [[lshTopKFiltered]]: spread → table-key posexplode → self-join
@@ -540,15 +533,13 @@ object Vectors {
     * query side here grows with the corpus) — then the compiled
     * exact cosine reranks and a per-query window keeps top-k.
     * `selfExcludeCol` drops candidates originating from the query's
-    * own document (retrieval eval wants OTHER documents' passages). */
+    * own document (retrieval eval wants OTHER documents' passages).
+    * `planes` is sized to the CANDIDATE corpus (the side that grows)
+    * with [[planesFor]]. */
   def ragRetrieveTopK(queries: DataFrame, qIdCol: String, qVecCol: String,
                       cands: DataFrame, cKeyCols: Seq[String], cVecCol: String,
-                      dim: Int, k: Int, tables: Int = 8, bucketTarget: Int = 16,
-                      planesOverride: Int = -1, nHint: Long = -1L,
+                      dim: Int, k: Int, planes: Int, tables: Int = 8,
                       selfExcludeCol: Option[String] = None): DataFrame = {
-    // planes auto-scale with the CANDIDATE corpus size (the side that
-    // grows); override pins them for the static SQL oracle.
-    val planes = autoPlanes(cands, bucketTarget, planesOverride, nHint)
     // vector columns aliased to internal names BEFORE the join (the
     // mipsTopK _qv/_cv discipline) — callers naturally use the same
     // column name on both sides, which would make the post-join
@@ -584,14 +575,10 @@ object Vectors {
     * Scale shape: M² is ONE scalar aggregate riding back as a 1-row
     * broadcast (the allowlisted pattern); everything else is the
     * [[lshTopK]] plan — key posexplode, one exchange on (table,
-    * bucket), per-query window rank. */
+    * bucket), per-query window rank; `planes` is sized to the corpus
+    * with [[planesFor]] as there. */
   def mipsTopK(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-               k: Int, tables: Int = 8, bucketTarget: Int = 16,
-               planesOverride: Int = -1, nHint: Long = -1L): DataFrame = {
-    // planes auto-scale with corpus size (O(1) expected bucket
-    // occupancy — the lshTopK scale path); override pins them for the
-    // static SQL oracle
-    val planes = autoPlanes(df, bucketTarget, planesOverride, nHint)
+               k: Int, planes: Int, tables: Int = 8): DataFrame = {
     // compiled squared norm (r16): dotProduct(v, v) accumulates
     // double(x_i)·double(x_i) left-to-right — the identical IEEE op
     // sequence as the interpreted aggregate(transform(x -> x²)) form
@@ -674,9 +661,10 @@ object Vectors {
     * unrolls finitely:
     *
     *  1. INIT — within-bucket top-`m` neighbors under `initTables`
-    *     hyperplane LSH tables (planes auto-scaled via [[planesFor]]:
-    *     O(1) bucket occupancy ⇒ candidate volume ∝ corpus, never
-    *     all-pairs; the lshTopK scale rule).
+    *     hyperplane LSH tables of `planes` bits (sized with
+    *     [[planesFor]] at [[Nsw.BucketTarget]]: O(1) bucket occupancy
+    *     ⇒ candidate volume ∝ corpus, never all-pairs; the lshTopK
+    *     scale rule).
     *  2. BUILD — `buildRounds` NN-descent rounds: candidates =
     *     neighbors ∪ reverse neighbors ∪ neighbors-of-neighbors
     *     (≤ m + m + m² per node, m constant), exact codegen cosine,
@@ -694,16 +682,13 @@ object Vectors {
     * `ss_recall_methods`. Output shape matches [[lshTopK]]:
     * (qid, cid, cosine round-6, per-query top-k). */
   def nswTopK(df: DataFrame, idCol: String, vecCol: String,
-              dim: Int, k: Int, m: Int = Nsw.M,
+              dim: Int, k: Int, planes: Int, m: Int = Nsw.M,
               buildRounds: Int = Nsw.BuildRounds,
               beam: Int = Nsw.Beam, beamRounds: Int = Nsw.BeamRounds,
               initTables: Int = Nsw.InitTables,
-              bucketTarget: Int = Nsw.BucketTarget, planesOverride: Int = -1,
-              nHint: Long = -1L,
               queryPred: Option[Column => Column] = None): DataFrame = {
     require(beam >= k, s"beam=$beam must be >= k=$k")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val planes = autoPlanes(df, bucketTarget, planesOverride, nHint)
     // (node, vec) scanned twice per scoring round (query + candidate
     // side) across buildRounds+beamRounds+2 rounds — persist once
     // (row-sized, recomputable) instead of 2×rounds source scans

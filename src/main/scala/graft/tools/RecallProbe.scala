@@ -12,6 +12,8 @@ import graft.operators.Vectors
   * Usage: runMain graft.tools.RecallProbe <sfDir> <spec>[;<spec>...]
   *   spec = hnsw:m=8,bt=16,it=3,beam=16,br=3,nr=3
   *        | ivf:np=4  | ivfpq:np=4,rr=20 | lsh:
+  * hnsw's `bt` is the bucket target of its INIT tables: planes =
+  * planesFor(n, bt); lsh runs at planesFor(n, 16), the registry's.
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
@@ -48,12 +50,12 @@ object RecallProbe {
       // the final recall join, not the index cost
       val (r, dt) = graft.Harness.timed(spark)(recall(kind match {
         case "hnsw" => Vectors.nswTopK(e, "vec_id", "embedding", dim = 64, k = 3,
+          planes = Vectors.planesFor(n, p(ps, "bt", Vectors.Nsw.BucketTarget)),
           m = p(ps, "m", Vectors.Nsw.M),
           buildRounds = p(ps, "nr", Vectors.Nsw.BuildRounds),
           beam = p(ps, "beam", Vectors.Nsw.Beam),
           beamRounds = p(ps, "br", Vectors.Nsw.BeamRounds),
-          initTables = p(ps, "it", Vectors.Nsw.InitTables),
-          bucketTarget = p(ps, "bt", Vectors.Nsw.BucketTarget), nHint = n)
+          initTables = p(ps, "it", Vectors.Nsw.InitTables))
         case "ivf" =>
           val cents = Vectors.trainIvfCentroids(e, "embedding",
             nCentroids = Vectors.cellsFor(n))
@@ -68,7 +70,7 @@ object RecallProbe {
             nProbe = p(ps, "np", Vectors.Ivf.NProbe), k = 3,
             rerank = p(ps, "rr", Vectors.Ivf.Rerank))
         case "lsh" => Vectors.lshTopK(e, "vec_id", "embedding",
-          dim = 64, k = 3, tables = 8, nHint = n)
+          dim = 64, k = 3, planes = Vectors.planesFor(n, 16), tables = 8)
       }))
       println(f"[recall] $s%-40s recall=$r%.3f wall=$dt%6.2f s  (n=$n)")
     }

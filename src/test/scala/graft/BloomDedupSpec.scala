@@ -20,7 +20,8 @@ class BloomDedupSpec extends SparkSpec {
       (101L, "existing document number 7 with content"),
       (102L, "EXISTING DOCUMENT NUMBER 20 WITH CONTENT"), // dup after lower()
       (103L, "a genuinely new document")))
-    val out = Dedup.bloomIncremental(existing, batch, "doc_id", "text")
+    val out = Dedup.bloomIncremental(existing, batch, "doc_id", "text",
+        nBits = Dedup.bloomBitsFor(50))
       .orderBy("doc_id").collect()
     val m = out.map(r =>
       r.getLong(0) -> ((r.getBoolean(1), r.getBoolean(2), r.getBoolean(3)))).toMap
@@ -31,7 +32,7 @@ class BloomDedupSpec extends SparkSpec {
   }
 
   test("saturated tiny bloom forces a labeled false positive") {
-    // 200 existing docs × 4 hashes over a 64-bit override saturate the
+    // 200 existing docs × 4 hashes over a 64-bit bloom saturate the
     // filter (md5 is deterministic — this corpus pins every bit), so an
     // unseen batch doc must read hit=true / is_dup=false / fp=true.
     // This is the documented degradation mode: a too-small bloom
@@ -40,7 +41,7 @@ class BloomDedupSpec extends SparkSpec {
     val existing = frame((1L to 200L).map(i => (i, s"filler doc $i")))
     val batch = frame(Seq((900L, "never seen before text")))
     val out = Dedup.bloomIncremental(existing, batch, "doc_id", "text",
-      nBitsOverride = 64).collect()
+      nBits = 64).collect()
     assert(out.length == 1)
     assert(out(0).getBoolean(1), "64-bit bloom with 200 elements must hit")
     assert(!out(0).getBoolean(2))
@@ -51,7 +52,8 @@ class BloomDedupSpec extends SparkSpec {
     val existing = frame((1L to 30L).map(i => (i, s"doc body $i")))
     val batch = frame((1L to 40L).map(i =>
       (1000L + i, if (i <= 10) s"doc body $i" else s"fresh body $i")))
-    val got = Dedup.bloomIncremental(existing, batch, "doc_id", "text")
+    val got = Dedup.bloomIncremental(existing, batch, "doc_id", "text",
+        nBits = Dedup.bloomBitsFor(30))
       .orderBy("doc_id")
       .as[(Long, Boolean, Boolean, Boolean)].collect().toSeq
     assert(got.size == 40)

@@ -11,10 +11,12 @@ class ClusteringSpec extends SparkSpec {
   import spark.implicits._
 
   /** Jobs the distributed DBSCAN starts while it builds its result on
-    * the 400-point minSamples = 2 field below (the query stages of the
-    * ε-pair join and the canonical-edge cut, its count and the edge
-    * collect): the count the operator had before the driver path. */
-  private val DistributedBuildJobs = 15
+    * the 400-point minSamples = 2 field below: the query stages of the
+    * ε-pair join and the canonical-edge cut, then — broadcasting off
+    * sends connectedComponents down its distributed path too — the
+    * deduped-edge and active-node cuts and each star round's cut and
+    * checksum. */
+  private val DistributedBuildJobs = 66
 
   /** Brute-force DBSCAN (same semantics as Clustering.dbscan: core =
     * ≥ minSamples points within eps incl. self; clusters = CCs of the
@@ -61,7 +63,9 @@ class ClusteringSpec extends SparkSpec {
       Option(r.get(1)).map(_.asInstanceOf[Number].doubleValue),
       Option(r.get(2)).map(_.asInstanceOf[Number].doubleValue)))
     val exp = bruteDbscan(pts, eps, minSamples)
-    for ((path, session) <- Seq("driver" -> spark, "distributed" -> noBroadcast)) {
+    // each run's caches are freed (the distributed path leaves its
+    // pair and core frames cached), so no run reads an earlier one's
+    for ((path, session) <- Seq("driver" -> spark, "distributed" -> noBroadcast)) reclaimed {
       val out = Clustering.dbscan(frame(session), "id", "x", "y", eps, minSamples)
       val local = out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
       assert(local == (path == "driver"), s"$path path expected")
@@ -105,16 +109,23 @@ class ClusteringSpec extends SparkSpec {
     check(pts, eps = 1.0, minSamples = 1)
   }
 
+  /** Component labels of `nodes` over both directions of `undirected`,
+    * with frames built in `session`: the driver union-find in `spark`,
+    * the star rounds with broadcasting off. */
+  private def components(session: SparkSession, nodes: Seq[Long],
+                         undirected: Seq[(Long, Long)]): Map[Long, Long] =
+    Clustering.connectedComponents(
+        session.createDataFrame(nodes.map(Tuple1(_))).toDF("_id"),
+        session.createDataFrame(undirected ++ undirected.map(_.swap)).toDF("_a", "_b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("connectedComponents: driver union-find == distributed rounds") {
     // chain, pair, triangle, isolated node; both directions per edge
     val undirected = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
       (20L, 21L), (21L, 22L), (20L, 22L))
-    val edges = (undirected ++ undirected.map(_.swap)).toDF("_a", "_b")
-    val nodes = (Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L, 21L, 22L, 99L)).toDF("_id")
-    val viaDriver = Clustering.connectedComponents(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaRounds = Clustering.connectedComponents(nodes, edges, driverMaxEdges = -1L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L, 21L, 22L, 99L)
+    val viaDriver = components(spark, nodes, undirected)
+    val viaRounds = components(noBroadcast, nodes, undirected)
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L, 99L -> 99L)
     assert(viaDriver == expected)
@@ -130,13 +141,9 @@ class ClusteringSpec extends SparkSpec {
     val chain = (0L until 60L).map(i => (2000L + i, 2000L + i + 1)) :+ ((500L, 2000L))
     val pairs = (0L until 50L).map(i => (5000L + 2 * i, 5001L + 2 * i))
     val undirected = rnd.shuffle(hub ++ chain ++ pairs)
-    val edges = (undirected ++ undirected.map(_.swap)).toDF("_a", "_b")
     val ids = undirected.flatMap(e => Seq(e._1, e._2)).distinct :+ 77777L
-    val nodes = ids.toDF("_id")
-    val viaDriver = Clustering.connectedComponents(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaStars = Clustering.connectedComponents(nodes, edges, driverMaxEdges = -1L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaDriver = components(spark, ids, undirected)
+    val viaStars = components(noBroadcast, ids, undirected)
     assert(viaStars == viaDriver)
     // the hub component's label is its minimum member (the hub id)
     assert(viaStars(1000L) == 500L && viaStars(2060L) == 500L)

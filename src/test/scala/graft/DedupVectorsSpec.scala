@@ -133,6 +133,11 @@ class DedupSpec extends SparkSpec {
 class VectorsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Planes for the sf0.001 embeddings at `bucketTarget`, from their
+    * footer row count: what a registry query passes. */
+  private def embPlanes(bucketTarget: Int): Int =
+    Vectors.planesFor(graft.core.Tables.parquetRowCount(spark, sf001, "embeddings"), bucketTarget)
+
   test("cosine of known vectors") {
     val df = Seq(
       (Array(1.0f, 0.0f), Array(0.0f, 1.0f)),   // orthogonal
@@ -162,7 +167,7 @@ class VectorsSpec extends SparkSpec {
     val q = e.select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val brute = Vectors.bruteForceTopK(q, "qid", "qv", e, "vec_id", "embedding", k = 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-    val lsh = Vectors.lshTopK(e, "vec_id", "embedding", dim = 64, k = 5)
+    val lsh = Vectors.lshTopK(e, "vec_id", "embedding", dim = 64, k = 5, planes = embPlanes(16))
       .select("qid", "cid").as[(Long, Long)].collect().toSet
     val recall = (brute & lsh).size.toDouble / brute.size
     // multi-table OR-banding (8 tables, corpus-scaled planes) on
@@ -176,7 +181,8 @@ class VectorsSpec extends SparkSpec {
     val q = e.select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val brute = Vectors.bruteForceTopK(q, "qid", "qv", e, "vec_id", "embedding", k = 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-    val nsw = Vectors.nswTopK(e, "vec_id", "embedding", dim = 64, k = 5)
+    val nsw = Vectors.nswTopK(e, "vec_id", "embedding", dim = 64, k = 5,
+        planes = embPlanes(Vectors.Nsw.BucketTarget))
       .select("qid", "cid").as[(Long, Long)].collect().toSet
     assert(!nsw.exists(p => p._1 == p._2), "self-pair leaked into NSW top-k")
     // per-query row bound: a window top-k can never over-return
@@ -202,25 +208,24 @@ class VectorsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("qid"), col("cid"), col(df.columns.last))
         .collect().map(_.toString).sorted.toSeq
-    val lshAll = Vectors.lshTopK(e, "vec_id", "embedding", dim = 64, k = 4)
-    val lshSub = Vectors.lshTopK(e, "vec_id", "embedding", dim = 64, k = 4,
-      queryPred = Some(pred))
-    assert(rows(lshSub) == rows(lshAll.where(pred(col("qid")))))
+    // each full run's caches are freed before its filtered twin runs,
+    // so the two are separate computations, not a cache read
+    def same(all: => org.apache.spark.sql.DataFrame, sub: => org.apache.spark.sql.DataFrame) = {
+      val expected = reclaimed(rows(all.where(pred(col("qid")))))
+      assert(reclaimed(rows(sub)) == expected)
+    }
+    same(Vectors.lshTopK(e, "vec_id", "embedding", dim = 64, k = 4, embPlanes(16)),
+      Vectors.lshTopK(e, "vec_id", "embedding", dim = 64, k = 4, embPlanes(16), queryPred = Some(pred)))
     val cents = Vectors.trainIvfCentroids(e, "embedding", nCentroids = 8)
-    val ivfAll = Vectors.ivfTopK(e, "vec_id", "embedding", cents, nProbe = 2, k = 4)
-    val ivfSub = Vectors.ivfTopK(e, "vec_id", "embedding", cents, nProbe = 2, k = 4,
-      queryPred = Some(pred))
-    assert(rows(ivfSub) == rows(ivfAll.where(pred(col("qid")))))
+    same(Vectors.ivfTopK(e, "vec_id", "embedding", cents, nProbe = 2, k = 4),
+      Vectors.ivfTopK(e, "vec_id", "embedding", cents, nProbe = 2, k = 4, queryPred = Some(pred)))
     val cbs = Vectors.trainPqCodebooks(e, "embedding", dim = 64, m = 8, kSub = 16)
-    val pqAll = Vectors.ivfPqTopK(e, "vec_id", "embedding", cents, cbs,
-      nProbe = 2, k = 4, rerank = 8)
-    val pqSub = Vectors.ivfPqTopK(e, "vec_id", "embedding", cents, cbs,
-      nProbe = 2, k = 4, rerank = 8, queryPred = Some(pred))
-    assert(rows(pqSub) == rows(pqAll.where(pred(col("qid")))))
-    val nswAll = Vectors.nswTopK(e, "vec_id", "embedding", dim = 64, k = 4)
-    val nswSub = Vectors.nswTopK(e, "vec_id", "embedding", dim = 64, k = 4,
-      queryPred = Some(pred))
-    assert(rows(nswSub) == rows(nswAll.where(pred(col("qid")))))
+    same(Vectors.ivfPqTopK(e, "vec_id", "embedding", cents, cbs, nProbe = 2, k = 4, rerank = 8),
+      Vectors.ivfPqTopK(e, "vec_id", "embedding", cents, cbs,
+        nProbe = 2, k = 4, rerank = 8, queryPred = Some(pred)))
+    val nswPlanes = embPlanes(Vectors.Nsw.BucketTarget)
+    same(Vectors.nswTopK(e, "vec_id", "embedding", dim = 64, k = 4, nswPlanes),
+      Vectors.nswTopK(e, "vec_id", "embedding", dim = 64, k = 4, nswPlanes, queryPred = Some(pred)))
   }
 
   test("lshTopKFiltered == lshTopK run per label stratum (pre-filter exactness)") {
@@ -233,7 +238,7 @@ class VectorsSpec extends SparkSpec {
     val labels = e.select("label").distinct().as[Int].collect()
     val perStratum = labels.flatMap { l =>
       Vectors.lshTopK(e.where(col("label") === l), "vec_id", "embedding",
-          dim = 64, k = 3, tables = 8, planesOverride = 6)
+          dim = 64, k = 3, planes = 6, tables = 8)
         .select("qid", "cid").as[(Long, Long)].collect()
     }.toSet
     assert(filtered == perStratum)
@@ -373,7 +378,7 @@ class VectorsSpec extends SparkSpec {
             .map { case (t, i) => (q, t._2) -> (i + 1) }
         }.toMap
     val lsh = ranks(Vectors.lshTopK(e, "vec_id", "embedding", dim = 64,
-      k = 10, tables = 8, nHint = n))
+      k = 10, planes = Vectors.planesFor(n, 16), tables = 8))
     val ivf = ranks(Vectors.ivfTopK(e, "vec_id", "embedding", cents,
       nProbe = Vectors.Ivf.NProbe, k = 10))
     val fusedRef = (lsh.keySet ++ ivf.keySet).map { key =>
@@ -508,7 +513,8 @@ class VectorsSpec extends SparkSpec {
     val docs = graft.core.Tables.load(spark, sf001, "documents")
     val groups = Dedup.duplicateGroups(docs, "doc_id", "text",
       threshold = 0.25, numHashes = 8, bandSize = 4, poly = true)
-    val stats = Dedup.dupGroupStats(groups).collect()
+    // freed here: the identity test below runs this composition again
+    val stats = reclaimed(Dedup.dupGroupStats(groups).collect())
     val total = stats.map(_.getAs[Long]("n_docs")).sum
     assert(total == docs.count()) // every doc is in exactly one group
     assert(stats.exists(r => r.getAs[Long]("group_size") > 1)) // dedup actually bit
@@ -518,11 +524,12 @@ class VectorsSpec extends SparkSpec {
 
   test("dupGroupSizeStats == dupGroupStats ∘ duplicateGroups (r16 fused path identity)") {
     val docs = graft.core.Tables.load(spark, sf001, "documents")
-    val unfused = Dedup.dupGroupStats(
+    // freed before the fused run, which then computes its own frames
+    val unfused = reclaimed(Dedup.dupGroupStats(
         Dedup.duplicateGroups(docs, "doc_id", "text",
           threshold = 0.25, numHashes = 8, bandSize = 4, poly = true))
       .orderBy("group_size")
-      .as[(Long, Long, Long)].collect().toSeq
+      .as[(Long, Long, Long)].collect().toSeq)
     val fused = Dedup.dupGroupSizeStats(docs, "doc_id", "text",
         threshold = 0.25, numHashes = 8, bandSize = 4, poly = true)
       .orderBy("group_size")

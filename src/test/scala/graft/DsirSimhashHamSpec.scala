@@ -168,7 +168,7 @@ class DsirSimhashHamSpec extends SparkSpec {
     val qs = Seq((1L, passage)).toDF("qid", "qtext")
       .select(col("qid"), Text.hashedTf(col("qtext"), 64).as("qv"))
     val out = Vectors.ragRetrieveTopK(qs, "qid", "qv", chunks,
-        Seq("cdoc", "chunk_idx"), "cv", dim = 64, k = 2, nHint = 3,
+        Seq("cdoc", "chunk_idx"), "cv", dim = 64, k = 2, planes = Vectors.planesFor(3, 16),
         selfExcludeCol = Some("cdoc"))
       .orderBy(col("cosine").desc).collect()
     assert(out.nonEmpty && out.head.getAs[Long]("cdoc") == 10L,
@@ -247,7 +247,7 @@ class DsirSimhashHamSpec extends SparkSpec {
       (1L to 30L).map(i => (i, vec(i.toInt, 1f)))
     val df = docs.toDF("vec_id", "embedding")
     val out = graft.operators.Vectors
-      .mipsTopK(df, "vec_id", "embedding", dim, k, tables, planesOverride = planes)
+      .mipsTopK(df, "vec_id", "embedding", dim, k, planes, tables)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.sortBy(x => (-x._3, x._2)).toSeq).toMap
     // reference: same reduction, brute candidates from key collisions

@@ -52,8 +52,8 @@ class EdgeCaseSpec extends SparkSpec {
     assert(Text.tokenBudgetMix(docs, "doc_id", "text", "source", 100L).count() == 0)
     assert(Dedup.simhashHamPairs(docs, "doc_id", "text").count() == 0)
     val vecs = Seq((1L, Array(1f, 0f))).toDF("vec_id", "embedding").where(lit(false))
-    assert(graft.operators.Vectors.mipsTopK(vecs, "vec_id", "embedding",
-      dim = 2, k = 1, nHint = 1).count() == 0)
+    assert(Vectors.mipsTopK(vecs, "vec_id", "embedding",
+      dim = 2, k = 1, planes = Vectors.planesFor(1, 16)).count() == 0)
     // empty STRING (not empty frame): zero entropy, zero TF vector
     val one = Seq((1L, "")).toDF("doc_id", "text")
     val r = one.select(Text.charEntropy(col("text")).as("h"),
@@ -125,19 +125,20 @@ class EdgeCaseSpec extends SparkSpec {
   test("r13: NSW graph ANN on empty/degenerate input") {
     val vecs = Seq((1L, Array.fill(64)(0.1f))).toDF("vec_id", "embedding")
     // empty corpus: no buckets, no graph, no beams -> empty, no throw
+    val planes = Vectors.planesFor(2, Vectors.Nsw.BucketTarget)
     assert(Vectors.nswTopK(vecs.where(lit(false)), "vec_id", "embedding",
-      dim = 64, k = 3, nHint = 2).count() == 0)
+      dim = 64, k = 3, planes).count() == 0)
     // single vector: no candidate pairs at any phase -> empty
     assert(Vectors.nswTopK(vecs, "vec_id", "embedding", dim = 64, k = 3,
-      nHint = 2).count() == 0)
+      planes).count() == 0)
     // bloom incremental: empty existing -> every batch doc a
     // definitive miss; empty batch -> empty report
     val docs1 = Seq((1L, "x")).toDF("doc_id", "text")
     val bl = Dedup.bloomIncremental(docs1.where(lit(false)), docs1,
-      "doc_id", "text", nHint = 2).collect()
+      "doc_id", "text", Dedup.bloomBitsFor(2)).collect()
     assert(bl.length == 1 && !bl(0).getBoolean(1) && !bl(0).getBoolean(2))
     assert(Dedup.bloomIncremental(docs1, docs1.where(lit(false)),
-      "doc_id", "text", nHint = 2).count() == 0)
+      "doc_id", "text", Dedup.bloomBitsFor(2)).count() == 0)
   }
 
   test("text relevance on an empty corpus") {

@@ -29,7 +29,8 @@ class EntrySmokeSpec extends SparkSpec {
 
   Queries.all.foreach { q =>
     test(s"smoke ${q.name}") {
-      val n = q.fn(spark, sf001).count()
+      // freed after each query, so no query reads another's caches
+      val n = reclaimed(q.fn(spark, sf001).count())
       if (mustBeNonEmpty(q.name)) assert(n > 0, s"${q.name} returned 0 rows")
       else assert(n >= 0)
     }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -56,12 +56,16 @@ class LoopFramesSpec extends SparkSpec {
       cached.unpersist()
     }
     val undirected = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L), (21L, 22L))
-    val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L, 21L, 22L, 99L).toDF("_id")
-    def edges(tag: Long) = (undirected ++ undirected.map(_.swap)).toDF("_a", "_b")
-      .where(col("_a") =!= lit(-tag)) // a distinct plan, so a distinct cache entry
-    survives("connectedComponents, driver path", edges(1))(Clustering.connectedComponents(nodes, _))
-    survives("connectedComponents, star rounds", edges(2))(
-      Clustering.connectedComponents(nodes, _, driverMaxEdges = -1L))
+    def nodes(session: SparkSession) =
+      session.createDataFrame(Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L, 21L, 22L, 99L).map(Tuple1(_))).toDF("_id")
+    def edges(session: SparkSession, tag: Long) =
+      session.createDataFrame(undirected ++ undirected.map(_.swap)).toDF("_a", "_b")
+        .where(col("_a") =!= lit(-tag)) // a distinct plan, so a distinct cache entry
+    survives("connectedComponents, driver path", edges(spark, 1))(
+      Clustering.connectedComponents(nodes(spark), _))
+    // broadcasting off: the star rounds
+    survives("connectedComponents, star rounds", edges(noBroadcast, 2))(
+      Clustering.connectedComponents(nodes(noBroadcast), _))
     val rnd = new scala.util.Random(5)
     val field = (0L until 400L).map(i => (i, rnd.nextDouble() * 20, rnd.nextDouble() * 20))
     // broadcasting off: the distributed path and its persisted pair
@@ -81,30 +85,34 @@ class LoopFramesSpec extends SparkSpec {
       .toDF("node", "seed_label")
     val hub = (0L until 80L).map(i => (500L, 1000L + i)) ++
       (0L until 30L).map(i => (2000L + i, 2001L + i)) :+ ((500L, 2000L))
-    val ccEdges = (hub ++ hub.map(_.swap)).toDF("_a", "_b")
-    val ccNodes = hub.flatMap(e => Seq(e._1, e._2)).distinct.toDF("_id")
+    // built with broadcasting off: connectedComponents takes its star rounds
+    val ccEdges = noBroadcast.createDataFrame(hub ++ hub.map(_.swap)).toDF("_a", "_b")
+    val ccNodes = noBroadcast.createDataFrame(hub.flatMap(e => Seq(e._1, e._2)).distinct.map(Tuple1(_)))
+      .toDF("_id")
     val docs = Seq("low lower lowest newer wider", "new newest low slow slower",
       "wide wider widest lowest newest", "aaa aab abab bbab").toDF("text")
 
     // (operator, static frames, loop frames the result still reads, call)
     val cases: Seq[(String, Int, Int, () => DataFrame)] = Seq(
       // static: edges, nodes, degree-joined edges; loop: the round-8 cut
-      ("pageRank", 3, 1, () => Graph.pageRank(edges, iterations = 12, checkpointEvery = 4)),
+      ("pageRank", 3, 1, () => Graph.pageRank(edges, iterations = 12)),
       // static: edges, nodes, seed-marked nodes, degree-joined edges
       ("personalizedPageRank", 4, 1, () => Graph.personalizedPageRank(
-        edges, Seq(1L, 2L).toDF("node"), iterations = 12, checkpointEvery = 4)),
+        edges, Seq(1L, 2L).toDF("node"), iterations = 12)),
       // static: edges; loop: the round-8 cut + the kept rounds 9-12
       // the returned frame's cache chain runs through
       ("labelPropagation", 1, 5, () => Graph.labelPropagation(
-        edges, seeds, rounds = 12, checkpointEvery = 4)),
+        edges, seeds, rounds = 12)),
       // loop: the round-8 cut + kept rounds 9-11 (round 12 stays lazy)
-      ("kcorePeel", 0, 4, () => Graph.kcorePeel(edges, k = 3, rounds = 12, checkpointEvery = 4)),
+      ("kcorePeel", 0, 4, () => Graph.kcorePeel(edges, k = 3, rounds = 12)),
       // static: the vectors; loop: the last graph cut + the last beam cut
       ("nswTopK", 1, 2, () => Vectors.nswTopK(
-        graft.core.Tables.load(spark, sf001, "embeddings"), "vec_id", "embedding", dim = 64, k = 5)),
+        graft.core.Tables.load(spark, sf001, "embeddings"), "vec_id", "embedding", dim = 64, k = 5,
+        planes = Vectors.planesFor(graft.core.Tables.parquetRowCount(spark, sf001, "embeddings"),
+          Vectors.Nsw.BucketTarget))),
       // static: the active-node checkpoint; loop: the last star round
       ("connectedComponents", 1, 1, () =>
-        Clustering.connectedComponents(ccNodes, ccEdges, driverMaxEdges = -1L)),
+        Clustering.connectedComponents(ccNodes, ccEdges)),
       // loop: the last collected round + the returned round on top of it
       ("bpeTrainFull", 0, 2, () => Text.bpeTrainFull(docs, "text", merges = 6)._2))
 

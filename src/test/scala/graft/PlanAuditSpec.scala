@@ -136,7 +136,8 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.ScalaUDF
     import org.apache.spark.sql.execution.window.WindowExec
     val offenders = scala.collection.mutable.ArrayBuffer[String]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    // each query's build-time caches are freed before the next query
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) => reclaimed {
       val qe = fn(spark, sf001).queryExecution
       val plan = qe.executedPlan.toString
       if (plan.contains("CartesianProduct"))
@@ -166,7 +167,7 @@ class PlanAuditSpec extends SparkSpec {
       }
       if (singleParts.nonEmpty && !singlePartitionAllowed.contains(name))
         offenders += s"$name: SinglePartition exchange (${singleParts.size})"
-    }
+    }}
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
 }

@@ -51,6 +51,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally log.close()
   }
 
+  /** `body`'s result, with whatever it persisted or checkpointed freed
+    * afterwards ([[Harness.reclaim]], as Verify frees each query): a
+    * later run of the same operator on the same input then computes
+    * its frames again instead of reading this run's cache. */
+  def reclaimed[T](body: => T): T = Harness.timed(spark)(body)._1
+
   private var scratchRoot: Option[Path] = None
 
   /** A fresh directory named `prefix…` under this suite's scratch root,
