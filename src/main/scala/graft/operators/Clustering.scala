@@ -64,9 +64,8 @@ object Clustering {
     * component. Shared by DBSCAN (core-graph clusters) and
     * near-dedup (duplicate groups). Integral ids and at most
     * [[DriverMaxEdges]] canonical edges go through a driver
-    * union-find unless `spark.sql.autoBroadcastJoinThreshold` is -1
-    * (the switch that also turns off broadcast joins and DBSCAN's
-    * driver path); everything else takes the distributed star rounds.
+    * union-find; everything else takes the distributed
+    * [[starRounds]].
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val idType = nodes.schema.fields.find(_.name == "_id").get.dataType
@@ -102,9 +101,7 @@ object Clustering {
     // pull (the raw checkpointed rows), so the 64 MB fetch-volume
     // contract is unchanged; a heavily-duplicated edge set merely
     // chooses the distributed path a little earlier — the safe side.
-    // With broadcasting off the count is skipped: the rounds run anyway.
-    if (integral(idType) && nodes.sparkSession.sessionState.conf.autoBroadcastJoinThreshold >= 0 &&
-        e0.count() <= DriverMaxEdges) {
+    if (integral(idType) && e0.count() <= DriverMaxEdges) {
       // Below the threshold the whole (two-long-column) edge list is
       // dimension-sized; one O(E α(E)) driver pass beats 3-5 rounds
       // of join+checkpoint fixed latency — same adaptive rationale as
@@ -125,11 +122,19 @@ object Clustering {
       // a semi/anti pair — so `nodes` is scanned once and the tiny
       // label table broadcasts once (two fewer stages per CC call;
       // the fixed job latency is the whole cost at ep2's scale).
-      return nodes.join(broadcast(labels), Seq("_id"), "left")
+      nodes.join(broadcast(labels), Seq("_id"), "left")
         .select(col("_id"), coalesce(col("_label"), col("_id")).as("_label"))
-    }
+    } else starRounds(nodes, e0, frames)
+  }
 
-    // Distributed path: alternating large-star/small-star rounds
+  /** The distributed path of [[connectedComponents]], which specs
+    * also run directly on edge lists below [[DriverMaxEdges]]. `e0`:
+    * canonical edges (`_a` > `_b`, no self-loops); `frames`: the
+    * call's loop frames, whose older frames (e0's cut) the first
+    * round cut frees. Same (_id, _label) rows as the union-find. */
+  private[graft] def starRounds(nodes: DataFrame, e0: DataFrame,
+                                frames: graft.core.LoopFrames): DataFrame = {
+    // Alternating large-star/small-star rounds
     // (Kiveris et al., "Connected Components in MapReduce and
     // Beyond", SoCC'14). Each round's messages are grouped per node —
     // a hub of degree d sends d messages to ITS minimum neighbor,
@@ -152,8 +157,8 @@ object Clustering {
     // appended lazily at the end.
     // dedup here — the first exchange the distributed path was going
     // to pay anyway — so round volume is set-sized even when the
-    // emitter carried orientation/band multiplicity (the driver path
-    // above never needed it)
+    // emitter carried orientation/band multiplicity (the driver
+    // union-find never needed it)
     // CP-OK: the deduped edge set the rounds start from; frees e0 —
     // rounds only ever read the deduped set
     val e1 = frames.cut(e0.distinct())

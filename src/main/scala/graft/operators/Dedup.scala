@@ -507,14 +507,15 @@ object Dedup {
     * Returns one row per batch doc: (id, bloom_hit, is_dup,
     * false_positive). Callers size `nBits` to the corpus with
     * [[bloomBitsFor]] (the registry from the parquet footer count,
-    * the same value its generated oracle uses); a saturated bloom
+    * the same value its generated oracle uses; `nBits` comes after
+    * `hashes`, in the former override's slot); a saturated bloom
     * degrades to hit-everything = the unfiltered join, never to
     * wrong answers. BloomDedupSpec pins no-false-negatives, forced
     * false positives at a tiny `nBits`, and equality with a join-only
     * reference. */
   def bloomIncremental(existing: DataFrame, batch: DataFrame,
-                       idCol: String, textCol: String, nBits: Int,
-                       hashes: Int = 4): DataFrame = {
+                       idCol: String, textCol: String, hashes: Int = 4,
+                       nBits: Int): DataFrame = {
     val words = math.max(1, (nBits + 63) / 64)
     def posCol(c: Column, j: Int): Column =
       (conv(substring(md5(concat(lit(s"$j:"), lower(c))), 1, 6), 16, 10)

@@ -480,12 +480,14 @@ object Vectors {
     * table (recall is recovered across tables while buckets stay
     * fine-grained). Callers size `planes` to the corpus with
     * [[planesFor]] (the registry from the parquet footer count, the
-    * same value its generated oracle uses); it has no default, since
-    * any fixed plane count is quadratic in n. Same output shape as
+    * same value its generated oracle uses). `planes` has no default
+    * and sits where `bucketTarget` was, after `tables`, so a call
+    * written for the former positional order fails to compile rather
+    * than binding `tables` as `planes`. Same output shape as
     * [[bruteForceTopK]]; recall measured in VectorsSpec, occupancy
     * scaling in ScaleSpec. */
   def lshTopK(df: DataFrame, idCol: String, vecCol: String,
-              dim: Int, k: Int, planes: Int, tables: Int = 8,
+              dim: Int, k: Int, tables: Int = 8, planes: Int,
               queryPred: Option[Column => Column] = None): DataFrame =
     lshTopKKeyed(df, idCol, vecCol, Nil, dim, k, planes, tables, queryPred)
 
@@ -535,10 +537,10 @@ object Vectors {
     * `selfExcludeCol` drops candidates originating from the query's
     * own document (retrieval eval wants OTHER documents' passages).
     * `planes` is sized to the CANDIDATE corpus (the side that grows)
-    * with [[planesFor]]. */
+    * with [[planesFor]]; it follows `tables`, as in [[lshTopK]]. */
   def ragRetrieveTopK(queries: DataFrame, qIdCol: String, qVecCol: String,
                       cands: DataFrame, cKeyCols: Seq[String], cVecCol: String,
-                      dim: Int, k: Int, planes: Int, tables: Int = 8,
+                      dim: Int, k: Int, tables: Int = 8, planes: Int,
                       selfExcludeCol: Option[String] = None): DataFrame = {
     // vector columns aliased to internal names BEFORE the join (the
     // mipsTopK _qv/_cv discipline) — callers naturally use the same
@@ -576,9 +578,9 @@ object Vectors {
     * broadcast (the allowlisted pattern); everything else is the
     * [[lshTopK]] plan — key posexplode, one exchange on (table,
     * bucket), per-query window rank; `planes` is sized to the corpus
-    * with [[planesFor]] as there. */
+    * with [[planesFor]] and follows `tables`, as there. */
   def mipsTopK(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-               k: Int, planes: Int, tables: Int = 8): DataFrame = {
+               k: Int, tables: Int = 8, planes: Int): DataFrame = {
     // compiled squared norm (r16): dotProduct(v, v) accumulates
     // double(x_i)·double(x_i) left-to-right — the identical IEEE op
     // sequence as the interpreted aggregate(transform(x -> x²)) form
@@ -664,7 +666,8 @@ object Vectors {
     *     hyperplane LSH tables of `planes` bits (sized with
     *     [[planesFor]] at [[Nsw.BucketTarget]]: O(1) bucket occupancy
     *     ⇒ candidate volume ∝ corpus, never all-pairs; the lshTopK
-    *     scale rule).
+    *     scale rule). `planes` has no default and follows
+    *     `initTables`, where `bucketTarget` was.
     *  2. BUILD — `buildRounds` NN-descent rounds: candidates =
     *     neighbors ∪ reverse neighbors ∪ neighbors-of-neighbors
     *     (≤ m + m + m² per node, m constant), exact codegen cosine,
@@ -682,10 +685,10 @@ object Vectors {
     * `ss_recall_methods`. Output shape matches [[lshTopK]]:
     * (qid, cid, cosine round-6, per-query top-k). */
   def nswTopK(df: DataFrame, idCol: String, vecCol: String,
-              dim: Int, k: Int, planes: Int, m: Int = Nsw.M,
+              dim: Int, k: Int, m: Int = Nsw.M,
               buildRounds: Int = Nsw.BuildRounds,
               beam: Int = Nsw.Beam, beamRounds: Int = Nsw.BeamRounds,
-              initTables: Int = Nsw.InitTables,
+              initTables: Int = Nsw.InitTables, planes: Int,
               queryPred: Option[Column => Column] = None): DataFrame = {
     require(beam >= k, s"beam=$beam must be >= k=$k")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK

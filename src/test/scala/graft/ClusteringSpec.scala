@@ -11,12 +11,10 @@ class ClusteringSpec extends SparkSpec {
   import spark.implicits._
 
   /** Jobs the distributed DBSCAN starts while it builds its result on
-    * the 400-point minSamples = 2 field below: the query stages of the
-    * ε-pair join and the canonical-edge cut, then — broadcasting off
-    * sends connectedComponents down its distributed path too — the
-    * deduped-edge and active-node cuts and each star round's cut and
-    * checksum. */
-  private val DistributedBuildJobs = 66
+    * the 400-point minSamples = 2 field below (the query stages of the
+    * ε-pair join and the canonical-edge cut, its count and the edge
+    * collect): the count the operator had before the driver path. */
+  private val DistributedBuildJobs = 15
 
   /** Brute-force DBSCAN (same semantics as Clustering.dbscan: core =
     * ≥ minSamples points within eps incl. self; clusters = CCs of the
@@ -109,23 +107,26 @@ class ClusteringSpec extends SparkSpec {
     check(pts, eps = 1.0, minSamples = 1)
   }
 
-  /** Component labels of `nodes` over both directions of `undirected`,
-    * with frames built in `session`: the driver union-find in `spark`,
-    * the star rounds with broadcasting off. */
-  private def components(session: SparkSession, nodes: Seq[Long],
-                         undirected: Seq[(Long, Long)]): Map[Long, Long] =
-    Clustering.connectedComponents(
-        session.createDataFrame(nodes.map(Tuple1(_))).toDF("_id"),
-        session.createDataFrame(undirected ++ undirected.map(_.swap)).toDF("_a", "_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  /** Component labels of `nodes` over `undirected`: connectedComponents
+    * (the driver union-find at this size) on both directions of each
+    * edge, or its star rounds on the canonical orientation. */
+  private def components(rounds: Boolean, nodes: Seq[Long],
+                         undirected: Seq[(Long, Long)]): Map[Long, Long] = {
+    val ids = nodes.toDF("_id")
+    val out =
+      if (rounds) Clustering.starRounds(ids, undirected.map { case (a, b) => (a max b, a min b) }
+        .toDF("_a", "_b"), new graft.core.LoopFrames)
+      else Clustering.connectedComponents(ids, (undirected ++ undirected.map(_.swap)).toDF("_a", "_b"))
+    out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
 
   test("connectedComponents: driver union-find == distributed rounds") {
     // chain, pair, triangle, isolated node; both directions per edge
     val undirected = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
       (20L, 21L), (21L, 22L), (20L, 22L))
     val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L, 21L, 22L, 99L)
-    val viaDriver = components(spark, nodes, undirected)
-    val viaRounds = components(noBroadcast, nodes, undirected)
+    val viaDriver = components(rounds = false, nodes, undirected)
+    val viaRounds = components(rounds = true, nodes, undirected)
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L, 99L -> 99L)
     assert(viaDriver == expected)
@@ -142,8 +143,8 @@ class ClusteringSpec extends SparkSpec {
     val pairs = (0L until 50L).map(i => (5000L + 2 * i, 5001L + 2 * i))
     val undirected = rnd.shuffle(hub ++ chain ++ pairs)
     val ids = undirected.flatMap(e => Seq(e._1, e._2)).distinct :+ 77777L
-    val viaDriver = components(spark, ids, undirected)
-    val viaStars = components(noBroadcast, ids, undirected)
+    val viaDriver = components(rounds = false, ids, undirected)
+    val viaStars = components(rounds = true, ids, undirected)
     assert(viaStars == viaDriver)
     // the hub component's label is its minimum member (the hub id)
     assert(viaStars(1000L) == 500L && viaStars(2060L) == 500L)

@@ -214,8 +214,8 @@ class VectorsSpec extends SparkSpec {
       val expected = reclaimed(rows(all.where(pred(col("qid")))))
       assert(reclaimed(rows(sub)) == expected)
     }
-    same(Vectors.lshTopK(e, "vec_id", "embedding", dim = 64, k = 4, embPlanes(16)),
-      Vectors.lshTopK(e, "vec_id", "embedding", dim = 64, k = 4, embPlanes(16), queryPred = Some(pred)))
+    same(Vectors.lshTopK(e, "vec_id", "embedding", dim = 64, k = 4, planes = embPlanes(16)),
+      Vectors.lshTopK(e, "vec_id", "embedding", dim = 64, k = 4, planes = embPlanes(16), queryPred = Some(pred)))
     val cents = Vectors.trainIvfCentroids(e, "embedding", nCentroids = 8)
     same(Vectors.ivfTopK(e, "vec_id", "embedding", cents, nProbe = 2, k = 4),
       Vectors.ivfTopK(e, "vec_id", "embedding", cents, nProbe = 2, k = 4, queryPred = Some(pred)))
@@ -224,8 +224,8 @@ class VectorsSpec extends SparkSpec {
       Vectors.ivfPqTopK(e, "vec_id", "embedding", cents, cbs,
         nProbe = 2, k = 4, rerank = 8, queryPred = Some(pred)))
     val nswPlanes = embPlanes(Vectors.Nsw.BucketTarget)
-    same(Vectors.nswTopK(e, "vec_id", "embedding", dim = 64, k = 4, nswPlanes),
-      Vectors.nswTopK(e, "vec_id", "embedding", dim = 64, k = 4, nswPlanes, queryPred = Some(pred)))
+    same(Vectors.nswTopK(e, "vec_id", "embedding", dim = 64, k = 4, planes = nswPlanes),
+      Vectors.nswTopK(e, "vec_id", "embedding", dim = 64, k = 4, planes = nswPlanes, queryPred = Some(pred)))
   }
 
   test("lshTopKFiltered == lshTopK run per label stratum (pre-filter exactness)") {

@@ -247,7 +247,7 @@ class DsirSimhashHamSpec extends SparkSpec {
       (1L to 30L).map(i => (i, vec(i.toInt, 1f)))
     val df = docs.toDF("vec_id", "embedding")
     val out = graft.operators.Vectors
-      .mipsTopK(df, "vec_id", "embedding", dim, k, planes, tables)
+      .mipsTopK(df, "vec_id", "embedding", dim, k, tables, planes)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.sortBy(x => (-x._3, x._2)).toSeq).toMap
     // reference: same reduction, brute candidates from key collisions

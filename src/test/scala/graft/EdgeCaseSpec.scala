@@ -127,18 +127,18 @@ class EdgeCaseSpec extends SparkSpec {
     // empty corpus: no buckets, no graph, no beams -> empty, no throw
     val planes = Vectors.planesFor(2, Vectors.Nsw.BucketTarget)
     assert(Vectors.nswTopK(vecs.where(lit(false)), "vec_id", "embedding",
-      dim = 64, k = 3, planes).count() == 0)
+      dim = 64, k = 3, planes = planes).count() == 0)
     // single vector: no candidate pairs at any phase -> empty
     assert(Vectors.nswTopK(vecs, "vec_id", "embedding", dim = 64, k = 3,
-      planes).count() == 0)
+      planes = planes).count() == 0)
     // bloom incremental: empty existing -> every batch doc a
     // definitive miss; empty batch -> empty report
     val docs1 = Seq((1L, "x")).toDF("doc_id", "text")
     val bl = Dedup.bloomIncremental(docs1.where(lit(false)), docs1,
-      "doc_id", "text", Dedup.bloomBitsFor(2)).collect()
+      "doc_id", "text", nBits = Dedup.bloomBitsFor(2)).collect()
     assert(bl.length == 1 && !bl(0).getBoolean(1) && !bl(0).getBoolean(2))
     assert(Dedup.bloomIncremental(docs1, docs1.where(lit(false)),
-      "doc_id", "text", Dedup.bloomBitsFor(2)).count() == 0)
+      "doc_id", "text", nBits = Dedup.bloomBitsFor(2)).count() == 0)
   }
 
   test("text relevance on an empty corpus") {

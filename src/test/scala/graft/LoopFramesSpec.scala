@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -56,16 +56,12 @@ class LoopFramesSpec extends SparkSpec {
       cached.unpersist()
     }
     val undirected = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L), (21L, 22L))
-    def nodes(session: SparkSession) =
-      session.createDataFrame(Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L, 21L, 22L, 99L).map(Tuple1(_))).toDF("_id")
-    def edges(session: SparkSession, tag: Long) =
-      session.createDataFrame(undirected ++ undirected.map(_.swap)).toDF("_a", "_b")
-        .where(col("_a") =!= lit(-tag)) // a distinct plan, so a distinct cache entry
-    survives("connectedComponents, driver path", edges(spark, 1))(
-      Clustering.connectedComponents(nodes(spark), _))
-    // broadcasting off: the star rounds
-    survives("connectedComponents, star rounds", edges(noBroadcast, 2))(
-      Clustering.connectedComponents(nodes(noBroadcast), _))
+    val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L, 21L, 22L, 99L).toDF("_id")
+    survives("connectedComponents, driver path", (undirected ++ undirected.map(_.swap)).toDF("_a", "_b"))(
+      Clustering.connectedComponents(nodes, _))
+    // the rounds read canonical (_a > _b) edges
+    survives("connectedComponents, star rounds", undirected.map(_.swap).toDF("_a", "_b"))(
+      Clustering.starRounds(nodes, _, new LoopFrames))
     val rnd = new scala.util.Random(5)
     val field = (0L until 400L).map(i => (i, rnd.nextDouble() * 20, rnd.nextDouble() * 20))
     // broadcasting off: the distributed path and its persisted pair
@@ -85,10 +81,8 @@ class LoopFramesSpec extends SparkSpec {
       .toDF("node", "seed_label")
     val hub = (0L until 80L).map(i => (500L, 1000L + i)) ++
       (0L until 30L).map(i => (2000L + i, 2001L + i)) :+ ((500L, 2000L))
-    // built with broadcasting off: connectedComponents takes its star rounds
-    val ccEdges = noBroadcast.createDataFrame(hub ++ hub.map(_.swap)).toDF("_a", "_b")
-    val ccNodes = noBroadcast.createDataFrame(hub.flatMap(e => Seq(e._1, e._2)).distinct.map(Tuple1(_)))
-      .toDF("_id")
+    val ccEdges = hub.map(_.swap).toDF("_a", "_b") // canonical: _a > _b
+    val ccNodes = hub.flatMap(e => Seq(e._1, e._2)).distinct.toDF("_id")
     val docs = Seq("low lower lowest newer wider", "new newest low slow slower",
       "wide wider widest lowest newest", "aaa aab abab bbab").toDF("text")
 
@@ -111,8 +105,8 @@ class LoopFramesSpec extends SparkSpec {
         planes = Vectors.planesFor(graft.core.Tables.parquetRowCount(spark, sf001, "embeddings"),
           Vectors.Nsw.BucketTarget))),
       // static: the active-node checkpoint; loop: the last star round
-      ("connectedComponents", 1, 1, () =>
-        Clustering.connectedComponents(ccNodes, ccEdges)),
+      ("starRounds", 1, 1, () =>
+        Clustering.starRounds(ccNodes, ccEdges, new LoopFrames)),
       // loop: the last collected round + the returned round on top of it
       ("bpeTrainFull", 0, 2, () => Text.bpeTrainFull(docs, "text", merges = 6)._2))
 

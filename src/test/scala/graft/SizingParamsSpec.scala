@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`planes`, `nBits`), never a hint or an override for a size it
   * would otherwise compute, and no spec-only path switch
   * (`checkpointEvery`, `driverMaxEdges`). Specs reach the scale paths
-  * through the session (`SparkSpec.noBroadcast`). It scans
-  * comment-stripped code ([[ReachSpec.code]]). */
+  * through the session (`SparkSpec.noBroadcast`) or a `private[graft]`
+  * def (`Clustering.starRounds`). It scans comment-stripped code
+  * ([[ReachSpec.code]]). */
 class SizingParamsSpec extends AnyFunSuite {
 
   private val scanned = Seq("core", "operators", "ml", "sources")
