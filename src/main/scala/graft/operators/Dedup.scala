@@ -507,10 +507,10 @@ object Dedup {
     * Returns one row per batch doc: (id, bloom_hit, is_dup,
     * false_positive). Callers size `nBits` to the corpus with
     * [[bloomBitsFor]] (the registry from the parquet footer count,
-    * the same value its generated oracle uses; `nBits` comes after
-    * `hashes`, in the former override's slot); a saturated bloom
-    * degrades to hit-everything = the unfiltered join, never to
-    * wrong answers. BloomDedupSpec pins no-false-negatives, forced
+    * the same value its generated oracle uses; it has no default and
+    * follows `hashes`, so a positional call that stops at `hashes`
+    * does not compile); a saturated bloom degrades to
+    * hit-everything = the unfiltered join, never to wrong answers. BloomDedupSpec pins no-false-negatives, forced
     * false positives at a tiny `nBits`, and equality with a join-only
     * reference. */
   def bloomIncremental(existing: DataFrame, batch: DataFrame,

@@ -481,9 +481,8 @@ object Vectors {
     * fine-grained). Callers size `planes` to the corpus with
     * [[planesFor]] (the registry from the parquet footer count, the
     * same value its generated oracle uses). `planes` has no default
-    * and sits where `bucketTarget` was, after `tables`, so a call
-    * written for the former positional order fails to compile rather
-    * than binding `tables` as `planes`. Same output shape as
+    * and follows `tables`, so a positional call that stops at
+    * `tables` does not compile. Same output shape as
     * [[bruteForceTopK]]; recall measured in VectorsSpec, occupancy
     * scaling in ScaleSpec. */
   def lshTopK(df: DataFrame, idCol: String, vecCol: String,
@@ -667,7 +666,7 @@ object Vectors {
     *     [[planesFor]] at [[Nsw.BucketTarget]]: O(1) bucket occupancy
     *     ⇒ candidate volume ∝ corpus, never all-pairs; the lshTopK
     *     scale rule). `planes` has no default and follows
-    *     `initTables`, where `bucketTarget` was.
+    *     `initTables`, as in [[lshTopK]].
     *  2. BUILD — `buildRounds` NN-descent rounds: candidates =
     *     neighbors ∪ reverse neighbors ∪ neighbors-of-neighbors
     *     (≤ m + m + m² per node, m constant), exact codegen cosine,
